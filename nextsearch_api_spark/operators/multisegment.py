@@ -90,26 +90,13 @@ class MultiSegmentEngine:
     def _hydrate(self, out: dict) -> dict:
         """Per-segment doc-metadata join (reference hydration reads each
         hit's metadata from ITS segment's doc store, api_engine.cpp:508-532;
-        left-join semantics — missing meta tolerated). Bounded driver-side
-        pyarrow isin fetch per segment, same as the single-segment Engine."""
-        if not out["results"]:
-            return out
-        import pyarrow.dataset as pads
-
-        by_seg: dict[int, list[int]] = {}
+        left-join semantics — missing meta tolerated): each segment's
+        footer-indexed docs read, the same as the single-segment Engine."""
+        by_seg: dict[int, list[dict]] = {}
         for r in out["results"]:
-            by_seg.setdefault(r["segment"], []).append(r["doc_id"])
-        for si, ids in by_seg.items():
-            meta = pads.dataset(self.segments[si].paths.docs).to_table(
-                columns=["doc_id", "uid", "repo", "path", "commit", "lang"],
-                filter=pads.field("doc_id").isin(ids),
-            ).to_pandas().set_index("doc_id")
-            for r in out["results"]:
-                if r["segment"] == si and r["doc_id"] in meta.index:
-                    row = meta.loc[r["doc_id"]]
-                    r.update(uid=row["uid"], repo=row["repo"],
-                             path=row["path"], commit=row["commit"],
-                             lang=row["lang"])
+            by_seg.setdefault(r["segment"], []).append(r)
+        for si, rows in by_seg.items():
+            self.segments[si].hydrate(rows)
         return out
 
     # ------------------------------------------------------------ suggest --

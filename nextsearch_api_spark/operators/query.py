@@ -88,8 +88,8 @@ class IndexReader:
         from nextsearch_api_spark.operators.wand import check_index_format
         check_index_format(self.stats, self.paths.stats)
         self._dfs: dict[str, DataFrame] = {}
-        self._lex_dataset = None   # pyarrow dataset for driver-side df lookups
-        self._post_dataset = None  # pyarrow dataset for chunk-metadata reads
+        # footer indexes for driver-side keyed reads, by table path
+        self._indexes: dict[str, "RowGroupIndex"] = {}  # noqa: F821
         self._n_chunks: dict[str, int] = {}  # term → chunk count (lexicon)
         self._chunk_meta: dict[str, list[tuple[int, float]]] = {}  # term → chunks
 
@@ -119,29 +119,34 @@ class IndexReader:
     def suggest_table(self) -> DataFrame:
         return self._table(self.paths.suggest)
 
+    def _by_term(self, path: str) -> "RowGroupIndex":  # noqa: F821
+        """Footer index over a term-sorted table (postings, lexicon), opened
+        on first use: keyed reads touch only the row groups whose term range
+        holds a requested term."""
+        idx = self._indexes.get(path)
+        if idx is None:
+            from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
+            idx = self._indexes[path] = RowGroupIndex(path, "term")
+        return idx
+
     def chunk_meta(self, terms: Sequence[str]) -> "dict[str, list[tuple[int, int, float]]]":
         """Per-term chunk metadata → {term: [(doc_lo, doc_hi, max_impact)]}.
 
-        Driver-side pyarrow read of the (term, doc_lo)-sorted postings,
-        row-group pruned by the pushed ``isin`` filter and column-pruned to
-        four scalar columns — never the blobs. Volume is df/chunk_size rows
-        per term (the same order as the WAND tier's resident chunk
-        directory), a small fraction of the decode volume it lets the batch
-        tier skip. Returns {} on any failure (prefilter is then skipped)."""
+        Driver-side read of the (term, doc_lo)-sorted postings through the
+        postings footer index — only the row groups whose term range holds a
+        requested term — column-pruned to four scalar columns, never the
+        blobs. Volume is df/chunk_size rows per term (the same order as the
+        WAND tier's resident chunk directory), a small fraction of the decode
+        volume it lets the batch tier skip. Returns {} on any failure
+        (prefilter is then skipped)."""
         terms = list(terms)
         if not terms:
             return {}
         missing = [t for t in terms if t not in self._chunk_meta]
         if missing:
             try:
-                import pyarrow.dataset as pads
-                if self._post_dataset is None:
-                    self._post_dataset = pads.dataset(
-                        self.paths.postings, format="parquet")
-                t = self._post_dataset.to_table(
-                    columns=["term", "doc_lo", "doc_hi", "max_impact"],
-                    filter=pads.field("term").isin(missing),
-                )
+                t = self._by_term(self.paths.postings).read(
+                    missing, ["doc_lo", "doc_hi", "max_impact"])
                 fetched: dict[str, list[tuple[int, int, float]]] = {m: [] for m in missing}
                 for term, lo, hi, mi in zip(t.column("term").to_pylist(),
                                             t.column("doc_lo").to_pylist(),
@@ -159,23 +164,17 @@ class IndexReader:
     def term_dfs(self, terms: Sequence[str]) -> dict[str, int]:
         """df lookup for a bounded set of query terms → {term: df}.
 
-        Driver-side pyarrow read of the term-sorted lexicon (row-group
-        pruned by the pushed ``isin`` filter) — the same bounded O(|terms|)
-        lookup the WAND tier does, without paying a Spark job's scheduling
+        Driver-side read of the term-sorted lexicon through its footer index
+        (only the row groups whose term range holds a requested term) — a
+        bounded O(|terms|) lookup, without paying a Spark job's scheduling
         latency per query (~0.3 s). Falls back to a Spark collect for
         filesystems pyarrow can't open."""
         terms = list(terms)
         if not terms:
             return {}
         try:
-            import pyarrow.dataset as pads
-            if self._lex_dataset is None:
-                self._lex_dataset = pads.dataset(
-                    self.paths.lexicon, format="parquet")
-            t = self._lex_dataset.to_table(
-                columns=["term", "df", "n_chunks"],
-                filter=pads.field("term").isin(terms),
-            )
+            t = self._by_term(self.paths.lexicon).read(
+                terms, ["df", "n_chunks"])
             # n_chunks rides along for free: the chunk prefilter uses it to
             # skip the chunk-metadata read for terms it can't prune anyway
             for term, nc in zip(t.column("term").to_pylist(),
@@ -215,7 +214,7 @@ _MULTI_PRUNE_RANGE_BUDGET = 200_000
 # query batch's present terms — known EXACTLY from the lexicon before any
 # data is read) for which the batch tier answers from a bounded pyarrow
 # read + NumPy TAAT on the driver instead of a 3-job distributed plan.
-# 8M postings ≈ tens of MB of row-group-pruned blob reads and ~1-1.5 s of
+# 8M postings ≈ tens of MB of footer-indexed blob reads and ~1-1.5 s of
 # thread-parallel decode+score — still under the distributed plan's
 # multi-job floor plus its own Python-stage decode of the same volume (the
 # measured crossover is in the tens of millions of postings; 8M keeps a
@@ -484,21 +483,15 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     nothing).
 
     Semantics are the distributed plan's, computed the same way: ONE
-    row-group-pruned pyarrow read of the present terms' chunk rows (the
-    exact bytes the executors' pushed-isin scan would read), the SAME f32/f64
+    footer-indexed read of the present terms' chunk rows (only the postings
+    row groups whose term range holds a present term), the SAME f32/f64
     impact arithmetic as _decode_score_udf, per-doc score = Σ widf·impact in
     float64, found = distinct matched docs, rank by (score desc, doc_id asc).
     Exactness vs the distributed plan is gated by the prune-vs-exhaustive
     parity tests (tests/test_plans.py) and the engine oracle entries."""
     try:
-        import pyarrow.dataset as pads
-        if reader._post_dataset is None:
-            reader._post_dataset = pads.dataset(
-                reader.paths.postings, format="parquet")
-        t = reader._post_dataset.to_table(
-            columns=["term", "count", "tf_off", "dl_off", "blob"],
-            filter=pads.field("term").isin(list(present)),
-        )
+        t = reader._by_term(reader.paths.postings).read(
+            list(present), ["count", "tf_off", "dl_off", "blob"])
     except Exception:
         return None
     from nextsearch_api_spark.functions.codec import decode_chunks_concat
@@ -679,7 +672,7 @@ def batch_search(
 
     # volume-bounded driver fast path (r7): Σ df across the batch's present
     # terms is known exactly before any data is read; under the budget the
-    # whole batch is answered by one row-group-pruned pyarrow read + NumPy
+    # whole batch is answered by one footer-indexed postings read + NumPy
     # TAAT — identical results (see _driver_small_search), none of the 3
     # distributed jobs' ~0.3 s-each Python-stage floors. prune_chunks=False
     # forces the distributed plan (the parity-testing escape hatch, which

@@ -10,12 +10,12 @@ skips whole chunks whose combined upper bound cannot beat the current k-th
 score.
 
 Serving profile: the driver process holds the lexicon + chunk directory in
-memory (pandas), reads only the needed posting rows from Parquet via pyarrow
-dataset filters (no Spark job per query — the analog of the reference's
-lexicon hash lookup + file seek, api_engine.cpp:453-475), and scores with
-NumPy. Results are identical to the batch path and the golden oracle: same
-float32 impact/idf factors, float64 accumulation, (score desc, doc_id asc)
-tie-break.
+memory (pandas), reads only the row groups holding the query's terms through
+a Parquet footer index (functions/rowgroups.py; no Spark job per query — the
+analog of the reference's lexicon hash lookup + file seek,
+api_engine.cpp:453-475), and scores with NumPy. Results are identical to the
+batch path and the golden oracle: same float32 impact/idf factors, float64
+accumulation, (score desc, doc_id asc) tie-break.
 
 This is the single-node serving tier of the engine; the Spark batch path
 (operators/query.py) is the cluster-scale tier. Both read the same index.
@@ -36,6 +36,7 @@ from nextsearch_api_spark.config import BM25Params, IndexPaths
 from nextsearch_api_spark.functions.codec import (
     decode_chunk, decode_chunks_concat,
 )
+from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
 from nextsearch_api_spark.operators.query import bm25_idf, clamp_k, parse_query
 
 
@@ -129,8 +130,7 @@ class WandEngine:
 
         # chunk directory: metadata only (no blobs) — the lexicon offset-table
         # analog. Kept in RAM; blobs are fetched lazily per query.
-        self._pdir = ds.dataset(self.paths.postings)
-        meta = self._pdir.to_table(
+        meta = ds.dataset(self.paths.postings).to_table(
             columns=["term", "doc_lo", "doc_hi", "count", "max_tf", "min_dl"]
         ).to_pandas()
         # Per-chunk upper bounds recomputed HERE from (max_tf, min_dl) with
@@ -163,52 +163,12 @@ class WandEngine:
         self._chunk_meta = {t: g.reset_index(drop=True)
                             for t, g in meta.groupby("term", sort=False)}
 
-        # per-file term ranges from Parquet footers (row-group granularity —
-        # a file appears once per contiguous stats range): with a term-sorted
-        # serving layout each term lives in 1-2 files, so a query opens those
-        # instead of paying per-file scan overhead across the whole directory
-        # (measured: the open overhead, not bytes, dominated cold reads).
-        # A fragment whose 'term' column has NO min/max statistics (parquet
-        # writers omit binary stats for very long values) is kept in
-        # ``_unranged_files`` and ALWAYS selected — silently excluding it
-        # would misalign blob rows against _chunk_meta and return wrong top-k
-        # (ADVICE r2). Only a footer-scan error falls back to full reads.
-        self._file_ranges: list[tuple[str, str, str]] = []
-        self._unranged_files: list[str] = []
-        try:
-            for frag in self._pdir.get_fragments():
-                md = frag.metadata
-                ranged = False
-                missing_stats = False
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        if col.path_in_schema != "term":
-                            continue
-                        st = col.statistics
-                        if st is not None and st.has_min_max:
-                            self._file_ranges.append((st.min, st.max, frag.path))
-                            ranged = True
-                        else:
-                            missing_stats = True
-                if missing_stats or (md.num_row_groups and not ranged):
-                    self._unranged_files.append(frag.path)
-            # collapse duplicate (file) entries with adjacent ranges
-            merged: dict[str, tuple[str, str]] = {}
-            for tmin, tmax, p in self._file_ranges:
-                if p in merged:
-                    lo, hi = merged[p]
-                    merged[p] = (min(lo, tmin), max(hi, tmax))
-                else:
-                    merged[p] = (tmin, tmax)
-            unranged = set(self._unranged_files)
-            self._file_ranges = sorted(
-                (lo, hi, p) for p, (lo, hi) in merged.items() if p not in unranged
-            )
-            self._unranged_files = sorted(unranged)
-        except Exception:
-            self._file_ranges = []  # fall back to whole-dataset reads
-            self._unranged_files = []
+        # blob reads go through the postings footer index: a term fetch reads
+        # only the row groups whose term range holds it (the build writes
+        # postings term-sorted in bounded row groups — the offset-seek
+        # analog). The docs index for hydration opens on first use.
+        self._postings = RowGroupIndex(self.paths.postings, "term")
+        self._docs: RowGroupIndex | None = None
 
         # bounded term→blobs cache (the reference keeps ALL postings in RAM,
         # api_engine.cpp:453-475; we cache the hot working set — real query
@@ -235,13 +195,34 @@ class WandEngine:
         self.expander = exp if exp.terms else None
         return self.expander is not None
 
+    DOC_FIELDS = ("uid", "repo", "path", "commit", "lang")
+
+    def hydrate(self, results: list[dict]) -> None:
+        """Fill each hit's doc metadata in place (reference hydration,
+        api_engine.cpp:508-532 — left-join semantics: a hit without a docs
+        row keeps only its rank/score fields). Reads only the docs row
+        groups whose doc-id range holds a hit: ≤ k on the build's
+        doc-id-sorted layout."""
+        if not results:
+            return
+        with self._cache_lock:
+            if self._docs is None:
+                self._docs = RowGroupIndex(self.paths.docs, "doc_id")
+            docs = self._docs
+        meta = docs.read([r["doc_id"] for r in results],
+                         self.DOC_FIELDS).to_pydict()
+        row_of = {d: i for i, d in enumerate(meta["doc_id"])}
+        for r in results:
+            i = row_of.get(r["doc_id"])
+            if i is not None:
+                r.update({f: meta[f][i] for f in self.DOC_FIELDS})
+
     # ------------------------------------------------------------- scoring --
 
     def _load_term_chunks(self, terms: list[str]) -> dict[str, "pd.DataFrame"]:  # noqa: F821
-        """ONE filtered Parquet read for all uncached query terms (term-sorted
-        files → row-group pruning via min/max stats; the offset-seek analog),
-        merged with the bounded LRU of previously fetched terms."""
-        import pyarrow.dataset as ds
+        """ONE footer-indexed read for all uncached query terms (only the
+        row groups whose term range holds one of them), merged with the
+        bounded LRU of previously fetched terms."""
         out: dict = {}
         missing: list[str] = []
         with self._cache_lock:
@@ -252,27 +233,9 @@ class WandEngine:
                 else:
                     missing.append(term)
         if missing:
-            src = self._pdir
-            if self._file_ranges or self._unranged_files:
-                files = sorted(
-                    {p for (tmin, tmax, p) in self._file_ranges
-                     if any(tmin <= t <= tmax for t in missing)}
-                    | set(self._unranged_files)
-                )
-                if files:
-                    src = ds.dataset(files, format="parquet")
-                else:
-                    src = None  # no file can contain any missing term
-            if src is None:
-                import pandas as pd
-                t = pd.DataFrame({"term": [], "doc_lo": [], "count": [],
-                                  "tf_off": [], "dl_off": [], "blob": []})
-            else:
-                t = src.to_table(
-                    columns=["term", "doc_lo", "count", "tf_off", "dl_off",
-                             "blob"],
-                    filter=ds.field("term").isin(missing),
-                ).to_pandas()
+            t = self._postings.read(
+                missing, ["doc_lo", "count", "tf_off", "dl_off", "blob"]
+            ).to_pandas()
             t = t.sort_values(["term", "doc_lo"], kind="mergesort")
             with self._cache_lock:
                 for term, g in t.groupby("term", sort=False):

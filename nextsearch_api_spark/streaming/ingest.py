@@ -348,7 +348,10 @@ def compact_deltas(spark: SparkSession, index_root: str,
     import json
 
     from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
-    from nextsearch_api_spark.operators.build import build_posting_chunks
+    from nextsearch_api_spark.operators.build import (
+        build_posting_chunks, write_docs_sorted, write_postings_sorted,
+        write_suggest_sorted,
+    )
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path, next_gen,
     )
@@ -397,8 +400,10 @@ def compact_deltas(spark: SparkSession, index_root: str,
             f"{collisions} doc_id values map to multiple uids — streamed-id "
             "hash collision; refusing to merge (would fuse distinct docs)"
         )
+    # the build's serving layouts: doc-id-sorted docs and prefix-sorted
+    # suggest keep a flipped generation's point reads as bounded as a build's
     docs_new = gen_path(index_root, "docs", gen)
-    union.write.mode("overwrite").parquet(docs_new)
+    write_docs_sorted(union, docs_new)
 
     fw_delta = (spark.read.parquet(delta_forward_dir)
                 .dropDuplicates(["doc_id", "term"]))   # replays
@@ -436,7 +441,6 @@ def compact_deltas(spark: SparkSession, index_root: str,
     old_post = spark.read.parquet(paths.postings)
     untouched = old_post.join(affected, "term", "left_anti")
     fw_affected = fw.join(affected, "term", "left_semi")
-    from nextsearch_api_spark.operators.build import write_postings_sorted
     rebuilt = build_posting_chunks(fw_affected, avgdl, cfg)
     chunks = untouched.unionByName(rebuilt)
     post_new = gen_path(index_root, "postings", gen)
@@ -469,7 +473,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
     # so autocomplete doesn't serve stale frequencies after the flip
     from nextsearch_api_spark.operators.autocomplete import build_suggest
     sug_new = gen_path(index_root, "suggest", gen)
-    build_suggest(spark.read.parquet(lex_new)).write.mode("overwrite").parquet(sug_new)
+    write_suggest_sorted(build_suggest(spark.read.parquet(lex_new)), sug_new)
 
     flip_generation(index_root, {
         "postings": os.path.basename(post_new),

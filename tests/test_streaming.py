@@ -142,6 +142,67 @@ def test_stream_ingest_and_compact(spark, tmp_path):
             == [(r["doc_id"], r["found"]) for r in b.orderBy("rank").collect()])
 
 
+def test_ingest_flip_then_reload_hydrates_new_generation(spark, tmp_path):
+    """An ingest flip writes the build's serving layouts (doc-id-sorted
+    docs, prefix-sorted suggest), and Engine.reload drops the old footer
+    indexes: hydration then reads the new generation — streamed docs come
+    back with their metadata, in ≤ k docs row groups."""
+    import pyarrow.dataset as pds
+
+    from nextsearch_api_spark.api import Engine
+    from nextsearch_api_spark.config import IndexPaths
+    from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, stream_corpus_to_forward,
+    )
+
+    base_dir = str(tmp_path / "base")
+    write_corpus(generate_corpus(spark, 100, seed=42), base_dir,
+                 partition_by=None)
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.read.parquet(base_dir), root)
+    eng = Engine(root)
+    q = "hotterm"
+    eng.search(q, 100)  # opens the base generation's docs index
+    old = eng.wand
+
+    stream_src = str(tmp_path / "incoming")
+    new_docs = generate_corpus(spark, 140, seed=42).join(
+        generate_corpus(spark, 100, seed=42).select("repo", "path", "commit"),
+        ["repo", "path", "commit"], "left_anti",
+    )
+    write_corpus(new_docs, stream_src, partition_by=None)
+    deltas = str(tmp_path / "deltas")
+    stream_corpus_to_forward(spark, stream_src, deltas,
+                             str(tmp_path / "ckpt"),
+                             trigger_once=True).awaitTermination(120)
+    compact_deltas(spark, root, deltas)
+
+    p = IndexPaths(root)
+    assert p.docs.endswith("_g1")
+    for path, col in ((p.docs, "doc_id"), (p.suggest, "prefix")):
+        spans = RowGroupIndex(path, col).ranges()
+        assert spans and all(hi < lo2 for (_, hi, _, _), (lo2, _, _, _)
+                             in zip(spans, spans[1:])), path
+
+    eng.reload()
+    assert eng.wand is not old  # the old generation's indexes are dropped
+    t = pds.dataset(p.docs).to_table(
+        columns=["doc_id", "uid", "repo", "path", "commit", "lang"]
+    ).to_pydict()
+    meta = {d: {f: t[f][i] for f in ("uid", "repo", "path", "commit", "lang")}
+            for i, d in enumerate(t["doc_id"])}
+    out = eng.search(q, 100)
+    res = out["results"]
+    assert len(res) == min(100, out["found"]) and out["found"] > 0
+    assert any(r["doc_id"] >= (1 << 62) for r in res)  # streamed hits
+    for r in res:
+        assert {f: r[f] for f in meta[r["doc_id"]]} == meta[r["doc_id"]], r
+    before = eng.wand._docs.row_groups_read
+    eng.search(q + " buffer", 10)
+    assert eng.wand._docs.row_groups_read - before <= 10
+
+
 def test_stream_event_rollup(spark, tmp_path):
     from nextsearch_api_spark.streaming.ingest import stream_event_rollup
 

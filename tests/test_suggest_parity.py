@@ -132,7 +132,7 @@ def test_lazy_suggester_reads_bounded_bytes(spark, tmp_path):
     sug.unpersist()
 
     lazy = LazySuggester(out)
-    n_rg = len(lazy._ranges) + len(lazy._unranged)
+    n_rg = lazy.index.num_row_groups
     assert n_rg >= 8, f"layout produced too few row groups to test ({n_rg})"
 
     for tok in ["ab", "mz", "zz", "qa"]:
@@ -143,7 +143,7 @@ def test_lazy_suggester_reads_bounded_bytes(spark, tmp_path):
         rows = after["rows_scanned"] - before["rows_scanned"]
         # near-disjoint range layout: a lookup touches ~1 row group (allow a
         # file-boundary neighbor), never a table scan
-        assert rg_read <= 2 + len(lazy._unranged), (tok, rg_read, n_rg)
+        assert rg_read <= 2 + lazy.index.num_unranged, (tok, rg_read, n_rg)
         assert rows <= total_rows // 4, (tok, rows, total_rows)
         # hot-prefix LRU: the repeat reads zero row groups
         again = lazy.io_counters()
