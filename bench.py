@@ -224,13 +224,13 @@ def run_build_and_queries(cpus: int, n_docs: int, corpus_path: str,
             [QuerySpec(i, q, k) for i, (_, q, k) in enumerate(BENCH_QUERIES)],
         ).collect())
 
-        # interactive serving tier: driver-side block-max WAND (no Spark job)
+        # interactive serving tier: driver-side exhaustive TAAT (no Spark job)
         from nextsearch_api_spark.operators.wand import WandEngine
 
         t0 = time.time()
         wand = WandEngine(index_root)
         t_wand_load = time.time() - t0
-        # per-query WAND walls are 2-50 ms — too short for /proc/stat's 10ms
+        # per-query serving walls are 2-50 ms — too short for /proc/stat's 10ms
         # tick resolution per query, so each query is best-of-N and the
         # steal is accounted over the whole per-pass loop
         wand_runs: dict[str, list[float]] = {n: [] for n, _, _ in BENCH_QUERIES}
@@ -250,34 +250,44 @@ def run_build_and_queries(cpus: int, n_docs: int, corpus_path: str,
         # both — they answer different questions and differ up to ~5×.
         wand_cold = {n: rr[0] for n, rr in wand_runs.items()}
 
-        # correctness gate at BENCH scale (VERDICT r2 #6): pruned WAND must
-        # return the identical ranked (doc_id, score) list as exhaustive
-        # TAAT on THIS index — the regime where an unsound upper bound would
-        # actually bite, unlike the tiny corpora in tests/. Runs on every
-        # bench invocation so every BENCH_r*.json is also a parity run.
-        # doc sequences must match exactly; scores with a relative tolerance
-        # (the two paths accumulate floats in different orders, so a pair
-        # straddling a round-to-4-decimals boundary is not a divergence —
-        # ADVICE r3)
+        # correctness gate at BENCH scale (VERDICT r2 #6): serving's
+        # exhaustive TAAT must return the identical ranked (doc_id, score)
+        # list and found as the distributed plan with block-max chunk
+        # pruning on THIS index — the regime where an unsound prune bound
+        # would actually bite, unlike the tiny corpora in tests/. Runs on
+        # every bench invocation so every BENCH_r*.json is also a parity
+        # run. Doc sequences and found must match exactly; scores with a
+        # relative tolerance (the two tiers add floats in different orders)
         import numpy as _np
+        cases = [(q, kk) for _, q, _ in BENCH_QUERIES for kk in (10, 100)]
+        plan = {}
+        for r in batch_search(
+                reader, [QuerySpec(i, q, kk) for i, (q, kk) in enumerate(cases)],
+                small_query_max_postings=0).collect():
+            plan.setdefault(r["qid"], []).append(r)
         parity = 0
-        for _, q, _ in BENCH_QUERIES:
-            for kk in (10, 100):
-                rw = wand.search(q, kk, mode="wand")["results"]
-                rt = wand.search(q, kk, mode="taat")["results"]
-                dw = [r["doc_id"] for r in rw]
-                dt = [r["doc_id"] for r in rt]
-                assert dw == dt, (
-                    f"WAND/TAAT doc divergence for {q!r} k={kk}: "
-                    f"{dw[:5]} vs {dt[:5]}"
-                )
-                sw = _np.array([r["score"] for r in rw], dtype=_np.float64)
-                st = _np.array([r["score"] for r in rt], dtype=_np.float64)
-                assert _np.allclose(sw, st, rtol=1e-6, atol=1e-9), (
-                    f"WAND/TAAT score divergence for {q!r} k={kk}: "
-                    f"{sw[:5]} vs {st[:5]}"
-                )
-                parity += 1
+        for i, (q, kk) in enumerate(cases):
+            rp = sorted(plan.get(i, []), key=lambda r: r["rank"])
+            out = wand.search(q, kk)
+            rw = out["results"]
+            dw = [r["doc_id"] for r in rw]
+            dp = [r["doc_id"] for r in rp]
+            assert dw == dp, (
+                f"serving/plan doc divergence for {q!r} k={kk}: "
+                f"{dw[:5]} vs {dp[:5]}"
+            )
+            sw = _np.array([r["score"] for r in rw], dtype=_np.float64)
+            sp = _np.array([r["score"] for r in rp], dtype=_np.float64)
+            assert _np.allclose(sw, sp, rtol=1e-6, atol=0.0), (
+                f"serving/plan score divergence for {q!r} k={kk}: "
+                f"{sw[:5]} vs {sp[:5]}"
+            )
+            fp = rp[0]["found"] if rp else 0
+            assert out["found"] == fp, (
+                f"serving/plan found divergence for {q!r} k={kk}: "
+                f"{out['found']} vs {fp}"
+            )
+            parity += 1
 
         return {
             "build_seconds": round(t_build, 3),

@@ -7,14 +7,15 @@ source-code repositories ``(repo, path, commit, lang, content)``.
 This is NOT a port: the reference's hard-coded physical plan (mutex-serialized
 TAAT scoring over mmap-less barrel files, ``src/api_engine.cpp:369-541``) is
 replaced by a declarative DataFrame pipeline (Catalyst/Tungsten pick the
-physical strategy) plus a driver-side block-max WAND serving path. Scoring
+physical strategy) plus a driver-side exhaustive TAAT serving path. Scoring
 semantics — tokenizer, stopword list, BM25 constants, tie-breaks — are pinned
 to the reference and verified against a NumPy golden oracle.
 
 Layout:
-  functions/   tokenization, varbyte/delta codecs, deterministic hashing
+  functions/   tokenization, varbyte/delta codecs, BM25 scoring kernel,
+               deterministic hashing
   sources/     synthetic corpus generator + corpus catalog (Iceberg-or-Parquet)
-  operators/   index build, batch query, WAND, autocomplete, dedup, similarity,
+  operators/   index build, batch query, serving, autocomplete, dedup, similarity,
                text-stats, multimodal plumbing
   plans/       checkpoint manifest / resumable-stage runner, plan introspection
   streaming/   incremental ingestion (Structured Streaming)

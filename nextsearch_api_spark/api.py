@@ -158,14 +158,7 @@ class Engine:
             return out
         t1 = time.time()
         out = self.wand.search(q, kk)
-        # reference parity: `found` is the EXACT matched-doc count
-        # (api_engine.cpp:495). The WAND path's found only counts docs it
-        # scored (pruning skips the rest), so recover the exact union count;
-        # TAAT results are already exact. (With semantic expansion active the
-        # scored term set differs from the raw query — keep WAND's count.)
-        if out.pop("mode", None) == "wand" and self.wand.expander is None:
-            out = dict(out)
-            out["found"] = self.wand.found_count(q)
+        del out["mode"]  # not part of the reference JSON shape
         search_ms = (time.time() - t1) * 1000
         self.wand.hydrate(out["results"])
         out["search_time_ms"] = round(search_ms, 2)

@@ -33,8 +33,9 @@ MIN_TOKEN_LEN = 2
 # Posting-list physical layout (north-rule extension — the reference stores raw
 # uncompressed u32 pairs, lexicon.cpp:122-126; we chunk + delta/varbyte-compress).
 CHUNK_SIZE = 4096          # postings per chunk row (the skew-split unit)
-# (r1 stored intra-chunk skip-doc lists too; dropped in format v3 — WAND skips
-# at chunk granularity via doc_lo/doc_hi metadata, and without per-skip byte
+# (r1 stored intra-chunk skip-doc lists too; dropped in format v3 — the batch
+# tier's chunk prune skips at chunk granularity via doc_lo/doc_hi metadata
+# and serving decodes every chunk, and without per-skip byte
 # offsets an intra-chunk skip list cannot avoid the sequential varbyte decode,
 # so the column was dead weight on every chunk row. See VERDICT r1 §wrong-3.)
 

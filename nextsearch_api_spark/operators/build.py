@@ -26,8 +26,8 @@ Spark-first re-design (NOT a port):
     regardless of term skew, no range-partitioner sampling pass, and a
     run-to-run reproducible physical layout.
   * postings format — per chunk: delta+varbyte blob (doc gaps, tf, doc_len),
-    float32 block-max impact
-    (tf·(k1+1)/(tf+k1·(1−b+b·dl/avgdl)) upper bound for WAND).
+    float32 block-max impact (functions/scoring.py:bm25_impact) — the
+    per-chunk bound the batch tier's chunk prune plans with.
   * every stage materializes to Parquet and checkpoints via the lineage
     manifest (plans/checkpoint.py) — resume skips completed stages.
 """
@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from nextsearch_api_spark.config import BuildConfig, IndexPaths
+from nextsearch_api_spark.functions.scoring import bm25_impact
 from nextsearch_api_spark.functions.text import kept_tokens_expr
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
 
@@ -488,7 +489,6 @@ def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
 
     from nextsearch_api_spark.functions.codec import varbyte_encode_all
 
-    one = np.float32(1.0)
     m = int(cen[-1])  # rows covered by chunks (any held-back tail excluded)
     gaps = np.empty(m, dtype=np.int64)
     gaps[1:] = ids[1:m] - ids[: m - 1]
@@ -500,17 +500,13 @@ def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
     sum_tf = np.add.reduceat(tfs[:m], cst)
     max_tf = np.maximum.reduceat(tfs[:m], cst)
     # min_dl: with max_tf it yields a sound per-chunk impact upper bound for
-    # ANY (k1, b, avgdl) — the serving tier recomputes bounds at load, so
-    # stats drift (incremental compaction changes avgdl) can never make the
-    # stored build-time max_impact unsound
+    # ANY (k1, b, avgdl), also after stats drift (incremental compaction
+    # changes avgdl) has made the stored build-time max_impact stale
     min_dl = np.minimum.reduceat(dls[:m], cst)
 
     fr_off = fr_tf_vals = fr_dl_vals = None
     if avgdl32 is not None:
-        tf32 = tfs[:m].astype(np.float32)
-        dl32 = dls[:m].astype(np.float32)
-        imp_all = (tf32 * (k1 + one)
-                   / (tf32 + k1 * (one - b + b * (dl32 / avgdl32))))
+        imp_all = bm25_impact(tfs[:m], dls[:m], k1, b, avgdl32)
         max_imp = np.maximum.reduceat(imp_all, cst)
     else:
         # per-chunk Pareto frontier, one vectorized pass: sort rows by
@@ -754,15 +750,13 @@ def finalize_max_impact(chunks: DataFrame, avgdl: float,
 
     @pandas_udf("float")
     def _frontier_max(fr_tf: pd.Series, fr_dl: pd.Series) -> pd.Series:
-        one = np.float32(1.0)
         lens = fr_tf.str.len().to_numpy(dtype=np.int64)
         if len(lens) == 0:
             return pd.Series(np.empty(0, dtype=np.float32))
         if not (lens > 0).all():  # every chunk has ≥ 1 posting
             raise ValueError("chunk row with empty impact frontier")
-        ftf = np.concatenate(fr_tf.to_numpy()).astype(np.float32)
-        fdl = np.concatenate(fr_dl.to_numpy()).astype(np.float32)
-        imp = ftf * (k1 + one) / (ftf + k1 * (one - b + b * (fdl / avgdl32)))
+        imp = bm25_impact(np.concatenate(fr_tf.to_numpy()),
+                          np.concatenate(fr_dl.to_numpy()), k1, b, avgdl32)
         starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
         return pd.Series(np.maximum.reduceat(imp, starts).astype(np.float32))
 

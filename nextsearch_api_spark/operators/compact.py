@@ -72,7 +72,7 @@ def compact_postings(spark: SparkSession, index_root: str,
     with open(paths.stats) as f:
         stats = json.load(f)
     # re-chunking recomputes max_impact: use the index's PERSISTED k1/b, not
-    # the caller's defaults — wrong params under-estimate WAND upper bounds
+    # the caller's defaults — wrong params under-estimate chunk upper bounds
     # and can drop true top-k results (ADVICE r1)
     from dataclasses import replace as dc_replace
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from nextsearch_api_spark.functions.scoring import topk_tiebroken
+
 EXPAND_PER_TERM = 3
 EXPAND_GLOBAL_TOPK = 5
 EXPAND_MIN_SIM = 0.55
@@ -93,10 +95,9 @@ class SemanticExpander:
             return []
         k = min(topk, ok.size)
         # canonical boundary tie-break (sim desc, row asc) — same selection
-        # refinement as the BM25 tiers (see wand._topk_tiebroken: a bare
-        # argpartition picks arbitrary members of a tie at the k boundary)
-        from nextsearch_api_spark.operators.wand import _topk_tiebroken
-        order = ok[_topk_tiebroken(sims[ok].astype(np.float64), ok, k)]
+        # refinement as the BM25 tiers (a bare partial sort picks arbitrary
+        # members of a tie at the k boundary)
+        order = ok[topk_tiebroken(sims[ok].astype(np.float64), ok, k)]
         return [(int(r), float(sims[r])) for r in order]
 
     # -------------------------------------------------------------- expand --

@@ -23,7 +23,8 @@ response reports N. Result rows carry a ``segment`` index because doc_ids
 are segment-local (each build numbers 1..N_seg), exactly like the
 reference's per-segment doc indexes.
 
-Scale shape: segments serve independently (driver-side WAND each), so a
+Scale shape: segments serve independently (driver-side exhaustive TAAT
+each, so every segment's ``found`` is exact and so is their sum), so a
 multi-segment tier shards by segment; the distributed batch tier remains
 the cluster path for one logical index.
 """
@@ -62,14 +63,13 @@ class MultiSegmentEngine:
         self._sorted_terms: list[str] | None = None
 
     # ------------------------------------------------------------- search --
-    def search(self, query: str, k: int = 10, mode: str = "auto",
-               hydrate: bool = False) -> dict:
+    def search(self, query: str, k: int = 10, hydrate: bool = False) -> dict:
         """Segment-local scoring + global merge (reference semantics)."""
         kk = clamp_k(k)
         found = 0
         cands: list[tuple[float, int, int]] = []  # (-score, seg, doc_id)
         for si, seg in enumerate(self.segments):
-            r = seg.search(query, kk, mode=mode)
+            r = seg.search(query, kk)
             found += int(r["found"])
             for item in r["results"]:
                 cands.append((-float(item["score"]), si, int(item["doc_id"])))

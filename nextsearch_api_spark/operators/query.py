@@ -38,6 +38,9 @@ from pyspark.sql.types import (
 from nextsearch_api_spark.config import (
     BM25Params, IndexPaths, MIN_TOKEN_LEN, SEARCH_K_MAX, SEARCH_K_MIN,
 )
+from nextsearch_api_spark.functions.scoring import (
+    bm25_idf, bm25_impact, rank_postings,
+)
 from nextsearch_api_spark.functions.text import STOPWORD_SET, tokenize_py
 
 
@@ -50,18 +53,6 @@ def parse_query(q: str) -> list[str]:
 
 def clamp_k(k: int) -> int:
     return max(SEARCH_K_MIN, min(int(k), SEARCH_K_MAX))
-
-
-def bm25_idf(N: int, df: np.ndarray, precision: str = "f32") -> np.ndarray:
-    """idf = ln(1 + (N-df+0.5)/(df+0.5)) — reference api_engine.cpp:45-47."""
-    if precision == "f32":
-        df32 = df.astype(np.float32)
-        return np.log(
-            np.float32(1.0)
-            + (np.float32(N) - df32 + np.float32(0.5)) / (df32 + np.float32(0.5))
-        ).astype(np.float32)
-    dfd = df.astype(np.float64)
-    return np.log(1.0 + (float(N) - dfd + 0.5) / (dfd + 0.5))
 
 
 @dataclass
@@ -135,9 +126,8 @@ class IndexReader:
         Driver-side read of the (term, doc_lo)-sorted postings through the
         postings footer index — only the row groups whose term range holds a
         requested term — column-pruned to four scalar columns, never the
-        blobs. Volume is df/chunk_size rows per term (the same order as the
-        WAND tier's resident chunk directory), a small fraction of the decode
-        volume it lets the batch tier skip. Returns {} on any failure
+        blobs. Volume is df/chunk_size rows per term, a small fraction of
+        the decode volume it lets the batch tier skip. Returns {} on any failure
         (prefilter is then skipped)."""
         terms = list(terms)
         if not terms:
@@ -195,8 +185,8 @@ class IndexReader:
 
 
 # relative slack on the prune threshold: covers f32-stored vs f64-recomputed
-# impact drift (~1e-7 relative) with two orders of margin, same spirit as the
-# WAND tier's EPS slack
+# impact drift (~1e-7 relative) with two orders of margin, so a 1-ulp rounding
+# difference never prunes a true top-k doc
 _CHUNK_PRUNE_SLACK = 1.0 - 1e-5
 
 # hydrate pushdown budget: largest Σk for which the matched doc_ids are
@@ -249,8 +239,9 @@ def _plan_chunk_prune(
     the k-th max; chunks strictly below that threshold are DROPPED from the
     scan and ``found`` comes exactly from the lexicon df.
 
-    Multi-term queries (r5): the WAND pivot inequality
-    (operators/wand.py:_block_max_wand) applied at plan time.
+    Multi-term queries (r5): the block-max WAND pivot inequality (Ding &
+    Suel 2011) applied at plan time — the engine's only top-k pruning; the
+    serving tier (operators/wand.py) scores exhaustively.
     θ_q = max over terms t with ≥ k chunks of the k-th highest
     widf_t·max_impact — each chunk max is attained by a distinct doc whose
     TOTAL score is at least that contribution (disjunctive OR), so θ_q lower-
@@ -417,10 +408,6 @@ def _decode_score_udf(avgdl: float, params: BM25Params,
     — and emit impact 0. Those rows keep per-query ``found`` exact (every
     matched doc still appears once) and are provably outside the top-k
     (see _plan_chunk_prune), so zero impact cannot corrupt ranking."""
-    k1_32, b_32 = np.float32(params.k1), np.float32(params.b)
-    k1_64, b_64 = float(params.k1), float(params.b)
-    avg32, avg64 = np.float32(avgdl), float(avgdl)
-    one = np.float32(1.0)
     f32 = params.precision == "f32"
 
     out_schema = StructType([
@@ -449,17 +436,8 @@ def _decode_score_udf(avgdl: float, params: BM25Params,
                 else:
                     doc_ids, tfs, dls = decode_chunk(
                         blob, int(tf_off), int(dl_off))
-                    if f32:
-                        tfv = tfs.astype(np.float32)
-                        dlv = dls.astype(np.float32)
-                        imp = (tfv * (k1_32 + one)
-                               / (tfv + k1_32 * (one - b_32 + b_32 * (dlv / avg32))))
-                        imp = imp.astype(np.float32)
-                    else:
-                        tfv = tfs.astype(np.float64)
-                        dlv = dls.astype(np.float64)
-                        imp = (tfv * (k1_64 + 1.0)
-                               / (tfv + k1_64 * (1.0 - b_64 + b_64 * (dlv / avg64))))
+                    imp = bm25_impact(tfs, dls, params.k1, params.b, avgdl,
+                                      params.precision)
                 terms_out.append(np.full(len(doc_ids), term, dtype=object))
                 ids_out.append(doc_ids)
                 imp_out.append(imp)
@@ -510,29 +488,14 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     if any(term not in rows_by_term for term in present):
         return None  # lexicon/postings disagree — let the full plan decide
 
-    f32 = params.precision == "f32"
-    k1_32, b_32 = np.float32(params.k1), np.float32(params.b)
-    k1_64, b_64 = float(params.k1), float(params.b)
-    avg32, avg64 = np.float32(reader.avgdl), float(reader.avgdl)
-    one = np.float32(1.0)
     def _decode_term(term: str) -> tuple[str, np.ndarray, np.ndarray]:
         idxs = rows_by_term[term]
         ids, tfs, dls = decode_chunks_concat(
             [blob_arr[i].as_buffer() for i in idxs],
             [tf_offs[i] for i in idxs],
             [dl_offs[i] for i in idxs], [counts[i] for i in idxs])
-        if f32:
-            tfv = tfs.astype(np.float32)
-            dlv = dls.astype(np.float32)
-            imp = (tfv * (k1_32 + one)
-                   / (tfv + k1_32 * (one - b_32 + b_32 * (dlv / avg32))))
-            imp = imp.astype(np.float32)
-        else:
-            tfv = tfs.astype(np.float64)
-            dlv = dls.astype(np.float64)
-            imp = (tfv * (k1_64 + 1.0)
-                   / (tfv + k1_64 * (1.0 - b_64 + b_64 * (dlv / avg64))))
-        return term, ids, imp
+        return term, ids, bm25_impact(tfs, dls, params.k1, params.b,
+                                      reader.avgdl, params.precision)
 
     # numpy varbyte kernels release the GIL — a few threads cut the decode
     # wall ~linearly; results are per-term and order-independent
@@ -553,38 +516,10 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     out: list[tuple] = []
     for qid in sorted(by_qid):
         k, tws = by_qid[qid]
-        all_ids = np.concatenate([per_term[term][0] for term, _ in tws])
-        all_c = np.concatenate([
-            per_term[term][1].astype(np.float64) * widf for term, widf in tws
-        ])
-        if not len(all_ids):
-            continue
-        # per-doc float64 accumulation in occurrence order (bincount and
-        # np.unique+add.at sum in the same sequence); dense engine id
-        # spaces take the O(n) bincount path, sparse ones the sort path
-        max_id = int(all_ids.max())
-        if max_id < 4 * len(all_ids):
-            cnt = np.bincount(all_ids, minlength=max_id + 1)
-            ssum = np.bincount(all_ids, weights=all_c, minlength=max_id + 1)
-            uniq = np.nonzero(cnt)[0]
-            scores = ssum[uniq]
-        else:
-            uniq, inv = np.unique(all_ids, return_inverse=True)
-            scores = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(scores, inv, all_c)
-        found = int(len(uniq))
-        # exact (score desc, doc_id asc) top-k: argpartition trims to the
-        # k-th score, ties at the boundary are kept and resolved by the
-        # full lexsort over the (small) candidate set
-        if len(uniq) > k:
-            kth = np.argpartition(-scores, k - 1)[:k]
-            cand = np.nonzero(scores >= scores[kth].min())[0]
-        else:
-            cand = np.arange(len(uniq))
-        order = cand[np.lexsort((uniq[cand], -scores[cand]))][:k]
-        for r, j in enumerate(order):
-            out.append((int(qid), r + 1, int(uniq[j]),
-                        float(scores[j]), found))
+        found, ids, scores = rank_postings(
+            [(*per_term[term], widf) for term, widf in tws], k)
+        for r, (doc, score) in enumerate(zip(ids, scores)):
+            out.append((int(qid), r + 1, int(doc), float(score), found))
     return out
 
 

@@ -361,7 +361,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
     with open(paths.stats) as f:
         stats = json.load(f)
     # re-chunking recomputes max_impact: use the PERSISTED k1/b, never the
-    # caller's defaults (ADVICE r1 — wrong params under-estimate WAND bounds)
+    # caller's defaults (ADVICE r1 — wrong params under-estimate chunk bounds)
     from dataclasses import replace as dc_replace
     persisted = BM25Params(k1=float(stats.get("k1", cfg.bm25.k1)),
                            b=float(stats.get("b", cfg.bm25.b)),
@@ -425,8 +425,8 @@ def compact_deltas(spark: SparkSession, index_root: str,
     # untouched. CPU cost is ∝ affected-term postings, not index size (the
     # new-generation copy is linear I/O but no decode/sort/encode). Untouched
     # chunks keep their build-time max_impact computed with the OLD avgdl —
-    # sound because the serving tier recomputes WAND bounds at load from
-    # (max_tf, min_dl) with the current stats (operators/wand.py).
+    # harmless: stats drop the impact_avgdl marker below, which turns off
+    # the batch tier's chunk prune, and serving never prunes.
     affected = (
         fw_delta.select("term")
         .unionByName(

@@ -90,25 +90,27 @@ def test_stream_ingest_and_compact(spark, tmp_path):
     # incremental: only delta-touched terms were re-chunked
     total_terms = spark.read.parquet(IndexPaths(root).lexicon).count()
     assert 0 < stats2["affected_terms"] < total_terms
-    # WAND bounds stay sound across the avgdl drift of incremental merges
-    # (untouched chunks keep build-time max_impact; bounds are recomputed)
+    # serving stays exact across the avgdl drift of incremental merges
+    # (untouched chunks keep build-time max_impact): it equals the batch plan
+    from tests.test_wand import assert_matches_pruned_plan
     w2 = WandEngine(root)
-    for q in ("hotterm", "hotterm buffer", "buffer cache3"):
-        pr = w2.search(q, 10, mode="wand")
-        fu = w2.search(q, 10, mode="taat")
-        assert ([r["doc_id"] for r in pr["results"]]
-                == [r["doc_id"] for r in fu["results"]]), q
+    assert_matches_pruned_plan(
+        spark, root, w2,
+        [(q, 10) for q in ("hotterm", "hotterm buffer", "buffer cache3")])
 
-    # Engine-level `found` is EXACT even when auto mode routes to WAND
-    # (streamed 2^62-range ids exceed the dense-TAAT limit): single-term
-    # found must equal the lexicon df
+    # `found` is EXACT over streamed 2^62-range ids: single-term found
+    # equals the lexicon df, and a multi-segment engine over the same
+    # root reports Engine's count
     from nextsearch_api_spark.api import Engine
+    from nextsearch_api_spark.operators.multisegment import MultiSegmentEngine
     eng = Engine(root)
     res = eng.search("hotterm", 3)
     df_hot = (spark.read.parquet(IndexPaths(root).lexicon)
               .where(F.col("term") == "hotterm").collect()[0]["df"])
     assert res["found"] == df_hot
     assert "mode" not in res  # internal field stripped from the JSON shape
+    assert (MultiSegmentEngine([root]).search("hotterm buffer", 3)["found"]
+            == eng.search("hotterm buffer", 3)["found"])
     docs2 = spark.read.parquet(IndexPaths(root).docs)
     assert docs2.count() == stats2["N"]
     # each uid appears exactly once (no duplicate versions)

@@ -1,6 +1,7 @@
 """Autocomplete parity vs the pandas oracle (reference trie ranking:
 (Σdf desc, term asc), top-10/prefix, len≥2 — api_autocomplete.cpp:33-55,
-105-119) and randomized WAND-vs-TAAT equivalence (SURVEY.md §5 items 2, 7)."""
+105-119) and randomized serving-vs-pruned-plan equivalence (SURVEY.md §5
+items 2, 7)."""
 
 import random
 
@@ -40,22 +41,24 @@ def test_suggest_multiword_echo(spark, tiny_index):
     assert all(s.split()[-1].startswith("buf") for s in out)
 
 
-def test_wand_random_queries_match_taat(tiny_index, lex_pdf):
+def test_wand_random_queries_match_taat(spark, tiny_index, lex_pdf):
+    """Random queries: serving (exhaustive TAAT) equals the block-max-pruned
+    batch plan and the oracle."""
+    from tests.test_wand import assert_matches_pruned_plan
+
     root, oracle = tiny_index
     w = WandEngine(root)
     vocab = list(lex_pdf["term"])
     rng = random.Random(7)
-    for trial in range(25):
+    cases = []
+    for _ in range(25):
         terms = rng.sample(vocab, rng.randint(1, 5))
-        k = rng.choice([1, 3, 10, 50])
-        q = " ".join(terms)
-        pruned = w.search(q, k, mode="wand")
-        full = w.search(q, k, mode="taat")
-        assert [r["doc_id"] for r in pruned["results"]] == [
-            r["doc_id"] for r in full["results"]
-        ], f"trial {trial}: {q!r} k={k}"
+        cases.append((" ".join(terms), rng.choice([1, 3, 10, 50])))
+    assert_matches_pruned_plan(spark, root, w, cases)
+    for q, k in cases:
         exp = oracle.search(q, k)
-        assert [r["doc_id"] for r in full["results"]] == list(exp["doc_id"]), q
+        assert [r["doc_id"] for r in w.search(q, k)["results"]] == list(
+            exp["doc_id"]), q
 
 
 def test_long_prefix_falls_back_to_lexicon_scan(spark):

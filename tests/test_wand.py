@@ -1,11 +1,40 @@
-"""Block-max WAND correctness: pruned top-k must be rank-identical to the
-exhaustive path, the golden oracle, and the Spark batch path (SURVEY.md M5)."""
+"""Serving-tier correctness: exhaustive TAAT top-k must be rank-identical to
+the golden oracle and to the Spark batch plan with block-max chunk pruning
+(SURVEY.md M5)."""
 
 import numpy as np
 import pytest
 
 from nextsearch_api_spark.operators.wand import WandEngine
 from tests.test_build_query import QUERIES
+
+
+def assert_matches_pruned_plan(spark, root, eng, cases):
+    """``eng.search`` (exhaustive) vs the distributed plan with block-max
+    chunk pruning on (``batch_search(..., small_query_max_postings=0)``,
+    same BM25 params) for every (query, k): doc ids exact, scores at rtol
+    1e-6, found exact."""
+    from nextsearch_api_spark.operators.query import (
+        IndexReader, QuerySpec, batch_search,
+    )
+
+    rows = batch_search(
+        IndexReader(spark, root),
+        [QuerySpec(i, q, k) for i, (q, k) in enumerate(cases)],
+        eng.params, small_query_max_postings=0,
+    ).collect()
+    by_qid: dict = {}
+    for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
+        by_qid.setdefault(r["qid"], []).append(r)
+    for i, (q, k) in enumerate(cases):
+        exp = by_qid.get(i, [])
+        got = eng.search(q, k)
+        assert ([r["doc_id"] for r in got["results"]]
+                == [r["doc_id"] for r in exp]), f"q={q!r} k={k}"
+        assert np.allclose([r["score"] for r in got["results"]],
+                           [r["score"] for r in exp], rtol=1e-6, atol=0.0), \
+            f"q={q!r} k={k}"
+        assert got["found"] == (exp[0]["found"] if exp else 0), f"q={q!r} k={k}"
 
 
 @pytest.fixture(scope="session")
@@ -27,22 +56,22 @@ def test_wand_matches_oracle(wand, tiny_index):
             assert np.allclose(got_s, exp_s, rtol=2e-5), f"q={q!r}"
 
 
-def test_wand_pruned_equals_exhaustive(wand):
+def test_wand_pruned_equals_exhaustive(spark, wand, tiny_index):
+    root, _ = tiny_index
+    assert_matches_pruned_plan(spark, root, wand,
+                               [(q, k) for _, q, k in QUERIES])
+    # found_count is the search's exact found
     for _, q, k in QUERIES:
-        pruned = wand.search(q, k, prune=True)
-        full = wand.search(q, k, prune=False)
-        assert [r["doc_id"] for r in pruned["results"]] == [
-            r["doc_id"] for r in full["results"]
-        ], q
-        ps = [r["score"] for r in pruned["results"]]
-        fs = [r["score"] for r in full["results"]]
-        assert np.allclose(ps, fs, rtol=1e-9), q
-        # exhaustive found is exact
-        assert full["found"] == wand.found_count(q), q
+        assert wand.found_count(q) == wand.search(q, k)["found"], q
+    # float64 idf and impacts end to end
+    from nextsearch_api_spark.config import BM25Params
+    assert_matches_pruned_plan(spark, root,
+                               WandEngine(root, BM25Params(precision="f64")),
+                               [(q, k) for _, q, k in QUERIES])
 
 
 def test_wand_small_k_prunes_hot_term(wand, tiny_index):
-    """k=1 on the super-hot term must not decode fewer-or-wrong results."""
+    """k=1 on the super-hot term must return the oracle's top doc."""
     _, oracle = tiny_index
     got = wand.search("hotterm", 1)
     exp = oracle.search("hotterm", 1)
@@ -54,18 +83,23 @@ def test_wand_oov_and_empty(wand):
     assert wand.search("the a an", 10)["found"] == 0
 
 
+def test_wand_rejects_unknown_mode(wand):
+    assert wand.search("buffer", 3, mode="taat")["mode"] == "taat"
+    with pytest.raises(ValueError):
+        wand.search("buffer", 3, mode="wand")
+
+
 @pytest.fixture(scope="session")
-def multichunk_wand(spark, tiny_corpus, tmp_path_factory):
+def multichunk_index(spark, tiny_corpus, tmp_path_factory):
     """Index with chunk_size=8 → every common term spans many chunks with
-    varying block maxes. Regression surface for the r1 ADVICE soundness bug:
-    pivoting on current-chunk maxes let skip_to jump over higher-impact later
-    chunks, silently dropping true top-k docs."""
+    varying block maxes, so the batch plan's block-max prune has many chunks
+    to keep, drop or decode doc-ids-only."""
     from nextsearch_api_spark.config import BuildConfig
     from nextsearch_api_spark.operators.build import build_index
 
     root = str(tmp_path_factory.mktemp("index_mc"))
     build_index(spark, tiny_corpus, root, cfg=BuildConfig(chunk_size=8))
-    return WandEngine(root)
+    return root
 
 
 def test_segment_chunks_disjoint_over_partitioned_corpus(
@@ -74,7 +108,7 @@ def test_segment_chunks_disjoint_over_partitioned_corpus(
     """Building over a lang-partitioned corpus (files NOT in doc order) must
     still produce per-term disjoint chunk ranges — the seg-break invariant.
     Regression: without seg breaks, id-bucket hash placement made ids files
-    overlap in doc range and WAND returned wrong top-k / crashed."""
+    overlap in doc range and serving returned wrong top-k / crashed."""
     from nextsearch_api_spark.operators.build import build_index
     from nextsearch_api_spark.sources.corpus import read_corpus, write_corpus
 
@@ -86,16 +120,13 @@ def test_segment_chunks_disjoint_over_partitioned_corpus(
 
     eng = WandEngine(root)  # __init__ raises on overlapping chunk ranges
     hot = sorted(eng._df, key=lambda t: -eng._df[t])[0]
-    pruned = eng.search(f"{hot} bufferrank", 5, mode="wand")
-    full = eng.search(f"{hot} bufferrank", 5, mode="taat")
-    assert ([r["doc_id"] for r in pruned["results"]]
-            == [r["doc_id"] for r in full["results"]])
+    assert_matches_pruned_plan(spark, root, eng, [(f"{hot} bufferrank", 5)])
 
 
-def test_wand_multichunk_parity_exhaustive(multichunk_wand):
-    """WAND over many small chunks must stay rank-identical to TAAT for every
-    query × k — the property the unsound pivot violated."""
-    eng = multichunk_wand
+def test_wand_multichunk_parity_exhaustive(spark, multichunk_index):
+    """Exhaustive serving over many small chunks must stay rank-identical to
+    the block-max-pruned batch plan for every query × k."""
+    eng = WandEngine(multichunk_index)
     vocab = sorted(eng._df, key=lambda t: -eng._df[t])
     hot = vocab[:4]
     mid = vocab[len(vocab) // 2:len(vocab) // 2 + 4]
@@ -106,24 +137,15 @@ def test_wand_multichunk_parity_exhaustive(multichunk_wand):
         f"{hot[1]} {hot[1]} {mid[1]}",  # repeated term (weight 2)
         f"{mid[2]} {rare[2]} {hot[2]} {mid[3]}",
     ]
-    for q in queries:
-        for k in (1, 3, 10):
-            pruned = eng.search(q, k, mode="wand")
-            full = eng.search(q, k, mode="taat")
-            assert (
-                [r["doc_id"] for r in pruned["results"]]
-                == [r["doc_id"] for r in full["results"]]
-            ), f"q={q!r} k={k}"
-            ps = [r["score"] for r in pruned["results"]]
-            fs = [r["score"] for r in full["results"]]
-            assert np.allclose(ps, fs, rtol=1e-9), f"q={q!r} k={k}"
+    assert_matches_pruned_plan(spark, multichunk_index, eng,
+                               [(q, k) for q in queries for k in (1, 3, 10)])
 
 
 def test_topk_boundary_tiebreak_canonical(spark, tmp_path):
     """Score ties straddling the k boundary must resolve by doc_id ASC in
     every tier (r3 regression, caught by the bench parity gate): a bare
-    argpartition selects ARBITRARY tied members before the final sort, so
-    TAAT could return different tied docs than WAND's canonical heap.
+    argpartition selects ARBITRARY tied members before the final sort. Both
+    accumulator branches of the kernel: tests/test_scoring.py.
 
     Corpus: 30 docs with identical ("tietok", tf=1, doc_len=2) postings →
     30 identical BM25 scores; k=10 must return the 10 smallest doc_ids."""
@@ -139,16 +161,10 @@ def test_topk_boundary_tiebreak_canonical(spark, tmp_path):
     root = base + "/index"
     build_index(spark, read_corpus(spark, base + "/corpus"), root)
 
-    eng = WandEngine(root)
-    for mode in ("taat", "wand"):
-        res = eng.search("tietok", 10, mode=mode)["results"]
-        ids = [r["doc_id"] for r in res]
-        assert ids == sorted(ids) == list(range(1, 11)), (mode, ids)
-        assert len({round(r["score"], 9) for r in res}) == 1  # genuine tie
-    # sparse TAAT path (streamed-id space) shares the helper — force it
-    eng.DENSE_LIMIT = 0
-    sparse = eng.search("tietok filler", 10, mode="taat")["results"]
-    assert [r["doc_id"] for r in sparse] == list(range(1, 11))
+    res = WandEngine(root).search("tietok", 10)["results"]
+    ids = [r["doc_id"] for r in res]
+    assert ids == sorted(ids) == list(range(1, 11)), ids
+    assert len({round(r["score"], 9) for r in res}) == 1  # genuine tie
 
 
 def test_engine_thread_safety_under_concurrency(tiny_index, tmp_path):
@@ -200,29 +216,3 @@ def test_engine_thread_safety_under_concurrency(tiny_index, tmp_path):
     w = eng.wand
     actual = sum(int(g["blob"].map(len).sum()) for g in w._blob_cache.values())
     assert w._blob_cache_bytes == actual
-
-
-def test_topk_tiebroken_property():
-    """_topk_tiebroken must equal the full lexsort selection for any score
-    vector with heavy ties — the selection refinement can't diverge from the
-    ground truth it approximates."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from nextsearch_api_spark.operators.wand import _topk_tiebroken
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=40),
-        st.integers(min_value=1, max_value=40),
-    )
-    def check(quant_scores, k):
-        scores = np.array(quant_scores, dtype=np.float64) / 3.0
-        ids = np.arange(10, 10 + len(scores), dtype=np.int64)  # ascending
-        kk = min(k, len(scores))
-        got = _topk_tiebroken(scores, ids, kk)
-        full = np.lexsort((ids, -scores))[:kk]
-        assert list(ids[got]) == list(ids[full])
-        assert list(scores[got]) == list(scores[full])
-
-    check()
