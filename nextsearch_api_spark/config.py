@@ -111,31 +111,17 @@ class BuildConfig:
 
     bm25: BM25Params = field(default_factory=BM25Params)
     chunk_size: int = CHUNK_SIZE
-    # Range partitions for the (term, doc_id) shuffle. At 100 TB this is the
-    # knob that spreads a hot term's postings across many partitions (the
-    # range partitioner samples the key distribution, so skewed terms are
-    # split across partition boundaries automatically; chunked posting rows
-    # make that safe).
+    # Shuffle partitions of the compactions' re-chunker
+    # (operators/build.py:build_posting_chunks), which hash-partitions token
+    # rows by (term, doc_id div doc_block): a hot term's postings spread
+    # over as many partitions as it has doc blocks.
     postings_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     id_partitions: int | None = None        # doc-id assignment range partitions
-    # deterministic skew salt: postings shuffle keyed by (term, doc_id div
-    # doc_block); a hot term spreads over ~max_doc/doc_block partitions
+    # deterministic skew salt of that shuffle; a hot term spreads over
+    # ~max_doc/doc_block partitions
     doc_block: int = 65536
     build_suggest: bool = True
-    tokenizer: str = "arrow"  # 'arrow' (C kernels) | 'pandas' | 'sql' — same results
-    # 'segment' (default): NO-shuffle postings build — each doc-range input
-    # partition emits its own disjoint chunks (Lucene-segment style; token
-    # rows never cross the JVM↔Python boundary). 'global': shuffle by
-    # (term, doc_block) for globally consolidated per-term chunks.
-    postings_mode: str = "segment"
-    # explicit segment count for 'segment' mode (None → follow input splits);
-    # uses repartitionByRange(doc_id) so segment doc-ranges stay disjoint
+    # explicit segment count for the no-shuffle postings build (None →
+    # follow input splits); uses repartitionByRange(doc_id) so segment
+    # doc-ranges stay disjoint
     segment_partitions: int | None = None
-    # 'term': rewrite final postings range-partitioned+sorted by (term,
-    # doc_lo) — per-term row-group locality for the serving tier (measured
-    # ~6× faster WAND blob fetch); 'segment' keeps the builder's raw layout
-    serving_layout: str = "term"
-    # materialize the (doc_id, term, tf, doc_len) forward index as a stage
-    # (needed by streaming delta compaction; the batch build derives doc_len
-    # with the pure-JVM tokenizer instead)
-    materialize_forward: bool = False

@@ -4,27 +4,35 @@ Reference semantics (include/textutil.hpp:13-37):
   * tokenize: keep maximal runs of ``isalnum`` chars, lowercased; everything
     else is a delimiter (ASCII / C locale).
   * keep only tokens with len >= 2 (src/ForwardIndex.cpp:147) that are not one
-    of the 25 fixed English stopwords (textutil.hpp:31-37).
+    of the 24 fixed English stopwords (textutil.hpp:31-37).
 
 The corpus contract (FIXTURES.md) is ASCII-only content, where Spark's Unicode
 ``lower()`` + ``[^a-z0-9]+`` split agrees exactly with the reference's
 ASCII ``std::tolower`` + ``std::isalnum`` — see SURVEY.md §7.3 for the
 documented non-ASCII divergence.
 
-Two implementations, same results:
-  * ``tokens_expr`` — pure Catalyst expressions (split / filter / lower), runs
-    inside whole-stage codegen, no Python in the hot path.
-  * ``tokenize_series`` — vectorized pandas (Arrow-batched), used by the
-    build pipeline's mapInArrow tokenizer where we also need per-doc tf maps.
+Three implementations of the one rule, same results on that contract:
+  * ``kept_tokens_expr`` — Catalyst expressions (split / filter / lower),
+    runs inside whole-stage codegen; used by SQL-shaped operators.
+  * ``arrow_kept_tokens`` — Arrow C kernels over a string array; every
+    index write (batch build, streaming ingest) tokenizes through it.
+  * ``kept_tokens_py`` — plain Python; query parsing and the oracle.
+
+Outside ASCII the Arrow and Python lowercasings can differ: U+0130 (``İ``)
+lowercases to ``i`` + U+0307 in Python, which splits ``"xİy"`` into
+``["xi", "y"]`` and keeps ``["xi"]``; Arrow lowercases it to ``i`` alone and
+keeps ``["xiy"]``.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterable, List
+from typing import List
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from nextsearch_api_spark.config import MIN_TOKEN_LEN
 
 # The reference's exact stoplist, verbatim (include/textutil.hpp:31-37) — 24 words.
 STOPWORDS: tuple[str, ...] = (
@@ -55,16 +63,6 @@ def kept_tokens_expr(col: Column | str, min_len: int = 2) -> Column:
     )
 
 
-def kept_tokens_sql(col: str, min_len: int = 2) -> str:
-    """Same as :func:`kept_tokens_expr` as a SQL snippet (for spark.sql /
-    DuckDB oracle parity — both engines support lambda filters)."""
-    sw = ", ".join(f"'{s}'" for s in STOPWORDS)
-    return (
-        f"filter(split(lower({col}), '[^a-z0-9]+'), "
-        f"x -> x != '' AND length(x) >= {min_len} AND NOT array_contains(array({sw}), x))"
-    )
-
-
 def tokenize_py(text: str) -> List[str]:
     """Reference tokenizer, plain Python (oracle + tests).
     Exactly: lowercase, [a-z0-9]+ runs (textutil.hpp:13-28)."""
@@ -78,19 +76,23 @@ def kept_tokens_py(text: str, min_len: int = 2) -> List[str]:
     ]
 
 
-def tokenize_series(texts: "pd.Series") -> "pd.Series":  # noqa: F821
-    """Vectorized tokenizer: pd.Series[str] -> pd.Series[list[str]] of KEPT
-    tokens (len>=2, non-stopword). Arrow-batched — no per-row Python loops in
-    the regex/lower path (pandas .str ops are C-backed)."""
-    import pandas as pd  # local import keeps module importable without pandas
+def arrow_kept_tokens(content: "pa.Array") -> "tuple[pa.Array, pa.Array]":  # noqa: F821
+    """Kept tokens of an Arrow string array, in Arrow C kernels only (no
+    Python string objects) → (tokens, parent_row): the flat kept tokens in
+    document order and, for each, the index of its row in ``content``.
+    Lowercase, split on ``[^a-z0-9]+``, keep len ≥ MIN_TOKEN_LEN and
+    non-stopwords; null rows yield no tokens."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    toks = texts.fillna("").str.lower().str.findall(r"[a-z0-9]+")
-    sw = STOPWORD_SET
-    # the per-list filter is cheap relative to the C-backed findall
-    return pd.Series(
-        [[t for t in lst if len(t) >= 2 and t not in sw] for lst in toks],
-        index=texts.index,
+    toks = pc.split_pattern_regex(pc.utf8_lower(content), "[^a-z0-9]+")
+    parent = pc.list_parent_indices(toks)
+    flat = pc.list_flatten(toks)
+    keep = pc.and_kleene(
+        pc.greater_equal(pc.utf8_length(flat), MIN_TOKEN_LEN),
+        pc.invert(pc.is_in(flat, value_set=pa.array(STOPWORDS, pa.string()))),
     )
+    return pc.filter(flat, keep), pc.filter(parent, keep)
 
 
 def normalize_token_expr(col: Column | str) -> Column:
@@ -105,16 +107,3 @@ def first_of_semicolon_expr(col: Column | str) -> Column:
     pick_first_path src/ForwardIndex.cpp:44-52; url split api_engine.cpp:525-527)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.split(c, ";").getItem(0))
-
-
-def doc_len_expr(col: Column | str) -> Column:
-    """doc_len = number of kept tokens (reference: ForwardIndex.cpp:141-151)."""
-    return F.size(kept_tokens_expr(col))
-
-
-def stopwords_sql_list() -> str:
-    return ", ".join(f"'{s}'" for s in STOPWORDS)
-
-
-def sw_tuple() -> Iterable[str]:
-    return STOPWORDS

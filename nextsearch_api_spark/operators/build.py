@@ -13,21 +13,25 @@ Spark-first re-design (NOT a port):
     bucketed by sampled range bounds (deterministic given the seed), per-bucket
     counts give global offsets, a mapInPandas pass adds bucket-local positions.
     Scales to any corpus size; no driver bottleneck.
-  * tokenize+tf — one Arrow-native mapInArrow pass emitting unique
-    (doc_id, term, tf, doc_len) rows directly: the per-doc tf aggregation is
-    local to the doc, so there is NO shuffle for the tf hash-agg at all
-    (map-side perfect combine; beats explode→groupBy), and tokenization runs
-    entirely in Arrow C kernels.
-  * invert — hash-repartition by (term, doc_id div doc_block): a
-    DETERMINISTIC doc-range salt. A super-hot term's postings are split
-    ACROSS partitions (explicit skew handling) while each (term, block) stays
-    whole, so every partition emits independent, disjoint, doc-ordered CHUNKS
-    of ≤ chunk_size postings — no giant collect_list, bounded memory per task
-    regardless of term skew, no range-partitioner sampling pass, and a
-    run-to-run reproducible physical layout.
+  * tokenize+tf+invert — ONE pass, the build's only tokenize
+    (build_posting_chunks_segment): per input partition, Arrow C kernels
+    tokenize (functions/text.py:arrow_kept_tokens), a NumPy pair count gives
+    per-doc tf (local to the doc, so no tf shuffle: map-side perfect
+    combine), and an in-partition (term, doc_id) sort emits doc-ordered
+    chunks. Token rows never leave the Python worker and are never
+    shuffled; chunks break on id-bucket boundaries, so per-term chunk doc
+    ranges are disjoint across partitions.
+  * serving layout — the chunk rows (compressed postings, a fraction of
+    corpus bytes) are range-partitioned + sorted by (term, doc_lo) in
+    bounded row groups; docs by doc_id; lexicon and suggest by key.
   * postings format — per chunk: delta+varbyte blob (doc gaps, tf, doc_len),
     float32 block-max impact (functions/scoring.py:bm25_impact) — the
-    per-chunk bound the batch tier's chunk prune plans with.
+    per-chunk bound the batch tier's chunk prune plans with. avgdl is only
+    known after the pass, so chunks carry a (tf, dl) Pareto frontier that
+    finalize_max_impact turns into the attained max.
+  * compaction re-chunks token rows with build_posting_chunks: a hash
+    shuffle by (term, doc_id div doc_block), a deterministic doc-range salt
+    that splits a hot term across partitions while each block stays whole.
   * every stage materializes to Parquet and checkpoints via the lineage
     manifest (plans/checkpoint.py) — resume skips completed stages.
 """
@@ -51,7 +55,7 @@ from pyspark.sql.types import (
 
 from nextsearch_api_spark.config import BuildConfig, IndexPaths
 from nextsearch_api_spark.functions.scoring import bm25_impact
-from nextsearch_api_spark.functions.text import kept_tokens_expr
+from nextsearch_api_spark.functions.text import arrow_kept_tokens
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
 
 TOKENS_SCHEMA = StructType([
@@ -75,7 +79,7 @@ POSTINGS_SCHEMA = StructType([
     StructField("blob", BinaryType(), False),
 ])
 
-# deferred-impact build output (segment mode, avgdl unknown at tokenize
+# deferred-impact build output (the postings pass, avgdl unknown at tokenize
 # time): POSTINGS_SCHEMA + per-chunk (tf, dl) Pareto frontier; the frontier
 # columns are consumed by finalize_max_impact and never reach disk
 POSTINGS_BUILD_SCHEMA = StructType(
@@ -259,70 +263,61 @@ def assign_doc_ids(corpus: DataFrame, n_buckets: int | None = None,
 
 # ---------------------------------------------------------------- tokenize --
 
-def tokenize_tf(corpus_ids: DataFrame, tokenizer: str = "arrow") -> DataFrame:
+def _term_counts(content, n_rows: int):
+    """Per-(doc, term) counts of one Arrow batch's ``content`` column →
+    (terms, row, tf, doc_lens), or None when the batch keeps no token. One
+    entry per unique (row, term) pair, ordered by row: ``terms`` an Arrow
+    string array, ``row`` the batch row, ``tf`` the count; ``doc_lens`` is
+    the kept-token count of every batch row. Tokenizing runs in Arrow C
+    kernels (functions/text.py:arrow_kept_tokens); the only NumPy work is
+    the pair count, and term strings never become Python objects."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    flat, parent = arrow_kept_tokens(content)
+    if len(flat) == 0:
+        return None
+    enc = pc.dictionary_encode(flat)
+    if isinstance(enc, pa.ChunkedArray):
+        enc = enc.combine_chunks()
+    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    local = parent.to_numpy(zero_copy_only=False).astype(np.int64)
+    nu = len(enc.dictionary)
+    pairs, tf = np.unique(local * nu + codes, return_counts=True)
+    return (pc.take(enc.dictionary, pa.array(pairs % nu)), pairs // nu, tf,
+            np.bincount(local, minlength=n_rows))
+
+
+def tokenize_tf(corpus_ids: DataFrame) -> DataFrame:
     """(doc_id, term, tf, doc_len) — unique per (doc_id, term); zero-token
-    docs are dropped (reference: src/ForwardIndex.cpp:152).
+    docs are dropped (reference: src/ForwardIndex.cpp:152). One mapInArrow
+    pass with the per-doc tf count local to each batch, so no shuffle."""
+    def tok(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
+        import pyarrow as pa
 
-    tokenizer='arrow' (default): everything — lower, regex split, length +
-    stopword filter, dictionary encode — runs in Arrow C kernels via
-    mapInArrow; the only NumPy work is the (doc, term) pair count. No Python
-    string objects are ever materialized. 'pandas' and 'sql' variants kept
-    for parity testing.
-    """
-    if tokenizer == "arrow":
-        return _tokenize_tf_arrow(corpus_ids)
-    if tokenizer == "sql":
-        toks = corpus_ids.select(
-            "doc_id", kept_tokens_expr("content").alias("toks")
-        ).withColumn("doc_len", F.size("toks")).where(F.col("doc_len") > 0)
-        return (
-            toks.select("doc_id", "doc_len", F.explode("toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").cast("int").alias("tf"),
-                 F.first("doc_len").cast("int").alias("doc_len"))
-            .select("doc_id", "term", "tf", "doc_len")
-        )
-
-    def tok(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        from nextsearch_api_spark.functions.text import STOPWORDS
-        sw = np.array(STOPWORDS, dtype=object)
-        for pdf in batches:
-            # C-backed extraction; everything after is pure NumPy — the only
-            # per-doc Python is the findall list materialization
-            lists = pdf["content"].fillna("").str.lower().str.findall(r"[a-z0-9]{2,}")
-            lens = lists.str.len().to_numpy(dtype=np.int64)
-            if lens.sum() == 0:
+        for batch in batches:
+            got = _term_counts(batch.column("content"), batch.num_rows)
+            if got is None:
                 continue
-            flat = pd.Series(np.concatenate([np.array(x, dtype=object)
-                                             for x in lists if x]))
-            local = np.repeat(np.arange(len(pdf), dtype=np.int64), lens)
-            keep = ~flat.isin(sw).to_numpy()
-            flat = flat[keep]
-            local = local[keep]
-            # NOTE [a-z0-9]{2,} == findall('[a-z0-9]+') + len>=2 filter: a
-            # shorter run is a maximal run, so requiring 2+ inside the regex
-            # drops exactly the len<2 tokens (tests/test_text.py proves parity)
-            codes, uniques = pd.factorize(flat, sort=False)
-            nu = len(uniques)
-            combo = local * nu + codes
-            uc, cnt = np.unique(combo, return_counts=True)
-            did_local = (uc // nu).astype(np.int64)
-            term_code = (uc % nu).astype(np.int64)
-            doc_lens = np.bincount(local, minlength=len(pdf)).astype(np.int32)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[did_local],
-                "term": np.asarray(uniques, dtype=object)[term_code],
-                "tf": cnt.astype(np.int32),
-                "doc_len": doc_lens[did_local],
-            })
+            terms, row, tf, doc_lens = got
+            doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(doc_ids[row], type=pa.int64()),
+                    terms,
+                    pa.array(tf.astype(np.int32), type=pa.int32()),
+                    pa.array(doc_lens[row].astype(np.int32), type=pa.int32()),
+                ],
+                names=["doc_id", "term", "tf", "doc_len"],
+            )
 
-    return corpus_ids.select("doc_id", "content").mapInPandas(
+    return corpus_ids.select("doc_id", "content").mapInArrow(
         tok, schema=TOKENS_SCHEMA
     )
 
 
 def append_doc_len(df: DataFrame) -> DataFrame:
-    """Append a doc_len column (Arrow tokenize subset) to a DataFrame that
+    """Append a doc_len column (kept-token count) to a DataFrame that
     carries (doc_id, content, ...) — all other columns pass through as Arrow
     buffers (no conversion cost)."""
     out_schema = StructType(df.schema.fields + [
@@ -331,116 +326,16 @@ def append_doc_len(df: DataFrame) -> DataFrame:
 
     def app(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        from nextsearch_api_spark.functions.text import STOPWORDS
-        sw = pa.array(list(STOPWORDS), type=pa.string())
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            toks = pc.split_pattern_regex(
-                pc.utf8_lower(batch.column("content")), "[^a-z0-9]+")
-            parent = pc.list_parent_indices(toks)
-            flat = pc.list_flatten(toks)
-            keep = pc.and_kleene(
-                pc.greater_equal(pc.utf8_length(flat), 2),
-                pc.invert(pc.is_in(flat, value_set=sw)),
-            )
-            parent = pc.filter(parent, keep)
+            _, parent = arrow_kept_tokens(batch.column("content"))
             dl = np.bincount(parent.to_numpy(zero_copy_only=False),
                              minlength=batch.num_rows).astype(np.int32)
             yield batch.append_column("doc_len", pa.array(dl))
 
     return df.mapInArrow(app, schema=out_schema)
-
-
-def doc_lengths(corpus_ids: DataFrame) -> DataFrame:
-    """(doc_id, doc_len) via Arrow C kernels — the cheap subset of the
-    tokenizer (split + filter + bincount; no dictionary encode, no tf)."""
-    from pyspark.sql.types import StructType as _St
-
-    schema = StructType([
-        StructField("doc_id", LongType(), False),
-        StructField("doc_len", IntegerType(), False),
-    ])
-
-    def lens(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from nextsearch_api_spark.functions.text import STOPWORDS
-        sw = pa.array(list(STOPWORDS), type=pa.string())
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            toks = pc.split_pattern_regex(
-                pc.utf8_lower(batch.column("content")), "[^a-z0-9]+")
-            parent = pc.list_parent_indices(toks)
-            flat = pc.list_flatten(toks)
-            keep = pc.and_kleene(
-                pc.greater_equal(pc.utf8_length(flat), 2),
-                pc.invert(pc.is_in(flat, value_set=sw)),
-            )
-            parent = pc.filter(parent, keep)
-            dl = np.bincount(parent.to_numpy(zero_copy_only=False),
-                             minlength=batch.num_rows).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), pa.array(dl)],
-                names=["doc_id", "doc_len"],
-            )
-
-    return corpus_ids.select("doc_id", "content").mapInArrow(lens, schema=schema)
-
-
-def _tokenize_tf_arrow(corpus_ids: DataFrame) -> DataFrame:
-    def tok(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from nextsearch_api_spark.functions.text import STOPWORDS
-        sw = pa.array(list(STOPWORDS), type=pa.string())
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            content = batch.column("content")
-            doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            toks = pc.split_pattern_regex(pc.utf8_lower(content), "[^a-z0-9]+")
-            parent = pc.list_parent_indices(toks)
-            flat = pc.list_flatten(toks)
-            keep = pc.and_kleene(
-                pc.greater_equal(pc.utf8_length(flat), 2),
-                pc.invert(pc.is_in(flat, value_set=sw)),
-            )
-            flat = pc.filter(flat, keep)
-            parent = pc.filter(parent, keep)
-            if len(flat) == 0:
-                continue
-            enc = pc.dictionary_encode(flat)
-            if isinstance(enc, pa.ChunkedArray):
-                enc = enc.combine_chunks()
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = enc.dictionary
-            local = parent.to_numpy(zero_copy_only=False).astype(np.int64)
-            nu = len(vocab)
-            combo = local * nu + codes
-            uc, cnt = np.unique(combo, return_counts=True)
-            did_local = uc // nu
-            term_code = uc % nu
-            doc_lens = np.bincount(local, minlength=n_rows)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids[did_local], type=pa.int64()),
-                    pc.take(vocab, pa.array(term_code)),
-                    pa.array(cnt.astype(np.int32), type=pa.int32()),
-                    pa.array(doc_lens[did_local].astype(np.int32), type=pa.int32()),
-                ],
-                names=["doc_id", "term", "tf", "doc_len"],
-            )
-
-    return corpus_ids.select("doc_id", "content").mapInArrow(
-        tok, schema=TOKENS_SCHEMA
-    )
 
 
 # ----------------------------------------------------------------- chunks --
@@ -467,7 +362,7 @@ def _pa_postings_schema(frontier: bool = False):
 
 
 def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
-                        k1, b, avgdl32):
+                        k1=None, b=None, avgdl32=None):
     """Vectorized chunk emission from (term-code, doc)-sorted arrays and
     chunk boundaries [cst, cen): whole-batch impact computation, reduceat
     aggregates, ONE varbyte pass per stream, per-chunk byte slicing.
@@ -604,7 +499,6 @@ def _serving_partitions(spark: SparkSession) -> int:
 
 
 def write_postings_sorted(chunks: DataFrame, out_path: str,
-                          partitions: int | None = None,
                           post_sort=None) -> None:
     """Write chunk rows range-partitioned + sorted by (term, doc_lo) in
     bounded row groups: tight per-row-group term min/max stats → a term
@@ -617,8 +511,7 @@ def write_postings_sorted(chunks: DataFrame, out_path: str,
     stream."""
     _write_range_sorted(
         chunks, out_path, ["term", "doc_lo"], POSTINGS_ROW_GROUP_BYTES,
-        partitions or _serving_partitions(chunks.sparkSession),
-        post_sort=post_sort)
+        _serving_partitions(chunks.sparkSession), post_sort=post_sort)
 
 
 def write_docs_sorted(docs: DataFrame, out_path: str) -> None:
@@ -629,6 +522,26 @@ def write_docs_sorted(docs: DataFrame, out_path: str) -> None:
     _write_range_sorted(
         docs, out_path, ["doc_id"], DOCS_ROW_GROUP_BYTES,
         _serving_partitions(docs.sparkSession))
+
+
+def write_lexicon(postings: DataFrame, out_path: str) -> None:
+    """Aggregate chunk rows into the lexicon — per term df (posting count),
+    cf, n_chunks and max_impact — written range-partitioned + sorted by
+    term, so footer min/max stats confine a term lookup to its row group
+    (the reference's barrel/offset seek analog). persist():
+    repartitionByRange samples its input with an extra execution, which
+    would otherwise run the aggregate twice."""
+    lex = postings.groupBy("term").agg(
+        F.sum("count").cast("long").alias("df"),
+        F.sum("sum_tf").cast("long").alias("cf"),
+        F.count("*").cast("int").alias("n_chunks"),
+        F.max("max_impact").alias("max_impact"),
+    ).persist()
+    try:
+        (lex.repartitionByRange(64, "term").sortWithinPartitions("term")
+            .write.mode("overwrite").parquet(out_path))
+    finally:
+        lex.unpersist()
 
 
 def write_suggest_sorted(sug: DataFrame, out_path: str) -> None:
@@ -766,9 +679,30 @@ def finalize_max_impact(chunks: DataFrame, avgdl: float,
             .select(*out_cols))
 
 
-def build_posting_chunks_segment(corpus_ids: DataFrame, avgdl: float | None,
+def _chunk_bounds(codes: np.ndarray, parts: np.ndarray, chunk_size: int,
+                  hold_tail: bool = False) -> tuple[np.ndarray, np.ndarray]:
+    """Chunk row ranges [cst, cen) along a (term, doc_id)-sorted run. Rows
+    group on every change of term code or of ``parts`` (the doc range a
+    chunk must not span), and each group splits into consecutive chunks of
+    ≤ chunk_size rows. ``hold_tail`` leaves out the last group's partial
+    trailing chunk, whose term may continue in the next input batch, so
+    cen[-1] can stop short of len(codes)."""
+    change = (codes[1:] != codes[:-1]) | (parts[1:] != parts[:-1])
+    starts = np.flatnonzero(np.concatenate(([True], change)))
+    ends = np.append(starts[1:], len(codes))
+    if hold_tail:
+        ends[-1] -= (ends[-1] - starts[-1]) % chunk_size
+    per = -(-(ends - starts) // chunk_size)
+    grp = np.repeat(np.arange(len(starts)), per)
+    nth = np.arange(len(grp)) - np.repeat(np.cumsum(per) - per, per)
+    cst = starts[grp] + nth * chunk_size
+    return cst, np.minimum(cst + chunk_size, ends[grp])
+
+
+def build_posting_chunks_segment(corpus_ids: DataFrame,
                                  cfg: BuildConfig) -> DataFrame:
-    """NO-SHUFFLE postings build (the default, Lucene-segment-style).
+    """NO-SHUFFLE postings build (Lucene-segment-style) — build_index's
+    postings stage and the corpus's ONLY tokenize.
 
     Input: (doc_id, content[, seg]). Each partition is one *segment*: fused
     Arrow tokenize → in-partition lexsort by (term, doc_id) → chunk emission.
@@ -792,89 +726,52 @@ def build_posting_chunks_segment(corpus_ids: DataFrame, avgdl: float | None,
     Scale notes: chunks-per-term grows with partition count (like Lucene
     segments); hot terms are naturally split by doc range. For extreme
     partition counts, compact small chunks with a follow-up merge keyed by
-    term (cheap: per-term metadata, not postings, drives the decision). The
-    shuffle-based variant (build_posting_chunks) remains available as
-    cfg.postings_mode='global'.
+    term (operators/compact.py: per-term metadata, not postings, drives the
+    decision; its re-chunker is the shuffle-based build_posting_chunks).
 
-    ``avgdl=None`` (the build_index default since r6): deferred-impact mode.
-    This pass is the corpus's ONLY tokenize — doc_len/avgdl no longer come
-    from a second tokenize in the ids stage (measured: that pass was 11 s of
-    the 17 s 8-core ids stage at 400k docs, pure duplicate work). Chunks
-    carry a (tf, dl) Pareto frontier instead of max_impact (see
-    _chunks_recordbatch) and each task additionally emits doc-stat carrier
-    rows (term '', see _docstat_recordbatch) from which build_index derives
-    the doclen table, N, total_len and avgdl before finalize_max_impact
-    evaluates the stored frontiers."""
-    k1 = np.float32(cfg.bm25.k1)
-    b = np.float32(cfg.bm25.b)
-    avgdl32 = np.float32(avgdl) if avgdl is not None else None
+    Deferred impacts: avgdl is not known until this pass has tokenized the
+    corpus, so chunks carry a (tf, dl) Pareto frontier instead of
+    max_impact (see _chunks_recordbatch) and each task additionally emits
+    doc-stat carrier rows (term '', see _docstat_recordbatch) from which
+    build_index derives the doclen table, N, total_len and avgdl before
+    finalize_max_impact evaluates the stored frontiers."""
     chunk_size = cfg.chunk_size
 
     def builder(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from nextsearch_api_spark.functions.text import STOPWORDS
-        sw = pa.array(list(STOPWORDS), type=pa.string())
-
         term_parts: list = []   # arrow string arrays (no python objects)
         ids_parts: list = []
         tf_parts: list = []
         dl_parts: list = []
         seg_parts: list = []
-        stat_ids: list = []     # deferred-impact mode: per-doc (id, len)
+        stat_ids: list = []     # per-doc (id, len) for the doc-stat rows
         stat_dls: list = []
 
         for batch in batches:
-            if batch.num_rows == 0:
+            got = _term_counts(batch.column("content"), batch.num_rows)
+            if got is None:
                 continue
-            content = batch.column("content")
+            terms, row, tf, doc_lens = got
             doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
             seg_ids = (
                 batch.column("seg").to_numpy(zero_copy_only=False).astype(np.int64)
                 if "seg" in batch.schema.names
                 else np.zeros(batch.num_rows, dtype=np.int64)
             )
-            toks = pc.split_pattern_regex(pc.utf8_lower(content), "[^a-z0-9]+")
-            parent = pc.list_parent_indices(toks)
-            flat = pc.list_flatten(toks)
-            keep = pc.and_kleene(
-                pc.greater_equal(pc.utf8_length(flat), 2),
-                pc.invert(pc.is_in(flat, value_set=sw)),
-            )
-            flat = pc.filter(flat, keep)
-            parent = pc.filter(parent, keep)
-            if len(flat) == 0:
-                continue
-            enc = pc.dictionary_encode(flat)
-            if isinstance(enc, pa.ChunkedArray):
-                enc = enc.combine_chunks()
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            local = parent.to_numpy(zero_copy_only=False).astype(np.int64)
-            nu = len(enc.dictionary)
-            combo = local * nu + codes
-            uc, cnt = np.unique(combo, return_counts=True)
-            did_local = uc // nu
-            tcode = (uc % nu).astype(np.int64)
-            doc_lens = np.bincount(local, minlength=batch.num_rows)
-            term_parts.append(pc.take(enc.dictionary, pa.array(tcode)))
-            ids_parts.append(doc_ids[did_local])
-            tf_parts.append(cnt.astype(np.int64))
-            dl_parts.append(doc_lens[did_local].astype(np.int64))
-            seg_parts.append(seg_ids[did_local])
-            if avgdl32 is None:
-                mask = doc_lens > 0  # zero-token docs are outside N
-                stat_ids.append(doc_ids[mask].astype(np.int64))
-                stat_dls.append(doc_lens[mask])
+            term_parts.append(terms)
+            ids_parts.append(doc_ids[row])
+            tf_parts.append(tf)
+            dl_parts.append(doc_lens[row])
+            seg_parts.append(seg_ids[row])
+            mask = doc_lens > 0  # zero-token docs are outside N
+            stat_ids.append(doc_ids[mask].astype(np.int64))
+            stat_dls.append(doc_lens[mask])
 
         if not ids_parts:
             return
-        import pyarrow as pa  # noqa: F811 (re-import for clarity)
-        terms_all = pa.concat_arrays(
-            [p.combine_chunks() if isinstance(p, pa.ChunkedArray) else p
-             for p in term_parts]
-        )
-        enc_all = pc.dictionary_encode(terms_all)
+        enc_all = pc.dictionary_encode(pa.concat_arrays(term_parts))
         if isinstance(enc_all, pa.ChunkedArray):
             enc_all = enc_all.combine_chunks()
         codes = enc_all.indices.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -886,26 +783,13 @@ def build_posting_chunks_segment(corpus_ids: DataFrame, avgdl: float | None,
         codes, ids, tfs, dls, segs = (
             codes[order], ids[order], tfs[order], dls[order], segs[order]
         )
-
-        n = len(codes)
         # chunk runs break on term AND seg change: segs are disjoint
         # contiguous doc ranges, so along the (term, doc_id) sort each seg's
         # docs are consecutive and the break keeps every chunk inside one seg
-        change = (codes[1:] != codes[:-1]) | (segs[1:] != segs[:-1])
-        starts = np.nonzero(np.concatenate(([True], change)))[0]
-        ends = np.concatenate((starts[1:], [n]))
-        c_starts: list[int] = []
-        c_ends: list[int] = []
-        for s, e in zip(starts, ends):
-            for pos in range(s, e, chunk_size):
-                c_starts.append(pos)
-                c_ends.append(min(pos + chunk_size, e))
-        cst = np.array(c_starts, dtype=np.int64)
-        cen = np.array(c_ends, dtype=np.int64)
+        cst, cen = _chunk_bounds(codes, segs, chunk_size)
         yield _chunks_recordbatch(enc_all.dictionary, codes, ids, tfs, dls,
-                                  cst, cen, k1, b, avgdl32)
-        if avgdl32 is None and stat_ids:
-            yield _docstat_recordbatch(stat_ids, stat_dls)
+                                  cst, cen)
+        yield _docstat_recordbatch(stat_ids, stat_dls)
 
     cols = ["doc_id", "content"]
     if "seg" in [f.name for f in corpus_ids.schema.fields]:
@@ -915,13 +799,14 @@ def build_posting_chunks_segment(corpus_ids: DataFrame, avgdl: float | None,
         # explicit segment sizing; range partitioning by doc_id keeps the
         # per-segment doc ranges disjoint (the correctness invariant)
         src = src.repartitionByRange(cfg.segment_partitions, "doc_id")
-    out_schema = POSTINGS_BUILD_SCHEMA if avgdl is None else POSTINGS_SCHEMA
-    return src.mapInArrow(builder, schema=out_schema)
+    return src.mapInArrow(builder, schema=POSTINGS_BUILD_SCHEMA)
 
 
-def build_posting_chunks(tokens: DataFrame, avgdl: float, cfg: BuildConfig,
-                         partitions: int | None = None) -> DataFrame:
+def build_posting_chunks(tokens: DataFrame, avgdl: float,
+                         cfg: BuildConfig) -> DataFrame:
     """tokens (doc_id, term, tf, doc_len) → chunked, compressed posting rows.
+    The compactions' re-chunker (operators/compact.py, streaming/ingest.py):
+    the only builder whose input is token rows rather than content.
 
     Skew handling: hash-partition by (term, doc_block) where doc_block =
     doc_id div cfg.doc_block — a DETERMINISTIC salt derived from doc ranges.
@@ -933,7 +818,7 @@ def build_posting_chunks(tokens: DataFrame, avgdl: float, cfg: BuildConfig,
     (a full extra pass over the token stream) and makes the physical layout
     reproducible run-to-run."""
     spark = tokens.sparkSession
-    P = partitions or cfg.postings_partitions or int(
+    P = cfg.postings_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     k1 = np.float32(cfg.bm25.k1)
@@ -963,27 +848,14 @@ def build_posting_chunks(tokens: DataFrame, avgdl: float, cfg: BuildConfig,
             if isinstance(enc, pa.ChunkedArray):
                 enc = enc.combine_chunks()
             codes = enc.indices.to_numpy(zero_copy_only=False)
-            n = len(codes)
-            change = (codes[1:] != codes[:-1]) | (blks[1:] != blks[:-1])
-            starts = np.nonzero(np.concatenate(([True], change)))[0]
-            ends = np.concatenate((starts[1:], [n]))
-
-            # chunk boundaries (group-aligned) + leftover tail hold-back
-            leftover = None
-            c_starts: list[int] = []
-            c_ends: list[int] = []
-            for s, e in zip(starts, ends):
-                if complete_only and e == n and (e - s) % chunk_size != 0:
-                    tail = e - ((e - s) % chunk_size)
-                    leftover = tbl.slice(tail)
-                    e = tail
-                for pos in range(s, e, chunk_size):
-                    c_starts.append(pos)
-                    c_ends.append(min(pos + chunk_size, e))
-            if not c_starts:
+            # a held-back tail carries over to the next batch: its term's
+            # rows may continue there
+            cst, cen = _chunk_bounds(codes, blks, chunk_size,
+                                     hold_tail=complete_only)
+            done = int(cen[-1]) if len(cen) else 0
+            leftover = tbl.slice(done) if done < len(codes) else None
+            if not len(cst):
                 return None, leftover
-            cst = np.array(c_starts, dtype=np.int64)
-            cen = np.array(c_ends, dtype=np.int64)
             rb = _chunks_recordbatch(enc.dictionary, codes, ids,
                                      tfs, dls, cst, cen,
                                      k1, b, avgdl32)
@@ -1060,30 +932,23 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # pass; deferred max_impact finalize).
         "build_layout": 2,
         "chunk_size": cfg.chunk_size,
-        "doc_block": cfg.doc_block, "postings_mode": cfg.postings_mode,
         "segment_partitions": cfg.segment_partitions,
-        "serving_layout": cfg.serving_layout,
-        "k1": cfg.bm25.k1, "b": cfg.bm25.b, "tokenizer": cfg.tokenizer,
+        "k1": cfg.bm25.k1, "b": cfg.bm25.b,
         "corpus": _corpus_fingerprint(corpus),
     }
     runner = StageRunner(manifest, base_fp)
 
     ids_path = os.path.join(out_root, "ids")
-    forward_path = os.path.join(out_root, "forward")
     doclen_path = os.path.join(out_root, "doclen")
-    segment_mode = cfg.postings_mode == "segment"
 
     def stage_ids() -> dict:
         # One corpus pass: deterministic ids + content hashes, materialized
         # so later stages column-prune what they need (content is only read
         # again by the postings tokenizer) and resume never re-runs the
-        # assignment. Segment mode (default) stores NO doc_len here: the
-        # fused postings tokenize is the build's ONLY tokenize and derives
-        # doc_len/avgdl itself (r6 — the append_doc_len pass existed solely
-        # to learn avgdl before the postings stage and duplicated its
-        # tokenize wholesale: measured 11 s of the 17 s 8-core ids stage at
-        # 400k docs, ~30 s of 45 s at 2 cores — both DRAM-bandwidth-bound,
-        # the worst-scaling work in the whole build).
+        # assignment. No doc_len here: the fused postings tokenize is the
+        # build's ONLY tokenize and derives doc_len/avgdl itself (a second
+        # tokenize here to learn avgdl early measured 11 s of the 17 s
+        # 8-core ids stage at 400k docs, DRAM-bandwidth-bound).
         ids = assign_doc_ids(corpus, cfg.id_partitions).select(
             "doc_id",
             F.substring(
@@ -1093,71 +958,25 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
             F.sha2(F.col("content"), 256).alias("content_sha256"),
             "content", "seg",
         )
-        if segment_mode:
-            ids.write.mode("overwrite").parquet(ids_path)
-            return {"rows": _parquet_rows(ids_path)}
-        # global mode chunks pre-tokenized token rows and needs avgdl BEFORE
-        # its postings stage: keep the fused doc_len + observed stats here
-        from pyspark.sql import Observation
-        obs = Observation("ids_stats")
-        with_len = append_doc_len(ids).observe(
-            obs,
-            F.sum((F.col("doc_len") > 0).cast("long")).alias("N"),
-            F.sum("doc_len").alias("total_len"),
-        )
-        with_len.write.mode("overwrite").parquet(ids_path)
-        got = obs.get
-        return {"rows": _parquet_rows(ids_path),
-                "N": int(got["N"] or 0), "total_len": int(got["total_len"] or 0)}
+        ids.write.mode("overwrite").parquet(ids_path)
+        return {"rows": _parquet_rows(ids_path)}
 
     runner.run("ids", stage_ids, output=ids_path)
 
-    if cfg.materialize_forward:
-        def stage_forward() -> dict:
-            ids = spark.read.parquet(ids_path)
-            tokens = tokenize_tf(ids, cfg.tokenizer)
-            tokens.write.mode("overwrite").parquet(forward_path)
-            return {"rows": _parquet_rows(forward_path)}
-
-        runner.run("forward", stage_forward, output=forward_path)
-
-    def stage_docs() -> dict:
-        # reference parity: docs = rows with ≥ 1 kept token
-        # (src/ForwardIndex.cpp:152). Segment mode joins the content-pruned
-        # ids scan with the doclen table the postings tokenize emitted —
-        # metadata-only rows on both sides, no content bytes move, and the
-        # zero-token filter IS the inner join (such docs have no doclen
-        # row). Runs in a SIDE THREAD overlapped with lexicon+suggest.
-        # Written doc-id-sorted in small row groups: serving hydration
-        # reads only the row groups holding its hits.
-        if segment_mode:
-            docs = (
-                spark.read.parquet(ids_path)
-                .select("doc_id", "uid", "repo", "path", "commit", "lang",
-                        "content_sha256")
-                .join(spark.read.parquet(doclen_path), "doc_id")
-                .select("doc_id", "uid", "repo", "path", "commit", "lang",
-                        "doc_len", "content_sha256")
-            )
-        else:
-            docs = (
-                spark.read.parquet(ids_path)
-                .where(F.col("doc_len") > 0)
-                .select("doc_id", "uid", "repo", "path", "commit", "lang",
-                        "doc_len", "content_sha256")
-            )
-        write_docs_sorted(docs, paths.docs)
-        return {"rows": _parquet_rows(paths.docs)}
-
-    def stage_stats() -> dict:
-        # N/total_len were observed during the stage that tokenized the
-        # corpus (postings in segment mode, ids in global mode); metrics
-        # persist in the manifest so resume keeps them across processes.
-        src_stage = "postings" if segment_mode else "ids"
-        im = runner.metrics.get(src_stage, {})
-        if "N" in im and "total_len" in im:
-            N, total_len = int(im["N"]), int(im["total_len"])
-        elif segment_mode:  # skipped stage recorded by a pre-metrics build
+    def stage_postings() -> dict:
+        # THE corpus tokenize (the only one in the build, r6): the fused
+        # builder runs in deferred-impact mode — chunks carry (tf, dl)
+        # Pareto frontiers plus doc-stat carrier rows. The doclen write is
+        # the first action (populating the persist); N/total_len/avgdl come
+        # from a footer-cheap aggregate over it; finalize_max_impact then
+        # turns frontiers into attained per-chunk maxes with that avgdl.
+        from pyspark import StorageLevel
+        ids = spark.read.parquet(ids_path).select("doc_id", "content", "seg")
+        raw = build_posting_chunks_segment(ids, cfg).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        try:
+            decode_doclen_rows(raw.where(F.col("term") == "")) \
+                .write.mode("overwrite").parquet(doclen_path)
             row = (
                 spark.read.parquet(doclen_path)
                 .agg(F.count("*").alias("N"),
@@ -1165,10 +984,41 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
                 .collect()[0]
             )
             N, total_len = int(row["N"]), int(row["total_len"] or 0)
-        else:
+            avgdl = float(total_len) / N if N else 0.0
+            # Term-locality layout for the serving tier: the builder's
+            # output files each span ~the whole vocab, so a query-term
+            # predicate would prune nothing. Range-partition + sort by
+            # (term, doc_lo) so Parquet footer min/max confine each term to
+            # 1-2 row groups — the on-disk analog of the reference's
+            # contiguous per-term posting regions (lexicon offset + seek).
+            # Chunk ROWS are shuffled here (compressed postings, a fraction
+            # of corpus bytes), never token rows — the build itself stays
+            # no-shuffle. The raw cache (populated by the doclen write)
+            # feeds the range-sampling pass and the shuffle; finalize runs
+            # post-sort so blobs stay cached exactly once (a second
+            # finalized-side persist measured +30 s at 2 cores — one full
+            # extra serialize of the blob bytes).
+            write_postings_sorted(
+                raw.where(F.col("term") != ""), paths.postings,
+                post_sort=lambda df: finalize_max_impact(df, avgdl, cfg))
+        finally:
+            # doclen + postings are on disk: the cache is fully consumed
+            raw.unpersist(blocking=False)
+        return {"rows": _parquet_rows(paths.postings),
+                "N": N, "total_len": total_len}
+
+    runner.run("postings", stage_postings, output=paths.postings)
+
+    def stage_stats() -> dict:
+        # N/total_len were observed by the postings stage (the one that
+        # tokenized the corpus); metrics persist in the manifest so resume
+        # keeps them across processes.
+        im = runner.metrics.get("postings", {})
+        if "N" in im and "total_len" in im:
+            N, total_len = int(im["N"]), int(im["total_len"])
+        else:  # skipped stage recorded by a pre-metrics build
             row = (
-                spark.read.parquet(ids_path)
-                .where(F.col("doc_len") > 0)
+                spark.read.parquet(doclen_path)
                 .agg(F.count("*").alias("N"),
                      F.sum("doc_len").alias("total_len"))
                 .collect()[0]
@@ -1188,100 +1038,30 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
             json.dump(stats, f, indent=2)
         return {"rows": N}
 
-    from pyspark import StorageLevel
-    _chunks_handoff: dict = {}
+    runner.run("stats", stage_stats, output=paths.stats)
 
-    def stage_postings_segment() -> dict:
-        # THE corpus tokenize (the only one in the build, r6): the fused
-        # builder runs in deferred-impact mode — chunks carry (tf, dl)
-        # Pareto frontiers plus doc-stat carrier rows. The doclen write is
-        # the first action (populating the persist); N/total_len/avgdl come
-        # from a footer-cheap aggregate over it; finalize_max_impact then
-        # turns frontiers into attained per-chunk maxes with that avgdl.
-        ids = spark.read.parquet(ids_path).select("doc_id", "content", "seg")
-        raw = build_posting_chunks_segment(ids, None, cfg).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        try:
-            decode_doclen_rows(raw.where(F.col("term") == "")) \
-                .write.mode("overwrite").parquet(doclen_path)
-            row = (
-                spark.read.parquet(doclen_path)
-                .agg(F.count("*").alias("N"),
-                     F.sum("doc_len").alias("total_len"))
-                .collect()[0]
-            )
-            N, total_len = int(row["N"]), int(row["total_len"] or 0)
-            avgdl = float(total_len) / N if N else 0.0
-            real = raw.where(F.col("term") != "")
-            if cfg.serving_layout == "term":
-                # Term-locality rewrite for the serving tier: segment-mode
-                # output files each span ~the whole vocab, so a query-term
-                # predicate prunes nothing and every file is scanned per
-                # query (measured: ~85% of WAND latency was this read).
-                # Range-partition + sort by (term, doc_lo) so Parquet footer
-                # min/max confine each term to 1-2 row groups — the on-disk
-                # analog of the reference's contiguous per-term posting
-                # regions (lexicon offset + seek). Chunk ROWS are shuffled
-                # here (compressed postings, a fraction of corpus bytes),
-                # never token rows — the build itself stays no-shuffle.
-                # The raw cache (populated by the doclen write) feeds the
-                # range-sampling pass, the shuffle, and the lexicon below;
-                # finalize runs post-sort so blobs stay cached exactly once
-                # (a second finalized-side persist measured +30 s at 2
-                # cores — one full extra serialize of the blob bytes).
-                write_postings_sorted(
-                    real, paths.postings,
-                    post_sort=lambda df: finalize_max_impact(df, avgdl, cfg))
-                # NO lexicon handoff here (unlike global mode): the lexicon
-                # aggregate needs 4 small columns and the written postings
-                # parquet serves them column-pruned — blobs never read —
-                # which measured cheaper at 2 cores than re-running the
-                # finalize udf over the cache, and lets the cache free now.
-            else:
-                finalize_max_impact(real, avgdl, cfg) \
-                    .write.mode("overwrite").parquet(paths.postings)
-        finally:
-            # doclen + postings are on disk: the cache is fully consumed
-            raw.unpersist(blocking=False)
-        return {"rows": _parquet_rows(paths.postings),
-                "N": N, "total_len": total_len}
-
-    def stage_postings_global() -> dict:
-        with open(paths.stats) as f:
-            stats = json.load(f)
-        tokens = (
-            spark.read.parquet(forward_path)
-            if cfg.materialize_forward
-            else tokenize_tf(spark.read.parquet(ids_path), cfg.tokenizer)
+    def stage_docs() -> dict:
+        # reference parity: docs = rows with ≥ 1 kept token
+        # (src/ForwardIndex.cpp:152). Joins the content-pruned ids scan
+        # with the doclen table the postings tokenize emitted —
+        # metadata-only rows on both sides, no content bytes move, and the
+        # zero-token filter IS the inner join (such docs have no doclen
+        # row). Written doc-id-sorted in small row groups: serving
+        # hydration reads only the row groups holding its hits.
+        docs = (
+            spark.read.parquet(ids_path)
+            .select("doc_id", "uid", "repo", "path", "commit", "lang",
+                    "content_sha256")
+            .join(spark.read.parquet(doclen_path), "doc_id")
+            .select("doc_id", "uid", "repo", "path", "commit", "lang",
+                    "doc_len", "content_sha256")
         )
-        chunks = build_posting_chunks(tokens, stats["avgdl"], cfg)
-        if cfg.serving_layout == "term":
-            # see stage_postings_segment for the rationale
-            chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-            ok = False
-            try:
-                write_postings_sorted(chunks, paths.postings)
-                ok = True
-            finally:
-                if not ok:
-                    chunks.unpersist()
-            _chunks_handoff["df"] = chunks
-        else:
-            chunks.write.mode("overwrite").parquet(paths.postings)
-        return {"rows": _parquet_rows(paths.postings)}
+        write_docs_sorted(docs, paths.docs)
+        return {"rows": _parquet_rows(paths.docs)}
 
-    if segment_mode:
-        # r6 stage order: postings runs FIRST (it owns the tokenize) and
-        # derives doclen/N/total_len; stats persists them from the metrics.
-        runner.run("postings", stage_postings_segment, output=paths.postings)
-        runner.run("stats", stage_stats, output=paths.stats)
-    else:
-        runner.run("stats", stage_stats, output=paths.stats)
-        runner.run("postings", stage_postings_global, output=paths.postings)
-
-    # docs rewrite ∥ lexicon+suggest: docs depends only on ids (+doclen in
-    # segment mode), so its tasks fill the lexicon/suggest stages'
-    # scheduling gaps instead of occupying the serial critical path.
+    # docs rewrite ∥ lexicon: docs depends only on ids + doclen, so its
+    # tasks fill the lexicon stage's scheduling gaps instead of occupying
+    # the serial critical path.
     import threading
     _docs_err: list[BaseException] = []
 
@@ -1295,39 +1075,13 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
     docs_thread.start()
 
     def stage_lexicon() -> dict:
-        cached = _chunks_handoff.get("df")
-        postings = cached if cached is not None \
-            else spark.read.parquet(paths.postings)
-        lex = (
-            postings.groupBy("term").agg(
-                F.sum("count").cast("long").alias("df"),
-                F.sum("sum_tf").cast("long").alias("cf"),
-                F.count("*").cast("int").alias("n_chunks"),
-                F.max("max_impact").alias("max_impact"),
-            )
-        )
-        # range-partition + sort by term → parquet min/max footer stats give
-        # term-lookup pruning (the reference's barrel/offset seek analog).
-        # persist: repartitionByRange double-executes its input for range
-        # sampling, and the input here is the whole postings aggregation
-        lex = lex.persist()
-        try:
-            lp = 64
-            (lex.repartitionByRange(lp, "term").sortWithinPartitions("term")
-                .write.mode("overwrite").parquet(paths.lexicon))
-        finally:
-            lex.unpersist()
+        # the written postings serve the aggregate's 4 small columns
+        # column-pruned — blobs are never read
+        write_lexicon(spark.read.parquet(paths.postings), paths.lexicon)
         return {"rows": _parquet_rows(paths.lexicon)}
 
     try:
-        try:
-            runner.run("lexicon", stage_lexicon, output=paths.lexicon)
-        finally:
-            # segment mode hands off a view over the cached raw chunks;
-            # global mode hands off the cached chunks themselves
-            cached = _chunks_handoff.get("cache", _chunks_handoff.get("df"))
-            if cached is not None:
-                cached.unpersist()
+        runner.run("lexicon", stage_lexicon, output=paths.lexicon)
     finally:
         docs_thread.join()
     if _docs_err:

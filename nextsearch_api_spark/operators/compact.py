@@ -1,15 +1,17 @@
 """Posting-chunk compaction — the merge pass of the segment build model.
 
-The no-shuffle segment build (operators/build.py, postings_mode='segment')
+The no-shuffle segment build (operators/build.py:build_posting_chunks_segment)
 emits one chunk run per (term, input partition). At high partition counts,
 rare terms accumulate many tiny chunks (classic Lucene small-segment
 fragmentation). This operator consolidates them:
 
   1. pick fragmented terms from the LEXICON ONLY (metadata decision — df,
      n_chunks; no postings touched),
-  2. decode just those terms' chunks, re-chunk them via the shuffle-based
-     global builder (hash by (term, doc_block), doc-ordered, skew-safe),
-  3. union with the untouched chunks and atomically swap postings + lexicon.
+  2. decode just those terms' chunks back to token rows and re-chunk them
+     with build_posting_chunks, the shuffle-based builder over token rows
+     (hash by (term, doc_block), doc-ordered, skew-safe),
+  3. union with the untouched chunks, write postings + lexicon as a new
+     generation and publish both with one atomic pointer flip.
 
 Cost is proportional to the fragmented fraction, not the index size — the
 hot terms that dominate postings bytes are usually NOT fragmented (they fill
@@ -20,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
@@ -28,38 +31,50 @@ from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import BuildConfig, IndexPaths
 from nextsearch_api_spark.operators.build import (
-    TOKENS_SCHEMA, build_posting_chunks, _parquet_rows,
+    TOKENS_SCHEMA, build_posting_chunks, write_lexicon, write_postings_sorted,
+    _parquet_rows,
 )
 
 
+def with_persisted_bm25(cfg: BuildConfig, stats: dict) -> BuildConfig:
+    """``cfg`` with the index's PERSISTED k1/b (stats.json). Re-chunking
+    recomputes max_impact, and the caller's defaults would under-estimate
+    chunk upper bounds and can drop true top-k results (ADVICE r1)."""
+    return replace(cfg, bm25=replace(
+        cfg.bm25, k1=float(stats.get("k1", cfg.bm25.k1)),
+        b=float(stats.get("b", cfg.bm25.b))))
+
+
 def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
-    """Inverse of the chunk builder: posting chunks → (doc_id, term, tf,
-    doc_len) rows. Arrow-batched; used by compaction and delta merges."""
-    import pandas as pd
+    """Inverse of the chunk builders: posting chunks → (doc_id, term, tf,
+    doc_len) rows. Each Arrow batch decodes in one decode_chunks_concat
+    call; a chunk's term repeats once per posting."""
+    def dec(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        from nextsearch_api_spark.functions.codec import decode_chunk
-        for pdf in batches:
-            terms, ids, tfs, dls = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                d_ids, d_tfs, d_dls = decode_chunk(
-                    row.blob, int(row.tf_off), int(row.dl_off))
-                terms.append(np.full(len(d_ids), row.term, dtype=object))
-                ids.append(d_ids)
-                tfs.append(d_tfs.astype(np.int32))
-                dls.append(d_dls.astype(np.int32))
-            if not ids:
+        from nextsearch_api_spark.functions.codec import decode_chunks_concat
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            yield pd.DataFrame({
-                "doc_id": np.concatenate(ids),
-                "term": np.concatenate(terms),
-                "tf": np.concatenate(tfs),
-                "doc_len": np.concatenate(dls),
-            })
+            counts = batch.column("count").to_numpy(zero_copy_only=False)
+            ids, tfs, dls = decode_chunks_concat(
+                batch.column("blob").to_pylist(),
+                batch.column("tf_off").to_pylist(),
+                batch.column("dl_off").to_pylist(), counts)
+            rows = np.repeat(np.arange(batch.num_rows), counts)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, type=pa.int64()),
+                    pc.take(batch.column("term"), pa.array(rows)),
+                    pa.array(tfs.astype(np.int32), type=pa.int32()),
+                    pa.array(dls.astype(np.int32), type=pa.int32()),
+                ],
+                names=["doc_id", "term", "tf", "doc_len"],
+            )
 
-    return chunks.select("term", "tf_off", "dl_off", "blob").mapInPandas(
-        dec, schema=TOKENS_SCHEMA
-    )
+    return chunks.select("term", "count", "tf_off", "dl_off", "blob") \
+        .mapInArrow(dec, schema=TOKENS_SCHEMA)
 
 
 def compact_postings(spark: SparkSession, index_root: str,
@@ -71,17 +86,7 @@ def compact_postings(spark: SparkSession, index_root: str,
     paths = IndexPaths(index_root)
     with open(paths.stats) as f:
         stats = json.load(f)
-    # re-chunking recomputes max_impact: use the index's PERSISTED k1/b, not
-    # the caller's defaults — wrong params under-estimate chunk upper bounds
-    # and can drop true top-k results (ADVICE r1)
-    from dataclasses import replace as dc_replace
-
-    from nextsearch_api_spark.config import BM25Params
-    persisted = BM25Params(k1=float(stats.get("k1", cfg.bm25.k1)),
-                           b=float(stats.get("b", cfg.bm25.b)),
-                           precision=cfg.bm25.precision)
-    if (persisted.k1, persisted.b) != (cfg.bm25.k1, cfg.bm25.b):
-        cfg = dc_replace(cfg, bm25=persisted)
+    cfg = with_persisted_bm25(cfg, stats)
 
     lex = spark.read.parquet(paths.lexicon)
     frag_terms = lex.where(
@@ -104,7 +109,6 @@ def compact_postings(spark: SparkSession, index_root: str,
     rebuilt = build_posting_chunks(
         decode_postings_to_tokens(frag), stats["avgdl"], cfg
     )
-    from nextsearch_api_spark.operators.build import write_postings_sorted
     # persist before the range-partitioned write: repartitionByRange samples
     # its input with an extra execution, which would re-run the whole
     # decode + re-chunk subtree (same single-materialization fix as the
@@ -117,25 +121,14 @@ def compact_postings(spark: SparkSession, index_root: str,
     finally:
         merged.unpersist()
 
-    lex_new = (
-        spark.read.parquet(post_new).groupBy("term").agg(
-            F.sum("count").cast("long").alias("df"),
-            F.sum("sum_tf").cast("long").alias("cf"),
-            F.count("*").cast("int").alias("n_chunks"),
-            F.max("max_impact").alias("max_impact"),
-        )
-    )
-    lex_tmp = gen_path(index_root, "lexicon", gen)
-    (lex_new.repartitionByRange(max(1, min(64, lex_new.rdd.getNumPartitions())),
-                                "term")
-     .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(lex_tmp))
+    lex_new = gen_path(index_root, "lexicon", gen)
+    write_lexicon(spark.read.parquet(post_new), lex_new)
 
     # ONE atomic pointer flip publishes postings + lexicon together — a
     # crash can never leave them from different generations (ADVICE r1)
     flip_generation(index_root, {
         "postings": os.path.basename(post_new),
-        "lexicon": os.path.basename(lex_tmp),
+        "lexicon": os.path.basename(lex_new),
     }, gen)
 
     return {

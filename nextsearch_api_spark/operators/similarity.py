@@ -125,8 +125,10 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     ``driver_max_elems=0`` to force it (parity tests)."""
     budget = (_COSINE_DRIVER_MAX_ELEMS
               if driver_max_elems is None else driver_max_elems)
-    if k < 0:
-        budget = 0  # negative k: keep the distributed path's limit() error
+    if k <= 0:
+        # the distributed plan answers k=0 with an empty frame and raises
+        # limit()'s error for k<0; the driver twin's partition needs k ≥ 1
+        budget = 0
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
     got = _collect_frame_vectors(emb, id_col, vec_col, len(q), budget)
     if got is not None:
@@ -826,7 +828,13 @@ def _collect_frame_vectors(df: DataFrame, id_col: str, vec_col: str, dim: int,
     Footers/estimates over-count filtered frames, which only makes the
     gate conservative. The collect itself is ``toArrow()`` — it executes
     the frame's own plan (filters, cache), one column-pruned JVM-only job.
-    Nulls, ragged rows, or a non-integer id column also fall back."""
+    Nulls, ragged rows, or a non-integer id column also fall back.
+
+    A budget ≤ 0 always goes distributed (the parity escape hatch, also for
+    empty frames), and so does ``dim`` ≤ 0: an empty query vector proves
+    nothing about the frame's size, so it never collects."""
+    if max_elems <= 0 or dim <= 0:
+        return None
     try:
         files = df.inputFiles()
         if files and all(f.endswith(".parquet") for f in files):

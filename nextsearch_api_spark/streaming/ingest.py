@@ -42,9 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nextsearch_api_spark.operators.build import (
-    TOKENS_SCHEMA, append_doc_len, tokenize_tf,
-)
+from nextsearch_api_spark.operators.build import append_doc_len, tokenize_tf
 from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA
 
 # streamed docs get ids in [2^62, 2^62 + 2^60) — disjoint from any dense
@@ -71,10 +69,12 @@ def stream_corpus_to_forward(spark: SparkSession, src_dir: str, out_dir: str,
 
     foreachBatch writes two appends per micro-batch: the tokenized forward
     delta at ``out_dir`` and the docs delta at ``delta_docs_dir(out_dir)``.
-    Returns the StreamingQuery. trigger_once=True processes all available
-    input then stops. foreachBatch appends are at-least-once on retry;
-    compact_deltas dedups by doc_id (content-addressed, so replays are
-    byte-identical rows).
+    Both tokenize with the batch build's Arrow kernel
+    (functions/text.py:arrow_kept_tokens), so streamed docs index exactly
+    like batch-built ones. Returns the StreamingQuery. trigger_once=True
+    processes all available input then stops. foreachBatch appends are
+    at-least-once on retry; compact_deltas dedups by doc_id
+    (content-addressed, so replays are byte-identical rows).
     """
     docs_out = delta_docs_dir(out_dir)
     src = (
@@ -85,7 +85,7 @@ def stream_corpus_to_forward(spark: SparkSession, src_dir: str, out_dir: str,
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         with_ids = batch_df.withColumn("doc_id", _stream_doc_id())
-        tokens = tokenize_tf(with_ids, tokenizer="pandas")
+        tokens = tokenize_tf(with_ids)
         tokens.write.mode("append").parquet(out_dir)
         docs = append_doc_len(
             with_ids.select(
@@ -347,35 +347,28 @@ def compact_deltas(spark: SparkSession, index_root: str,
     dirs; ONE atomic CURRENT.json flip publishes them together."""
     import json
 
-    from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
+    from nextsearch_api_spark.config import BuildConfig, IndexPaths
     from nextsearch_api_spark.operators.build import (
-        build_posting_chunks, write_docs_sorted, write_postings_sorted,
-        write_suggest_sorted,
+        build_posting_chunks, write_docs_sorted, write_lexicon,
+        write_postings_sorted, write_suggest_sorted,
     )
+    from nextsearch_api_spark.operators.compact import with_persisted_bm25
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path, next_gen,
     )
 
-    cfg = cfg or BuildConfig()
     paths = IndexPaths(index_root)
     with open(paths.stats) as f:
         stats = json.load(f)
-    # re-chunking recomputes max_impact: use the PERSISTED k1/b, never the
-    # caller's defaults (ADVICE r1 — wrong params under-estimate chunk bounds)
-    from dataclasses import replace as dc_replace
-    persisted = BM25Params(k1=float(stats.get("k1", cfg.bm25.k1)),
-                           b=float(stats.get("b", cfg.bm25.b)),
-                           precision=cfg.bm25.precision)
-    if (persisted.k1, persisted.b) != (cfg.bm25.k1, cfg.bm25.b):
-        cfg = dc_replace(cfg, bm25=persisted)
+    cfg = with_persisted_bm25(cfg or BuildConfig(), stats)
 
     gen = next_gen(index_root)
     fw_path = paths.forward
     if not os.path.exists(fw_path):
-        # batch builds skip forward materialization by default; derive it
+        # batch builds do not materialize the forward index; derive it
         # once from the ids table so deltas have a base to merge into
         ids = spark.read.parquet(os.path.join(index_root, "ids"))
-        tokenize_tf(ids, cfg.tokenizer).write.parquet(fw_path)
+        tokenize_tf(ids).write.parquet(fw_path)
 
     # ---- docs upsert + doc_id collision check (ADVICE r1) -----------------
     # A delta uid already present in the base docs is an UPDATED document:
@@ -445,18 +438,8 @@ def compact_deltas(spark: SparkSession, index_root: str,
     chunks = untouched.unionByName(rebuilt)
     post_new = gen_path(index_root, "postings", gen)
     write_postings_sorted(chunks, post_new)
-    lex = (
-        spark.read.parquet(post_new)
-        .groupBy("term").agg(
-            F.sum("count").cast("long").alias("df"),
-            F.sum("sum_tf").cast("long").alias("cf"),
-            F.count("*").cast("int").alias("n_chunks"),
-            F.max("max_impact").alias("max_impact"),
-        )
-    )
     lex_new = gen_path(index_root, "lexicon", gen)
-    (lex.repartitionByRange(64, "term").sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(lex_new))
+    write_lexicon(spark.read.parquet(post_new), lex_new)
 
     stats.update(N=N, avgdl=avgdl, k1=cfg.bm25.k1, b=cfg.bm25.b)
     # untouched chunks keep impacts computed with the OLD avgdl while the

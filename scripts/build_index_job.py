@@ -4,7 +4,7 @@
     zip -r nextsearch_api_spark.zip nextsearch_api_spark/
     spark-submit --py-files nextsearch_api_spark.zip \\
         scripts/build_index_job.py --corpus <iceberg-table-or-parquet-path> \\
-        --out <index-root> [--mode segment|global] [--chunk-size 4096] \\
+        --out <index-root> [--chunk-size 4096] \\
         [--generate N]     # synthesize an N-doc corpus instead of reading one
 
 The session is created with cluster-friendly defaults but respects any conf
@@ -32,7 +32,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--corpus", help="Iceberg table name or parquet path")
     ap.add_argument("--out", required=True, help="index root directory")
-    ap.add_argument("--mode", default="segment", choices=["segment", "global"])
     ap.add_argument("--chunk-size", type=int, default=4096)
     ap.add_argument("--generate", type=int, default=0,
                     help="generate a synthetic corpus of N docs at --corpus")
@@ -53,7 +52,7 @@ def main() -> None:
     if args.generate:
         write_corpus(generate_corpus(spark, args.generate, seed=42), args.corpus)
     corpus = read_corpus(spark, args.corpus)
-    cfg = BuildConfig(postings_mode=args.mode, chunk_size=args.chunk_size)
+    cfg = BuildConfig(chunk_size=args.chunk_size)
     metrics = build_index(spark, corpus, args.out, cfg,
                           resume=not args.no_resume)
     print(json.dumps(metrics, indent=2, default=str))

@@ -1419,6 +1419,50 @@ def test_cosine_driver_path_matches_distributed(spark, tmp_path):
     assert "LocalTableScan" not in plan
 
 
+def test_cosine_topk_k0_is_empty_on_driver_path(spark, tmp_path):
+    """k=0 over a frame small enough for the driver twin answers like the
+    distributed plan (an empty frame) instead of raising 'kth out of
+    bounds' from the twin's partition."""
+    from nextsearch_api_spark.operators.similarity import cosine_topk
+
+    path = str(tmp_path / "k0emb")
+    spark.createDataFrame([(i, [float(i), 1.0]) for i in range(5)],
+                          "vec_id long, embedding array<float>"
+                          ).write.parquet(path)
+    emb = spark.read.parquet(path)
+    assert cosine_topk(emb, [1.0, 0.0], k=0).collect() == []
+    assert cosine_topk(emb, [1.0, 0.0], k=0, driver_max_elems=0).collect() == []
+
+
+def test_collect_frame_vectors_zero_budget_or_dim_never_collects(
+        spark, tmp_path, monkeypatch):
+    """A zero driver budget forces the distributed plan even for an empty
+    frame (0 rows x dim is not over a 0 budget), and an empty query vector
+    (dim 0) never collects the embedding table to the driver."""
+    from nextsearch_api_spark.operators.similarity import (
+        _collect_frame_vectors)
+
+    schema = "vec_id long, embedding array<float>"
+    full_path, empty_path = str(tmp_path / "full"), str(tmp_path / "empty")
+    spark.createDataFrame([(i, [float(i), 1.0]) for i in range(5)],
+                          schema).write.parquet(full_path)
+    spark.createDataFrame([], schema).write.parquet(empty_path)
+    full = spark.read.parquet(full_path)
+    empty = spark.read.parquet(empty_path)
+
+    collects = []
+    to_arrow = type(full).toArrow
+    monkeypatch.setattr(type(full), "toArrow",
+                        lambda self: collects.append(1) or to_arrow(self))
+    assert _collect_frame_vectors(full, "vec_id", "embedding", 0, 10**9) is None
+    assert collects == []
+    assert _collect_frame_vectors(empty, "vec_id", "embedding", 2, 0) is None
+    assert collects == []
+    # the gate still lets an in-budget frame through
+    got = _collect_frame_vectors(full, "vec_id", "embedding", 2, 10**9)
+    assert got is not None and got[1].shape == (5, 2) and collects == [1]
+
+
 def test_jpeg_marker_fill_bytes_and_standalone_markers():
     """T.81 §B.1.1.2: 0xFF fill bytes may pad before any marker, and
     standalone markers (TEM 0x01) carry no length — both spec-legal streams

@@ -39,6 +39,22 @@ def test_stream_ingest_and_compact(spark, tmp_path):
     delta_rows = spark.read.parquet(deltas)
     assert delta_rows.count() > 0
     assert delta_rows.agg(F.min("doc_id")).collect()[0][0] >= (1 << 62)
+    # the forward delta holds exactly the reference tokenizer's per-doc
+    # counts of the streamed docs: one (doc_id, term, tf, doc_len) row per
+    # kept term, zero-token docs absent
+    from collections import Counter
+
+    from nextsearch_api_spark.functions.text import kept_tokens_py
+    from nextsearch_api_spark.streaming.ingest import _stream_doc_id
+    expected = []
+    for r in (spark.read.parquet(stream_src)
+              .select(_stream_doc_id().alias("doc_id"), "content").collect()):
+        toks = kept_tokens_py(r["content"] or "")
+        expected += [(r["doc_id"], t, tf, len(toks))
+                     for t, tf in Counter(toks).items()]
+    got = [tuple(r) for r in
+           delta_rows.select("doc_id", "term", "tf", "doc_len").collect()]
+    assert sorted(got) == sorted(expected)
     # docs delta materialized alongside the forward delta
     from nextsearch_api_spark.streaming.ingest import delta_docs_dir
     ddocs = spark.read.parquet(delta_docs_dir(deltas))

@@ -1,5 +1,5 @@
-"""Tokenizer parity (SURVEY.md §5 item 2): Spark expr == pandas == reference
-semantics (lowercase [a-z0-9]+ runs, len≥2, 24-word stoplist)."""
+"""Tokenizer parity (SURVEY.md §5 item 2): Spark expr == Arrow kernel ==
+reference semantics (lowercase [a-z0-9]+ runs, len≥2, 24-word stoplist)."""
 
 import re
 
@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from nextsearch_api_spark.functions.text import (
-    STOPWORD_SET, STOPWORDS, kept_tokens_py, tokenize_py, tokenize_series,
+    STOPWORD_SET, STOPWORDS, arrow_kept_tokens, kept_tokens_py, tokenize_py,
 )
 
 ASCII_TEXT = st.text(
@@ -38,13 +38,29 @@ def test_tokenize_examples():
     assert kept_tokens_py("!!! ???") == []
 
 
+def _arrow_kept_lists(texts):
+    import pyarrow as pa
+
+    toks, parent = arrow_kept_tokens(pa.array(texts, type=pa.string()))
+    out = [[] for _ in texts]
+    for t, p in zip(toks.to_pylist(), parent.to_pylist()):
+        out[p].append(t)
+    return out
+
+
 @given(st.lists(ASCII_TEXT, max_size=20))
 @settings(max_examples=50, deadline=None)
-def test_pandas_tokenizer_matches_python(texts):
-    import pandas as pd
+def test_arrow_tokenizer_matches_python(texts):
+    assert _arrow_kept_lists(texts) == [kept_tokens_py(t) for t in texts]
 
-    out = tokenize_series(pd.Series(texts, dtype=object))
-    assert list(out) == [kept_tokens_py(t) for t in texts]
+
+def test_arrow_tokenizer_dotted_capital_i():
+    """Outside the ASCII corpus contract: U+0130 lowercases to 'i' + U+0307
+    in Python (a delimiter there) but to 'i' alone in Arrow, so Arrow keeps
+    one token where Python splits."""
+    assert tokenize_py("xİy") == ["xi", "y"]
+    assert kept_tokens_py("xİy") == ["xi"]
+    assert _arrow_kept_lists(["xİy", None, ""]) == [["xiy"], [], []]
 
 
 def test_spark_expr_matches_python(spark):
