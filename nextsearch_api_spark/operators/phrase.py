@@ -95,8 +95,7 @@ def term_doc_ids(reader, terms: "list[str]") -> DataFrame:
     index: the pushed ``term isin`` predicate row-group-prunes the postings
     scan (chunks are (term, doc_lo)-sorted), and the mapInPandas decode
     touches ONLY the doc-id gap stream (``blob[:tf_off]``) — the tf/dl
-    varbyte streams and impact math are skipped, the same fast path the
-    multi-term prune's partial chunks use (query.py _decode_score_udf)."""
+    varbyte streams and the impact math are skipped."""
     import numpy as np
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from nextsearch_api_spark.functions.sqlvalues import values_frame
+
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
@@ -55,30 +57,12 @@ def cosine_scores(emb: DataFrame, query_vec: list[float],
     return j.select(F.col(id_col).alias("vec_id"), cos.alias("cos"))
 
 
-# VALUES-literal ceiling for driver-assembled result frames: the SQL parse
-# is ~linear in tuples (measured ~1.5 s at 20k), so beyond a few thousand
-# rows createDataFrame's RDD job (~0.3-0.4 s flat) is the cheaper handoff.
-# Typical results are ≤ k ≤ 100 rows — far under it either way.
-_VALUES_MAX_ROWS = 2000
-
-
 def _local_rank_frame(spark, rows: "list[tuple]",
                       val_col: str = "cos_sim") -> DataFrame:
-    """≤k driver-assembled (rank, vec_id, value) rows → LocalRelation via a
-    SQL VALUES literal. createDataFrame(list) parallelizes a Python RDD, so
-    even a collect()/count() on the k-row result pays a 1-task job plus a
-    Py4J round-trip (~0.3-0.4 s measured warm on this setup); a VALUES
-    LocalRelation collects job-free. Scores embed via repr(): the shortest
-    round-trip decimal parses back to the identical IEEE-754 double (same
-    convention as query._local_result_frame)."""
-    if not rows or len(rows) > _VALUES_MAX_ROWS:
-        return spark.createDataFrame(
-            rows, f"rank int, vec_id long, {val_col} double")
-    vals = ", ".join(f"({r}, {v}L, CAST({s!r} AS DOUBLE))"
-                     for r, v, s in rows)
-    return spark.sql(
-        f"SELECT col1 AS rank, col2 AS vec_id, col3 AS {val_col} "
-        f"FROM VALUES {vals}")
+    """≤k driver-assembled (rank, vec_id, value) rows → a job-free
+    LocalRelation (functions/sqlvalues.py)."""
+    return values_frame(spark, rows, [("rank", "int"), ("vec_id", "long"),
+                                      (val_col, "double")])
 
 
 # driver-side exact-cosine budget: embedding-element count (rows × dim,
@@ -146,17 +130,10 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
 
 
 def _local_batch_rank_frame(spark, rows: "list[tuple]") -> DataFrame:
-    """≤k·Q driver-assembled (qid, rank, vec_id, cos_sim) rows →
-    LocalRelation (see _local_rank_frame for why VALUES, not
-    createDataFrame)."""
-    if not rows or len(rows) > _VALUES_MAX_ROWS:
-        return spark.createDataFrame(
-            rows, "qid long, rank int, vec_id long, cos_sim double")
-    vals = ", ".join(f"({q}L, {r}, {v}L, CAST({s!r} AS DOUBLE))"
-                     for q, r, v, s in rows)
-    return spark.sql(
-        f"SELECT col1 AS qid, col2 AS rank, col3 AS vec_id, "
-        f"col4 AS cos_sim FROM VALUES {vals}")
+    """≤k·Q driver-assembled (qid, rank, vec_id, cos_sim) rows → a job-free
+    LocalRelation (functions/sqlvalues.py)."""
+    return values_frame(spark, rows, [("qid", "long"), ("rank", "int"),
+                                      ("vec_id", "long"), ("cos_sim", "double")])
 
 
 def cosine_topk_batch(emb: DataFrame, queries: "list[tuple[int, list[float]]]",
@@ -173,9 +150,9 @@ def cosine_topk_batch(emb: DataFrame, queries: "list[tuple[int, list[float]]]",
     per (partition, qid) with running state bounded by k·Q + one Arrow
     batch — so the only exchange is the final per-qid rank window over
     ≤ k·Q·P pruned rows (TakeOrderedAndProject can't serve multiple
-    orderings, hence the explicit local prune; this mirrors
-    query.py::local_topk). Ties canonicalize on round-9 cosine then
-    ascending id, matching cosine_topk. → (qid, rank, vec_id, cos_sim)."""
+    orderings, hence the explicit local prune). Ties canonicalize on
+    round-9 cosine then ascending id, matching cosine_topk.
+    → (qid, rank, vec_id, cos_sim)."""
     if k <= 0:
         raise ValueError("k must be positive")
     if not queries:

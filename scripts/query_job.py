@@ -5,8 +5,10 @@
         scripts/query_job.py --index <index-root> \\
         --query "load config" --query "hotterm" [--k 10] [--hydrate]
 
-Each query runs through the distributed batch path (one Spark plan for the
-whole batch). For single-query serving latency use the driver-side engine:
+The whole batch goes through ``batch_search``: a batch whose query terms
+hold at most SMALL_QUERY_MAX_POSTINGS postings in total is answered on the
+driver from footer-indexed reads; a larger one runs as one distributed Spark
+plan. For single-query serving latency use the driver-side engine:
 ``python -m nextsearch_api_spark.api <index-root> search "query"``.
 """
 

@@ -2,6 +2,8 @@
 the explain output — pushed filters on the postings scan, broadcast joins for
 query terms, column pruning (no content column in metadata-only plans)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,35 +30,61 @@ def test_postings_scan_pushes_term_filter(spark, plan_env):
     assert "In(term" in plan, plan[:2000]
 
 
+def _operators(plan: str) -> list[str]:
+    """Operator names of a formatted plan's numbered detail sections."""
+    return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+
+
+def _exchanges(plan: str) -> list[str]:
+    """Detail sections of the plan's Exchange operators, scan side first."""
+    return [sec for sec in plan.split("\n\n")
+            if re.match(r"\(\d+\) Exchange\b", sec.strip())]
+
+
 def test_batch_search_qterms_need_no_exchange(spark, plan_env):
-    """Query-term weights apply as a literal map lookup (scalar codegen
-    expression), so the plan carries NO join and NO broadcast exchange for
-    the query side — the only exchanges are the score agg + rank windows
-    (r4; previously a createDataFrame + broadcast join cost a driver
-    round-trip per batch)."""
+    """Query-term weights and k ride in the Python UDF's closure, so the
+    plan carries NO join, NO broadcast exchange and no literal term-weight
+    map or explode for the query side; the batch has exactly ONE Python operator, the
+    per-range FlatMapGroupsInArrow (every Python task pays a fixed start-up
+    cost), and no MapInPandas."""
     topk = batch_search(plan_env, [QuerySpec(0, "buffer cache99", 5)],
                         small_query_max_postings=0)
     plan = _plan(topk)
-    assert "keys=[buffer" in plan or "keys=[cache99" in plan \
-        or "map_keys" in plan or "map(" in plan.lower()
+    python_ops = [op for op in _operators(plan)
+                  if "Python" in op or "Pandas" in op or "Arrow" in op]
+    assert python_ops == ["FlatMapGroupsInArrow"], python_ops
+    assert "MapInPandas" not in plan
     assert "BroadcastExchange" not in plan
+    assert "Join" not in plan
+    # the one Generate tags chunk rows with doc-id ranges; no query-side
+    # explode
+    gens = [ln for ln in plan.splitlines() if "explode(" in ln]
+    assert gens and all("explode(sequence(" in ln for ln in gens), gens
     # top-k is a window row_number bounded filter, not a global sort
     assert "row_number" in plan.lower()
 
 
 def test_batch_search_found_and_rank_are_scale_safe(spark, plan_env):
-    """`found` must be a fused partial count (marker rows from the Arrow
-    prune), NOT a per-qid count window over the full matched set; the rank
-    window must sit above the partition-local MapInPandas prune; and the
-    whole plan needs exactly two hash exchanges — the (qid, doc_id) score
-    agg and one shared qid exchange for the two tiny windows
-    (VERDICT r1 'what's wrong' #2)."""
+    """`found` must be a fused partial count (marker rows from the per-range
+    Arrow groups), NOT a per-qid count window over the full matched set,
+    and the whole plan needs exactly two hash exchanges: the first moves
+    compressed chunk rows by doc-id range — no per-posting ``impact``
+    column below it — and the second is one shared qid exchange for the two
+    tiny windows (VERDICT r1 'what's wrong' #2)."""
     topk = batch_search(plan_env, [QuerySpec(0, "buffer cache99", 5)],
                         small_query_max_postings=0)
     plan = _plan(topk)
     assert "count(1) windowspecdefinition" not in plan
-    assert "MapInPandas" in plan
     assert plan.count("hashpartitioning(") == 2, plan.count("hashpartitioning(")
+    first, second = _exchanges(plan)
+    assert "hashpartitioning(doc_range#" in first, first
+    inputs = set(re.findall(r"(\w+)#\d+", first.split("Arguments")[0]))
+    # chunk-row columns (``full``: the multi-term prune's per-chunk flag)
+    assert inputs <= {"doc_range", "term", "count", "tf_off", "dl_off",
+                      "blob", "full"}, inputs
+    assert {"doc_range", "blob"} <= inputs, inputs
+    assert "impact" not in plan.split(first)[0] + first
+    assert "hashpartitioning(qid#" in second, second
 
 
 def test_docs_scan_prunes_columns(spark, tiny_index):
@@ -282,6 +310,65 @@ def test_multi_term_chunk_prefilter(spark, skewed_index):
     # though needle's low chunks were never fully decoded
     f0 = {r["qid"]: r["found"] for r in a.collect()}
     assert f0[0] == 200 and f0[1] == 200
+
+
+def test_tiers_bit_identical_skewed(spark, skewed_index):
+    """The heavy-tailed index, where the multi-term prune decodes some
+    chunks doc-ids-only: every tier returns the same rows, scores ==."""
+    from nextsearch_api_spark.operators.wand import WandEngine
+    from tests.test_wand import assert_tiers_identical, parity_specs
+
+    eng = WandEngine(skewed_index)
+    specs = [QuerySpec(100 + i, "needle common", k)
+             for i, k in enumerate((1, 10, 100))] + parity_specs(eng)
+    assert_tiers_identical(spark, skewed_index, eng, specs)
+
+
+def _letters(i: int) -> str:
+    s = ""
+    while True:
+        i, d = divmod(i, 26)
+        s += chr(97 + d)
+        if not i:
+            return s
+
+
+def test_many_whitelisted_terms_plan_at_constant_depth(spark, tmp_path):
+    """1600 single-term k=1 queries, each pruned to its one best chunk: the
+    whitelist predicate is one literal map lookup, constant expression depth
+    (a chain of one OR per whitelisted term overflowed the JVM stack,
+    StackOverflowError, past ~1200 terms), and the answers equal the
+    driver path's, found = df."""
+    from nextsearch_api_spark.config import BM25Params, BuildConfig
+    from nextsearch_api_spark.operators.build import build_index
+    from nextsearch_api_spark.operators.query import _plan_chunk_prune
+
+    n_docs, n_terms = 400, 1600
+    words: list[list[str]] = [[] for _ in range(n_docs)]
+    for i in range(n_terms):
+        term = "wl" + _letters(i)
+        for j in range(4):  # tf 2 in the first doc: its chunk ranks first
+            words[(i + 100 * j) % n_docs] += [term] * (2 if j == 0 else 1)
+    rows = [("r", f"{d:04d}", "c", "py", " ".join(ws))
+            for d, ws in enumerate(words)]
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string")
+    root = str(tmp_path / "wl")
+    build_index(spark, corpus, root, cfg=BuildConfig(chunk_size=2))
+    rd = IndexReader(spark, root)
+    terms = ["wl" + _letters(i) for i in range(n_terms)]
+    specs = [QuerySpec(i, t, 1) for i, t in enumerate(terms)]
+    df_map = rd.term_dfs(terms)
+    wl, ov, _ = _plan_chunk_prune(
+        rd, {i: [t] for i, t in enumerate(terms)}, {i: 1 for i in range(n_terms)},
+        df_map, BM25Params())
+    assert len(wl) >= 1500 and len(ov) == len(wl)
+
+    dist = sorted(tuple(r) for r in batch_search(
+        rd, specs, small_query_max_postings=0).collect())
+    driver = sorted(tuple(r) for r in batch_search(rd, specs).collect())
+    assert dist == driver and len(dist) == n_terms
+    assert all(r[4] == df_map[terms[r[0]]] for r in dist)
 
 
 def test_multi_term_prefilter_randomized_parity(spark, skewed_index):

@@ -10,7 +10,7 @@ from nextsearch_api_spark.operators.build import build_index
 from nextsearch_api_spark.sources.corpus import generate_corpus, write_corpus
 
 
-def test_stream_ingest_and_compact(spark, tmp_path):
+def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     from nextsearch_api_spark.operators.wand import WandEngine
     from nextsearch_api_spark.streaming.ingest import (
         compact_deltas, stream_corpus_to_forward,
@@ -108,11 +108,26 @@ def test_stream_ingest_and_compact(spark, tmp_path):
     assert 0 < stats2["affected_terms"] < total_terms
     # serving stays exact across the avgdl drift of incremental merges
     # (untouched chunks keep build-time max_impact): it equals the batch plan
-    from tests.test_wand import assert_matches_pruned_plan
+    from tests.test_wand import (
+        assert_matches_pruned_plan, assert_tiers_identical, parity_specs,
+    )
     w2 = WandEngine(root)
     assert_matches_pruned_plan(
         spark, root, w2,
         [(q, 10) for q in ("hotterm", "hotterm buffer", "buffer cache3")])
+    # bit-identical tiers over streamed 2^62-range ids, whose doc-id ranges
+    # the distributed plan cuts from chunk metadata
+    assert_tiers_identical(spark, root, w2, parity_specs(w2))
+    from nextsearch_api_spark.operators import query as query_mod
+    rd2 = query_mod.IndexReader(spark, root)
+    df2 = rd2.term_dfs(["hotterm", "buffer"])
+    monkeypatch.setattr(query_mod, "SMALL_QUERY_MAX_POSTINGS", 16)
+    cuts = query_mod._doc_range_cuts(rd2, sorted(df2), df2, {})
+    # the streamed postings spread over several ranges (cuts come from
+    # chunk metadata, not from uniform widths over [0, N))
+    assert sum(c >= (1 << 62) for c in cuts) >= 3, cuts
+    assert_tiers_identical(spark, root, w2, parity_specs(w2))
+    monkeypatch.undo()
 
     # `found` is EXACT over streamed 2^62-range ids: single-term found
     # equals the lexicon df, and a multi-segment engine over the same

@@ -9,32 +9,73 @@ from nextsearch_api_spark.operators.wand import WandEngine
 from tests.test_build_query import QUERIES
 
 
-def assert_matches_pruned_plan(spark, root, eng, cases):
-    """``eng.search`` (exhaustive) vs the distributed plan with block-max
-    chunk pruning on (``batch_search(..., small_query_max_postings=0)``,
-    same BM25 params) for every (query, k): doc ids exact, scores at rtol
-    1e-6, found exact."""
+def assert_tiers_identical(spark, root, eng, specs):
+    """Every ranking tier returns the same rows, scores compared with ==:
+    the distributed plan with the chunk prune on
+    (``small_query_max_postings=0``) and off (``prune_chunks=False``), the
+    driver small-query path, and ``eng.search`` (same BM25 params), on
+    (doc_id, score, found) per query. A qid given by several specs is
+    compared with ``eng.search`` of their joined text and the first spec's
+    k — the same ranking when the specs share no term."""
     from nextsearch_api_spark.operators.query import (
-        IndexReader, QuerySpec, batch_search,
+        IndexReader, batch_search,
     )
 
-    rows = batch_search(
-        IndexReader(spark, root),
-        [QuerySpec(i, q, k) for i, (q, k) in enumerate(cases)],
-        eng.params, small_query_max_postings=0,
-    ).collect()
-    by_qid: dict = {}
-    for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
-        by_qid.setdefault(r["qid"], []).append(r)
-    for i, (q, k) in enumerate(cases):
-        exp = by_qid.get(i, [])
-        got = eng.search(q, k)
-        assert ([r["doc_id"] for r in got["results"]]
-                == [r["doc_id"] for r in exp]), f"q={q!r} k={k}"
-        assert np.allclose([r["score"] for r in got["results"]],
-                           [r["score"] for r in exp], rtol=1e-6, atol=0.0), \
-            f"q={q!r} k={k}"
-        assert got["found"] == (exp[0]["found"] if exp else 0), f"q={q!r} k={k}"
+    rd = IndexReader(spark, root)
+
+    def ranked(df) -> dict:
+        by_qid: dict = {}
+        for r in sorted(df.collect(), key=lambda r: (r["qid"], r["rank"])):
+            by_qid.setdefault(r["qid"], []).append(
+                (r["doc_id"], r["score"], r["found"]))
+        return by_qid
+
+    pruned = ranked(batch_search(rd, specs, eng.params,
+                                 small_query_max_postings=0))
+    full = ranked(batch_search(rd, specs, eng.params, prune_chunks=False))
+    driver_df = batch_search(rd, specs, eng.params,
+                             small_query_max_postings=1 << 62)
+    assert "parquet" not in driver_df._jdf.queryExecution() \
+        .executedPlan().toString().lower()  # answered on the driver
+    driver = ranked(driver_df)
+    assert pruned == full, root
+    assert pruned == driver, root
+    texts: dict = {}
+    ks: dict = {}
+    for s in specs:
+        texts.setdefault(s.qid, []).append(s.q)
+        ks.setdefault(s.qid, s.k)
+    for qid, qs in texts.items():
+        got = eng.search(" ".join(qs), ks[qid])
+        assert ([(r["doc_id"], r["score"], got["found"])
+                 for r in got["results"]] == pruned.get(qid, [])), \
+            f"qid={qid} q={qs!r} k={ks[qid]}"
+
+
+def assert_matches_pruned_plan(spark, root, eng, cases):
+    """assert_tiers_identical over one spec per (query, k) case."""
+    from nextsearch_api_spark.operators.query import QuerySpec
+
+    assert_tiers_identical(
+        spark, root, eng,
+        [QuerySpec(i, q, k) for i, (q, k) in enumerate(cases)])
+
+
+def parity_specs(eng):
+    """Cases for assert_tiers_identical from an engine's vocabulary: single,
+    multi-term, repeated and OOV terms at every k in (1, 10, 100), plus a
+    qid given twice with disjoint terms."""
+    from nextsearch_api_spark.operators.query import QuerySpec
+
+    vocab = sorted(eng._df, key=lambda t: (-eng._df[t], t))
+    hot, hot2, mid, rare = vocab[0], vocab[1], vocab[len(vocab) // 2], vocab[-1]
+    texts = [hot, f"{hot} {mid}", f"{mid} {mid} {rare}",
+             f"zzzznotaterm {hot2}", "zzzznotaterm",
+             f"{hot} {hot2} {mid} {rare}"]
+    specs = [QuerySpec(i, q, k) for i, (q, k) in enumerate(
+        (q, k) for q in texts for k in (1, 10, 100))]
+    n = len(specs)
+    return specs + [QuerySpec(n, hot2, 10), QuerySpec(n, rare, 100)]
 
 
 @pytest.fixture(scope="session")
@@ -139,6 +180,48 @@ def test_wand_multichunk_parity_exhaustive(spark, multichunk_index):
     ]
     assert_matches_pruned_plan(spark, multichunk_index, eng,
                                [(q, k) for q in queries for k in (1, 3, 10)])
+
+
+def test_tiers_bit_identical_tiny(spark, wand, tiny_index):
+    root, _ = tiny_index
+    assert_tiers_identical(spark, root, wand, parity_specs(wand))
+
+
+def test_tiers_bit_identical_multichunk(spark, multichunk_index):
+    eng = WandEngine(multichunk_index)
+    assert_tiers_identical(spark, multichunk_index, eng, parity_specs(eng))
+
+
+def test_distributed_plan_splits_doc_ranges_exactly(
+        spark, multichunk_index, monkeypatch):
+    """With SMALL_QUERY_MAX_POSTINGS patched down, the distributed plan
+    splits a batch over several doc-id ranges, some chunk straddles a range
+    boundary (so it is decoded in both ranges and each keeps its own
+    postings), and every tier still returns the same rows."""
+    from nextsearch_api_spark.operators import query
+
+    eng = WandEngine(multichunk_index)
+    specs = parity_specs(eng)
+    rd = query.IndexReader(spark, multichunk_index)
+
+    def rows():
+        return sorted(tuple(r) for r in query.batch_search(
+            rd, specs, small_query_max_postings=0).collect())
+
+    before = rows()
+    df_map = rd.term_dfs(sorted({t for s in specs
+                                 for t in query.parse_query(s.q)}))
+    present = sorted(df_map)
+    assert query._doc_range_cuts(rd, present, df_map, {}) == []
+    monkeypatch.setattr(query, "SMALL_QUERY_MAX_POSTINGS", 64)
+    cuts = query._doc_range_cuts(rd, present, df_map, {})
+    assert len(cuts) >= 3, cuts
+    assert cuts == sorted(set(cuts))
+    meta = rd.chunk_meta(present)
+    assert any(lo < c <= hi for chunks in meta.values()
+               for lo, hi, *_ in chunks for c in cuts)
+    assert rows() == before
+    assert_tiers_identical(spark, multichunk_index, eng, specs)
 
 
 def test_topk_boundary_tiebreak_canonical(spark, tmp_path):
