@@ -114,16 +114,44 @@ class RowGroupIndex:
             picked.update(i for i in range(first, stop) if self._hi[i] >= x)
         return sorted({self._where[i] for i in picked} | set(self._unranged))
 
-    def read(self, keys: Sequence, columns: Sequence[str]) -> pa.Table:
+    def stats(self, groups: Iterable[tuple[str, int]],
+              column: str) -> list[tuple]:
+        """(key min, key max, ``column`` min, ``column`` max, rows) of each
+        (file, row_group) in ``groups``, from the footers parsed at open —
+        nothing is read. A min/max the footer has no statistics for is
+        None."""
+        out = []
+        names: dict[str, list[str]] = {}  # file → column names
+        for p, rg in groups:
+            md = self._meta[p]
+            if p not in names:
+                names[p] = md.schema.to_arrow_schema().names
+            g = md.row_group(rg)
+            bounds: list = []
+            for name in (self.column, column):
+                st = (g.column(names[p].index(name)).statistics
+                      if name in names[p] else None)
+                bounds.append((_key(st.min), _key(st.max))
+                              if st is not None and st.has_min_max
+                              else (None, None))
+            out.append((*bounds[0], *bounds[1], g.num_rows))
+        return out
+
+    def read(self, keys: Sequence, columns: Sequence[str],
+             groups: "Sequence[tuple[str, int]] | None" = None) -> pa.Table:
         """Rows whose ``column`` is in ``keys`` (the key column first, then
-        ``columns``), read from the selected row groups only. Absent keys
-        contribute no rows; an empty key list reads nothing."""
+        ``columns``), read from the selected row groups only — or from
+        ``groups`` (file, row_group) when given. Absent keys contribute no
+        rows; an empty key list reads nothing."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         cols = [self.column] + [c for c in columns if c != self.column]
         keys = list(dict.fromkeys(keys))
-        groups = self.row_groups(keys) if keys else []
+        if not keys:
+            groups = []
+        elif groups is None:
+            groups = self.row_groups(keys)
         by_file: dict[str, list[int]] = {}
         for p, rg in groups:
             by_file.setdefault(p, []).append(rg)

@@ -128,33 +128,32 @@ class IndexReader:
             idx = self._indexes[path] = RowGroupIndex(path, "term")
         return idx
 
-    def chunk_meta(self, terms: Sequence[str]) -> "dict[str, list[tuple[int, int, float, int]]]":
-        """Per-term chunk metadata → {term: [(doc_lo, doc_hi, max_impact,
-        count)]}.
+    def chunk_meta(self, terms: Sequence[str]) -> "dict[str, list[tuple[int, int, float]]]":
+        """Per-term chunk metadata → {term: [(doc_lo, doc_hi, max_impact)]}.
 
         Driver-side read of the (term, doc_lo)-sorted postings through the
         postings footer index — only the row groups whose term range holds a
-        requested term — column-pruned to five scalar columns, never the
+        requested term — column-pruned to four scalar columns, never the
         blobs. Volume is df/chunk_size rows per term, a small fraction of
-        the decode volume it plans (the chunk prune and the doc-id range
-        cuts of batch_search). Falls back to a Spark collect for
-        filesystems pyarrow can't open."""
+        the decode volume it lets the batch tier skip. Terms it cannot read
+        are left out (the prefilter then keeps all their chunks)."""
         terms = list(terms)
         missing = [t for t in terms if t not in self._chunk_meta]
         if missing:
-            cols = ["doc_lo", "doc_hi", "max_impact", "count"]
             try:
-                t = self._by_term(self.paths.postings).read(missing, cols)
-                rows = zip(*(t.column(c).to_pylist() for c in ["term"] + cols))
+                t = self._by_term(self.paths.postings).read(
+                    missing, ["doc_lo", "doc_hi", "max_impact"])
             except Exception:
-                rows = (self.postings().where(F.col("term").isin(missing))
-                        .select("term", *cols).collect())
-            fetched: dict[str, list[tuple[int, int, float, int]]] = {
-                m: [] for m in missing}
-            for term, lo, hi, mi, cnt in rows:
-                fetched.setdefault(term, []).append(
-                    (int(lo), int(hi), float(mi), int(cnt)))
-            self._chunk_meta.update(fetched)
+                t = None
+            if t is not None:
+                fetched: dict[str, list[tuple[int, int, float]]] = {
+                    m: [] for m in missing}
+                for term, lo, hi, mi in zip(
+                        *(t.column(c).to_pylist()
+                          for c in ("term", "doc_lo", "doc_hi", "max_impact"))):
+                    fetched.setdefault(term, []).append(
+                        (int(lo), int(hi), float(mi)))
+                self._chunk_meta.update(fetched)
         return {t: self._chunk_meta[t] for t in terms
                 if self._chunk_meta.get(t)}
 
@@ -202,11 +201,6 @@ _CHUNK_PRUNE_SLACK = 1.0 - 1e-5
 HYDRATE_PUSHDOWN_MAX_IDS = 100_000
 
 
-# budget on the pairwise chunk-range work of the multi-term prune plan
-# (Σ_t |chunks_t| · |terms|); above it the per-chunk range max falls back to
-# the other term's GLOBAL max — still sound, just a looser upper bound
-_MULTI_PRUNE_RANGE_BUDGET = 200_000
-
 # driver-side small-query budget: largest Σ_t df (total postings across the
 # query batch's present terms — known EXACTLY from the lexicon before any
 # data is read) for which the batch tier answers from a bounded pyarrow
@@ -227,70 +221,42 @@ def _plan_chunk_prune(
     reader: IndexReader, per_qid_terms: dict[int, list[str]],
     per_qid_k: dict[int, int], df_map: dict[str, int],
     params: BM25Params,
-    widf_by_qid: "dict[int, dict[str, float]] | None" = None,
-) -> tuple[dict, dict, dict]:
-    """Driver-side chunk-level top-k prefilter plan (VERDICT r3 next #4;
-    multi-term extension VERDICT r4 next #3).
+) -> tuple[dict, dict]:
+    """Driver-side chunk-level top-k prefilter plan (VERDICT r3 next #4).
 
     → (whitelist: {term: [kept doc_lo...]},        # drop other chunks
-       found_overrides: {qid: found},              # exact found for dropped
-       partial: {term: [full-decode doc_lo...]})   # rest → doc-id-only
+       found_overrides: {qid: found})              # exact found for dropped
 
     Sound EXACT pruning from chunk metadata alone, gated on the stored
     per-chunk ``max_impact`` being an *attained* query-time impact
     (stats.impact_avgdl == stats.avgdl and k1/b match — the marker
     incremental ingest drops when generations mix avgdls).
 
-    Single-present-term queries (r4): chunks of one term cover disjoint doc
-    ranges, so the k highest chunk maxes identify k distinct docs scoring ≥
-    the k-th max; chunks strictly below that threshold are DROPPED from the
-    scan and ``found`` comes exactly from the lexicon df.
-
-    Multi-term queries (r5): the block-max WAND pivot inequality (Ding &
-    Suel 2011) applied at plan time — the engine's only top-k pruning; the
-    serving tier (operators/wand.py) scores exhaustively.
-    θ_q = max over terms t with ≥ k chunks of the k-th highest
-    widf_t·max_impact — each chunk max is attained by a distinct doc whose
-    TOTAL score is at least that contribution (disjunctive OR), so θ_q lower-
-    bounds the true k-th score. A chunk c of term t is prunable when
-    widf_t·max_c + Σ_{t'≠t} widf_t'·rangemax_t'([lo_c, hi_c]) < θ_q·slack:
-    no doc in c can reach the top-k, and (because that upper bound covers
-    the doc's WHOLE score) any doc of c surfacing through other terms is
-    provably outside the top-k too, so its understated score cannot displace
-    a true result. Prunable chunks are NOT dropped — they decode DOC-IDS
-    ONLY (skip the tf/dl varbyte streams + impact math, emit impact 0), so
-    per-query ``found`` (distinct matched docs) stays exact without an
-    override. A term used by several queries keeps the union of their
-    full-decode needs; single-term queries sharing a multi-term's term
-    contribute their r4 kept-set the same way (and need no found override —
-    the doc-id-only markers count every match)."""
+    Only terms whose every query is a single-present-term query prune:
+    chunks of one term cover disjoint doc ranges, so the k highest chunk
+    maxes identify k distinct docs scoring ≥ the k-th max; chunks strictly
+    below that threshold are DROPPED from the scan and ``found`` comes
+    exactly from the lexicon df. A term that some multi-term query uses
+    keeps every chunk: that query's ``found`` counts the distinct docs of
+    all its terms, so no chunk of it may be dropped."""
     stats = reader.stats
     if stats.get("impact_avgdl") is None \
             or stats.get("impact_avgdl") != stats.get("avgdl"):
-        return {}, {}, {}
+        return {}, {}
     if float(stats.get("k1", -1.0)) != float(params.k1) \
             or float(stats.get("b", -1.0)) != float(params.b):
-        return {}, {}, {}
+        return {}, {}
 
-    widf_by_qid = widf_by_qid or {}
     single_users: dict[str, list[tuple[int, int]]] = {}
-    multi_qids: list[int] = []
     multi_terms: set[str] = set()
-    must_full: set[str] = set()   # some query needs this term whole
     for qid, terms in per_qid_terms.items():
         if len(terms) == 1:
             single_users.setdefault(terms[0], []).append((qid, per_qid_k[qid]))
-        elif terms:
+        else:
             multi_terms.update(terms)
-            if widf_by_qid.get(qid):
-                multi_qids.append(qid)
-            else:
-                must_full.update(terms)  # no weights → conservative
-    shared = set(single_users) & multi_terms
     pure_single = {t: u for t, u in single_users.items()
                    if t not in multi_terms}
 
-    # ---- single-present-term full-drop (r4 logic) ------------------------
     cand = [
         t for t in pure_single
         # unknown count (term_dfs not called for t) → fetch conservatively
@@ -316,93 +282,7 @@ def _plan_chunk_prune(
         whitelist[t] = sorted(kept)
         for qid, _ in pure_single[t]:
             overrides[qid] = int(df_map[t])
-
-    # ---- multi-term partial decode (r5) ----------------------------------
-    if not multi_qids and not shared:
-        return whitelist, overrides, {}
-    need = sorted({t for qid in multi_qids for t in per_qid_terms[qid]}
-                  | shared)
-    mmeta = reader.chunk_meta(need)
-    arrs: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for t, chunks in mmeta.items():
-        chunks = sorted(chunks)
-        arrs[t] = (np.array([c[0] for c in chunks], dtype=np.int64),
-                   np.array([c[1] for c in chunks], dtype=np.int64),
-                   np.array([c[2] for c in chunks], dtype=np.float64))
-
-    full_need: dict[str, set[int]] = {}
-    prunable: set[str] = set()
-
-    for qid in multi_qids:
-        terms = per_qid_terms[qid]
-        k = per_qid_k[qid]
-        w = widf_by_qid[qid]
-        if any(t not in arrs for t in terms):
-            must_full.update(terms)
-            continue
-        theta = 0.0
-        for t in terms:
-            mxs = arrs[t][2]
-            if len(mxs) >= k:
-                theta = max(theta,
-                            float(np.partition(mxs, len(mxs) - k)[len(mxs) - k])
-                            * w[t])
-        if theta <= 0.0:
-            must_full.update(terms)
-            continue
-        thr = theta * _CHUNK_PRUNE_SLACK
-        pair_budget_ok = (sum(len(arrs[t][0]) for t in terms) * len(terms)
-                          <= _MULTI_PRUNE_RANGE_BUDGET)
-        for t in terms:
-            los, his, mxs = arrs[t]
-            ub = mxs * w[t]
-            for t2 in terms:
-                if t2 == t:
-                    continue
-                los2, his2, mxs2 = arrs[t2]
-                if not len(mxs2):
-                    continue
-                if not pair_budget_ok:
-                    ub = ub + w[t2] * float(mxs2.max())
-                    continue
-                contrib = np.zeros(len(los), dtype=np.float64)
-                for i in range(len(los)):
-                    a = int(np.searchsorted(his2, los[i], side="left"))
-                    b = int(np.searchsorted(los2, his[i], side="right"))
-                    if a < b:
-                        contrib[i] = mxs2[a:b].max()
-                ub = ub + w[t2] * contrib
-            keep = ub >= thr
-            full_need.setdefault(t, set()).update(
-                int(lo) for lo in los[keep])
-            if not bool(keep.all()):
-                prunable.add(t)
-
-    # single-term queries sharing a multi-term's term: contribute the r4
-    # kept-set; found needs no override on the partial path (doc-id-only
-    # markers count every matched doc)
-    for t in shared:
-        if t not in arrs:
-            must_full.add(t)
-            continue
-        los, his, mxs = arrs[t]
-        k_req = max(k for _, k in single_users[t])
-        if len(mxs) <= k_req:
-            must_full.add(t)
-            continue
-        theta = float(np.partition(mxs, len(mxs) - k_req)[len(mxs) - k_req]) \
-            * _CHUNK_PRUNE_SLACK
-        keep = mxs >= theta
-        full_need.setdefault(t, set()).update(int(lo) for lo in los[keep])
-        if not bool(keep.all()):
-            prunable.add(t)
-
-    partial: dict[str, list[int]] = {}
-    for t in sorted(prunable - must_full):
-        full = sorted(full_need.get(t, ()))
-        if len(full) < len(arrs[t][0]):
-            partial[t] = full
-    return whitelist, overrides, partial
+    return whitelist, overrides
 
 
 def _rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
@@ -414,15 +294,11 @@ def _rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
     the distributed plan.
 
     ``chunks`` is an Arrow table of postings chunk rows (term, count,
-    tf_off, dl_off, blob), optionally with a boolean ``full``; ``queries``
-    is [(qid, k, [(term, widf), ...])]. Each term's chunks decode in one
-    ``decode_chunks_concat`` call, and only doc ids in [lo, hi) are kept
-    (None: unbounded). Postings of ``full = False`` chunks — the multi-term
-    prune's doc-id-only chunks (_plan_chunk_prune) — get impact 0: they
-    still count in ``found`` and are provably outside the top-k. Impacts
-    and ranking are functions/scoring.py's ``bm25_impact`` and
-    ``rank_postings``, the serving tier's kernel, so every tier returns
-    bit-identical scores."""
+    tf_off, dl_off, blob); ``queries`` is [(qid, k, [(term, widf), ...])].
+    Each term's chunks decode in one ``decode_chunks_concat`` call, and only
+    doc ids in [lo, hi) are kept (None: unbounded). Impacts and ranking are
+    functions/scoring.py's ``bm25_impact`` and ``rank_postings``, the
+    serving tier's kernel, so every tier returns bit-identical scores."""
     from nextsearch_api_spark.functions.codec import decode_chunks_concat
 
     rows_by_term: dict[str, list[int]] = {}
@@ -434,16 +310,12 @@ def _rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
     counts, tf_offs, dl_offs = (
         chunks.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
         for c in ("count", "tf_off", "dl_off"))
-    full = (chunks.column("full").to_numpy(zero_copy_only=False)
-            if "full" in chunks.column_names else None)
 
     def decode(term: str) -> tuple[str, np.ndarray, np.ndarray]:
         idx = np.asarray(rows_by_term[term])
         ids, tfs, dls = decode_chunks_concat(
             [blobs[int(i)].as_buffer() for i in idx],
             tf_offs[idx], dl_offs[idx], counts[idx])
-        zero = (None if full is None or full[idx].all()
-                else ~np.repeat(full[idx], counts[idx]))
         if lo is not None or hi is not None:
             keep = np.ones(ids.size, dtype=bool)
             if lo is not None:
@@ -451,12 +323,8 @@ def _rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
             if hi is not None:
                 keep &= ids < hi
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            zero = None if zero is None else zero[keep]
-        imp = bm25_impact(tfs, dls, params.k1, params.b, avgdl,
-                          params.precision)
-        if zero is not None:
-            imp[zero] = 0
-        return term, ids, imp
+        return term, ids, bm25_impact(tfs, dls, params.k1, params.b, avgdl,
+                                      params.precision)
 
     # numpy varbyte kernels release the GIL — a few threads cut the decode
     # wall ~linearly; results are per-term and order-independent
@@ -506,12 +374,6 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     return out
 
 
-def _local_result_frame(spark: SparkSession, rows: "list[tuple]") -> DataFrame:
-    """≤Σk driver-computed (qid, rank, doc_id, score, found) rows → a
-    job-free LocalRelation (functions/sqlvalues.py)."""
-    return values_frame(spark, rows, _RESULT_SCHEMA)
-
-
 def _doc_range_cuts(reader: IndexReader, present: "list[str]",
                     df_map: dict[str, int],
                     whitelist: "dict[str, list[int]]") -> list[int]:
@@ -519,39 +381,66 @@ def _doc_range_cuts(reader: IndexReader, present: "list[str]",
     distributed plan is [c_r, c_{r+1}) of the doc-id space (c_0 = −∞,
     c_n = +∞), so every doc's whole score is computed in exactly one range.
 
-    Count: Σdf postings over at most SMALL_QUERY_MAX_POSTINGS per range —
-    the most one Python process scores at once, the driver path's budget —
-    and, below that, up to spark.sql.shuffle.partitions ranges of at least
-    SMALL_QUERY_MAX_POSTINGS / partitions postings each, so a small batch
-    stays one range (one Python task) instead of paying per-range overhead.
-    Position: weighted quantiles of the scanned chunks' ``doc_lo`` by their
-    posting ``count`` (the chunk metadata the prune reads), so ranges hold
-    equal shares of the batch's postings whatever the id distribution —
-    dense build ids or streamed ids hashed into [2^62, 2^62 + 2^60). A range
-    holds about Σdf/n postings plus at most one straddling chunk per term
-    (chunk_size postings) from each neighbour."""
-    total = sum(df_map[t] for t in present)
-    parts = int(reader.spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(-(-total // SMALL_QUERY_MAX_POSTINGS),
-            min(parts, -(-total * parts // SMALL_QUERY_MAX_POSTINGS)))
-    if n <= 1:
+    Count: n = ⌈kept postings / SMALL_QUERY_MAX_POSTINGS⌉, the most postings
+    one Python process scores at once (the driver path's budget). A batch
+    whose Σdf is within that budget is one range and reads nothing.
+
+    Position: weighted quantiles of where the kept postings start, so
+    ranges hold equal shares of them whatever the id distribution — dense
+    build ids or streamed ids hashed into [2^62, 2^62 + 2^60). The input
+    is bounded by the footer, never by df:
+    - a whitelisted term contributes its kept chunks' ``doc_lo`` (the
+      whitelist itself), each weighted by the term's mean postings per
+      chunk (lexicon df / n_chunks);
+    - a postings row group holding only one present term and at most
+      SMALL_QUERY_MAX_POSTINGS postings is one point at its footer
+      ``doc_lo`` minimum, weighted by its rows × the mean — no read;
+    - the other row groups of the present terms (on the sorted layout, at
+      most the first and last of each term's run) are read for their
+      chunks' ``doc_lo`` and ``count``.
+    A range then holds about kept/n postings, give or take one row group
+    per term at each boundary. Nothing is cached. A postings table pyarrow
+    cannot open (the same failure that turns off the driver path and the
+    prune) gets one range."""
+    if sum(df_map[t] for t in present) <= SMALL_QUERY_MAX_POSTINGS:
         return []
-    meta = reader.chunk_meta(present)
+    per_chunk = {t: df_map[t] / max(1, reader._n_chunks.get(t) or 1)
+                 for t in present}
     los: list[int] = []
-    cnts: list[int] = []
-    for t in present:
-        kept = set(whitelist.get(t, ()))
-        for c in meta.get(t, ()):
-            if not kept or c[0] in kept:
-                los.append(c[0])
-                cnts.append(c[3])
-    if not los:
+    wts: list[float] = []
+    for t, kept in whitelist.items():
+        los.extend(kept)
+        wts.extend([per_chunk[t]] * len(kept))
+    rest = [t for t in present if t not in whitelist]
+    if rest:
+        try:
+            idx = reader._by_term(reader.paths.postings)
+            groups = idx.row_groups(rest)
+            to_read = []
+            for g, (t_lo, t_hi, lo, _hi, rows) in zip(
+                    groups, idx.stats(groups, "doc_lo")):
+                w = rows * per_chunk.get(t_lo, 0.0)
+                if t_lo == t_hi and t_lo in per_chunk and lo is not None \
+                        and w <= SMALL_QUERY_MAX_POSTINGS:
+                    los.append(int(lo))
+                    wts.append(w)
+                else:
+                    to_read.append(g)
+            if to_read:
+                edge = idx.read(rest, ["doc_lo", "count"], groups=to_read)
+                los.extend(edge.column("doc_lo").to_pylist())
+                wts.extend(edge.column("count").to_pylist())
+        except Exception:
+            return []
+    weights = np.asarray(wts, dtype=np.float64)
+    n = int(np.ceil(weights.sum() / SMALL_QUERY_MAX_POSTINGS))
+    if n <= 1:
         return []
     order = np.argsort(np.asarray(los, dtype=np.int64), kind="stable")
     lo_sorted = np.asarray(los, dtype=np.int64)[order]
-    weights = np.asarray(cnts, dtype=np.int64)[order]
-    before = np.cumsum(weights) - weights  # postings in earlier chunks
-    targets = np.arange(1, n) * (float(weights.sum()) / n)  # no int64 overflow
+    weights = weights[order]
+    before = np.cumsum(weights) - weights  # postings in earlier points
+    targets = np.arange(1, n) * (weights.sum() / n)
     at = np.searchsorted(before, targets, side="left")
     cuts = np.unique(lo_sorted[at[at < lo_sorted.size]])
     return [int(c) for c in cuts[cuts > lo_sorted[0]]]
@@ -623,16 +512,19 @@ def batch_search(
     Scale safety: the ranges partition the doc-id space, so each doc's full
     score is computed in exactly one group — per-range found counts add up
     exactly and the merge of per-range top-k lists is exact. A group holds
-    at most about SMALL_QUERY_MAX_POSTINGS postings, and the final windows
-    order ≤ (k + 1)·ranges rows per query, never the matched set. The plan
-    has one Python stage, and the exchange carries compressed chunk rows,
-    never decoded postings.
+    about SMALL_QUERY_MAX_POSTINGS postings at most (one group for the
+    whole batch when pyarrow cannot open the postings footers), the driver
+    plans the ranges from postings footers and whitelists, never from a
+    per-chunk read, and the final windows order ≤ (k + 1)·ranges rows per
+    query, never the matched set. The plan has one Python stage, and the
+    exchange carries compressed chunk rows, never decoded postings.
 
     ``prune_chunks`` enables the driver-side chunk prefilter
-    (_plan_chunk_prune): on a drift-free index, only the chunks that can
-    hold a top-k doc are decoded — exact results either way (rank- and
-    found-identical by construction; set False to force exhaustive decode,
-    e.g. for parity testing; it also turns off the driver path)."""
+    (_plan_chunk_prune): on a drift-free index, a term queried only by
+    single-term queries scans just the chunks that can hold a top-k doc —
+    exact results either way (rank- and found-identical by construction;
+    set False to force exhaustive decode, e.g. for parity testing; it also
+    turns off the driver path)."""
     params = params or BM25Params()
     spark = reader.spark
 
@@ -651,7 +543,7 @@ def batch_search(
     df_map = reader.term_dfs(sorted({t for _, t, _ in qrows}))
     present = sorted(df_map)
     if not present:
-        return _local_result_frame(spark, [])
+        return values_frame(spark, [], _RESULT_SCHEMA)
     idfs = bm25_idf(reader.N, np.array([df_map[t] for t in present],
                                        dtype=np.int64), params.precision)
     idf_map = dict(zip(present, idfs))
@@ -676,24 +568,18 @@ def batch_search(
             and sum(df_map[t] for t in present) <= budget:
         local_rows = _driver_small_search(reader, present, ranked, params)
         if local_rows is not None:
-            topk = _local_result_frame(spark, local_rows)
+            topk = values_frame(spark, local_rows, _RESULT_SCHEMA)
             return _hydrate_topk(reader, topk, queries) if hydrate else topk
 
     # chunk-level top-k prefilter (driver-side plan over chunk metadata);
-    # a qid's weight for a term sums over its specs, so the bounds hold
-    # for duplicate qids too
+    # a duplicate qid's terms are the union over its specs
     whitelist: dict[str, list[int]] = {}
     found_overrides: dict[int, int] = {}
-    partial: dict[str, list[int]] = {}
     if prune_chunks:
-        widf_by_qid: dict[int, dict[str, float]] = {}
-        for qid, _k, tws in ranked:
-            w = widf_by_qid[qid] = {}
-            for t, widf in tws:
-                w[t] = w.get(t, 0.0) + widf
-        whitelist, found_overrides, partial = _plan_chunk_prune(
-            reader, {qid: list(w) for qid, w in widf_by_qid.items()},
-            k_of, df_map, params, widf_by_qid)
+        whitelist, found_overrides = _plan_chunk_prune(
+            reader, {qid: list(dict.fromkeys(t for t, _ in tws))
+                     for qid, _k, tws in ranked},
+            k_of, df_map, params)
 
     # postings scan pruned to query terms (pushed filter → row-group pruning);
     # whitelisted terms additionally restrict to their kept (doc_lo) chunks
@@ -709,22 +595,6 @@ def batch_search(
         chunks = chunks.where(
             (F.col("term").isin(full_terms) if full_terms else F.lit(False))
             | F.array_contains(kept[F.col("term")], F.col("doc_lo")))
-    sel = [F.col(c) for c in ("term", "count", "tf_off", "dl_off", "blob")]
-    if partial:
-        # multi-term prefilter: a literal term → [full-decode doc_lo...]
-        # map; chunks outside their term's list decode doc-ids only. A term
-        # absent from the map (null lookup) decodes fully.
-        pm_args: list = []
-        for t, los in sorted(partial.items()):
-            pm_args.append(F.lit(t))
-            pm_args.append(F.array(*[F.lit(int(lo)).cast("long")
-                                     for lo in los])
-                           if los else F.array(F.lit(-1).cast("long")))
-        pmap = F.create_map(*pm_args)
-        sel.append(F.coalesce(
-            F.array_contains(pmap[F.col("term")], F.col("doc_lo")),
-            F.lit(True),
-        ).alias("full"))
 
     # doc-id range of a chunk bound = number of cuts at or below it
     cuts = _doc_range_cuts(reader, present, df_map, whitelist)
@@ -737,7 +607,8 @@ def batch_search(
     pruned = (
         chunks.select(F.explode(F.sequence(range_of("doc_lo"),
                                            range_of("doc_hi")))
-                      .alias("doc_range"), *sel)
+                      .alias("doc_range"),
+                      "term", "count", "tf_off", "dl_off", "blob")
         .groupBy("doc_range")
         .applyInArrow(_range_rank_udf(cuts, ranked, reader.avgdl, params),
                       "qid long, doc_id long, score double, k int, cnt long")
@@ -752,8 +623,8 @@ def batch_search(
         .select("qid", "rank", "doc_id", "score", "found")
     )
     if found_overrides:
-        # pruned single-term queries: the partial markers only counted
-        # decoded chunks — found is exactly the lexicon df for one term.
+        # pruned single-term queries: the found markers only counted the
+        # kept chunks — found is exactly the lexicon df for one term.
         # A literal MAP lookup, not a joined side-table (no per-batch driver
         # round-trip / broadcast) and not a nested WHEN chain (whose
         # expression tree grows linearly in depth with the batch size and

@@ -57,12 +57,10 @@ def cosine_scores(emb: DataFrame, query_vec: list[float],
     return j.select(F.col(id_col).alias("vec_id"), cos.alias("cos"))
 
 
-def _local_rank_frame(spark, rows: "list[tuple]",
-                      val_col: str = "cos_sim") -> DataFrame:
-    """≤k driver-assembled (rank, vec_id, value) rows → a job-free
-    LocalRelation (functions/sqlvalues.py)."""
-    return values_frame(spark, rows, [("rank", "int"), ("vec_id", "long"),
-                                      (val_col, "double")])
+# driver-assembled result rows → job-free LocalRelations
+# (functions/sqlvalues.py::values_frame)
+_RANK_SCHEMA = [("rank", "int"), ("vec_id", "long"), ("cos_sim", "double")]
+_BATCH_RANK_SCHEMA = [("qid", "long")] + _RANK_SCHEMA
 
 
 # driver-side exact-cosine budget: embedding-element count (rows × dim,
@@ -117,8 +115,8 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     got = _collect_frame_vectors(emb, id_col, vec_col, len(q), budget)
     if got is not None:
         ids, V = got
-        return _local_rank_frame(
-            emb.sparkSession, _driver_cosine_rows(ids, V, q, k))
+        return values_frame(emb.sparkSession, _driver_cosine_rows(ids, V, q, k),
+                            _RANK_SCHEMA)
     sims = cosine_scores(emb, query_vec, id_col, vec_col)
     rows = topk_frame(sims, k).collect()
     # rows arrive ordered, but re-sort on the same canonical key anyway —
@@ -126,14 +124,7 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     rows.sort(key=lambda r: (-r["_cr"], r["vec_id"]))
     out = [(i + 1, int(r["vec_id"]), float(r["cos_sim"]))
            for i, r in enumerate(rows)]
-    return _local_rank_frame(emb.sparkSession, out)
-
-
-def _local_batch_rank_frame(spark, rows: "list[tuple]") -> DataFrame:
-    """≤k·Q driver-assembled (qid, rank, vec_id, cos_sim) rows → a job-free
-    LocalRelation (functions/sqlvalues.py)."""
-    return values_frame(spark, rows, [("qid", "long"), ("rank", "int"),
-                                      ("vec_id", "long"), ("cos_sim", "double")])
+    return values_frame(emb.sparkSession, out, _RANK_SCHEMA)
 
 
 def cosine_topk_batch(emb: DataFrame, queries: "list[tuple[int, list[float]]]",
@@ -176,7 +167,7 @@ def cosine_topk_batch(emb: DataFrame, queries: "list[tuple[int, list[float]]]",
                 q = np.asarray([float(x) for x in v], dtype=np.float64)
                 out.extend((int(qid), r, vid, c6)
                            for r, vid, c6 in _driver_cosine_rows(ids, V, q, k))
-            return _local_batch_rank_frame(spark, out)
+            return values_frame(spark, out, _BATCH_RANK_SCHEMA)
     qdf = spark.createDataFrame(
         [(int(q), [float(x) for x in v]) for q, v in queries],
         "qid long, qv array<double>")
@@ -897,7 +888,7 @@ def _driver_probe_topk(spark, index_path: str, part_col: str,
         return None
     ids = t.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
     out = _driver_cosine_rows(ids, V, q, k)
-    return _local_rank_frame(spark, out)
+    return values_frame(spark, out, _RANK_SCHEMA)
 
 
 def ivf_topk(spark, index_path: str, centroids: np.ndarray,
@@ -1129,7 +1120,9 @@ def pq_adc_topk(codes_df: DataFrame, codebooks: np.ndarray,
     rows.sort(key=lambda r: (-r["_cr"], r["vec_id"]))
     out = [(i + 1, int(r["vec_id"]), float(r["adc_cos"]))
            for i, r in enumerate(rows)]
-    return _local_rank_frame(codes_df.sparkSession, out, val_col="adc_cos")
+    return values_frame(codes_df.sparkSession, out,
+                        [("rank", "int"), ("vec_id", "long"),
+                         ("adc_cos", "double")])
 
 
 def ann_lsh_topk(spark, index_path: str, planes: np.ndarray,

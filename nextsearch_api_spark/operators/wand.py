@@ -4,7 +4,7 @@ Like the reference, serving scores EVERY posting of every query term
 (src/api_engine.cpp:444-481) and reports the exact matched-doc count
 (:495): per query term one vectorized decode of all its chunks, then the
 shared kernel in functions/scoring.py accumulates and ranks. Block-max
-pruning (Ding & Suel 2011) lives in the batch tier's plan
+chunk pruning lives in the batch tier's plan
 (operators/query.py:_plan_chunk_prune), where posting volume needs it.
 
 Serving profile: the driver process holds the lexicon in memory (pandas),

@@ -79,9 +79,8 @@ def test_batch_search_found_and_rank_are_scale_safe(spark, plan_env):
     first, second = _exchanges(plan)
     assert "hashpartitioning(doc_range#" in first, first
     inputs = set(re.findall(r"(\w+)#\d+", first.split("Arguments")[0]))
-    # chunk-row columns (``full``: the multi-term prune's per-chunk flag)
     assert inputs <= {"doc_range", "term", "count", "tf_off", "dl_off",
-                      "blob", "full"}, inputs
+                      "blob"}, inputs
     assert {"doc_range", "blob"} <= inputs, inputs
     assert "impact" not in plan.split(first)[0] + first
     assert "hashpartitioning(qid#" in second, second
@@ -158,19 +157,17 @@ def test_chunk_prefilter_prunes_and_stays_exact(spark, plan_env, tiny_index):
     n_chunks = rd.postings().where(F.col("term") == "hotterm").count()
     assert n_chunks >= 3  # segment-mode build → one chunk per segment ≥ 3
 
-    wl, ov, part = _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
-                                     {"hotterm": 100}, params)
+    wl, ov = _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
+                               {"hotterm": 100}, params)
     assert "hotterm" in wl and len(wl["hotterm"]) < n_chunks  # fewer decoded
     assert len(wl["hotterm"]) >= 2                            # ≥ k kept
     assert ov == {0: 100}                                     # found = df
-    assert part == {}
 
-    # multi-term queries WITHOUT weights are never pruned (conservative),
-    # and a shared term is blocked from the single-term full-drop
-    wl2, ov2, part2 = _plan_chunk_prune(
+    # multi-term queries are never pruned, and a shared term is blocked
+    # from the single-term full-drop
+    assert _plan_chunk_prune(
         rd, {0: ["hotterm"], 1: ["hotterm", "buffer"]}, {0: 2, 1: 2},
-        {"hotterm": 100, "buffer": 50}, params)
-    assert wl2 == {} and ov2 == {} and part2 == {}
+        {"hotterm": 100, "buffer": 50}, params) == ({}, {})
 
     # drift gate: once impact_avgdl mismatches, the prefilter disables
     stats2 = dict(rd.stats)
@@ -179,7 +176,7 @@ def test_chunk_prefilter_prunes_and_stays_exact(spark, plan_env, tiny_index):
         pass
     r2 = _R(); r2.stats = stats2; r2.chunk_meta = rd.chunk_meta
     assert _plan_chunk_prune(r2, {0: ["hotterm"]}, {0: 2},
-                             {"hotterm": 100}, params) == ({}, {}, {})
+                             {"hotterm": 100}, params) == ({}, {})
 
     # end-to-end identity: pruned vs exhaustive plans agree on every column
     specs = [QuerySpec(0, "hotterm", 2), QuerySpec(1, "buffer", 3),
@@ -265,39 +262,30 @@ def skewed_index(spark, tmp_path_factory):
 
 
 def test_multi_term_chunk_prefilter(spark, skewed_index):
-    """VERDICT r4 next #3: multi-term queries prune too. With query weights
-    supplied, chunks whose WAND-style upper bound (own max_impact plus the
-    other terms' range maxes over the chunk's doc interval) cannot reach the
-    θ lower bound on the k-th score switch to doc-id-only decode — fewer
-    full decodes, exact found, rank/score identity vs exhaustive."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
+    """Terms of multi-term queries keep every chunk — including a term a
+    single-term query shares — because a multi-term query's ``found``
+    counts the distinct docs of all its terms. On the heavy-tailed index,
+    where ``needle``'s low chunks cannot reach the top-k, the pruned plan
+    still equals exhaustive decode on every column, found included."""
     from nextsearch_api_spark.config import BM25Params
     from nextsearch_api_spark.operators.query import (
-        IndexReader, _plan_chunk_prune, bm25_idf,
+        IndexReader, _plan_chunk_prune,
     )
 
     rd = IndexReader(spark, skewed_index)
     params = BM25Params()
-    terms = ["needle", "common"]
-    df_map = rd.term_dfs(terms)
-    idfs = bm25_idf(rd.N, np.array([df_map[t] for t in terms]),
-                    params.precision)
-    widf = {t: float(i) for t, i in zip(terms, idfs)}
-
-    wl, ov, part = _plan_chunk_prune(
-        rd, {7: terms}, {7: 2}, df_map, params, {7: widf})
-    assert wl == {} and ov == {}          # nothing fully dropped, no override
-    assert "needle" in part, part         # low-spike chunks go doc-id-only
-    n_chunks = rd.postings().where(F.col("term") == "needle").count()
-    assert 0 < len(part["needle"]) < n_chunks
+    df_map = rd.term_dfs(["needle", "common"])
+    assert _plan_chunk_prune(
+        rd, {7: ["needle", "common"], 8: ["needle"]}, {7: 2, 8: 2},
+        df_map, params) == ({}, {})
+    wl, ov = _plan_chunk_prune(rd, {8: ["needle"]}, {8: 2}, df_map, params)
+    assert "needle" in wl and ov == {8: df_map["needle"]}
 
     # end-to-end: pruned == exhaustive on every column (incl. exact found),
     # across single, multi, shared-term and oov-mixed shapes
     specs = [QuerySpec(0, "needle common", 2),
              QuerySpec(1, "needle common", 10),
-             QuerySpec(2, "needle", 2),           # shares the partial term
+             QuerySpec(2, "needle", 2),           # shares a multi-term's term
              QuerySpec(3, "common zzznotaterm", 3)]
     a = batch_search(rd, specs, prune_chunks=True)
     b = batch_search(rd, specs, prune_chunks=False)
@@ -306,15 +294,14 @@ def test_multi_term_chunk_prefilter(spark, skewed_index):
     ra = sorted(key(r) for r in a.collect())
     rb = sorted(key(r) for r in b.collect())
     assert ra == rb and ra
-    # found for the multi-term query is the exact distinct-doc union even
-    # though needle's low chunks were never fully decoded
+    # found for the multi-term query is the exact distinct-doc union
     f0 = {r["qid"]: r["found"] for r in a.collect()}
     assert f0[0] == 200 and f0[1] == 200
 
 
 def test_tiers_bit_identical_skewed(spark, skewed_index):
-    """The heavy-tailed index, where the multi-term prune decodes some
-    chunks doc-ids-only: every tier returns the same rows, scores ==."""
+    """The heavy-tailed index, where most of ``needle``'s chunks cannot
+    reach the top-k: every tier returns the same rows, scores ==."""
     from nextsearch_api_spark.operators.wand import WandEngine
     from tests.test_wand import assert_tiers_identical, parity_specs
 
@@ -359,7 +346,7 @@ def test_many_whitelisted_terms_plan_at_constant_depth(spark, tmp_path):
     terms = ["wl" + _letters(i) for i in range(n_terms)]
     specs = [QuerySpec(i, t, 1) for i, t in enumerate(terms)]
     df_map = rd.term_dfs(terms)
-    wl, ov, _ = _plan_chunk_prune(
+    wl, ov = _plan_chunk_prune(
         rd, {i: [t] for i, t in enumerate(terms)}, {i: 1 for i in range(n_terms)},
         df_map, BM25Params())
     assert len(wl) >= 1500 and len(ov) == len(wl)
@@ -398,12 +385,12 @@ def test_multi_term_prefilter_randomized_parity(spark, skewed_index):
 
 def test_multi_prune_planner_soundness_randomized():
     """Pure-planner property test (no Spark): on 60 randomized synthetic
-    posting layouts, every chunk the multi-term planner marks prunable
-    (absent from its term's full-decode list) contains NO doc whose TRUE
-    total score reaches any using query's true k-th score — the invariant
-    that makes doc-id-only decode exact. Chunk maxes are attained by
-    construction (derived from the synthetic postings), mirroring the
-    impact_avgdl gate."""
+    posting layouts with single- and multi-term queries mixed, the planner
+    drops chunks only of terms no multi-term query uses, every dropped
+    chunk contains NO doc whose TRUE score reaches a using query's true
+    k-th score, and each such query's found override is the term's df.
+    Chunk maxes are attained by construction (derived from the synthetic
+    postings), mirroring the impact_avgdl gate."""
     import random
 
     from nextsearch_api_spark.config import BM25Params
@@ -422,6 +409,7 @@ def test_multi_prune_planner_soundness_randomized():
             return {t: self._meta[t] for t in terms if t in self._meta}
 
     rng = random.Random(20240817)
+    dropped = 0
     for trial in range(60):
         n_docs = rng.randint(60, 240)
         terms = [f"t{i}" for i in range(rng.randint(2, 4))]
@@ -444,8 +432,8 @@ def test_multi_prune_planner_soundness_randomized():
             per_qid_terms[qid] = qt
             per_qid_k[qid] = rng.choice([1, 2, 3, 5, 10])
             widf[qid] = {t: rng.uniform(0.05, 2.0) for t in qt}
-        wl, ov, part = _plan_chunk_prune(rd, per_qid_terms, per_qid_k,
-                                         df_map, params, widf)
+        wl, ov = _plan_chunk_prune(rd, per_qid_terms, per_qid_k,
+                                   df_map, params)
 
         def score(d, qid):
             return sum(widf[qid][t] * imp[t].get(d, 0.0)
@@ -457,20 +445,12 @@ def test_multi_prune_planner_soundness_randomized():
             k = min(per_qid_k[qid], len(ss))
             return ss[k - 1] if k else float("inf")
 
-        # partial terms: docs living ONLY in pruned chunks must be strictly
-        # below every using query's k-th score
-        for t, full_los in part.items():
-            pruned_docs = {d for lo, hi, _ in meta[t]
-                           if lo not in set(full_los)
-                           for d in imp[t] if lo <= d <= hi}
-            for qid, qt in per_qid_terms.items():
-                if t not in qt or len(qt) < 2 and qid in ov:
-                    continue
-                thr = kth(qid)
-                for d in pruned_docs:
-                    assert score(d, qid) < thr, (
-                        trial, t, d, qid, score(d, qid), thr)
-        # single-term full-drops: same invariant + exact found override
+        multi = {t for qt in per_qid_terms.values() if len(qt) > 1
+                 for t in qt}
+        assert not set(wl) & multi, (trial, wl, multi)
+        dropped += len(wl)
+        # single-term full-drops: no dropped doc reaches the k-th score,
+        # and found is overridden with the exact df
         for t, kept in wl.items():
             pruned_docs = {d for lo, hi, _ in meta[t]
                            if lo not in set(kept)
@@ -482,6 +462,7 @@ def test_multi_prune_planner_soundness_randomized():
                 for d in pruned_docs:
                     assert score(d, qid) < thr
                 assert ov[qid] == df_map[t]
+    assert dropped  # the property ran on some actual drops
 
 
 def test_hydrate_leaves_no_persisted_rdds(spark, plan_env):

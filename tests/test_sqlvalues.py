@@ -15,38 +15,41 @@ def _same(a: float, b: float) -> bool:
     return (math.isnan(a) and math.isnan(b)) or a == b
 
 
-def test_local_result_frame_keeps_non_finite_scores(spark):
-    from nextsearch_api_spark.operators.query import _local_result_frame
+def test_result_frame_keeps_non_finite_scores(spark):
+    from nextsearch_api_spark.functions.sqlvalues import values_frame
+    from nextsearch_api_spark.operators.query import _RESULT_SCHEMA
 
     rows = [(7, i + 1, 100 + i, v, 3) for i, v in enumerate(VALUES)]
-    got = _local_result_frame(spark, rows).collect()
+    got = values_frame(spark, rows, _RESULT_SCHEMA).collect()
     assert [(r["qid"], r["rank"], r["doc_id"], r["found"]) for r in got] \
         == [(q, r, d, f) for q, r, d, _, f in rows]
     assert all(_same(r["score"], v) for r, v in zip(got, VALUES))
 
 
-def test_local_rank_frames_keep_non_finite_values(spark):
+def test_rank_frames_keep_non_finite_values(spark):
+    from nextsearch_api_spark.functions.sqlvalues import values_frame
     from nextsearch_api_spark.operators.similarity import (
-        _local_batch_rank_frame, _local_rank_frame,
+        _BATCH_RANK_SCHEMA, _RANK_SCHEMA,
     )
 
     rows = [(i + 1, np.int64(10 + i), v) for i, v in enumerate(VALUES)]
-    got = _local_rank_frame(spark, rows, val_col="adc_cos").collect()
+    got = values_frame(spark, rows, _RANK_SCHEMA).collect()
     assert [(r["rank"], r["vec_id"]) for r in got] == [(r, int(v))
                                                       for r, v, _ in rows]
-    assert all(_same(r["adc_cos"], v) for r, v in zip(got, VALUES))
-    got = _local_batch_rank_frame(
-        spark, [(2, r, v, s) for r, v, s in rows]).collect()
+    assert all(_same(r["cos_sim"], v) for r, v in zip(got, VALUES))
+    got = values_frame(spark, [(2, r, v, s) for r, v, s in rows],
+                       _BATCH_RANK_SCHEMA).collect()
     assert all(r["qid"] == 2 for r in got)
     assert all(_same(r["cos_sim"], v) for r, v in zip(got, VALUES))
 
 
 @pytest.mark.parametrize("bad", [2.0, "2", True, None])
 def test_values_frames_reject_non_int_ids(spark, bad):
-    from nextsearch_api_spark.operators.query import _local_result_frame
-    from nextsearch_api_spark.operators.similarity import _local_rank_frame
+    from nextsearch_api_spark.functions.sqlvalues import values_frame
+    from nextsearch_api_spark.operators.query import _RESULT_SCHEMA
+    from nextsearch_api_spark.operators.similarity import _RANK_SCHEMA
 
     with pytest.raises(TypeError):
-        _local_result_frame(spark, [(0, 1, bad, 1.0, 1)])
+        values_frame(spark, [(0, 1, bad, 1.0, 1)], _RESULT_SCHEMA)
     with pytest.raises(TypeError):
-        _local_rank_frame(spark, [(bad, 3, 0.5)])
+        values_frame(spark, [(bad, 3, 0.5)], _RANK_SCHEMA)

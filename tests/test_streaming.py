@@ -168,7 +168,7 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     rd = IndexReader(spark, root)
     rd.term_dfs(["hotterm"])
     assert _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
-                             {"hotterm": 10}, BM25Params()) == ({}, {}, {})
+                             {"hotterm": 10}, BM25Params()) == ({}, {})
     a = batch_search(rd, [QuerySpec(0, "hotterm", 5)], prune_chunks=True)
     b = batch_search(rd, [QuerySpec(0, "hotterm", 5)], prune_chunks=False)
     assert ([(r["doc_id"], r["found"]) for r in a.orderBy("rank").collect()]

@@ -134,7 +134,7 @@ def test_wand_rejects_unknown_mode(wand):
 def multichunk_index(spark, tiny_corpus, tmp_path_factory):
     """Index with chunk_size=8 → every common term spans many chunks with
     varying block maxes, so the batch plan's block-max prune has many chunks
-    to keep, drop or decode doc-ids-only."""
+    to keep or drop."""
     from nextsearch_api_spark.config import BuildConfig
     from nextsearch_api_spark.operators.build import build_index
 
@@ -209,19 +209,81 @@ def test_distributed_plan_splits_doc_ranges_exactly(
             rd, specs, small_query_max_postings=0).collect())
 
     before = rows()
-    df_map = rd.term_dfs(sorted({t for s in specs
-                                 for t in query.parse_query(s.q)}))
+    fresh = query.IndexReader(spark, multichunk_index)
+    df_map = fresh.term_dfs(sorted({t for s in specs
+                                    for t in query.parse_query(s.q)}))
     present = sorted(df_map)
-    assert query._doc_range_cuts(rd, present, df_map, {}) == []
+    assert query._doc_range_cuts(fresh, present, df_map, {}) == []
     monkeypatch.setattr(query, "SMALL_QUERY_MAX_POSTINGS", 64)
-    cuts = query._doc_range_cuts(rd, present, df_map, {})
+    cuts = query._doc_range_cuts(fresh, present, df_map, {})
     assert len(cuts) >= 3, cuts
     assert cuts == sorted(set(cuts))
+    assert fresh._chunk_meta == {}  # the cuts cache no per-chunk read
     meta = rd.chunk_meta(present)
     assert any(lo < c <= hi for chunks in meta.values()
                for lo, hi, *_ in chunks for c in cuts)
     assert rows() == before
     assert_tiers_identical(spark, multichunk_index, eng, specs)
+
+
+@pytest.mark.parametrize("base", [0, 1 << 62])
+def test_doc_range_cuts_from_postings_footer(tmp_path, monkeypatch, base):
+    """A term's row groups that hold only it become one cut-planning point
+    each, from footer statistics alone: only the row groups it shares with
+    other terms are read. Ranges stay balanced for build ids and for
+    streamed 2^62-range ids, and a postings table pyarrow cannot open
+    plans one range."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
+    from nextsearch_api_spark.operators import query
+
+    # (term, doc_lo, count) sorted like the postings: "hot" has 400
+    # chunks of 100 postings, the cold terms 3 chunks of 10 each side
+    rows = ([("aa", base + 1000 * i, 10) for i in range(3)]
+            + [("hot", base + 100 * i, 100) for i in range(400)]
+            + [("zz", base + 2000 * i, 10) for i in range(3)])
+    path = tmp_path / "postings"
+    path.mkdir()
+    pq.write_table(pa.table({"term": [r[0] for r in rows],
+                             "doc_lo": pa.array([r[1] for r in rows],
+                                                pa.int64()),
+                             "count": pa.array([r[2] for r in rows],
+                                               pa.int32())}),
+                   str(path / "part-0.parquet"), row_group_size=50)
+    idx = RowGroupIndex(str(path), "term")
+    rd = SimpleNamespace(paths=SimpleNamespace(postings=str(path)),
+                         _n_chunks={"aa": 3, "hot": 400, "zz": 3},
+                         _by_term=lambda _p: idx)
+    df_map = {"aa": 30, "hot": 40_000, "zz": 30}
+    present = sorted(df_map)
+    monkeypatch.setattr(query, "SMALL_QUERY_MAX_POSTINGS", 5_000)
+
+    cuts = query._doc_range_cuts(rd, present, df_map, {})
+    # 9 row groups: the first and the last are shared with a cold term
+    assert idx.counters()["row_groups_read"] == 2
+    assert len(cuts) == 8 and all(c >= base for c in cuts), cuts
+    edges = [-1] + cuts + [1 << 63]
+    per_range = [sum(c for _, lo, c in rows if a <= lo < b)
+                 for a, b in zip(edges, edges[1:])]
+    assert sum(per_range) == 40_060
+    assert max(per_range) <= 5_000 + 5_000, per_range  # + one row group
+
+    # a whitelisted term plans from its kept chunks alone
+    kept = [base + 100 * i for i in range(0, 400, 4)]
+    cuts = query._doc_range_cuts(rd, ["hot"], {"hot": 40_000},
+                                 {"hot": kept})
+    assert idx.counters()["row_groups_read"] == 2  # nothing more read
+    assert len(cuts) == 1 and cuts[0] in kept
+
+    def unreadable(_p):
+        raise OSError("no pyarrow filesystem")
+
+    rd._by_term = unreadable
+    assert query._doc_range_cuts(rd, present, df_map, {}) == []
 
 
 def test_topk_boundary_tiebreak_canonical(spark, tmp_path):
