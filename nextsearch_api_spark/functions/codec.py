@@ -33,26 +33,7 @@ __all__ = [
 
 def varbyte_encode(vals: np.ndarray) -> bytes:
     """Encode a 1-D array of non-negative ints to a v-byte stream."""
-    vals = np.ascontiguousarray(vals, dtype=np.uint64)
-    if vals.size == 0:
-        return b""
-    nb = np.ones(vals.size, dtype=np.int64)
-    v = vals >> np.uint64(7)
-    while v.any():
-        nb += v > 0
-        v >>= np.uint64(7)
-    ends = np.cumsum(nb)
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    starts = ends - nb
-    rem = vals.copy()
-    for j in range(int(nb.max())):
-        mask = nb > j
-        pos = starts[mask] + j
-        byte = (rem[mask] & np.uint64(0x7F)).astype(np.uint8)
-        cont = np.where(nb[mask] - 1 == j, 0, 0x80).astype(np.uint8)
-        out[pos] = byte | cont
-        rem[mask] >>= np.uint64(7)
-    return out.tobytes()
+    return varbyte_encode_all(vals)[0].tobytes()
 
 
 def varbyte_encode_all(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -1,10 +1,14 @@
-"""BM25 arithmetic and the driver-side ranking kernel.
+"""BM25 arithmetic and the one query-time read-and-rank path.
 
 One copy of the reference's scoring math (src/api_engine.cpp:45-47, 444-495)
-for every NumPy caller: the serving tier (operators/wand.py), the batch
-tier's small-query path and distributed decode (operators/query.py) and the
-build's block-max impacts (operators/build.py). ``oracle.py`` keeps its own
-independent loop as the test reference.
+for every NumPy caller. Query time has one entry point,
+:func:`rank_chunk_rows`: compressed chunk rows in, ranked top-k out. The
+serving tier (operators/wand.py, per segment under
+operators/multisegment.py), the batch tier's driver path and every doc-id
+range group of its distributed plan (operators/query.py) all call it. The
+build and compaction use ``bm25_impact`` for block-max impacts
+(operators/build.py). ``oracle.py`` keeps its own independent loop as the
+test reference.
 
 Precision: 'f32' (default) computes idf and impact in float32 like the
 reference, 'f64' in float64; per-doc sums are float64 either way, added in
@@ -93,3 +97,57 @@ def rank_postings(
         scores = np.bincount(inv, weights=contrib, minlength=docs.size)
     top = topk_tiebroken(scores, docs, min(k, docs.size))
     return int(docs.size), docs[top], scores[top]
+
+
+def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
+                    params: "BM25Params", lo: "int | None" = None,  # noqa: F821
+                    hi: "int | None" = None) -> "list[tuple]":
+    """Chunk rows → [(qid, k, found, top doc ids, top scores)] for each
+    query with a posting among them.
+
+    ``chunks`` is an Arrow table of postings chunk rows (term, count,
+    tf_off, dl_off, blob); ``queries`` is [(qid, k, [(term, widf), ...])].
+    Each term's chunks decode in one ``decode_chunks_concat`` call, in
+    table order (a term's chunks cover disjoint doc ranges, so the order
+    does not change any sum), and only doc ids in [lo, hi) are kept (None:
+    unbounded). Terms decode one after another: a thread pool per call
+    cost more CPU and saved no wall time on serving queries and 0.5M-posting
+    batches (it saved ~20% wall at the 8M-posting driver budget)."""
+    # looked up at call time, so a wrapper installed on the codec module
+    # (perfbench's tracer) sees every decode
+    from nextsearch_api_spark.functions.codec import decode_chunks_concat
+
+    rows_by_term: dict[str, list[int]] = {}
+    for i, term in enumerate(chunks.column("term").to_pylist()):
+        rows_by_term.setdefault(term, []).append(i)
+    # blobs stay Arrow: BinaryScalar.as_buffer() is a zero-copy view that
+    # decode_chunks_concat slices via memoryview
+    blobs = chunks.column("blob").combine_chunks()
+    counts, tf_offs, dl_offs = (
+        chunks.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
+        for c in ("count", "tf_off", "dl_off"))
+
+    per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    for term, rows in rows_by_term.items():
+        idx = np.asarray(rows)
+        ids, tfs, dls = decode_chunks_concat(
+            [blobs[int(i)].as_buffer() for i in idx],
+            tf_offs[idx], dl_offs[idx], counts[idx])
+        if lo is not None or hi is not None:
+            keep = np.ones(ids.size, dtype=bool)
+            if lo is not None:
+                keep &= ids >= lo
+            if hi is not None:
+                keep &= ids < hi
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        per_term[term] = ids, bm25_impact(tfs, dls, params.k1, params.b,
+                                          avgdl, params.precision)
+
+    out: list[tuple] = []
+    for qid, k, tws in queries:
+        postings = [(*per_term[t], w) for t, w in tws if t in per_term]
+        if postings:
+            found, ids, scores = rank_postings(postings, k)
+            if found:
+                out.append((qid, k, found, ids, scores))
+    return out

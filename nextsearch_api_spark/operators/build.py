@@ -508,10 +508,31 @@ def write_postings_sorted(chunks: DataFrame, out_path: str,
     AFTER the sort, before the write (the deferred-impact finalize) — placed
     here so the range-sampling pass and the shuffle both read the cheap
     cached input and the transform runs exactly once, on the sorted
-    stream."""
+    stream.
+
+    Every postings writer (build_index, compact_postings, compact_deltas)
+    goes through here, so this is where the chunk invariant is checked: per
+    term, chunk doc ranges are disjoint, hence one term's decoded doc ids
+    are unique, which the scoring kernel relies on. After the write one
+    aggregate over the (term, doc_lo, doc_hi) columns counts the chunks
+    whose doc_lo is at most the previous doc_hi of the same term, and any
+    such chunk raises ValueError — before the caller records the stage or
+    flips a generation."""
+    from pyspark.sql import Window
+
     _write_range_sorted(
         chunks, out_path, ["term", "doc_lo"], POSTINGS_ROW_GROUP_BYTES,
         _serving_partitions(chunks.sparkSession), post_sort=post_sort)
+    prev_hi = F.lag("doc_hi").over(
+        Window.partitionBy("term").orderBy("doc_lo"))
+    nbad = (chunks.sparkSession.read.parquet(out_path)
+            .select("doc_lo", prev_hi.alias("prev_hi"))
+            .where(F.col("doc_lo") <= F.col("prev_hi"))
+            .count())
+    if nbad:
+        raise ValueError(
+            f"postings written to {out_path} have {nbad} chunks overlapping "
+            "the previous chunk of their term; refusing to publish them")
 
 
 def write_docs_sorted(docs: DataFrame, out_path: str) -> None:

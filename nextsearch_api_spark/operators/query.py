@@ -11,11 +11,12 @@ one document-partitioned Spark plan per query batch:
   :463-475) and by the driver-planned block-max chunk prune → each
   compressed chunk row tagged with every contiguous doc-id range it
   overlaps → ONE exchange of chunk rows by range → ONE Arrow stage that, per
-  range, decodes each term's chunks, keeps the range's postings and runs the
-  serving tier's TAAT kernel (functions/scoring.py: float32 impact,
-  :478-479; Σ widf·impact per doc, :480; bounded top-k by (score desc,
-  doc_id asc), :427-504) for every query of the batch → per-query ``found``
-  sum and row_number windows over ≤ (k + 1)·ranges rows.
+  range, runs the serving tier's read-and-rank path
+  (functions/scoring.py:rank_chunk_rows — decode each term's chunks, keep
+  the range's postings, float32 impact, :478-479; Σ widf·impact per doc,
+  :480; bounded top-k by (score desc, doc_id asc), :427-504) for every
+  query of the batch → per-query ``found`` sum and row_number windows over
+  ≤ (k + 1)·ranges rows.
 
 The ranges partition the doc-id space, so each doc is scored whole in one
 range and the per-range answers merge exactly; batches small enough for one
@@ -42,9 +43,7 @@ from pyspark.sql import functions as F
 from nextsearch_api_spark.config import (
     BM25Params, IndexPaths, MIN_TOKEN_LEN, SEARCH_K_MAX, SEARCH_K_MIN,
 )
-from nextsearch_api_spark.functions.scoring import (
-    bm25_idf, bm25_impact, rank_postings,
-)
+from nextsearch_api_spark.functions.scoring import bm25_idf, rank_chunk_rows
 from nextsearch_api_spark.functions.sqlvalues import values_frame
 from nextsearch_api_spark.functions.text import STOPWORD_SET, tokenize_py
 
@@ -90,7 +89,6 @@ class IndexReader:
         # footer indexes for driver-side keyed reads, by table path
         self._indexes: dict[str, "RowGroupIndex"] = {}  # noqa: F821
         self._n_chunks: dict[str, int] = {}  # term → chunk count (lexicon)
-        self._chunk_meta: dict[str, list[tuple]] = {}  # term → chunk meta
 
     @property
     def N(self) -> int:
@@ -135,27 +133,20 @@ class IndexReader:
         postings footer index — only the row groups whose term range holds a
         requested term — column-pruned to four scalar columns, never the
         blobs. Volume is df/chunk_size rows per term, a small fraction of
-        the decode volume it lets the batch tier skip. Terms it cannot read
-        are left out (the prefilter then keeps all their chunks)."""
-        terms = list(terms)
-        missing = [t for t in terms if t not in self._chunk_meta]
-        if missing:
-            try:
-                t = self._by_term(self.paths.postings).read(
-                    missing, ["doc_lo", "doc_hi", "max_impact"])
-            except Exception:
-                t = None
-            if t is not None:
-                fetched: dict[str, list[tuple[int, int, float]]] = {
-                    m: [] for m in missing}
-                for term, lo, hi, mi in zip(
-                        *(t.column(c).to_pylist()
-                          for c in ("term", "doc_lo", "doc_hi", "max_impact"))):
-                    fetched.setdefault(term, []).append(
-                        (int(lo), int(hi), float(mi)))
-                self._chunk_meta.update(fetched)
-        return {t: self._chunk_meta[t] for t in terms
-                if self._chunk_meta.get(t)}
+        the decode volume it lets the batch tier skip. Nothing is cached:
+        each call re-reads the bounded slice. Terms it cannot read are left
+        out (the prefilter then keeps all their chunks)."""
+        try:
+            t = self._by_term(self.paths.postings).read(
+                terms, ["doc_lo", "doc_hi", "max_impact"])
+        except Exception:
+            return {}
+        out: dict[str, list[tuple[int, int, float]]] = {}
+        for term, lo, hi, mi in zip(
+                *(t.column(c).to_pylist()
+                  for c in ("term", "doc_lo", "doc_hi", "max_impact"))):
+            out.setdefault(term, []).append((int(lo), int(hi), float(mi)))
+        return out
 
     def term_dfs(self, terms: Sequence[str]) -> dict[str, int]:
         """df lookup for a bounded set of query terms → {term: df}.
@@ -205,9 +196,10 @@ HYDRATE_PUSHDOWN_MAX_IDS = 100_000
 # query batch's present terms — known EXACTLY from the lexicon before any
 # data is read) for which the batch tier answers from a bounded pyarrow
 # read + NumPy TAAT on the driver instead of a distributed plan. 8M
-# postings ≈ tens of MB of footer-indexed blob reads and ~1-1.5 s of
-# thread-parallel decode+score — still under the distributed plan's
-# multi-job floor plus its own Python-stage decode of the same volume —
+# postings ≈ tens of MB of footer-indexed blob reads and ~3 s of
+# single-threaded decode+score (8 terms × 1M postings, 16 queries, 4-vCPU
+# VM) — still under the distributed plan's multi-job floor plus its own
+# Python-stage decode of the same volume —
 # while a hot term on a 100 TB corpus blows the budget immediately and
 # keeps the distributed plan. It is also the most postings one range group
 # of that plan scores in one Python process (_doc_range_cuts). The same
@@ -285,67 +277,6 @@ def _plan_chunk_prune(
     return whitelist, overrides
 
 
-def _rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
-                     params: BM25Params, lo: "int | None" = None,
-                     hi: "int | None" = None) -> "list[tuple]":
-    """Chunk rows → [(qid, k, found, top doc ids, top scores)] for each
-    query with a posting among them — the batch tier's one scoring helper,
-    called by the driver small-query path and by every doc-id range group of
-    the distributed plan.
-
-    ``chunks`` is an Arrow table of postings chunk rows (term, count,
-    tf_off, dl_off, blob); ``queries`` is [(qid, k, [(term, widf), ...])].
-    Each term's chunks decode in one ``decode_chunks_concat`` call, and only
-    doc ids in [lo, hi) are kept (None: unbounded). Impacts and ranking are
-    functions/scoring.py's ``bm25_impact`` and ``rank_postings``, the
-    serving tier's kernel, so every tier returns bit-identical scores."""
-    from nextsearch_api_spark.functions.codec import decode_chunks_concat
-
-    rows_by_term: dict[str, list[int]] = {}
-    for i, term in enumerate(chunks.column("term").to_pylist()):
-        rows_by_term.setdefault(term, []).append(i)
-    # blobs stay Arrow: BinaryScalar.as_buffer() is a zero-copy view that
-    # decode_chunks_concat slices via memoryview
-    blobs = chunks.column("blob").combine_chunks()
-    counts, tf_offs, dl_offs = (
-        chunks.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
-        for c in ("count", "tf_off", "dl_off"))
-
-    def decode(term: str) -> tuple[str, np.ndarray, np.ndarray]:
-        idx = np.asarray(rows_by_term[term])
-        ids, tfs, dls = decode_chunks_concat(
-            [blobs[int(i)].as_buffer() for i in idx],
-            tf_offs[idx], dl_offs[idx], counts[idx])
-        if lo is not None or hi is not None:
-            keep = np.ones(ids.size, dtype=bool)
-            if lo is not None:
-                keep &= ids >= lo
-            if hi is not None:
-                keep &= ids < hi
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        return term, ids, bm25_impact(tfs, dls, params.k1, params.b, avgdl,
-                                      params.precision)
-
-    # numpy varbyte kernels release the GIL — a few threads cut the decode
-    # wall ~linearly; results are per-term and order-independent
-    if len(rows_by_term) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(min(8, len(rows_by_term))) as pool:
-            decoded = list(pool.map(decode, rows_by_term))
-    else:
-        decoded = [decode(term) for term in rows_by_term]
-    per_term = {term: (ids, imp) for term, ids, imp in decoded}
-
-    out: list[tuple] = []
-    for qid, k, tws in queries:
-        postings = [(*per_term[t], w) for t, w in tws if t in per_term]
-        if postings:
-            found, ids, scores = rank_postings(postings, k)
-            if found:
-                out.append((qid, k, found, ids, scores))
-    return out
-
-
 def _driver_small_search(reader: IndexReader, present: "list[str]",
                          queries: "list[tuple]",
                          params: BM25Params) -> "list[tuple] | None":
@@ -356,9 +287,9 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
 
     ONE footer-indexed read of the present terms' chunk rows (only the
     postings row groups whose term range holds a present term), then
-    _rank_chunk_rows over the whole doc-id space — the same helper each
-    range group of the distributed plan runs, so both return identical
-    rows."""
+    functions/scoring.py's rank_chunk_rows over the whole doc-id space —
+    the helper each range group of the distributed plan and the serving
+    tier run, so all return identical rows."""
     try:
         t = reader._by_term(reader.paths.postings).read(
             list(present), ["count", "tf_off", "dl_off", "blob"])
@@ -367,7 +298,7 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     if not set(present) <= set(t.column("term").to_pylist()):
         return None  # lexicon/postings disagree — let the full plan decide
     out: list[tuple] = []
-    for qid, _k, found, ids, scores in _rank_chunk_rows(
+    for qid, _k, found, ids, scores in rank_chunk_rows(
             t, queries, reader.avgdl, params):
         out.extend((qid, r + 1, int(doc), float(score), found)
                    for r, (doc, score) in enumerate(zip(ids, scores)))
@@ -465,7 +396,7 @@ def _range_rank_udf(cuts: "list[int]", queries: "list[tuple]",
         lo = cuts[r - 1] if r > 0 else None
         hi = cuts[r] if r < len(cuts) else None
         cols: dict[str, list] = {name: [] for name in schema.names}
-        for qid, k, found, ids, scores in _rank_chunk_rows(
+        for qid, k, found, ids, scores in rank_chunk_rows(
                 chunks, queries, avgdl, params, lo, hi):
             n = len(ids)
             cols["qid"] += [qid] * (n + 1)
@@ -504,8 +435,8 @@ def batch_search(
     3. exchange the still-compressed chunk rows by range;
     4. one ``groupBy(doc_range).applyInArrow`` stage: per range, decode each
        term's chunks, keep the range's postings and rank every query of the
-       batch with _rank_chunk_rows — ≤k rows plus one ``found`` marker per
-       (range, query);
+       batch with scoring.rank_chunk_rows — ≤k rows plus one ``found``
+       marker per (range, query);
     5. per-qid windows: ``found`` = Σ markers, rank = row_number by
        (score desc, doc_id asc), keep rank ≤ k.
 

@@ -2,19 +2,23 @@
 
 Like the reference, serving scores EVERY posting of every query term
 (src/api_engine.cpp:444-481) and reports the exact matched-doc count
-(:495): per query term one vectorized decode of all its chunks, then the
-shared kernel in functions/scoring.py accumulates and ranks. Block-max
-chunk pruning lives in the batch tier's plan
+(:495). A search hands its terms' compressed Arrow chunk rows to
+functions/scoring.py:rank_chunk_rows as one query — the read-and-rank path
+the batch tier runs too — which decodes, computes impacts, accumulates and
+ranks. Block-max chunk pruning lives in the batch tier's plan
 (operators/query.py:_plan_chunk_prune), where posting volume needs it.
 
-Serving profile: the driver process holds the lexicon in memory (pandas),
-reads only the row groups holding the query's terms through a Parquet footer
-index (functions/rowgroups.py; no Spark job per query — the analog of the
-reference's lexicon hash lookup + file seek, api_engine.cpp:453-475), and
-scores with NumPy. Results are identical to the batch path and the golden
-oracle: same idf/impact arithmetic (float32 factors unless
-``precision="f64"``), float64 accumulation, (score desc, doc_id asc)
-tie-break.
+Serving profile: the driver process holds the lexicon's term → df map in a
+dict, reads only the row groups holding the query's terms through a Parquet
+footer index (functions/rowgroups.py; no Spark job per query — the analog of
+the reference's lexicon hash lookup + file seek, api_engine.cpp:453-475),
+and scores with NumPy. Loading reads stats, the lexicon and footers, never
+postings data: the postings writer (operators/build.py:
+write_postings_sorted) refuses chunk ranges that overlap, and
+check_index_format refuses older layouts. Results are identical to the
+batch path and the golden oracle: same idf/impact arithmetic (float32
+factors unless ``precision="f64"``), float64 accumulation, (score desc,
+doc_id asc) tie-break.
 
 This is the single-node serving tier of the engine; the Spark batch path
 (operators/query.py) is the cluster-scale tier. Both read the same index.
@@ -28,13 +32,11 @@ import threading
 from collections import OrderedDict
 
 import numpy as np
+import pyarrow as pa
 
 from nextsearch_api_spark.config import BM25Params, IndexPaths
-from nextsearch_api_spark.functions.codec import decode_chunks_concat
 from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
-from nextsearch_api_spark.functions.scoring import (
-    bm25_idf, bm25_impact, rank_postings,
-)
+from nextsearch_api_spark.functions.scoring import bm25_idf, rank_chunk_rows
 from nextsearch_api_spark.operators.query import clamp_k, parse_query
 
 
@@ -42,8 +44,9 @@ def check_index_format(stats: dict, stats_path: str) -> None:
     """Fail fast on indexes written by an incompatible chunk format.
 
     Builds stamp ``format`` into stats.json (operators/build.py
-    FORMAT_VERSION); readers previously relied only on the chunk-overlap
-    fail-fast, which does not catch every stale layout (VERDICT r2 #7)."""
+    FORMAT_VERSION). Current writers also refuse overlapping chunk ranges
+    (operators/build.py:write_postings_sorted), so a load that passes this
+    check needs no postings scan."""
     from nextsearch_api_spark.operators.build import FORMAT_VERSION
     fmt = stats.get("format")
     if fmt is not None and int(fmt) != FORMAT_VERSION:
@@ -66,28 +69,10 @@ class WandEngine:
         self.N = int(self.stats["N"])
         self.avgdl = float(self.stats["avgdl"])
 
-        # lexicon: small (vocab-sized) → pandas in RAM
-        lex = ds.dataset(self.paths.lexicon).to_table(
-            columns=["term", "df"]
-        ).to_pandas()
-        self._df = dict(zip(lex["term"], lex["df"].astype(np.int64)))
-
-        # per term, chunk doc ranges must be disjoint (⇒ one term's decoded
-        # doc ids are unique, which the scoring kernel relies on). Builds from
-        # format v3 break chunks on seg boundaries to guarantee this; fail
-        # fast on older/corrupt indexes instead of returning wrong top-k.
-        meta = ds.dataset(self.paths.postings).to_table(
-            columns=["term", "doc_lo", "doc_hi"]
-        ).to_pandas().sort_values(["term", "doc_lo"], kind="mergesort")
-        same_term = meta["term"].eq(meta["term"].shift())
-        overlaps = same_term & meta["doc_lo"].le(meta["doc_hi"].shift())
-        if bool(overlaps.any()):
-            nbad = int(overlaps.sum())
-            raise ValueError(
-                f"postings at {self.paths.postings} have {nbad} overlapping "
-                "chunk ranges (index predates format v3 segment breaks?); "
-                "rebuild the index"
-            )
+        # lexicon: small (vocab-sized) → term → df dict in RAM
+        lex = ds.dataset(self.paths.lexicon).to_table(columns=["term", "df"])
+        self._df = dict(zip(lex.column("term").to_pylist(),
+                            lex.column("df").to_pylist()))
 
         # blob reads go through the postings footer index: a term fetch reads
         # only the row groups whose term range holds it (the build writes
@@ -102,9 +87,9 @@ class WandEngine:
         # The lock makes lookup→evict→insert one atomic step: the HTTP server
         # calls search() from many threads and an interleaved check-then-act
         # corrupted _blob_cache_bytes / raised KeyError 500s (ADVICE r2).
-        self._blob_cache: "OrderedDict[str, pd.DataFrame]" = OrderedDict()  # noqa: F821
-        self._blob_cache_bytes = 0
-        self.blob_cache_limit = 256 << 20  # bytes of blob payload
+        self._blob_cache: "OrderedDict[str, pa.Table]" = OrderedDict()
+        self._blob_cache_bytes = 0  # Σ Table.nbytes of the held terms
+        self.blob_cache_limit = 256 << 20
         self._cache_lock = threading.Lock()
 
         # optional semantic expansion (reference: loaded embeddings ⇒ every
@@ -143,11 +128,12 @@ class WandEngine:
 
     # ------------------------------------------------------------- scoring --
 
-    def _load_term_chunks(self, terms: list[str]) -> dict[str, "pd.DataFrame"]:  # noqa: F821
-        """ONE footer-indexed read for all uncached query terms (only the
-        row groups whose term range holds one of them), merged with the
-        bounded LRU of previously fetched terms."""
-        out: dict = {}
+    def _load_term_chunks(self, terms: list[str]) -> "list[pa.Table]":
+        """Chunk rows (term, count, tf_off, dl_off, blob) of ``terms``, one
+        table per term that has any: ONE footer-indexed read for the
+        uncached terms (only the row groups whose term range holds one of
+        them), merged with the bounded LRU of previously fetched terms."""
+        out: dict[str, pa.Table] = {}
         missing: list[str] = []
         with self._cache_lock:
             for term in terms:
@@ -158,24 +144,24 @@ class WandEngine:
                     missing.append(term)
         if missing:
             t = self._postings.read(
-                missing, ["doc_lo", "count", "tf_off", "dl_off", "blob"]
-            ).to_pandas()
-            t = t.sort_values(["term", "doc_lo"], kind="mergesort")
+                missing, ["count", "tf_off", "dl_off", "blob"])
+            rows: dict[str, list[int]] = {}
+            for i, term in enumerate(t.column("term").to_pylist()):
+                rows.setdefault(term, []).append(i)
             with self._cache_lock:
-                for term, g in t.groupby("term", sort=False):
-                    g = g.reset_index(drop=True)
-                    out[term] = g
-                    sz = int(g["blob"].map(len).sum())
+                for term, idx in rows.items():
+                    # take() copies: a cached term holds only its own bytes
+                    g = out[term] = t.take(idx)
                     prev = self._blob_cache.pop(term, None)
                     if prev is not None:  # concurrent fill of the same term
-                        self._blob_cache_bytes -= int(prev["blob"].map(len).sum())
+                        self._blob_cache_bytes -= prev.nbytes
                     self._blob_cache[term] = g
-                    self._blob_cache_bytes += sz
+                    self._blob_cache_bytes += g.nbytes
                     while (self._blob_cache_bytes > self.blob_cache_limit
                            and len(self._blob_cache) > 1):
                         _, old = self._blob_cache.popitem(last=False)
-                        self._blob_cache_bytes -= int(old["blob"].map(len).sum())
-        return out
+                        self._blob_cache_bytes -= old.nbytes
+        return [out[t] for t in terms if t in out]
 
     def search(self, query: str, k: int = 10, mode: str = "taat") -> dict:
         """Top-k search; returns the reference JSON shape (README.md:72-94)
@@ -201,23 +187,18 @@ class WandEngine:
                 occ[t] = occ.get(t, 0.0) + 1.0
             qterms = [(t, c) for t, c in occ.items() if t in self._df]
 
-        postings = []
+        found, ids, scores = 0, [], []
         if qterms:
             dfs = np.array([self._df[t] for t, _ in qterms], dtype=np.int64)
             idfs = bm25_idf(self.N, dfs, self.params.precision)
-            chunks = self._load_term_chunks([t for t, _ in qterms])
-            for (t, w), idf in zip(qterms, idfs):
-                c = chunks[t]
-                doc_ids, tfs, dls = decode_chunks_concat(
-                    c["blob"].tolist(),
-                    c["tf_off"].to_numpy(dtype=np.int64),
-                    c["dl_off"].to_numpy(dtype=np.int64),
-                    c["count"].to_numpy(dtype=np.int64),
-                )
-                imp = bm25_impact(tfs, dls, self.params.k1, self.params.b,
-                                  self.avgdl, self.params.precision)
-                postings.append((doc_ids, imp, float(w) * float(idf)))
-        found, ids, scores = rank_postings(postings, k)
+            parts = self._load_term_chunks([t for t, _ in qterms])
+            query_terms = [(t, float(w) * float(idf))
+                           for (t, w), idf in zip(qterms, idfs)]
+            ranked = rank_chunk_rows(
+                pa.concat_tables(parts), [(0, k, query_terms)],
+                self.avgdl, self.params) if parts else []
+            if ranked:
+                _, _, found, ids, scores = ranked[0]
         return {
             "query": query, "k": k, "segments": 1, "found": found,
             "mode": "taat",

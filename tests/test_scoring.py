@@ -130,3 +130,41 @@ def test_topk_tiebroken_property():
         assert list(scores[got]) == list(scores[full])
 
     check()
+
+
+def test_one_query_time_decode_and_impact_site():
+    """Query-time decode and impact run only in scoring.rank_chunk_rows:
+    walking the package source, ``decode_chunks_concat`` and ``bm25_impact``
+    each have exactly that one call site outside the write-time modules
+    (operators/build.py, operators/compact.py). A second scoring path would
+    add a call site here."""
+    import ast
+    import pathlib
+
+    import nextsearch_api_spark
+
+    pkg = pathlib.Path(nextsearch_api_spark.__file__).parent
+    write_time = {"operators/build.py", "operators/compact.py"}
+    sites: dict[str, list[tuple[str, str]]] = {
+        "decode_chunks_concat": [], "bm25_impact": []}
+
+    def walk(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name in sites:
+                    sites[name].append((rel, scope))
+            walk(child, rel, inner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel not in write_time:
+            walk(ast.parse(path.read_text()), rel, "")
+    expected = [("functions/scoring.py", "rank_chunk_rows")]
+    assert sites == {name: expected for name in sites}, sites

@@ -130,6 +130,53 @@ def test_wand_rejects_unknown_mode(wand):
         wand.search("buffer", 3, mode="wand")
 
 
+def test_wand_load_reads_no_postings(tiny_index, tmp_path):
+    """Loading an engine reads stats, the lexicon and footers only: chunk
+    disjointness is checked when postings are written, not per load. The
+    copy's postings files keep their footers but have every data page
+    zeroed, so any postings read would fail."""
+    import glob
+    import shutil
+
+    from nextsearch_api_spark.config import IndexPaths
+
+    root, _ = tiny_index
+    clone = str(tmp_path / "idx")
+    shutil.copytree(root, clone)
+    files = glob.glob(IndexPaths(clone).postings + "/*.parquet")
+    assert files
+    for f in files:
+        with open(f, "r+b") as fh:
+            data = bytearray(fh.read())
+            footer = int.from_bytes(data[-8:-4], "little")
+            data[4:len(data) - 8 - footer] = bytes(len(data) - 12 - footer)
+            fh.seek(0)
+            fh.write(data)
+    eng = WandEngine(clone)
+    assert eng._postings.counters() == {"row_groups_read": 0,
+                                        "rows_scanned": 0}
+    assert eng.N > 0 and eng._df
+
+
+def test_postings_writer_refuses_overlapping_chunks(spark, tmp_path):
+    """write_postings_sorted (every postings writer's last step) raises
+    when two chunks of one term overlap in doc range, and writes a
+    disjoint frame; touching ranges of different terms are fine."""
+    from nextsearch_api_spark.operators.build import write_postings_sorted
+
+    def frame(rows):
+        return spark.createDataFrame(
+            rows, "term string, doc_lo long, doc_hi long, count int")
+
+    ok = [("aa", 1, 10, 4), ("aa", 11, 20, 4), ("bb", 5, 30, 9),
+          ("bb", 31, 31, 1)]
+    write_postings_sorted(frame(ok), str(tmp_path / "ok"))
+    assert spark.read.parquet(str(tmp_path / "ok")).count() == 4
+    with pytest.raises(ValueError, match="1 chunks overlapping"):
+        write_postings_sorted(frame(ok + [("aa", 20, 25, 2)]),
+                              str(tmp_path / "bad"))
+
+
 @pytest.fixture(scope="session")
 def multichunk_index(spark, tiny_corpus, tmp_path_factory):
     """Index with chunk_size=8 → every common term spans many chunks with
@@ -159,7 +206,7 @@ def test_segment_chunks_disjoint_over_partitioned_corpus(
     root = str(base / "index")
     build_index(spark, corpus, root)
 
-    eng = WandEngine(root)  # __init__ raises on overlapping chunk ranges
+    eng = WandEngine(root)  # the postings write refused overlapping chunks
     hot = sorted(eng._df, key=lambda t: -eng._df[t])[0]
     assert_matches_pruned_plan(spark, root, eng, [(f"{hot} bufferrank", 5)])
 
@@ -218,7 +265,6 @@ def test_distributed_plan_splits_doc_ranges_exactly(
     cuts = query._doc_range_cuts(fresh, present, df_map, {})
     assert len(cuts) >= 3, cuts
     assert cuts == sorted(set(cuts))
-    assert fresh._chunk_meta == {}  # the cuts cache no per-chunk read
     meta = rd.chunk_meta(present)
     assert any(lo < c <= hi for chunks in meta.values()
                for lo, hi, *_ in chunks for c in cuts)
@@ -359,5 +405,5 @@ def test_engine_thread_safety_under_concurrency(tiny_index, tmp_path):
     assert st["searches"] >= 8 * 30 // 2  # half the calls hit Engine.search
     # blob-cache byte accounting still matches its contents
     w = eng.wand
-    actual = sum(int(g["blob"].map(len).sum()) for g in w._blob_cache.values())
-    assert w._blob_cache_bytes == actual
+    assert w._blob_cache_bytes == sum(t.nbytes
+                                      for t in w._blob_cache.values())
