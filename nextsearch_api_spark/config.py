@@ -93,10 +93,6 @@ class IndexPaths:
         return self._resolve("suggest", "suggest")
 
     @property
-    def forward(self) -> str:
-        return self._resolve("forward", "forward")
-
-    @property
     def stats(self) -> str:
         return self._resolve("stats", "stats.json")
 

@@ -33,7 +33,9 @@ Spark-first re-design (NOT a port):
     shuffle by (term, doc_id div doc_block), a deterministic doc-range salt
     that splits a hot term across partitions while each block stays whole.
   * every stage materializes to Parquet and checkpoints via the lineage
-    manifest (plans/checkpoint.py) — resume skips completed stages.
+    manifest (plans/checkpoint.py) — resume skips completed stages. The
+    ids and doclen tables are scratch: removed once the build completes,
+    re-created only when a stage that reads them must run again.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import time
 from typing import Iterator
 
@@ -910,7 +913,17 @@ def build_posting_chunks(tokens: DataFrame, avgdl: float,
 
 def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
                 cfg: BuildConfig | None = None, resume: bool = True) -> dict:
-    """Full resumable build. Returns the stage-metrics dict."""
+    """Full resumable build. Returns the stage-metrics dict.
+
+    A completed root holds only what serving reads: postings, lexicon,
+    docs, suggest and stats.json (plus the ``_manifest.json`` lineage).
+    ``ids`` (doc ids, metadata and a copy of every doc's content) and
+    ``doclen`` are build scratch: they stay while the build is incomplete,
+    so a killed build resumes from them, and are removed right after the
+    manifest records ``completed_at``. A resume re-creates a scratch table
+    only when a stage that reads it must run again: with ``postings``
+    deleted, ``ids`` runs before ``postings``; a complete build with
+    unchanged inputs runs nothing."""
     cfg = cfg or BuildConfig()
     paths = IndexPaths(out_root)
     os.makedirs(out_root, exist_ok=True)
@@ -922,9 +935,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
     from nextsearch_api_spark.config import CURRENT_POINTER
     cur_ptr = os.path.join(out_root, CURRENT_POINTER)
     if os.path.exists(cur_ptr):
-        import shutil
         from nextsearch_api_spark.plans.generations import (
-            DEFAULT_COMPONENTS, current_mapping,
+            DEFAULT_COMPONENTS, RETIRED_COMPONENTS, current_mapping,
         )
         mapping = current_mapping(out_root)
         os.remove(cur_ptr)
@@ -932,7 +944,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
             mapping.get(comp, default)
             for comp, default in DEFAULT_COMPONENTS.items()
             if mapping.get(comp, default) != default
-        } | set(mapping.get("gc_pending", []))  # deferred-GC leftovers too
+        } | set(mapping.get("gc_pending", [])) \
+            | {mapping[comp] for comp in RETIRED_COMPONENTS if comp in mapping}
         for phys in stale_names:
             if phys in DEFAULT_COMPONENTS.values():
                 continue
@@ -948,10 +961,12 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         "format": FORMAT_VERSION,
         # build-intermediate layout (ids schema / stats source), independent
         # of the serving format: bumping invalidates old manifests without
-        # making old INDEXES unreadable. 2 = r6 single-tokenize flow (no
+        # making old INDEXES unreadable. 2 = single-tokenize flow (no
         # doc_len in ids; doclen table + stats derived from the postings
-        # pass; deferred max_impact finalize).
-        "build_layout": 2,
+        # pass; deferred max_impact finalize). 3 = ids and doclen are
+        # scratch, removed once the build completes; stats come only from
+        # the postings stage's recorded N/total_len.
+        "build_layout": 3,
         "chunk_size": cfg.chunk_size,
         "segment_partitions": cfg.segment_partitions,
         "k1": cfg.bm25.k1, "b": cfg.bm25.b,
@@ -961,6 +976,12 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     ids_path = os.path.join(out_root, "ids")
     doclen_path = os.path.join(out_root, "doclen")
+    # Scratch planning: postings reads ids and writes doclen, docs reads
+    # both. A scratch table a completed build removed is re-created only
+    # when one of its readers must run again.
+    docs_todo = not runner.done("docs", paths.docs)
+    postings_out = [paths.postings] + ([doclen_path] if docs_todo else [])
+    ids_needed = docs_todo or not runner.done("postings", postings_out)
 
     def stage_ids() -> dict:
         # One corpus pass: deterministic ids + content hashes, materialized
@@ -982,7 +1003,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         ids.write.mode("overwrite").parquet(ids_path)
         return {"rows": _parquet_rows(ids_path)}
 
-    runner.run("ids", stage_ids, output=ids_path)
+    runner.run("ids", stage_ids, output=ids_path if ids_needed else None)
 
     def stage_postings() -> dict:
         # THE corpus tokenize (the only one in the build, r6): the fused
@@ -1028,23 +1049,14 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         return {"rows": _parquet_rows(paths.postings),
                 "N": N, "total_len": total_len}
 
-    runner.run("postings", stage_postings, output=paths.postings)
+    runner.run("postings", stage_postings, output=postings_out)
 
     def stage_stats() -> dict:
         # N/total_len were observed by the postings stage (the one that
         # tokenized the corpus); metrics persist in the manifest so resume
         # keeps them across processes.
-        im = runner.metrics.get("postings", {})
-        if "N" in im and "total_len" in im:
-            N, total_len = int(im["N"]), int(im["total_len"])
-        else:  # skipped stage recorded by a pre-metrics build
-            row = (
-                spark.read.parquet(doclen_path)
-                .agg(F.count("*").alias("N"),
-                     F.sum("doc_len").alias("total_len"))
-                .collect()[0]
-            )
-            N, total_len = int(row["N"]), int(row["total_len"] or 0)
+        im = runner.metrics["postings"]
+        N, total_len = int(im["N"]), int(im["total_len"])
         avgdl = float(total_len) / N if N else 0.0
         # impact_avgdl: the avgdl every chunk's stored f32 impacts (max_impact)
         # were computed with. While it equals the serving avgdl, stored chunk
@@ -1119,6 +1131,10 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     manifest.data["completed_at"] = time.time()
     manifest.save()
+    # every serving component is written: the scratch tables go (ids holds
+    # a copy of the corpus, most of a built root's bytes)
+    for scratch in (ids_path, doclen_path):
+        shutil.rmtree(scratch, ignore_errors=True)
     return runner.metrics
 
 

@@ -16,6 +16,10 @@ fragmentation). This operator consolidates them:
 Cost is proportional to the fragmented fraction, not the index size — the
 hot terms that dominate postings bytes are usually NOT fragmented (they fill
 whole chunks in every partition), so compaction touches the long tail.
+
+The same decode → re-chunk round trip is the delta merge of streamed docs
+(streaming/ingest.py:compact_deltas), which also uses ``chunks_holding`` to
+find the chunks a superseded doc version can sit in.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,6 +80,25 @@ def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
 
     return chunks.select("term", "count", "tf_off", "dl_off", "blob") \
         .mapInArrow(dec, schema=TOKENS_SCHEMA)
+
+
+def chunks_holding(chunks: DataFrame, doc_ids: np.ndarray) -> DataFrame:
+    """The chunk rows whose [doc_lo, doc_hi] range can hold one of
+    ``doc_ids`` (a driver-side array, e.g. the superseded versions of a
+    delta's updated docs). One vectorized range test over the two range
+    columns: a Python UDF receives only its argument columns, so the blobs
+    stay in the JVM and only the kept rows reach a later decode."""
+    from pyspark.sql.functions import pandas_udf
+
+    ids = np.unique(np.asarray(doc_ids, dtype=np.int64))
+
+    @pandas_udf("boolean")
+    def _holds(lo: pd.Series, hi: pd.Series) -> pd.Series:
+        return pd.Series(
+            np.searchsorted(ids, lo.to_numpy(np.int64), "left")
+            < np.searchsorted(ids, hi.to_numpy(np.int64), "right"))
+
+    return chunks.where(_holds("doc_lo", "doc_hi"))
 
 
 def compact_postings(spark: SparkSession, index_root: str,

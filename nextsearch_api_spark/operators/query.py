@@ -69,6 +69,17 @@ class QuerySpec:
     k: int = 10
 
 
+class TermDfs(dict):
+    """{term: df} for one batch's terms, from IndexReader.term_dfs.
+    ``n_chunks`` ({term: chunk count}) rides along from the same lexicon
+    read, for that batch's chunk prefilter and range-cut planner; nothing
+    about the terms is kept on the reader."""
+
+    def __init__(self, dfs=(), n_chunks: "dict[str, int] | None" = None):
+        super().__init__(dfs)
+        self.n_chunks = dict(n_chunks or {})
+
+
 class IndexReader:
     """Lazy handles on a built index's tables + stats.
 
@@ -88,7 +99,6 @@ class IndexReader:
         self._dfs: dict[str, DataFrame] = {}
         # footer indexes for driver-side keyed reads, by table path
         self._indexes: dict[str, "RowGroupIndex"] = {}  # noqa: F821
-        self._n_chunks: dict[str, int] = {}  # term → chunk count (lexicon)
 
     @property
     def N(self) -> int:
@@ -148,8 +158,9 @@ class IndexReader:
             out.setdefault(term, []).append((int(lo), int(hi), float(mi)))
         return out
 
-    def term_dfs(self, terms: Sequence[str]) -> dict[str, int]:
-        """df lookup for a bounded set of query terms → {term: df}.
+    def term_dfs(self, terms: Sequence[str]) -> TermDfs:
+        """df lookup for a bounded set of query terms → {term: df}, a
+        TermDfs whose ``n_chunks`` holds the same terms' chunk counts.
 
         Driver-side read of the term-sorted lexicon through its footer index
         (only the row groups whose term range holds a requested term) — a
@@ -158,17 +169,12 @@ class IndexReader:
         filesystems pyarrow can't open."""
         terms = list(terms)
         if not terms:
-            return {}
+            return TermDfs()
         try:
             t = self._by_term(self.paths.lexicon).read(
                 terms, ["df", "n_chunks"])
-            # n_chunks rides along for free: the chunk prefilter uses it to
-            # skip the chunk-metadata read for terms it can't prune anyway
-            for term, nc in zip(t.column("term").to_pylist(),
-                                t.column("n_chunks").to_pylist()):
-                self._n_chunks[term] = int(nc)
-            return dict(zip(t.column("term").to_pylist(),
-                            (int(x) for x in t.column("df").to_pylist())))
+            rows = zip(*(t.column(c).to_pylist()
+                         for c in ("term", "df", "n_chunks")))
         except Exception:
             rows = (
                 self.lexicon()
@@ -176,9 +182,11 @@ class IndexReader:
                 .select("term", "df", "n_chunks")
                 .collect()
             )
-            for r in rows:
-                self._n_chunks[r["term"]] = int(r["n_chunks"])
-            return {r["term"]: int(r["df"]) for r in rows}
+        dfs: dict[str, int] = {}
+        n_chunks: dict[str, int] = {}
+        for term, df, nc in rows:
+            dfs[term], n_chunks[term] = int(df), int(nc)
+        return TermDfs(dfs, n_chunks)
 
 
 # relative slack on the prune threshold: covers f32-stored vs f64-recomputed
@@ -249,11 +257,12 @@ def _plan_chunk_prune(
     pure_single = {t: u for t, u in single_users.items()
                    if t not in multi_terms}
 
+    # a term with at most k chunks cannot prune; an unknown count (a plain
+    # dict, not a TermDfs) fetches the metadata conservatively
+    n_chunks = getattr(df_map, "n_chunks", {})
     cand = [
         t for t in pure_single
-        # unknown count (term_dfs not called for t) → fetch conservatively
-        if (reader._n_chunks.get(t) is None
-            or reader._n_chunks[t] > max(k for _, k in pure_single[t]))
+        if n_chunks.get(t, np.inf) > max(k for _, k in pure_single[t])
     ]
     whitelist: dict[str, list[int]] = {}
     overrides: dict[int, int] = {}
@@ -335,7 +344,8 @@ def _doc_range_cuts(reader: IndexReader, present: "list[str]",
     prune) gets one range."""
     if sum(df_map[t] for t in present) <= SMALL_QUERY_MAX_POSTINGS:
         return []
-    per_chunk = {t: df_map[t] / max(1, reader._n_chunks.get(t) or 1)
+    n_chunks = getattr(df_map, "n_chunks", {})
+    per_chunk = {t: df_map[t] / max(1, n_chunks.get(t) or 1)
                  for t in present}
     los: list[int] = []
     wts: list[float] = []

@@ -34,9 +34,12 @@ def backup_index(index_root: str, backup_dir: str,
                  components: "list[str] | None" = None) -> dict:
     """Snapshot the LIVE generation of ``index_root`` into ``backup_dir``.
 
-    Components resolve through CURRENT.json once (consistent cut); missing
-    optional components (forward, suggest) are skipped. Returns the backup
-    manifest: {components: {name: rel_path}, source_gen, created_at}.
+    Components resolve through CURRENT.json once (consistent cut); a
+    missing optional component (suggest) is skipped. The snapshot holds
+    only serving components, and that is all ``compact_deltas`` needs: it
+    merges from the postings, so a restored root compacts like the source.
+    Returns the backup manifest: {components: {name: rel_path},
+    source_gen, created_at}.
     """
     paths = IndexPaths(index_root)
     mapping = current_mapping(index_root)

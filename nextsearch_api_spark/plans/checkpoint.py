@@ -24,7 +24,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Sequence
 
 
 def _fingerprint(obj: Any) -> str:
@@ -51,18 +51,22 @@ class BuildManifest:
             json.dump(self.data, f, indent=2, default=str)
         os.replace(tmp, self.path)
 
-    def stage_done(self, name: str, fingerprint: str, output: str | None) -> bool:
+    def stage_done(self, name: str, fingerprint: str,
+                   output: "str | Sequence[str] | None") -> bool:
+        """True when ``name`` is recorded ok under ``fingerprint`` and every
+        path in ``output`` (one path, several, or None for none) is present."""
         st = self.data["stages"].get(name)
         if not st or st.get("fingerprint") != fingerprint or st.get("status") != "ok":
             return False
-        if output is not None:
-            if os.path.isdir(output):
+        outputs = [output] if isinstance(output, str) else (output or [])
+        for out in outputs:
+            if os.path.isdir(out):
                 # directory outputs require the _SUCCESS marker — a partially
                 # written (or externally modified) directory is redone
                 # (ADVICE r1: plain existence made the marker check vacuous)
-                if not os.path.exists(os.path.join(output, "_SUCCESS")):
+                if not os.path.exists(os.path.join(out, "_SUCCESS")):
                     return False
-            elif not os.path.exists(output):
+            elif not os.path.exists(out):
                 return False  # file outputs (stats.json): plain existence
         return True
 
@@ -86,11 +90,17 @@ class StageRunner:
         self.metrics: dict[str, dict] = {}
         self._lock = threading.Lock()
 
+    def done(self, name: str, output: "str | Sequence[str] | None" = None,
+             extra_fp: Any = None) -> bool:
+        """Would ``run`` skip this stage?"""
+        return self.manifest.stage_done(
+            name, _fingerprint([self.base, extra_fp]), output)
+
     def run(
         self,
         name: str,
         fn: Callable[[], dict | None],
-        output: str | None = None,
+        output: "str | Sequence[str] | None" = None,
         extra_fp: Any = None,
     ) -> bool:
         """Execute stage ``fn`` unless already checkpointed. ``fn`` returns an

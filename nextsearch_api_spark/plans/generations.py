@@ -1,7 +1,7 @@
 """Atomic index-generation flips.
 
 Compaction (operators/compact.py, streaming/ingest.py) rewrites several
-index components (postings, lexicon, forward, docs, stats). r1 swapped them
+index components (postings, lexicon, docs, stats, suggest). r1 swapped them
 with sequential os.rename pairs — a crash between renames left postings and
 lexicon from different generations (df/N mismatch → wrong idf; ADVICE r1).
 
@@ -10,6 +10,11 @@ flips the single ``CURRENT.json`` pointer with one atomic ``os.replace``.
 Readers (IndexPaths._resolve) either see the old generation or the new one,
 never a mix. Superseded generation dirs are garbage-collected best-effort
 after the flip.
+
+The components are exactly what serving reads. Older compactions also
+kept a ``forward`` table (one row per (doc, term)) as a component; a
+pointer that still names one has it retired at its next flip: the directory
+goes to ``gc_pending`` like any superseded one and is collected a flip later.
 
 Note: single-file atomic replace is a local/NFS/HDFS-rename property; on
 object stores the same pointer flip works because it is one small PUT.
@@ -28,9 +33,12 @@ DEFAULT_COMPONENTS = {
     "postings": "postings",
     "lexicon": "lexicon",
     "suggest": "suggest",
-    "forward": "forward",
     "stats": "stats.json",
 }
+
+# components older layouts mapped in CURRENT.json and this one no longer
+# writes; flip_generation drops them from the pointer into gc_pending
+RETIRED_COMPONENTS = ("forward",)
 
 
 def current_mapping(index_root: str) -> dict:
@@ -85,16 +93,17 @@ def flip_generation(index_root: str, components: dict[str, str],
     if unknown:
         raise ValueError(f"unknown index components: {sorted(unknown)}")
     old = current_mapping(index_root)
-    new = dict(old)
+    new = {k: v for k, v in old.items() if k not in RETIRED_COMPONENTS}
     new.update(components)
     new["gen"] = gen
 
-    # newly superseded dirs → deferred to the NEXT flip
+    # newly superseded dirs → deferred to the NEXT flip; a retired
+    # component's dir is superseded by nothing
     pending = [
         old.get(name, DEFAULT_COMPONENTS[name])
         for name in components
         if old.get(name, DEFAULT_COMPONENTS[name]) != new[name]
-    ]
+    ] + [old[name] for name in RETIRED_COMPONENTS if name in old]
     prior_pending = [p for p in old.get("gc_pending", []) if p not in pending]
     uri_root = _is_uri(index_root)
     new["gc_pending"] = sorted(

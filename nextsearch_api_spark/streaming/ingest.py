@@ -10,7 +10,8 @@ streaming-shaped capability a Spark-native engine should have:
     foreachBatch sink writing BOTH the forward-index delta (doc_id, term,
     tf, doc_len) AND a docs-table delta (doc_id, uid, metadata, doc_len,
     content_sha256) per micro-batch, so compaction can merge streamed docs
-    into the hydration/docs view (r1 never did — ADVICE r1).
+    into the hydration/docs view (r1 never did — ADVICE r1). These delta
+    files are the only forward-index rows: the index itself keeps none.
   * ``stream_event_rollup`` — watermarked tumbling-window aggregation over
     an event stream (the events.parquet shape), demonstrating late-data
     handling (q_events_hourly is its batch twin).
@@ -19,12 +20,13 @@ streaming-shaped capability a Spark-native engine should have:
     an explicit state schema and event-time timeouts — the operator shape
     Spark's built-in windowed aggs can't express (session membership
     depends on inter-event gaps, not fixed boundaries).
-  * ``compact_deltas`` — merges deltas into the main index INCREMENTALLY:
-    only terms touched by the delta (or by superseded doc versions) are
-    decoded and re-chunked, untouched chunks are copied through; then ALL
-    components (postings, lexicon, forward, docs, stats) flip to a new
-    generation with ONE atomic CURRENT.json replace (plans/generations.py)
-    — a crash can never mix generations (ADVICE r1).
+  * ``compact_deltas`` — merges deltas into the main index INCREMENTALLY
+    and from the postings alone (no corpus copy, no forward table): only
+    terms touched by the delta or by superseded doc versions are decoded
+    back to token rows and re-chunked, untouched chunks are copied
+    through; then ALL components (postings, lexicon, docs, stats, suggest)
+    flip to a new generation with ONE atomic CURRENT.json replace
+    (plans/generations.py) — a crash can never mix generations (ADVICE r1).
 
 doc_id for streamed docs: content-addressed (uid hash) rather than dense —
 dense ranks are a batch-build property. The id is a 60-bit slice of the
@@ -341,18 +343,40 @@ def compact_deltas(spark: SparkSession, index_root: str,
                    delta_forward_dir: str, cfg=None) -> dict:
     """Merge streamed deltas into the main index, atomically.
 
-    Steps: forward ∪ delta → re-chunk postings + lexicon; docs ∪ delta docs
-    (deduped by doc_id, collision-checked against uid); N/avgdl recomputed
-    from the merged docs; everything written as new ``_g<N>`` generation
-    dirs; ONE atomic CURRENT.json flip publishes them together."""
+    The merge reads the serving components and the delta files, never the
+    corpus: like a Lucene segment merge, it re-chunks from the postings.
+
+    1. docs ∪ delta docs, deduped by doc_id and collision-checked against
+       uid. A delta uid already in docs is an update: the base version's
+       doc_id is superseded.
+    2. The affected terms are the delta's terms plus every term holding a
+       superseded id, found exactly: a scan of the chunk columns
+       (term, doc_lo, doc_hi) keeps the chunks whose range can hold a
+       superseded id, only those are decoded, and a term counts only when a
+       decoded id really is superseded. (Re-chunking a term that did not
+       change would alter its chunk layout.)
+    3. The affected terms' live postings are decoded to token rows
+       (operators/compact.py:decode_postings_to_tokens), the superseded ids
+       dropped and the delta rows added; build_posting_chunks re-chunks
+       them. Every other term's chunk rows are copied through unchanged.
+    4. N/avgdl come from the merged docs. Postings, lexicon, docs, stats
+       and suggest are written as new ``_g<N>`` generation dirs, and ONE
+       atomic CURRENT.json flip publishes them together.
+
+    Decode CPU grows with the affected terms' chunks, not with the index.
+    Returns {N, avgdl, gen, affected_terms}."""
     import json
+
+    import numpy as np
 
     from nextsearch_api_spark.config import BuildConfig, IndexPaths
     from nextsearch_api_spark.operators.build import (
         build_posting_chunks, write_docs_sorted, write_lexicon,
         write_postings_sorted, write_suggest_sorted,
     )
-    from nextsearch_api_spark.operators.compact import with_persisted_bm25
+    from nextsearch_api_spark.operators.compact import (
+        chunks_holding, decode_postings_to_tokens, with_persisted_bm25,
+    )
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path, next_gen,
     )
@@ -363,12 +387,6 @@ def compact_deltas(spark: SparkSession, index_root: str,
     cfg = with_persisted_bm25(cfg or BuildConfig(), stats)
 
     gen = next_gen(index_root)
-    fw_path = paths.forward
-    if not os.path.exists(fw_path):
-        # batch builds do not materialize the forward index; derive it
-        # once from the ids table so deltas have a base to merge into
-        ids = spark.read.parquet(os.path.join(index_root, "ids"))
-        tokenize_tf(ids).write.parquet(fw_path)
 
     # ---- docs upsert + doc_id collision check (ADVICE r1) -----------------
     # A delta uid already present in the base docs is an UPDATED document:
@@ -398,15 +416,6 @@ def compact_deltas(spark: SparkSession, index_root: str,
     docs_new = gen_path(index_root, "docs", gen)
     write_docs_sorted(union, docs_new)
 
-    fw_delta = (spark.read.parquet(delta_forward_dir)
-                .dropDuplicates(["doc_id", "term"]))   # replays
-    fw = (spark.read.parquet(fw_path)
-          .join(F.broadcast(superseded), "doc_id", "left_anti")
-          .unionByName(fw_delta))
-    fw_new = gen_path(index_root, "forward", gen)
-    fw.write.mode("overwrite").parquet(fw_new)
-    fw = spark.read.parquet(fw_new)
-
     row = (spark.read.parquet(docs_new)
            .agg(F.count("*").alias("N"), F.sum("doc_len").alias("tot")).collect()[0])
     N = int(row["N"])
@@ -415,26 +424,28 @@ def compact_deltas(spark: SparkSession, index_root: str,
     # INCREMENTAL re-chunk (VERDICT r1 'next' #9): only terms the delta
     # touches — terms in new/updated docs plus terms of superseded docs —
     # are decoded and rebuilt; every other term's chunks are copied through
-    # untouched. CPU cost is ∝ affected-term postings, not index size (the
-    # new-generation copy is linear I/O but no decode/sort/encode). Untouched
-    # chunks keep their build-time max_impact computed with the OLD avgdl —
-    # harmless: stats drop the impact_avgdl marker below, which turns off
-    # the batch tier's chunk prune, and serving never prunes.
-    affected = (
-        fw_delta.select("term")
-        .unionByName(
-            spark.read.parquet(fw_path)
-            .join(F.broadcast(superseded), "doc_id", "left_semi")
-            .select("term")
-        )
-        .distinct()
-        .cache()
-    )
-    n_affected = affected.count()
+    # untouched (linear I/O, no decode/sort/encode). Untouched chunks keep
+    # their build-time max_impact computed with the OLD avgdl — harmless:
+    # stats drop the impact_avgdl marker below, which turns off the batch
+    # tier's chunk prune, and serving never prunes.
+    fw_delta = (spark.read.parquet(delta_forward_dir)
+                .dropDuplicates(["doc_id", "term"]))   # replays
     old_post = spark.read.parquet(paths.postings)
+    # superseded ids are as many as the delta's updated docs
+    sup_ids = np.array([r[0] for r in superseded.collect()], dtype=np.int64)
+    affected = fw_delta.select("term")
+    if sup_ids.size:
+        affected = affected.unionByName(
+            decode_postings_to_tokens(chunks_holding(old_post, sup_ids))
+            .join(F.broadcast(superseded), "doc_id", "left_semi")
+            .select("term"))
+    affected = affected.distinct().cache()
+    n_affected = affected.count()
     untouched = old_post.join(affected, "term", "left_anti")
-    fw_affected = fw.join(affected, "term", "left_semi")
-    rebuilt = build_posting_chunks(fw_affected, avgdl, cfg)
+    live = (decode_postings_to_tokens(
+                old_post.join(affected, "term", "left_semi"))
+            .join(F.broadcast(superseded), "doc_id", "left_anti"))
+    rebuilt = build_posting_chunks(live.unionByName(fw_delta), avgdl, cfg)
     chunks = untouched.unionByName(rebuilt)
     post_new = gen_path(index_root, "postings", gen)
     write_postings_sorted(chunks, post_new)
@@ -461,7 +472,6 @@ def compact_deltas(spark: SparkSession, index_root: str,
     flip_generation(index_root, {
         "postings": os.path.basename(post_new),
         "lexicon": os.path.basename(lex_new),
-        "forward": os.path.basename(fw_new),
         "docs": os.path.basename(docs_new),
         "stats": os.path.basename(stats_new),
         "suggest": os.path.basename(sug_new),

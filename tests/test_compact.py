@@ -296,3 +296,84 @@ def test_backup_consistent_cut_under_concurrent_flip(tmp_path, monkeypatch):
         else:
             with open(dst) as f:
                 assert json.load(f)["gen"] == 1, name
+
+
+def _stream_delta(spark, tmp_path, n_base, n_new, n_updated):
+    """A streamed delta over a ``generate_corpus(n_base, seed=42)`` base:
+    ``n_new`` docs with unseen keys plus ``n_updated`` base keys re-ingested
+    with new content. Returns the delta dir."""
+    from nextsearch_api_spark.streaming.ingest import stream_corpus_to_forward
+
+    keys = ["repo", "path", "commit"]
+    new = generate_corpus(spark, n_base + n_new, seed=42).join(
+        generate_corpus(spark, n_base, seed=42).select(*keys), keys,
+        "left_anti")
+    src = str(tmp_path / "incoming")
+    write_corpus(new.unionByName(generate_corpus(spark, n_updated, seed=777)),
+                 src, partition_by=None)
+    deltas = str(tmp_path / "deltas")
+    stream_corpus_to_forward(spark, src, deltas, str(tmp_path / "ckpt"),
+                             trigger_once=True).awaitTermination(120)
+    return deltas
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_compact_deltas_on_restored_backup(spark, tmp_path):
+    """A backup holds serving components only, and compact_deltas needs no
+    more: on a restored root it succeeds and gives the same postings,
+    lexicon and answers as compacting the original root."""
+    from nextsearch_api_spark.plans.backup import backup_index, restore_index
+    from nextsearch_api_spark.streaming.ingest import compact_deltas
+
+    p = str(tmp_path / "c")
+    write_corpus(generate_corpus(spark, 120, seed=42), p, partition_by=None)
+    root = str(tmp_path / "idx")
+    build_index(spark, read_corpus(spark, p), root)
+    bak, restored = str(tmp_path / "bak"), str(tmp_path / "restored")
+    backup_index(root, bak)
+    restore_index(bak, restored)
+    deltas = _stream_delta(spark, tmp_path, 120, 20, 4)
+
+    a = compact_deltas(spark, root, deltas)
+    b = compact_deltas(spark, restored, deltas)
+    assert a == b
+    for comp in ("postings", "lexicon", "docs"):
+        assert (_rows(spark, getattr(IndexPaths(restored), comp))
+                == _rows(spark, getattr(IndexPaths(root), comp))), comp
+    wa, wb = WandEngine(root), WandEngine(restored)
+    for q in ("hotterm", "buffer cache3", "load config flush"):
+        assert wb.search(q, 10) == wa.search(q, 10), q
+
+
+def test_legacy_forward_pointer_collected_one_flip_later(tmp_path):
+    """A CURRENT.json written by an older compaction still maps a
+    ``forward`` component. Its next flip drops the entry and defers the
+    directory to gc_pending; the flip after collects it."""
+    import json
+    import os
+
+    from nextsearch_api_spark.config import CURRENT_POINTER
+    from nextsearch_api_spark.plans.generations import flip_generation
+
+    root = str(tmp_path / "idx")
+    for d in ("postings_g1", "forward_g1", "postings_g2"):
+        os.makedirs(os.path.join(root, d))
+    with open(os.path.join(root, CURRENT_POINTER), "w") as f:
+        json.dump({"gen": 1, "postings": "postings_g1",
+                   "forward": "forward_g1", "gc_pending": []}, f)
+
+    m2 = flip_generation(root, {"postings": "postings_g2"}, 2)
+    assert "forward" not in m2
+    assert m2["gc_pending"] == ["forward_g1", "postings_g1"]
+    assert os.path.isdir(os.path.join(root, "forward_g1"))  # readers' grace
+    with open(os.path.join(root, CURRENT_POINTER)) as f:
+        assert "forward" not in json.load(f)
+
+    m3 = flip_generation(root, {}, 3)
+    assert not os.path.exists(os.path.join(root, "forward_g1"))
+    assert not os.path.exists(os.path.join(root, "postings_g1"))
+    assert m3["gc_pending"] == []
+    assert not hasattr(IndexPaths(root), "forward")

@@ -501,3 +501,27 @@ def test_small_query_driver_path_plans_local_and_matches(spark, plan_env):
     h = batch_search(plan_env, [QuerySpec(0, "buffer hotterm", 5)],
                      hydrate=True).collect()
     assert h and all(r["path"] is not None for r in h)
+
+
+def test_reader_holds_no_per_term_state(spark, tiny_index):
+    """term_dfs hands each batch its terms' chunk counts (the prefilter and
+    the range-cut planner read them there), so after batches over many
+    distinct terms, on the driver path and the distributed plan, the
+    reader holds nothing keyed by a term."""
+    root, _ = tiny_index
+    rd = IndexReader(spark, root)
+    lex = dict(tuple(r) for r in
+               rd.lexicon().select("term", "n_chunks").collect())
+    terms = sorted(lex)[:60]
+    for i in range(0, len(terms), 15):
+        specs = [QuerySpec(j, t, 5) for j, t in enumerate(terms[i:i + 15])]
+        batch_search(rd, specs).collect()
+        batch_search(rd, specs, small_query_max_postings=0).collect()
+    assert rd.term_dfs(terms).n_chunks == {t: lex[t] for t in terms}
+
+    held: set = set()
+    for obj in [rd, *vars(rd).values(), *rd._indexes.values()]:
+        for v in getattr(obj, "__dict__", {}).values():
+            if isinstance(v, (dict, set, frozenset)):
+                held |= {k for k in v if isinstance(k, str)}
+    assert not held & set(terms), sorted(held & set(terms))[:5]

@@ -57,7 +57,7 @@ def test_resume_skips_and_redoes(spark, corpus_path, tmp_path):
     shutil.rmtree(os.path.join(root, "postings"))
     m3 = build_index(spark, c, root)
     ran = [k for k, v in m3.items() if not v.get("skipped")]
-    assert ran == ["postings"]
+    assert ran == ["ids", "postings"]
 
     # changed config → full rebuild (fingerprint mismatch)
     from nextsearch_api_spark.config import BuildConfig
@@ -70,6 +70,55 @@ def test_resume_skips_and_redoes(spark, corpus_path, tmp_path):
         man = json.load(f)
     st = man["stages"]["postings"]
     assert st["status"] == "ok" and "seconds" in st and "rows_per_sec" in st
+
+
+SERVING_ROOT = ["_manifest.json", "docs", "lexicon", "postings",
+                "stats.json", "suggest"]
+
+
+def test_completed_build_keeps_serving_components_only(spark, corpus_path,
+                                                       tmp_path):
+    """ids (a copy of every doc's content) and doclen are build scratch: a
+    completed root holds only what serving reads, and resuming it with the
+    same inputs runs nothing and re-creates no scratch."""
+    c = read_corpus(spark, corpus_path)
+    root = str(tmp_path / "idx")
+    build_index(spark, c, root)
+    assert sorted(os.listdir(root)) == SERVING_ROOT
+    with open(IndexPaths(root).manifest) as f:
+        assert "completed_at" in json.load(f)
+
+    again = build_index(spark, c, root)
+    assert [k for k, v in again.items() if not v.get("skipped")] == []
+    assert sorted(os.listdir(root)) == SERVING_ROOT
+
+
+def test_killed_build_resumes_from_scratch(spark, corpus_path, tmp_path,
+                                           monkeypatch):
+    """A build killed in the lexicon stage keeps its scratch tables, and the
+    resume reads them instead of re-running ids or postings."""
+    from nextsearch_api_spark.operators import build
+
+    def killed(*_a, **_kw):
+        raise RuntimeError("killed in the lexicon stage")
+
+    c = read_corpus(spark, corpus_path)
+    root = str(tmp_path / "idx")
+    monkeypatch.setattr(build, "write_lexicon", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        build_index(spark, c, root)
+    assert {"ids", "doclen"} <= set(os.listdir(root))
+    with open(IndexPaths(root).manifest) as f:
+        assert "completed_at" not in json.load(f)
+
+    monkeypatch.undo()
+    m = build_index(spark, c, root)
+    assert [k for k, v in m.items() if not v.get("skipped")] == [
+        "lexicon", "suggest"]
+    assert sorted(os.listdir(root)) == SERVING_ROOT
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, c, fresh)
+    assert _decoded_index(spark, root) == _decoded_index(spark, fresh)
 
 
 def test_hot_term_skew_split(spark, corpus_path, tmp_path):

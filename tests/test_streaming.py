@@ -175,6 +175,94 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
             == [(r["doc_id"], r["found"]) for r in b.orderBy("rank").collect()])
 
 
+def test_compaction_rows_match_token_oracle(spark, tmp_path):
+    """compact_deltas re-chunks from the postings. Over two compactions in a
+    row (inserts and updates; the second also updates a streamed doc):
+    - the compacted postings decode to exactly tokenize_tf of the base
+      corpus minus the superseded ids plus the delta rows;
+    - ``affected_terms`` counts exactly the delta's terms plus the terms of
+      superseded docs, though some untouched term has a chunk whose range
+      covers a superseded id it does not hold;
+    - every untouched term's chunk rows are byte-identical to the base's."""
+    from nextsearch_api_spark.config import BuildConfig, IndexPaths
+    from nextsearch_api_spark.operators.build import (
+        assign_doc_ids, tokenize_tf,
+    )
+    from nextsearch_api_spark.operators.compact import (
+        decode_postings_to_tokens,
+    )
+    from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA, read_corpus
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, delta_docs_dir, stream_corpus_to_forward,
+    )
+
+    cfg = BuildConfig(chunk_size=16)
+    base_dir = str(tmp_path / "base")
+    write_corpus(generate_corpus(spark, 150, seed=42), base_dir,
+                 partition_by=None)
+    base = read_corpus(spark, base_dir)
+    root = str(tmp_path / "idx")
+    build_index(spark, base, root, cfg)
+    oracle = {(d, t): (tf, dl) for d, t, tf, dl in
+              tokenize_tf(assign_doc_ids(base)).collect()}
+    keys = sorted(tuple(r) for r in
+                  base.select("repo", "path", "commit", "lang").collect())
+
+    def delta(name, rows):
+        src = str(tmp_path / f"{name}_src")
+        spark.createDataFrame(rows, CORPUS_SCHEMA).write.parquet(src)
+        out = str(tmp_path / name)
+        stream_corpus_to_forward(spark, src, out, str(tmp_path / f"{name}_ck"),
+                                 trigger_once=True).awaitTermination(120)
+        return out
+
+    def compact_and_check(deltas, oracle):
+        paths = IndexPaths(root)
+        before = spark.read.parquet(paths.postings).collect()
+        d_uids = {r[0] for r in spark.read.parquet(delta_docs_dir(deltas))
+                  .select("uid").collect()}
+        sup = {d for d, uid in spark.read.parquet(paths.docs)
+               .select("doc_id", "uid").collect() if uid in d_uids}
+        rows = {(d, t): (tf, dl) for d, t, tf, dl in
+                spark.read.parquet(deltas)
+                .select("doc_id", "term", "tf", "doc_len").collect()}
+        affected = ({t for _, t in rows}
+                    | {t for d, t in oracle if d in sup})
+        assert sup and any(r["term"] not in affected
+                           and any(r["doc_lo"] <= s <= r["doc_hi"]
+                                   for s in sup)
+                           for r in before)
+
+        out = compact_deltas(spark, root, deltas, cfg)
+        assert out["affected_terms"] == len(affected)
+        want = {k: v for k, v in oracle.items() if k[0] not in sup}
+        want.update(rows)
+        after = spark.read.parquet(IndexPaths(root).postings)
+        got = sorted(tuple(r) for r in
+                     decode_postings_to_tokens(after).collect())
+        assert got == sorted((d, t, tf, dl)
+                             for (d, t), (tf, dl) in want.items())
+
+        def untouched(chunks):
+            return sorted(tuple(r) for r in chunks if r["term"] not in affected)
+        assert untouched(after.collect()) == untouched(before)
+        return want, out
+
+    # 1: three base docs updated, four new docs
+    oracle, out1 = compact_and_check(delta("d1", [
+        (*keys[i][:3], keys[i][3], f"zzupdate{i} hotterm buffer")
+        for i in (0, 70, 140)] + [
+        ("zz/new", f"n{i}.py", "c0", "py", f"zznew{i} hotterm load")
+        for i in range(4)]), oracle)
+    assert out1["gen"] == 1
+    # 2: a streamed doc and another base doc updated, one more new doc
+    oracle, out2 = compact_and_check(delta("d2", [
+        ("zz/new", "n0.py", "c0", "py", "zzagain hotterm"),
+        (*keys[30][:3], keys[30][3], "zzupdate30 config"),
+        ("zz/new", "n9.py", "c0", "py", "zznew9 flush")]), oracle)
+    assert out2["gen"] == 2 and out2["N"] == out1["N"] + 1
+
+
 def test_ingest_flip_then_reload_hydrates_new_generation(spark, tmp_path):
     """An ingest flip writes the build's serving layouts (doc-id-sorted
     docs, prefix-sorted suggest), and Engine.reload drops the old footer

@@ -302,9 +302,9 @@ def test_doc_range_cuts_from_postings_footer(tmp_path, monkeypatch, base):
                    str(path / "part-0.parquet"), row_group_size=50)
     idx = RowGroupIndex(str(path), "term")
     rd = SimpleNamespace(paths=SimpleNamespace(postings=str(path)),
-                         _n_chunks={"aa": 3, "hot": 400, "zz": 3},
                          _by_term=lambda _p: idx)
-    df_map = {"aa": 30, "hot": 40_000, "zz": 30}
+    df_map = query.TermDfs({"aa": 30, "hot": 40_000, "zz": 30},
+                           n_chunks={"aa": 3, "hot": 400, "zz": 3})
     present = sorted(df_map)
     monkeypatch.setattr(query, "SMALL_QUERY_MAX_POSTINGS", 5_000)
 
@@ -320,8 +320,9 @@ def test_doc_range_cuts_from_postings_footer(tmp_path, monkeypatch, base):
 
     # a whitelisted term plans from its kept chunks alone
     kept = [base + 100 * i for i in range(0, 400, 4)]
-    cuts = query._doc_range_cuts(rd, ["hot"], {"hot": 40_000},
-                                 {"hot": kept})
+    cuts = query._doc_range_cuts(
+        rd, ["hot"], query.TermDfs({"hot": 40_000}, n_chunks={"hot": 400}),
+        {"hot": kept})
     assert idx.counters()["row_groups_read"] == 2  # nothing more read
     assert len(cuts) == 1 and cuts[0] in kept
 
