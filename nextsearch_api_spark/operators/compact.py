@@ -84,7 +84,7 @@ def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
 
 def chunks_holding(chunks: DataFrame, doc_ids: np.ndarray) -> DataFrame:
     """The chunk rows whose [doc_lo, doc_hi] range can hold one of
-    ``doc_ids`` (a driver-side array, e.g. the superseded versions of a
+    ``doc_ids`` (an in-memory array, e.g. the superseded versions of a
     delta's updated docs). One vectorized range test over the two range
     columns: a Python UDF receives only its argument columns, so the blobs
     stay in the JVM and only the kept rows reach a later decode."""

@@ -506,7 +506,7 @@ def test_small_query_driver_path_plans_local_and_matches(spark, plan_env):
 def test_reader_holds_no_per_term_state(spark, tiny_index):
     """term_dfs hands each batch its terms' chunk counts (the prefilter and
     the range-cut planner read them there), so after batches over many
-    distinct terms, on the driver path and the distributed plan, the
+    distinct terms, on the in-process path and the distributed plan, the
     reader holds nothing keyed by a term."""
     root, _ = tiny_index
     rd = IndexReader(spark, root)
