@@ -12,7 +12,7 @@ semantics — tokenizer, stopword list, BM25 constants, tie-breaks — are pinne
 to the reference and verified against a NumPy golden oracle.
 
 Layout:
-  functions/   tokenization, varbyte/delta codecs, BM25 scoring kernel,
+  functions/   tokenization, the postings codec, BM25 scoring kernel,
                deterministic hashing
   sources/     synthetic corpus generator + corpus catalog (Iceberg-or-Parquet)
   operators/   index build, batch query, serving, autocomplete, dedup, similarity,

@@ -1,20 +1,47 @@
-"""Posting-list codec: delta + varbyte, vectorized NumPy.
+"""Posting-list codec, format v5 — the only module that knows a blob's layout.
 
-North-rule extension — the reference stores raw interleaved u32 (docId, tf)
-pairs (src/lexicon.cpp:122-126); we store, per chunk of up to CHUNK_SIZE
-postings (sorted by doc_id):
+The reference stores raw interleaved u32 (docId, tf) pairs
+(src/lexicon.cpp:122-126). Here each postings row holds one chunk of up to
+CHUNK_SIZE postings sorted by doc_id, with its doc-id range in the row's
+``doc_lo``/``doc_hi`` columns and
 
-    blob = varbyte(doc_gaps) || varbyte(tf) || varbyte(doc_len)
+    blob = varbyte(doc-id gaps) ‖ varbyte(tf) ‖ FOR(doc_len)
 
-with the two stream-boundary offsets kept as chunk-row columns. ``doc_len`` is
-denormalized into the blob (index-time join with the docs table) so the query
-path never joins postings against docs — the Spark analog of the reference's
-O(1) ``seg.docs[docId].doc_len`` array index (src/api_engine.cpp:477).
+``tf_off`` and ``dl_off`` (row columns) are the byte offsets where the tf
+and doc_len streams start.
 
-Varbyte layout: little-endian 7-bit groups, MSB set on every byte except the
-last of a value (standard v-byte, public IR technique; e.g. Manning/Raghavan/
-Schütze IIR §5.3). Both encode and decode are vectorized — the only Python
-loops are over the max byte-width (≤10 iterations), never over postings.
+* Doc-id gaps restart at every chunk: the first is taken from the row's
+  ``doc_lo`` (so it is 0), each later one from the previous id. A chunk
+  decodes from its own row, and a streamed id near 2^62 costs no 9-byte
+  first gap.
+* Varbyte: little-endian 7-bit groups, MSB set on every byte except the
+  last of a value (standard v-byte; Manning/Raghavan/Schütze IIR §5.3).
+* FOR(doc_len), frame of reference per chunk (Lemire & Boytsov, *Decoding
+  billions of integers per second through vectorization*, SPE 2015): a
+  5-byte header — u32 ``base`` = the chunk's minimum doc_len, u8 bit width
+  ``w`` — then each ``doc_len − base`` in ``w`` bits, packed little-endian
+  (value i starts at bit i·w), padded to a whole byte. A chunk whose
+  doc lengths are all equal has ``w = 0`` and no packed bytes.
+
+Why doc_len stays inline: BM25 needs it for every scored posting, and the
+chunk row is what the batch plan shuffles to its doc-id range groups.
+Reading it from ``docs`` instead made postings 0.375× as large with the same
+answers, but every range group would then fetch doc_len by id from docs row
+groups: 100 scattered ids touched 84 row groups (4.3 ms), about one
+row-group read per matched doc on sparse matches, against ~1.5 inline
+bytes per posting here. On the 50k-doc serving index varbyte spent 2 bytes
+on each doc_len where a chunk's spread needs about 9 bits.
+
+Encode and decode are vectorized over whole batches of chunks: the only
+Python loops run over varbyte byte positions (≤ 10) and the four bytes of a
+FOR base, never over chunks or postings. Packed doc_len values are written
+and read through 64-bit words: the decoder gathers two aligned words per
+value (the one holding its first bit and the next, for a spill).
+
+The doc-stat carrier rows of the segment build (term '', see
+operators/build.py:_docstat_recordbatch) reuse the chunk schema with their
+own blob, ``int64 doc_ids ‖ int32 doc_lens`` split at ``tf_off``
+(:func:`pack_doc_stats`, :func:`unpack_doc_stats`).
 """
 
 from __future__ import annotations
@@ -25,10 +52,14 @@ __all__ = [
     "varbyte_encode",
     "varbyte_encode_all",
     "varbyte_decode",
-    "encode_chunk",
-    "decode_chunk",
+    "encode_chunks",
+    "decode_doc_ids",
     "decode_chunks_concat",
+    "pack_doc_stats",
+    "unpack_doc_stats",
 ]
+
+FOR_HEADER_BYTES = 5  # u32 base + u8 bit width
 
 
 def varbyte_encode(vals: np.ndarray) -> bytes:
@@ -39,10 +70,8 @@ def varbyte_encode(vals: np.ndarray) -> bytes:
 def varbyte_encode_all(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Encode a whole batch in ONE vectorized pass.
 
-    Returns (byte_stream: uint8[], value_start_offsets: int64[len+1]) so a
-    caller can slice out any contiguous value range as a valid v-byte stream
-    — the per-chunk encoder then costs one memoryview slice instead of ~20
-    NumPy kernel launches per chunk."""
+    Returns (byte_stream: uint8[], value_start_offsets: int64[len+1]), so a
+    caller can find the bytes of any contiguous value range."""
     vals = np.ascontiguousarray(vals, dtype=np.uint64)
     if vals.size == 0:
         return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
@@ -73,7 +102,7 @@ def varbyte_decode(buf: bytes | memoryview | np.ndarray) -> np.ndarray:
         return np.zeros(0, dtype=np.uint64)
     is_last = (b & 0x80) == 0
     # dominant case in practice — dense doc-gap streams (gap 1) and small
-    # tf/doc_len values encode in ONE byte each; when the whole stream is
+    # tf values encode in ONE byte each; when the whole stream is
     # single-byte the bytes ARE the values (top bit clear), skipping the
     # boundary bookkeeping entirely (~5× on the serving tier's hot decode)
     if is_last.all():
@@ -85,19 +114,17 @@ def varbyte_decode(buf: bytes | memoryview | np.ndarray) -> np.ndarray:
     nb = ends - starts + 1
     max_nb = int(nb.max())
     if max_nb == 2:
-        # mixed 1-2 byte streams (doc_len, mid-size gaps): both byte-count
-        # branches computed vectorized over VALUES (not bytes) and selected
-        # with where — no repeat/reduceat over the byte stream
+        # mixed 1-2 byte streams (mid-size gaps): both byte-count branches
+        # computed vectorized over VALUES (not bytes) and selected with
+        # where — no repeat/reduceat over the byte stream
         last = b[ends].astype(np.uint64)
         prev = b[ends - 1] & np.uint8(0x7F)  # garbage where nb==1, masked out
         return np.where(nb == 1, last, (last << np.uint64(7)) | prev)
     if max_nb <= 9:
         # general vectorized path: each byte's 7 payload bits shifted into
         # place, then one C segment-sum per value (bit groups are disjoint,
-        # so sum == or). Replaces the per-byte-position masked loop — ~4×
-        # on the mixed 1-2 byte doc_len streams the serving tier decodes.
-        # ≤9 bytes ⇒ shifts ≤56+7 < 64 stay defined; 10-byte encodings
-        # (full uint64 range) take the masked loop below.
+        # so sum == or). ≤9 bytes ⇒ shifts ≤56+7 < 64 stay defined; 10-byte
+        # encodings (full uint64 range) take the masked loop below.
         pos_in_val = np.arange(b.size, dtype=np.int64) - np.repeat(starts, nb)
         byte_val = np.left_shift((b & np.uint8(0x7F)).astype(np.uint64),
                                  (7 * pos_in_val).astype(np.uint64))
@@ -110,60 +137,203 @@ def varbyte_decode(buf: bytes | memoryview | np.ndarray) -> np.ndarray:
     return vals
 
 
-def encode_chunk(
-    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray
-) -> tuple[bytes, int, int]:
-    """Encode one posting chunk (doc_ids strictly ascending).
-
-    Returns (blob, tf_offset, dl_offset): byte offsets where the tf / doc_len
-    streams start inside the blob.
-    """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.uint64)
-    gaps = np.empty_like(doc_ids)
-    gaps[0] = doc_ids[0]
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
-    g = varbyte_encode(gaps)
-    t = varbyte_encode(tfs)
-    d = varbyte_encode(dls)
-    return g + t + d, len(g), len(g) + len(t)
+def _segments(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Flat positions [starts[0], starts[0]+lens[0]) ++ [starts[1], …) …:
+    a gather (or scatter) index for many byte ranges at once."""
+    total = int(lens.sum())
+    before = np.cumsum(lens) - lens
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - before, lens)
 
 
-def decode_chunk(
-    blob: bytes | memoryview, tf_off: int, dl_off: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one chunk → (doc_ids:int64, tfs:int64, dls:int64)."""
-    mv = memoryview(blob)
-    gaps = varbyte_decode(mv[:tf_off])
-    doc_ids = np.cumsum(gaps, dtype=np.int64)
-    tfs = varbyte_decode(mv[tf_off:dl_off]).astype(np.int64)
-    dls = varbyte_decode(mv[dl_off:]).astype(np.int64)
-    return doc_ids, tfs, dls
+def _or_runs(words: np.ndarray, idx: np.ndarray, vals: np.ndarray) -> None:
+    """words[idx[i]] |= vals[i] for a non-decreasing ``idx``: one OR-reduce
+    per run of equal indices, so no scatter ever writes a word twice."""
+    if not idx.size:
+        return
+    first = np.flatnonzero(np.concatenate(([True], idx[1:] != idx[:-1])))
+    words[idx[first]] |= np.bitwise_or.reduceat(vals, first)
+
+
+def encode_chunks(doc_ids, tfs, dls, starts) -> "tuple[pa.Array, np.ndarray, np.ndarray]":  # noqa: F821
+    """Encode many chunks in one vectorized pass.
+
+    ``doc_ids``/``tfs``/``dls`` hold the postings of consecutive chunks;
+    chunk i is rows [starts[i], starts[i+1]) (the last runs to the end),
+    doc ids strictly ascending inside a chunk. Returns (blobs as an Arrow
+    ``binary`` array, tf_off int32[], dl_off int32[]); each chunk's doc_lo
+    is its first doc id."""
+    import pyarrow as pa
+
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+    starts = np.asarray(starts, dtype=np.int64)
+    n, k = ids.size, starts.size
+    ends = np.append(starts[1:], n)
+    counts = ends - starts
+    if k and (starts[0] != 0 or (counts <= 0).any()):
+        raise ValueError("chunk starts must begin at 0 and be increasing")
+    if n and (dls.min() < 0 or dls.max() > 0xFFFFFFFF):
+        raise ValueError("doc_len outside the u32 range of the FOR header")
+    if not k:
+        empty = np.zeros(0, dtype=np.int32)
+        return pa.array([], type=pa.binary()), empty, empty.copy()
+
+    gaps = np.zeros(n, dtype=np.int64)
+    gaps[1:] = ids[1:] - ids[:-1]
+    gaps[starts] = 0  # each chunk's first gap is taken from its doc_lo
+    gbytes, goffs = varbyte_encode_all(gaps)
+    tbytes, toffs = varbyte_encode_all(tfs)
+    glen = goffs[ends] - goffs[starts]
+    tlen = toffs[ends] - toffs[starts]
+
+    base = np.minimum.reduceat(dls, starts)
+    spread = np.maximum.reduceat(dls, starts) - base
+    width = np.frexp(spread.astype(np.float64))[1].astype(np.int64)  # bit length
+    plen = (counts * width + 7) // 8
+
+    # packed FOR payloads of all chunks back to back, built in 64-bit words:
+    # value i of chunk c sits at bit pstart[c]·8 + i·w[c]; each value ORs
+    # into its word and the spill into the next one (w ≤ 32)
+    pstart = np.cumsum(plen) - plen
+    bit = (np.repeat(8 * pstart - starts * width, counts)
+           + np.arange(n, dtype=np.int64) * np.repeat(width, counts))
+    vals = (dls - np.repeat(base, counts)).astype(np.uint64)
+    words = np.zeros(int(plen.sum()) // 8 + 2, dtype=np.uint64)
+    word = bit >> 6
+    shift = (bit & 63).astype(np.uint64)
+    _or_runs(words, word, vals << shift)
+    _or_runs(words, word + 1, (vals >> np.uint64(1)) >> (np.uint64(63) - shift))
+    packed = words.view(np.uint8)[: int(plen.sum())]
+
+    blob_len = glen + tlen + FOR_HEADER_BYTES + plen
+    offs = np.zeros(k + 1, dtype=np.int64)
+    np.cumsum(blob_len, out=offs[1:])
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise ValueError("one batch of chunk blobs exceeds 2 GiB")
+    out = np.empty(int(offs[-1]), dtype=np.uint8)
+    out[_segments(offs[:-1], glen)] = gbytes
+    out[_segments(offs[:-1] + glen, tlen)] = tbytes
+    head = offs[:-1] + glen + tlen
+    for j in range(4):
+        out[head + j] = (base >> (8 * j)) & 0xFF
+    out[head + 4] = width
+    out[_segments(head + FOR_HEADER_BYTES, plen)] = packed
+
+    blobs = pa.Array.from_buffers(
+        pa.binary(), k,
+        [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(out)])
+    return blobs, glen.astype(np.int32), (glen + tlen).astype(np.int32)
+
+
+def _blob_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Blobs (an Arrow binary array, or a sequence of bytes-like values) →
+    (their bytes back to back as uint8[], each blob's start offset in it).
+    Zero-copy for an Arrow array."""
+    import pyarrow as pa
+
+    if not isinstance(blobs, pa.Array):
+        blobs = pa.array([memoryview(b) for b in blobs], type=pa.binary())
+    off_type = np.int64 if pa.types.is_large_binary(blobs.type) else np.int32
+    _, obuf, dbuf = blobs.buffers()
+    offs = np.frombuffer(obuf, dtype=off_type)[
+        blobs.offset: blobs.offset + len(blobs) + 1].astype(np.int64)
+    data = (np.frombuffer(dbuf, dtype=np.uint8)[offs[0]: offs[-1]]
+            if dbuf is not None and len(blobs) else np.zeros(0, np.uint8))
+    return data, offs[:-1] - offs[0]
+
+
+def _doc_ids(data, starts, tf_offs, counts, doc_los) -> np.ndarray:
+    """Gap stream of every chunk → absolute doc ids (per-chunk cumsum from
+    doc_lo). uint64 arithmetic: the running sum may wrap past 2^63 over
+    many streamed-id chunks, the per-chunk difference never does."""
+    gaps = varbyte_decode(data[_segments(starts, tf_offs)])
+    cum = np.cumsum(gaps)
+    first = np.cumsum(counts) - counts
+    before = cum[first] - gaps[first]
+    ids = cum - np.repeat(before - doc_los.astype(np.uint64), counts)
+    return ids.view(np.int64)
+
+
+def _chunk_args(*cols) -> list[np.ndarray]:
+    return [np.asarray(c, dtype=np.int64) for c in cols]
+
+
+def decode_doc_ids(blobs, tf_offs, counts, doc_los) -> np.ndarray:
+    """Doc ids only of many chunks (the gap stream; tf and doc_len bytes are
+    never read) → int64[], chunks in input order."""
+    tf_offs, counts, doc_los = _chunk_args(tf_offs, counts, doc_los)
+    if not counts.size:
+        return np.zeros(0, dtype=np.int64)
+    data, starts = _blob_bytes(blobs)
+    return _doc_ids(data, starts, tf_offs, counts, doc_los)
 
 
 def decode_chunks_concat(
-    blobs, tf_offs, dl_offs, counts
+    blobs, tf_offs, dl_offs, counts, doc_los,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode MANY chunks in three vectorized passes (one per stream) →
-    concatenated (doc_ids, tfs, dls). ``counts`` = postings per chunk (the
-    chunk-row ``count`` column) locates segment boundaries so the gap
-    cumsum can be reset per chunk. ~chunk-count× fewer NumPy kernel launches
-    than per-chunk decode_chunk — the serving tier's hot decode path."""
-    if len(blobs) == 0:
+    """Decode many chunks at once → concatenated (doc_ids, tfs, dls), all
+    int64, chunks in input order. ``counts`` and ``doc_los`` are the chunk
+    rows' ``count`` and ``doc_lo`` columns. One vectorized pass per stream;
+    doc_len takes two aligned 64-bit word gathers per value — the serving
+    tier's hot decode path."""
+    tf_offs, dl_offs, counts, doc_los = _chunk_args(
+        tf_offs, dl_offs, counts, doc_los)
+    if not counts.size:
         z = np.zeros(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    g = b"".join(memoryview(b)[:to] for b, to in zip(blobs, tf_offs))
-    t = b"".join(memoryview(b)[to:do]
-                 for b, to, do in zip(blobs, tf_offs, dl_offs))
-    d = b"".join(memoryview(b)[do:] for b, do in zip(blobs, dl_offs))
-    gaps = varbyte_decode(np.frombuffer(g, dtype=np.uint8)).astype(np.int64)
-    tfs = varbyte_decode(np.frombuffer(t, dtype=np.uint8)).astype(np.int64)
-    dls = varbyte_decode(np.frombuffer(d, dtype=np.uint8)).astype(np.int64)
-    counts = np.asarray(counts, dtype=np.int64)
-    cum = np.cumsum(gaps)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    # per-segment cumsum: subtract the running total at each chunk start
-    # (gaps[start] is the chunk's absolute first doc id)
-    corr = np.zeros(len(counts), dtype=np.int64)
-    corr[1:] = cum[starts[1:] - 1]
-    doc_ids = cum - np.repeat(corr, counts)
+    data, starts = _blob_bytes(blobs)
+    doc_ids = _doc_ids(data, starts, tf_offs, counts, doc_los)
+    tfs = varbyte_decode(
+        data[_segments(starts + tf_offs, dl_offs - tf_offs)]).astype(np.int64)
+
+    # word-aligned copy of the bytes, padded so the spill read of the last
+    # value stays inside
+    words = np.zeros(data.size // 8 + 2, dtype=np.uint64)
+    words.view(np.uint8)[: data.size] = data
+    head = starts + dl_offs
+    base = np.zeros(counts.size, dtype=np.int64)
+    for j in range(4):
+        base |= data[head + j].astype(np.int64) << (8 * j)
+    width = data[head + 4].astype(np.int64)
+    # bit position of value i of chunk c: 8·(head[c] + 5) + (i − first[c])·w[c];
+    # the arithmetic runs in place on a few n-long arrays
+    rw = np.repeat(width, counts)
+    bit = np.arange(rw.size, dtype=np.int64)
+    bit *= rw
+    bit += np.repeat(8 * (head + FOR_HEADER_BYTES)
+                     - (np.cumsum(counts) - counts) * width, counts)
+    word = bit >> 6
+    shift = (bit & 63).view(np.uint64)
+    dls = words[word]                      # aligned word holding the start
+    dls >>= shift
+    word += 1
+    hi = words[word]                       # the next word, for the spill
+    hi <<= np.uint64(1)
+    np.subtract(np.uint64(63), shift, out=shift)
+    hi <<= shift
+    dls |= hi
+    dls &= np.repeat((np.uint64(1) << width.astype(np.uint64)) - np.uint64(1),
+                     counts)
+    dls = dls.view(np.int64)
+    dls += np.repeat(base, counts)
     return doc_ids, tfs, dls
+
+
+def pack_doc_stats(doc_ids: np.ndarray, doc_lens: np.ndarray) -> tuple[bytes, int]:
+    """One doc-stat carrier blob → (``int64 doc_ids ‖ int32 doc_lens``, the
+    split offset stored in the row's ``tf_off``)."""
+    ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
+    dls = np.ascontiguousarray(doc_lens, dtype=np.int32)
+    return ids.tobytes() + dls.tobytes(), 8 * ids.size
+
+
+def unpack_doc_stats(blobs, splits) -> tuple[np.ndarray, np.ndarray]:
+    """Doc-stat carrier blobs and their split offsets → concatenated
+    (doc_ids int64[], doc_lens int32[])."""
+    data, starts = _blob_bytes(blobs)
+    splits = np.asarray(splits, dtype=np.int64)
+    ends = np.append(starts[1:], data.size)
+    ids = data[_segments(starts, splits)].view(np.int64)
+    dls = data[_segments(starts + splits, ends - starts - splits)].view(np.int32)
+    return ids, dls

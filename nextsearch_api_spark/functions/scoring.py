@@ -105,8 +105,9 @@ def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
     """Chunk rows → [(qid, k, found, top doc ids, top scores)] for each
     query with a posting among them.
 
-    ``chunks`` is an Arrow table of postings chunk rows (term, count,
-    tf_off, dl_off, blob); ``queries`` is [(qid, k, [(term, widf), ...])].
+    ``chunks`` is an Arrow table of postings chunk rows (term, doc_lo,
+    count, tf_off, dl_off, blob); ``queries`` is
+    [(qid, k, [(term, widf), ...])].
     Each term's chunks decode in one ``decode_chunks_concat`` call, in
     table order (a term's chunks cover disjoint doc ranges, so the order
     does not change any sum), and only doc ids in [lo, hi) are kept (None:
@@ -120,19 +121,18 @@ def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
     rows_by_term: dict[str, list[int]] = {}
     for i, term in enumerate(chunks.column("term").to_pylist()):
         rows_by_term.setdefault(term, []).append(i)
-    # blobs stay Arrow: BinaryScalar.as_buffer() is a zero-copy view that
-    # decode_chunks_concat slices via memoryview
+    # blobs stay Arrow: a term's rows are taken as one binary array
     blobs = chunks.column("blob").combine_chunks()
-    counts, tf_offs, dl_offs = (
+    doc_los, counts, tf_offs, dl_offs = (
         chunks.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
-        for c in ("count", "tf_off", "dl_off"))
+        for c in ("doc_lo", "count", "tf_off", "dl_off"))
 
     per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     for term, rows in rows_by_term.items():
         idx = np.asarray(rows)
         ids, tfs, dls = decode_chunks_concat(
-            [blobs[int(i)].as_buffer() for i in idx],
-            tf_offs[idx], dl_offs[idx], counts[idx])
+            blobs.take(idx), tf_offs[idx], dl_offs[idx], counts[idx],
+            doc_los[idx])
         if lo is not None or hi is not None:
             keep = np.ones(ids.size, dtype=bool)
             if lo is not None:

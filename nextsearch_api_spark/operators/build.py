@@ -24,7 +24,8 @@ Spark-first re-design (NOT a port):
   * serving layout — the chunk rows (compressed postings, a fraction of
     corpus bytes) are range-partitioned + sorted by (term, doc_lo) in
     bounded row groups; docs by doc_id; lexicon and suggest by key.
-  * postings format — per chunk: delta+varbyte blob (doc gaps, tf, doc_len),
+  * postings format v5 — per chunk: a blob of doc-id gaps from doc_lo, tf
+    and frame-of-reference doc_len (functions/codec.py owns the layout),
     float32 block-max impact (functions/scoring.py:bm25_impact) — the
     per-chunk bound the batch tier's chunk prune plans with. avgdl is only
     known after the pass, so chunks carry a (tf, dl) Pareto frontier that
@@ -96,7 +97,7 @@ _KEY_SEP = "\x01"
 
 # bump when the on-disk chunk/lexicon format changes — forces resume logic to
 # rebuild indexes created by older code
-FORMAT_VERSION = 4
+FORMAT_VERSION = 5
 
 
 def _parquet_rows(path: str) -> int:
@@ -367,8 +368,9 @@ def _pa_postings_schema(frontier: bool = False):
 def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
                         k1=None, b=None, avgdl32=None):
     """Vectorized chunk emission from (term-code, doc)-sorted arrays and
-    chunk boundaries [cst, cen): whole-batch impact computation, reduceat
-    aggregates, ONE varbyte pass per stream, per-chunk byte slicing.
+    chunk boundaries [cst, cen), which tile rows [0, cen[-1]): whole-batch
+    impact computation, reduceat aggregates, and one
+    functions/codec.py:encode_chunks call for every blob of the batch.
 
     ``avgdl32=None`` = deferred-impact mode (the segment build path, r6):
     avgdl is not known yet — the corpus is tokenized exactly ONCE, in this
@@ -385,15 +387,10 @@ def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from nextsearch_api_spark.functions.codec import varbyte_encode_all
+    from nextsearch_api_spark.functions.codec import encode_chunks
 
     m = int(cen[-1])  # rows covered by chunks (any held-back tail excluded)
-    gaps = np.empty(m, dtype=np.int64)
-    gaps[1:] = ids[1:m] - ids[: m - 1]
-    gaps[cst] = ids[cst]  # absolute doc_id at every chunk start
-    gbytes, goffs = varbyte_encode_all(gaps)
-    tbytes, toffs = varbyte_encode_all(tfs[:m])
-    dbytes, doffs = varbyte_encode_all(dls[:m])
+    blobs, tfo, dlo = encode_chunks(ids[:m], tfs[:m], dls[:m], cst)
 
     sum_tf = np.add.reduceat(tfs[:m], cst)
     max_tf = np.maximum.reduceat(tfs[:m], cst)
@@ -430,18 +427,6 @@ def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
         fr_dl_vals = dls[:m][kept].astype(np.int32)
         max_imp = np.zeros(len(cst), dtype=np.float32)  # finalized later
 
-    blobs: list[bytes] = []
-    tfo = np.empty(len(cst), dtype=np.int32)
-    dlo = np.empty(len(cst), dtype=np.int32)
-    for i in range(len(cst)):
-        s, e = int(cst[i]), int(cen[i])
-        g = gbytes[goffs[s]:goffs[e]].tobytes()
-        t = tbytes[toffs[s]:toffs[e]].tobytes()
-        d = dbytes[doffs[s]:doffs[e]].tobytes()
-        blobs.append(g + t + d)
-        tfo[i] = len(g)
-        dlo[i] = len(g) + len(t)
-
     term_out = pc.take(dictionary, pa.array(codes[cst].astype(np.int32)))
     arrays = [
         term_out,
@@ -454,7 +439,7 @@ def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
         pa.array(max_imp.astype(np.float32)),
         pa.array(tfo),
         pa.array(dlo),
-        pa.array(blobs, type=pa.binary()),
+        blobs,
     ]
     if avgdl32 is None:
         arrays += [
@@ -592,8 +577,8 @@ def write_suggest_sorted(sug: DataFrame, out_path: str) -> None:
 # with term '' (real terms are ≥ 2 chars, so '' can never collide). Packing
 # ~64k docs per row keeps the stat rows a vanishing fraction of the chunk
 # table (one row per ~64k docs vs one chunk row per ≤ chunk_size postings);
-# one row per doc would INVERT that ratio at 10^12 docs. blob layout: int64
-# doc_ids ++ int32 doc_lens, split point in tf_off.
+# one row per doc would INVERT that ratio at 10^12 docs. The blob layout is
+# functions/codec.py:pack_doc_stats, split point in tf_off.
 _DOCSTAT_PACK = 65536
 
 DOCLEN_SCHEMA = StructType([
@@ -604,6 +589,9 @@ DOCLEN_SCHEMA = StructType([
 
 def _docstat_recordbatch(stat_ids: list, stat_dls: list):
     import pyarrow as pa
+
+    from nextsearch_api_spark.functions.codec import pack_doc_stats
+
     sids = np.concatenate(stat_ids)
     sdls = np.concatenate(stat_dls).astype(np.int32)
     o = np.argsort(sids, kind="stable")  # file order is already ~sorted
@@ -616,8 +604,9 @@ def _docstat_recordbatch(stat_ids: list, stat_dls: list):
         cols["hi"].append(int(sids[e - 1]))
         cols["n"].append(e - s)
         cols["tot"].append(int(sdls[s:e].sum()))
-        cols["off"].append(8 * (e - s))
-        cols["blob"].append(sids[s:e].tobytes() + sdls[s:e].tobytes())
+        blob, split = pack_doc_stats(sids[s:e], sdls[s:e])
+        cols["off"].append(split)
+        cols["blob"].append(blob)
     k = len(cols["lo"])
     empty_list = pa.ListArray.from_arrays(
         pa.array(np.zeros(k + 1, dtype=np.int32)),
@@ -648,15 +637,13 @@ def decode_doclen_rows(stat_rows: DataFrame) -> DataFrame:
     src/ForwardIndex.cpp:152)."""
     def go(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import pyarrow as pa
+
+        from nextsearch_api_spark.functions.codec import unpack_doc_stats
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            blobs = batch.column("blob").to_pylist()
-            offs = batch.column("tf_off").to_pylist()
-            ids = np.concatenate([np.frombuffer(bb[:o], dtype=np.int64)
-                                  for bb, o in zip(blobs, offs)])
-            dls = np.concatenate([np.frombuffer(bb[o:], dtype=np.int32)
-                                  for bb, o in zip(blobs, offs)])
+            ids, dls = unpack_doc_stats(batch.column("blob"),
+                                        batch.column("tf_off"))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids), pa.array(dls)],
                 schema=pa.schema([("doc_id", pa.int64()),

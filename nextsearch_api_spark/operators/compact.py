@@ -64,9 +64,8 @@ def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
                 continue
             counts = batch.column("count").to_numpy(zero_copy_only=False)
             ids, tfs, dls = decode_chunks_concat(
-                batch.column("blob").to_pylist(),
-                batch.column("tf_off").to_pylist(),
-                batch.column("dl_off").to_pylist(), counts)
+                batch.column("blob"), batch.column("tf_off"),
+                batch.column("dl_off"), counts, batch.column("doc_lo"))
             rows = np.repeat(np.arange(batch.num_rows), counts)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -78,7 +77,8 @@ def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
                 names=["doc_id", "term", "tf", "doc_len"],
             )
 
-    return chunks.select("term", "count", "tf_off", "dl_off", "blob") \
+    return chunks.select("term", "doc_lo", "count", "tf_off", "dl_off",
+                         "blob") \
         .mapInArrow(dec, schema=TOKENS_SCHEMA)
 
 

@@ -93,10 +93,10 @@ def phrase_match(docs: DataFrame, phrase: str, id_col: str = "doc_id",
 def term_doc_ids(reader, terms: "list[str]") -> DataFrame:
     """→ (term, doc_id) for a BOUNDED term set, decoded from the inverted
     index: the pushed ``term isin`` predicate row-group-prunes the postings
-    scan (chunks are (term, doc_lo)-sorted), and the mapInPandas decode
-    touches ONLY the doc-id gap stream (``blob[:tf_off]``) — the tf/dl
-    varbyte streams and the impact math are skipped."""
-    import numpy as np
+    scan (chunks are (term, doc_lo)-sorted), and the mapInArrow decode
+    reads ONLY each chunk's doc-id gap stream
+    (functions/codec.py:decode_doc_ids) — the tf/doc_len streams and the
+    impact math are skipped."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     out_schema = StructType([
@@ -105,26 +105,26 @@ def term_doc_ids(reader, terms: "list[str]") -> DataFrame:
     ])
 
     def decode(batches):
-        import pandas as pd
-        from nextsearch_api_spark.functions.codec import varbyte_decode
+        import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
-            terms_out, ids_out = [], []
-            for term, tf_off, blob in zip(pdf["term"], pdf["tf_off"],
-                                          pdf["blob"]):
-                gaps = varbyte_decode(memoryview(blob)[:int(tf_off)])
-                ids = np.cumsum(gaps).astype(np.int64)
-                terms_out.append(np.full(len(ids), term, dtype=object))
-                ids_out.append(ids)
-            if not ids_out:
+        from nextsearch_api_spark.functions.codec import decode_doc_ids
+
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            yield pd.DataFrame({"term": np.concatenate(terms_out),
-                                "doc_id": np.concatenate(ids_out)})
+            counts = batch.column("count").to_numpy(zero_copy_only=False)
+            ids = decode_doc_ids(batch.column("blob"), batch.column("tf_off"),
+                                 counts, batch.column("doc_lo"))
+            rows = np.repeat(np.arange(batch.num_rows), counts)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("term").take(pa.array(rows)), pa.array(ids)],
+                names=["term", "doc_id"])
 
     return (reader.postings()
             .where(F.col("term").isin(list(terms)))
-            .select("term", "tf_off", "blob")
-            .mapInPandas(decode, out_schema))
+            .select("term", "doc_lo", "count", "tf_off", "blob")
+            .mapInArrow(decode, out_schema))
 
 
 def phrase_search(reader, corpus: DataFrame, phrase: str, k: int = 10,

@@ -301,7 +301,7 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     tier run, so all return identical rows."""
     try:
         t = reader._by_term(reader.paths.postings).read(
-            list(present), ["count", "tf_off", "dl_off", "blob"])
+            list(present), ["doc_lo", "count", "tf_off", "dl_off", "blob"])
     except Exception:
         return None
     if not set(present) <= set(t.column("term").to_pylist()):
@@ -549,7 +549,7 @@ def batch_search(
         chunks.select(F.explode(F.sequence(range_of("doc_lo"),
                                            range_of("doc_hi")))
                       .alias("doc_range"),
-                      "term", "count", "tf_off", "dl_off", "blob")
+                      "term", "doc_lo", "count", "tf_off", "dl_off", "blob")
         .groupBy("doc_range")
         .applyInArrow(_range_rank_udf(cuts, ranked, reader.avgdl, params),
                       "qid long, doc_id long, score double, k int, cnt long")

@@ -59,7 +59,9 @@ def check_index_format(stats: dict, stats_path: str) -> None:
 
 class WandEngine:
     def __init__(self, index_root: str, params: BM25Params | None = None):
-        import pyarrow.dataset as ds
+        import glob
+
+        import pyarrow.parquet as pq
 
         self.params = params or BM25Params()
         self.paths = IndexPaths(index_root)
@@ -69,10 +71,15 @@ class WandEngine:
         self.N = int(self.stats["N"])
         self.avgdl = float(self.stats["avgdl"])
 
-        # lexicon: small (vocab-sized) → term → df dict in RAM
-        lex = ds.dataset(self.paths.lexicon).to_table(columns=["term", "df"])
-        self._df = dict(zip(lex.column("term").to_pylist(),
-                            lex.column("df").to_pylist()))
+        # lexicon: small (vocab-sized) → term → df dict in RAM, read file by
+        # file: half the CPU of a pyarrow.dataset scan over its 64 files
+        self._df: dict[str, int] = {}
+        for f in sorted(glob.glob(os.path.join(self.paths.lexicon,
+                                               "*.parquet"))):
+            lex = pq.ParquetFile(f).read(columns=["term", "df"],
+                                         use_threads=False)
+            self._df.update(zip(lex.column("term").to_pylist(),
+                                lex.column("df").to_pylist()))
 
         # blob reads go through the postings footer index: a term fetch reads
         # only the row groups whose term range holds it (the build writes
@@ -129,10 +136,11 @@ class WandEngine:
     # ------------------------------------------------------------- scoring --
 
     def _load_term_chunks(self, terms: list[str]) -> "list[pa.Table]":
-        """Chunk rows (term, count, tf_off, dl_off, blob) of ``terms``, one
-        table per term that has any: ONE footer-indexed read for the
-        uncached terms (only the row groups whose term range holds one of
-        them), merged with the bounded LRU of previously fetched terms."""
+        """Chunk rows (term, doc_lo, count, tf_off, dl_off, blob) of
+        ``terms``, one table per term that has any: ONE footer-indexed read
+        for the uncached terms (only the row groups whose term range holds
+        one of them), merged with the bounded LRU of previously fetched
+        terms."""
         out: dict[str, pa.Table] = {}
         missing: list[str] = []
         with self._cache_lock:
@@ -144,7 +152,7 @@ class WandEngine:
                     missing.append(term)
         if missing:
             t = self._postings.read(
-                missing, ["count", "tf_off", "dl_off", "blob"])
+                missing, ["doc_lo", "count", "tf_off", "dl_off", "blob"])
             rows: dict[str, list[int]] = {}
             for i, term in enumerate(t.column("term").to_pylist()):
                 rows.setdefault(term, []).append(i)

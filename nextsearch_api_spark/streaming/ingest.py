@@ -392,11 +392,14 @@ def compact_deltas(spark: SparkSession, index_root: str,
     # A delta uid already present in the base docs is an UPDATED document:
     # the base version (its doc_id AND its postings) is superseded. New uids
     # are inserts. Cost is proportional to the delta (broadcast anti-joins).
-    ddocs = (spark.read.parquet(delta_docs_dir(delta_forward_dir))
-             .dropDuplicates(["doc_id"])      # at-least-once replays
-             .where(F.col("doc_len") > 0))
+    # The uids come from every delta doc: an update that keeps no token
+    # still supersedes its base version, though only docs with tokens are
+    # inserted (zero-token docs are outside N).
+    ddocs_all = (spark.read.parquet(delta_docs_dir(delta_forward_dir))
+                 .dropDuplicates(["doc_id"]))      # at-least-once replays
+    ddocs = ddocs_all.where(F.col("doc_len") > 0)
     base_docs = spark.read.parquet(paths.docs)
-    delta_uids = ddocs.select("uid")
+    delta_uids = ddocs_all.select("uid")
     superseded = (base_docs.join(F.broadcast(delta_uids), "uid", "left_semi")
                   .select("doc_id"))
     docs_kept = base_docs.join(F.broadcast(delta_uids), "uid", "left_anti")

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import BM25Params, IndexPaths
-from nextsearch_api_spark.functions.codec import decode_chunk
+from nextsearch_api_spark.functions.codec import decode_chunks_concat
 from nextsearch_api_spark.operators.query import IndexReader, QuerySpec, batch_search
 
 # Reference query-set classes (FIXTURES.md §2)
@@ -52,7 +52,9 @@ def test_index_invariants(spark, tiny_index):
         all_ids, all_tfs, all_dls = [], [], []
         prev_hi = -1
         for c in chunks:
-            ids, tfs, dls = decode_chunk(c["blob"], c["tf_off"], c["dl_off"])
+            ids, tfs, dls = decode_chunks_concat(
+                [c["blob"]], [c["tf_off"]], [c["dl_off"]], [c["count"]],
+                [c["doc_lo"]])
             assert ids[0] == c["doc_lo"] and ids[-1] == c["doc_hi"]
             assert len(ids) == c["count"]
             assert c["doc_lo"] > prev_hi  # disjoint ordered chunks

@@ -3,6 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_wand import multichunk_index  # noqa: F401  (fixture)
+
 
 @pytest.fixture(scope="module")
 def pdocs(spark):
@@ -66,11 +68,30 @@ def test_phrase_search_equals_scan(spark, tiny_corpus, tiny_index):
     change, not a semantics change). Also: a kept-token term missing from
     the lexicon proves zero matches (early exit), and an all-stopword
     phrase takes the scan fallback without error."""
+    root, _ = tiny_index
+    _check_phrase_search_equals_scan(spark, tiny_corpus, root)
+
+
+def test_phrase_search_equals_scan_multichunk(spark, tiny_corpus,
+                                              multichunk_index):
+    """The same on the chunk_size=8 index, where the phrase's terms span
+    several chunks, so their doc ids decode from many chunks' doc_lo."""
+    from nextsearch_api_spark.operators.query import IndexReader
+
+    toks = _check_phrase_search_equals_scan(spark, tiny_corpus,
+                                            multichunk_index)
+    n_chunks = (IndexReader(spark, multichunk_index).postings()
+                .where(F.col("term") == toks[0]).count())
+    assert n_chunks > 1, n_chunks
+
+
+def _check_phrase_search_equals_scan(spark, tiny_corpus, root):
+    """Body of the phrase-search parity tests over the index at ``root``;
+    returns the phrase's tokens."""
     from nextsearch_api_spark.operators.phrase import (
         phrase_match, phrase_search, term_doc_ids)
     from nextsearch_api_spark.operators.query import IndexReader
 
-    root, _ = tiny_index
     reader = IndexReader(spark, root)
 
     # pick a 2-gram that actually occurs: take one doc's first two kept-ish
@@ -100,6 +121,10 @@ def test_phrase_search_equals_scan(spark, tiny_corpus, tiny_index):
     # conjunctive intersection really is doc-id-only postings decode
     tdi = term_doc_ids(reader, [toks[0]]).collect()
     assert len(tdi) > 0 and all(r["term"] == toks[0] for r in tdi)
+    # one row per posting, each a real doc id
+    assert len({r["doc_id"] for r in tdi}) == len(tdi) \
+        == reader.term_dfs([toks[0]])[toks[0]]
+    assert {r["doc_id"] for r in tdi} <= set(doc2path)
 
     # kept-token term absent from the lexicon → empty, no corpus scan
     assert phrase_search(reader, tiny_corpus,
@@ -108,3 +133,4 @@ def test_phrase_search_equals_scan(spark, tiny_corpus, tiny_index):
     # all-stopword phrase → scan fallback (no index terms), still exact
     fb = phrase_search(reader, tiny_corpus, "the a", k=5)
     assert fb.columns == ["rank", "doc_id", "path", "n_occurrences"]
+    return toks

@@ -79,8 +79,8 @@ def test_batch_search_found_and_rank_are_scale_safe(spark, plan_env):
     first, second = _exchanges(plan)
     assert "hashpartitioning(doc_range#" in first, first
     inputs = set(re.findall(r"(\w+)#\d+", first.split("Arguments")[0]))
-    assert inputs <= {"doc_range", "term", "count", "tf_off", "dl_off",
-                      "blob"}, inputs
+    assert inputs <= {"doc_range", "term", "doc_lo", "count", "tf_off",
+                      "dl_off", "blob"}, inputs
     assert {"doc_range", "blob"} <= inputs, inputs
     assert "impact" not in plan.split(first)[0] + first
     assert "hashpartitioning(qid#" in second, second
@@ -394,7 +394,9 @@ def test_multi_prune_planner_soundness_randomized():
     import random
 
     from nextsearch_api_spark.config import BM25Params
-    from nextsearch_api_spark.operators.query import _plan_chunk_prune
+    from nextsearch_api_spark.operators.query import (
+        TermDfs, _plan_chunk_prune,
+    )
 
     params = BM25Params()
 
@@ -403,7 +405,6 @@ def test_multi_prune_planner_soundness_randomized():
             self.stats = {"impact_avgdl": 1.0, "avgdl": 1.0,
                           "k1": params.k1, "b": params.b}
             self._meta = meta
-            self._n_chunks = {t: len(c) for t, c in meta.items()}
 
         def chunk_meta(self, terms):
             return {t: self._meta[t] for t in terms if t in self._meta}
@@ -426,7 +427,8 @@ def test_multi_prune_planner_soundness_randomized():
             meta[t] = [(c[0], c[-1], max(im[d] for d in c)) for c in chunks]
         rd = _Reader(meta)
         qids, per_qid_terms, per_qid_k, widf = {}, {}, {}, {}
-        df_map = {t: len(imp[t]) for t in terms}
+        df_map = TermDfs({t: len(imp[t]) for t in terms},
+                         n_chunks={t: len(meta[t]) for t in terms})
         for qid in range(rng.randint(1, 4)):
             qt = rng.sample(terms, rng.randint(1, len(terms)))
             per_qid_terms[qid] = qt

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import IndexPaths
-from nextsearch_api_spark.functions.codec import decode_chunk
+from nextsearch_api_spark.functions.codec import decode_chunks_concat
 from nextsearch_api_spark.operators.build import build_index
 from nextsearch_api_spark.sources.corpus import generate_corpus, read_corpus, write_corpus
 
@@ -27,7 +27,9 @@ def _decoded_index(spark, root) -> dict:
     postings = spark.read.parquet(IndexPaths(root).postings).collect()
     out: dict = {}
     for r in sorted(postings, key=lambda r: (r["term"], r["doc_lo"])):
-        ids, tfs, dls = decode_chunk(r["blob"], r["tf_off"], r["dl_off"])
+        ids, tfs, dls = decode_chunks_concat(
+            [r["blob"]], [r["tf_off"]], [r["dl_off"]], [r["count"]],
+            [r["doc_lo"]])
         out.setdefault(r["term"], []).extend(zip(ids.tolist(), tfs.tolist(), dls.tolist()))
     with open(IndexPaths(root).stats) as f:
         stats = json.load(f)
@@ -134,9 +136,9 @@ def test_hot_term_skew_split(spark, corpus_path, tmp_path):
     assert len(hot) > 1  # split into multiple bounded chunks
     assert max(r["count"] for r in hot) <= 64
     hot.sort(key=lambda r: r["doc_lo"])
-    all_ids = np.concatenate([
-        decode_chunk(r["blob"], r["tf_off"], r["dl_off"])[0] for r in hot
-    ])
+    all_ids = decode_chunks_concat(
+        *([r[c] for r in hot]
+          for c in ("blob", "tf_off", "dl_off", "count", "doc_lo")))[0]
     assert np.all(np.diff(all_ids) > 0)
     # df from lexicon equals decoded length
     lex = spark.read.parquet(IndexPaths(root).lexicon)

@@ -263,6 +263,58 @@ def test_compaction_rows_match_token_oracle(spark, tmp_path):
     assert out2["gen"] == 2 and out2["N"] == out1["N"] + 1
 
 
+def test_update_without_tokens_supersedes_base_version(spark, tmp_path):
+    """A key re-streamed with content that keeps no token is an update: its
+    base version's docs row and postings are gone after compact_deltas, and
+    a query for one of its old terms no longer returns it. Only docs with
+    tokens are inserted, so N drops by one."""
+    from nextsearch_api_spark.config import IndexPaths
+    from nextsearch_api_spark.functions.text import kept_tokens_py
+    from nextsearch_api_spark.operators.compact import (
+        decode_postings_to_tokens,
+    )
+    from nextsearch_api_spark.operators.wand import WandEngine
+    from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA, read_corpus
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, stream_corpus_to_forward,
+    )
+
+    base_dir = str(tmp_path / "base")
+    write_corpus(generate_corpus(spark, 40, seed=42), base_dir,
+                 partition_by=None)
+    root = str(tmp_path / "idx")
+    build_index(spark, read_corpus(spark, base_dir), root)
+    paths = IndexPaths(root)
+    n_before = WandEngine(root).N
+    key = sorted(tuple(r) for r in read_corpus(spark, base_dir)
+                 .select("repo", "path", "commit", "lang", "content")
+                 .collect())[7]
+    old_terms = kept_tokens_py(key[4])
+    assert old_terms
+    old_id = (spark.read.parquet(paths.docs)
+              .where((F.col("repo") == key[0]) & (F.col("path") == key[1])
+                     & (F.col("commit") == key[2]))
+              .select("doc_id").collect()[0][0])
+
+    src = str(tmp_path / "upd_src")
+    spark.createDataFrame([(*key[:4], "... ;; ()")], CORPUS_SCHEMA) \
+        .write.parquet(src)
+    deltas = str(tmp_path / "upd")
+    stream_corpus_to_forward(spark, src, deltas, str(tmp_path / "upd_ck"),
+                             trigger_once=True).awaitTermination(120)
+    out = compact_deltas(spark, root, deltas)
+
+    assert out["N"] == n_before - 1
+    assert out["affected_terms"] == len(set(old_terms))
+    paths = IndexPaths(root)
+    docs = spark.read.parquet(paths.docs)
+    assert docs.where(F.col("doc_id") == old_id).count() == 0
+    assert decode_postings_to_tokens(spark.read.parquet(paths.postings)) \
+        .where(F.col("doc_id") == old_id).count() == 0
+    hits = WandEngine(root).search(old_terms[0], 100)["results"]
+    assert old_id not in {r["doc_id"] for r in hits}
+
+
 def test_ingest_flip_then_reload_hydrates_new_generation(spark, tmp_path):
     """An ingest flip writes the build's serving layouts (doc-id-sorted
     docs, prefix-sorted suggest), and Engine.reload drops the old footer
