@@ -31,7 +31,7 @@ SUGGEST_K_MIN, SUGGEST_K_MAX = 1, 10
 MIN_TOKEN_LEN = 2
 
 # Posting-list physical layout (north-rule extension — the reference stores raw
-# uncompressed u32 pairs, lexicon.cpp:122-126; we chunk and compress, format v5
+# uncompressed u32 pairs, lexicon.cpp:122-126; we chunk and compress, format v6
 # in functions/codec.py).
 CHUNK_SIZE = 4096          # postings per chunk row (the skew-split unit)
 # (r1 stored intra-chunk skip-doc lists too; dropped in format v3 — the batch
@@ -108,16 +108,6 @@ class BuildConfig:
 
     bm25: BM25Params = field(default_factory=BM25Params)
     chunk_size: int = CHUNK_SIZE
-    # Shuffle partitions of the compactions' re-chunker
-    # (operators/build.py:build_posting_chunks), which hash-partitions token
-    # rows by (term, doc_id div doc_block): a hot term's postings spread
-    # over as many partitions as it has doc blocks.
-    postings_partitions: int | None = None  # None → spark.sql.shuffle.partitions
-    id_partitions: int | None = None        # doc-id assignment range partitions
-    # deterministic skew salt of that shuffle; a hot term spreads over
-    # ~max_doc/doc_block partitions
-    doc_block: int = 65536
-    build_suggest: bool = True
     # explicit segment count for the no-shuffle postings build (None →
     # follow input splits); uses repartitionByRange(doc_id) so segment
     # doc-ranges stay disjoint

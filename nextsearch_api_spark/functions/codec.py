@@ -1,4 +1,5 @@
-"""Posting-list codec, format v5 — the only module that knows a blob's layout.
+"""Posting-list codec, postings format v6 — the only module that knows a
+blob's layout.
 
 The reference stores raw interleaved u32 (docId, tf) pairs
 (src/lexicon.cpp:122-126). Here each postings row holds one chunk of up to
@@ -39,9 +40,11 @@ and read through 64-bit words: the decoder gathers two aligned words per
 value (the one holding its first bit and the next, for a spill).
 
 The doc-stat carrier rows of the segment build (term '', see
-operators/build.py:_docstat_recordbatch) reuse the chunk schema with their
-own blob, ``int64 doc_ids ‖ int32 doc_lens`` split at ``tf_off``
-(:func:`pack_doc_stats`, :func:`unpack_doc_stats`).
+operators/build.py:_docstat_recordbatch) reuse the chunk schema: doc-id
+range in ``doc_lo``/``doc_hi``, doc count in ``count`` and their own blob,
+``int64 doc_ids ‖ int32 doc_lens`` split at ``tf_off``
+(:func:`pack_doc_stats`, :func:`unpack_doc_stats`). They never reach the
+postings table.
 """
 
 from __future__ import annotations

@@ -24,12 +24,14 @@ Spark-first re-design (NOT a port):
   * serving layout — the chunk rows (compressed postings, a fraction of
     corpus bytes) are range-partitioned + sorted by (term, doc_lo) in
     bounded row groups; docs by doc_id; lexicon and suggest by key.
-  * postings format v5 — per chunk: a blob of doc-id gaps from doc_lo, tf
-    and frame-of-reference doc_len (functions/codec.py owns the layout),
-    float32 block-max impact (functions/scoring.py:bm25_impact) — the
+  * postings format v6 — per chunk: a blob of doc-id gaps from doc_lo, tf
+    and frame-of-reference doc_len (functions/codec.py owns the layout) and
+    the float32 block-max impact (functions/scoring.py:bm25_impact), the
     per-chunk bound the batch tier's chunk prune plans with. avgdl is only
-    known after the pass, so chunks carry a (tf, dl) Pareto frontier that
-    finalize_max_impact turns into the attained max.
+    known after the pass, so the builders emit chunks without impacts and
+    write_postings_sorted, the one postings writer, computes each chunk's
+    max from its own blob after the sort — for every row it publishes,
+    the rows a compaction copies through included.
   * compaction re-chunks token rows with build_posting_chunks: a hash
     shuffle by (term, doc_id div doc_block), a deterministic doc-range salt
     that splits a hot term across partitions while each block stays whole.
@@ -49,15 +51,14 @@ import time
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from nextsearch_api_spark.config import BuildConfig, IndexPaths
+from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
 from nextsearch_api_spark.functions.scoring import bm25_impact
 from nextsearch_api_spark.functions.text import arrow_kept_tokens
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
@@ -69,35 +70,23 @@ TOKENS_SCHEMA = StructType([
     StructField("doc_len", IntegerType(), False),
 ])
 
-POSTINGS_SCHEMA = StructType([
+# chunk rows as both builders emit them; write_postings_sorted adds each
+# row's max_impact and publishes the postings table's columns
+CHUNKS_SCHEMA = StructType([
     StructField("term", StringType(), False),
     StructField("doc_lo", LongType(), False),
     StructField("doc_hi", LongType(), False),
     StructField("count", IntegerType(), False),
-    StructField("sum_tf", LongType(), False),
-    StructField("max_tf", IntegerType(), False),
-    StructField("min_dl", IntegerType(), False),
-    StructField("max_impact", FloatType(), False),
     StructField("tf_off", IntegerType(), False),
     StructField("dl_off", IntegerType(), False),
     StructField("blob", BinaryType(), False),
 ])
 
-# deferred-impact build output (the postings pass, avgdl unknown at tokenize
-# time): POSTINGS_SCHEMA + per-chunk (tf, dl) Pareto frontier; the frontier
-# columns are consumed by finalize_max_impact and never reach disk
-POSTINGS_BUILD_SCHEMA = StructType(
-    POSTINGS_SCHEMA.fields + [
-        StructField("fr_tf", ArrayType(IntegerType(), False), False),
-        StructField("fr_dl", ArrayType(IntegerType(), False), False),
-    ]
-)
-
 _KEY_SEP = "\x01"
 
 # bump when the on-disk chunk/lexicon format changes — forces resume logic to
 # rebuild indexes created by older code
-FORMAT_VERSION = 5
+FORMAT_VERSION = 6
 
 
 def _parquet_rows(path: str) -> int:
@@ -344,112 +333,40 @@ def append_doc_len(df: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------------------- chunks --
 
-def _pa_postings_schema(frontier: bool = False):
-    import pyarrow as pa
-    fields = [
-        ("term", pa.string()),
-        ("doc_lo", pa.int64()),
-        ("doc_hi", pa.int64()),
-        ("count", pa.int32()),
-        ("sum_tf", pa.int64()),
-        ("max_tf", pa.int32()),
-        ("min_dl", pa.int32()),
-        ("max_impact", pa.float32()),
-        ("tf_off", pa.int32()),
-        ("dl_off", pa.int32()),
-        ("blob", pa.binary()),
-    ]
-    if frontier:
-        fields += [("fr_tf", pa.list_(pa.int32())),
-                   ("fr_dl", pa.list_(pa.int32()))]
-    return pa.schema(fields)
+_PA_CHUNKS_SCHEMA = pa.schema([
+    ("term", pa.string()),
+    ("doc_lo", pa.int64()),
+    ("doc_hi", pa.int64()),
+    ("count", pa.int32()),
+    ("tf_off", pa.int32()),
+    ("dl_off", pa.int32()),
+    ("blob", pa.binary()),
+])
 
 
-def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen,
-                        k1=None, b=None, avgdl32=None):
+def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen):
     """Vectorized chunk emission from (term-code, doc)-sorted arrays and
-    chunk boundaries [cst, cen), which tile rows [0, cen[-1]): whole-batch
-    impact computation, reduceat aggregates, and one
+    chunk boundaries [cst, cen), which tile rows [0, cen[-1]): one
     functions/codec.py:encode_chunks call for every blob of the batch.
-
-    ``avgdl32=None`` = deferred-impact mode (the segment build path, r6):
-    avgdl is not known yet — the corpus is tokenized exactly ONCE, in this
-    pass, and avgdl is derived from it afterwards. Instead of max_impact the
-    batch carries each chunk's Pareto frontier of (tf, dl) pairs (points not
-    dominated by another point with tf' ≥ tf and dl' ≤ dl). BM25 impact is
-    increasing in tf and decreasing in dl, so for ANY avgdl the attained
-    chunk max lies on the frontier; ``finalize_max_impact`` evaluates it
-    with the same float32 arithmetic once avgdl exists. (Stepwise f32
-    rounding is monotone in dl and can invert the tf direction by ~1 ulp,
-    i.e. the finalized value may understate the true f32 max by ~1e-7
-    relative — two orders of magnitude inside the 1e-5 slack the chunk
-    prefilter already applies, operators/query.py _CHUNK_PRUNE_SLACK.)"""
-    import pyarrow as pa
+    The rows carry no impact: write_postings_sorted computes each chunk's
+    max_impact from its blob once the index's avgdl is known."""
     import pyarrow.compute as pc
 
     from nextsearch_api_spark.functions.codec import encode_chunks
 
     m = int(cen[-1])  # rows covered by chunks (any held-back tail excluded)
     blobs, tfo, dlo = encode_chunks(ids[:m], tfs[:m], dls[:m], cst)
-
-    sum_tf = np.add.reduceat(tfs[:m], cst)
-    max_tf = np.maximum.reduceat(tfs[:m], cst)
-    # min_dl: with max_tf it yields a sound per-chunk impact upper bound for
-    # ANY (k1, b, avgdl), also after stats drift (incremental compaction
-    # changes avgdl) has made the stored build-time max_impact stale
-    min_dl = np.minimum.reduceat(dls[:m], cst)
-
-    fr_off = fr_tf_vals = fr_dl_vals = None
-    if avgdl32 is not None:
-        imp_all = bm25_impact(tfs[:m], dls[:m], k1, b, avgdl32)
-        max_imp = np.maximum.reduceat(imp_all, cst)
-    else:
-        # per-chunk Pareto frontier, one vectorized pass: sort rows by
-        # (chunk, tf desc, dl asc); a row is on the frontier iff its dl is
-        # strictly below the running per-chunk min (rows before it have
-        # ≥ tf). Equal (tf, dl) duplicates collapse to one point.
-        cid = np.searchsorted(cen, np.arange(m), side="right")
-        order = np.lexsort((dls[:m], -tfs[:m], cid))
-        cs = cid[order]
-        ds = dls[:m][order]
-        gmin = pd.Series(ds).groupby(cs).cummin().to_numpy()
-        first = np.empty(m, dtype=bool)
-        first[0] = True
-        first[1:] = cs[1:] != cs[:-1]
-        prev = np.empty(m, dtype=ds.dtype)
-        prev[0] = 0
-        prev[1:] = gmin[:-1]
-        keep = first | (ds < prev)
-        counts = np.bincount(cs[keep], minlength=len(cst))
-        fr_off = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-        kept = order[keep]
-        fr_tf_vals = tfs[:m][kept].astype(np.int32)
-        fr_dl_vals = dls[:m][kept].astype(np.int32)
-        max_imp = np.zeros(len(cst), dtype=np.float32)  # finalized later
-
-    term_out = pc.take(dictionary, pa.array(codes[cst].astype(np.int32)))
-    arrays = [
-        term_out,
-        pa.array(ids[cst]),
-        pa.array(ids[cen - 1]),
-        pa.array((cen - cst).astype(np.int32)),
-        pa.array(sum_tf.astype(np.int64)),
-        pa.array(max_tf.astype(np.int32)),
-        pa.array(min_dl.astype(np.int32)),
-        pa.array(max_imp.astype(np.float32)),
-        pa.array(tfo),
-        pa.array(dlo),
-        blobs,
-    ]
-    if avgdl32 is None:
-        arrays += [
-            pa.ListArray.from_arrays(pa.array(fr_off),
-                                     pa.array(fr_tf_vals, type=pa.int32())),
-            pa.ListArray.from_arrays(pa.array(fr_off),
-                                     pa.array(fr_dl_vals, type=pa.int32())),
-        ]
     return pa.RecordBatch.from_arrays(
-        arrays, schema=_pa_postings_schema(frontier=avgdl32 is None),
+        [
+            pc.take(dictionary, pa.array(codes[cst].astype(np.int32))),
+            pa.array(ids[cst]),
+            pa.array(ids[cen - 1]),
+            pa.array((cen - cst).astype(np.int32)),
+            pa.array(tfo),
+            pa.array(dlo),
+            blobs,
+        ],
+        schema=_PA_CHUNKS_SCHEMA,
     )
 
 
@@ -468,16 +385,14 @@ SUGGEST_ROWS_PER_FILE = 2_000_000
 
 def _write_range_sorted(df: DataFrame, out_path: str, keys: list[str],
                         row_group_bytes: int, partitions: int,
-                        then: tuple[str, ...] = (), post_sort=None) -> None:
+                        then: tuple[str, ...] = ()) -> None:
     """Range-partition by ``keys``, sort by ``keys`` + ``then`` and write
     with bounded row groups: files cover disjoint key ranges and every row
     group's footer min/max of the leading key is a tight range, so a keyed
     read selects only the row groups holding its keys."""
-    out = (df.repartitionByRange(partitions, *keys)
-           .sortWithinPartitions(*keys, *then))
-    if post_sort is not None:
-        out = post_sort(out)
-    (out.write.mode("overwrite")
+    (df.repartitionByRange(partitions, *keys)
+        .sortWithinPartitions(*keys, *then)
+        .write.mode("overwrite")
         .option("parquet.block.size", row_group_bytes)
         .parquet(out_path))
 
@@ -486,34 +401,78 @@ def _serving_partitions(spark: SparkSession) -> int:
     return min(64, max(8, int(spark.conf.get("spark.sql.shuffle.partitions"))))
 
 
-def write_postings_sorted(chunks: DataFrame, out_path: str,
-                          post_sort=None) -> None:
-    """Write chunk rows range-partitioned + sorted by (term, doc_lo) in
-    bounded row groups: tight per-row-group term min/max stats → a term
-    fetch reads only the few row groups actually holding the term.
+def _block_max_impact(avgdl: float, params: BM25Params):
+    """Column expression over a chunk row's (blob, tf_off, dl_off, count,
+    doc_lo) → the chunk's block-max impact: the float32 maximum of
+    functions/scoring.py:bm25_impact over its decoded postings at
+    ``avgdl`` — an ATTAINED query-time impact, which the batch tier's chunk
+    prune (operators/query.py:_plan_chunk_prune) needs to stay exact. One
+    Arrow UDF call per batch: the blobs arrive as one zero-copy Arrow
+    array, decode in one decode_chunks_concat call and reduce with one
+    maximum.reduceat; only the float column goes back."""
+    from pyspark.sql.functions import arrow_udf
 
-    ``post_sort``: optional order-preserving DataFrame transform applied
-    AFTER the sort, before the write (the deferred-impact finalize) — placed
-    here so the range-sampling pass and the shuffle both read the cheap
-    cached input and the transform runs exactly once, on the sorted
-    stream.
+    k1 = np.float32(params.k1)
+    b = np.float32(params.b)
+    # avgdl == 0 ⇔ no doc has tokens ⇔ no chunks exist; the guard only
+    # keeps the f32 math finite on that empty plan
+    avgdl32 = np.float32(avgdl if avgdl > 0 else 1.0)
+
+    @arrow_udf("float")
+    def block_max(blob: pa.Array, tf_off: pa.Array, dl_off: pa.Array,
+                  count: pa.Array, doc_lo: pa.Array) -> pa.Array:
+        from nextsearch_api_spark.functions.codec import decode_chunks_concat
+
+        counts = count.to_numpy(zero_copy_only=False).astype(np.int64)
+        if not counts.size:
+            return pa.array([], type=pa.float32())
+        _, tfs, dls = decode_chunks_concat(blob, tf_off, dl_off, counts,
+                                           doc_lo)
+        imp = bm25_impact(tfs, dls, k1, b, avgdl32)
+        return pa.array(np.maximum.reduceat(imp, np.cumsum(counts) - counts))
+
+    return block_max("blob", "tf_off", "dl_off", "count", "doc_lo")
+
+
+def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
+                          params: BM25Params) -> None:
+    """Publish chunk rows as the postings table: range-partitioned + sorted
+    by (term, doc_lo) in bounded row groups (tight per-row-group term
+    min/max stats → a term fetch reads only the few row groups actually
+    holding the term), each row with its block-max ``max_impact`` at the
+    index's ``avgdl`` and ``params``' k1/b.
 
     Every postings writer (build_index, compact_postings, compact_deltas)
-    goes through here, so this is where the chunk invariant is checked: per
-    term, chunk doc ranges are disjoint, hence one term's decoded doc ids
-    are unique, which the scoring kernel relies on. After the write one
-    aggregate over the (term, doc_lo, doc_hi) columns counts the chunks
-    whose doc_lo is at most the previous doc_hi of the same term, and any
-    such chunk raises ValueError — before the caller records the stage or
-    flips a generation."""
+    goes through here, so this is the one place ``max_impact`` is computed,
+    for every row written — copied-through chunk rows of a compaction
+    included, whose old value was computed at an older avgdl. It runs after
+    the sort, so the range-sampling pass and the shuffle read only the
+    chunk columns and each blob is decoded once. Callers persist
+    ``chunks`` when it is expensive to recompute: repartitionByRange
+    samples its input with an extra execution.
+
+    This is also where the chunk invariant is checked: per term, chunk doc
+    ranges are disjoint, hence one term's decoded doc ids are unique, which
+    the scoring kernel relies on. After the write one aggregate over the
+    (term, doc_lo, doc_hi) columns counts the chunks whose doc_lo is at
+    most the previous doc_hi of the same term, and any such chunk raises
+    ValueError — before the caller records the stage or flips a
+    generation."""
     from pyspark.sql import Window
 
-    _write_range_sorted(
-        chunks, out_path, ["term", "doc_lo"], POSTINGS_ROW_GROUP_BYTES,
-        _serving_partitions(chunks.sparkSession), post_sort=post_sort)
+    spark = chunks.sparkSession
+    (chunks.select(*CHUNKS_SCHEMA.fieldNames())
+        .repartitionByRange(_serving_partitions(spark), "term", "doc_lo")
+        .sortWithinPartitions("term", "doc_lo")
+        .select("term", "doc_lo", "doc_hi", "count",
+                _block_max_impact(avgdl, params).alias("max_impact"),
+                "tf_off", "dl_off", "blob")
+        .write.mode("overwrite")
+        .option("parquet.block.size", POSTINGS_ROW_GROUP_BYTES)
+        .parquet(out_path))
     prev_hi = F.lag("doc_hi").over(
         Window.partitionBy("term").orderBy("doc_lo"))
-    nbad = (chunks.sparkSession.read.parquet(out_path)
+    nbad = (spark.read.parquet(out_path)
             .select("doc_lo", prev_hi.alias("prev_hi"))
             .where(F.col("doc_lo") <= F.col("prev_hi"))
             .count())
@@ -534,17 +493,15 @@ def write_docs_sorted(docs: DataFrame, out_path: str) -> None:
 
 
 def write_lexicon(postings: DataFrame, out_path: str) -> None:
-    """Aggregate chunk rows into the lexicon — per term df (posting count),
-    cf, n_chunks and max_impact — written range-partitioned + sorted by
-    term, so footer min/max stats confine a term lookup to its row group
-    (the reference's barrel/offset seek analog). persist():
-    repartitionByRange samples its input with an extra execution, which
-    would otherwise run the aggregate twice."""
+    """Aggregate chunk rows into the lexicon — per term df (posting count)
+    and n_chunks — written range-partitioned + sorted by term, so footer
+    min/max stats confine a term lookup to its row group (the reference's
+    barrel/offset seek analog). persist(): repartitionByRange samples its
+    input with an extra execution, which would otherwise run the aggregate
+    twice."""
     lex = postings.groupBy("term").agg(
         F.sum("count").cast("long").alias("df"),
-        F.sum("sum_tf").cast("long").alias("cf"),
         F.count("*").cast("int").alias("n_chunks"),
-        F.max("max_impact").alias("max_impact"),
     ).persist()
     try:
         (lex.repartitionByRange(64, "term").sortWithinPartitions("term")
@@ -571,13 +528,13 @@ def write_suggest_sorted(sug: DataFrame, out_path: str) -> None:
         sug.unpersist()
 
 
-# Doc-stat carrier rows (segment build, deferred-impact mode): the fused
-# tokenize pass is the ONLY place doc_len exists, so each task packs its
-# (doc_id, doc_len) pairs — zero-token docs excluded — into chunk-schema rows
-# with term '' (real terms are ≥ 2 chars, so '' can never collide). Packing
-# ~64k docs per row keeps the stat rows a vanishing fraction of the chunk
-# table (one row per ~64k docs vs one chunk row per ≤ chunk_size postings);
-# one row per doc would INVERT that ratio at 10^12 docs. The blob layout is
+# Doc-stat carrier rows (segment build): the fused tokenize pass is the ONLY
+# place doc_len exists, so each task packs its (doc_id, doc_len) pairs —
+# zero-token docs excluded — into chunk-schema rows with term '' (real terms
+# are ≥ 2 chars, so '' can never collide). Packing ~64k docs per row keeps
+# the stat rows a vanishing fraction of the chunk table (one row per ~64k
+# docs vs one chunk row per ≤ chunk_size postings); one row per doc would
+# INVERT that ratio at 10^12 docs. The blob layout is
 # functions/codec.py:pack_doc_stats, split point in tf_off.
 _DOCSTAT_PACK = 65536
 
@@ -588,46 +545,33 @@ DOCLEN_SCHEMA = StructType([
 
 
 def _docstat_recordbatch(stat_ids: list, stat_dls: list):
-    import pyarrow as pa
-
     from nextsearch_api_spark.functions.codec import pack_doc_stats
 
     sids = np.concatenate(stat_ids)
     sdls = np.concatenate(stat_dls).astype(np.int32)
     o = np.argsort(sids, kind="stable")  # file order is already ~sorted
     sids, sdls = sids[o], sdls[o]
-    cols: dict[str, list] = {k: [] for k in
-                             ("lo", "hi", "n", "tot", "off", "blob")}
+    cols: dict[str, list] = {k: [] for k in ("lo", "hi", "n", "off", "blob")}
     for s in range(0, len(sids), _DOCSTAT_PACK):
         e = min(s + _DOCSTAT_PACK, len(sids))
         cols["lo"].append(int(sids[s]))
         cols["hi"].append(int(sids[e - 1]))
         cols["n"].append(e - s)
-        cols["tot"].append(int(sdls[s:e].sum()))
         blob, split = pack_doc_stats(sids[s:e], sdls[s:e])
         cols["off"].append(split)
         cols["blob"].append(blob)
     k = len(cols["lo"])
-    empty_list = pa.ListArray.from_arrays(
-        pa.array(np.zeros(k + 1, dtype=np.int32)),
-        pa.array([], type=pa.int32()))
     return pa.RecordBatch.from_arrays(
         [
             pa.array([""] * k, type=pa.string()),
             pa.array(cols["lo"], type=pa.int64()),
             pa.array(cols["hi"], type=pa.int64()),
             pa.array(cols["n"], type=pa.int32()),
-            pa.array(cols["tot"], type=pa.int64()),
-            pa.array([0] * k, type=pa.int32()),
-            pa.array([0] * k, type=pa.int32()),
-            pa.array([0.0] * k, type=pa.float32()),
             pa.array(cols["off"], type=pa.int32()),
             pa.array([0] * k, type=pa.int32()),
             pa.array(cols["blob"], type=pa.binary()),
-            empty_list,
-            empty_list,
         ],
-        schema=_pa_postings_schema(frontier=True),
+        schema=_PA_CHUNKS_SCHEMA,
     )
 
 
@@ -651,43 +595,6 @@ def decode_doclen_rows(stat_rows: DataFrame) -> DataFrame:
             )
 
     return stat_rows.select("blob", "tf_off").mapInArrow(go, DOCLEN_SCHEMA)
-
-
-def finalize_max_impact(chunks: DataFrame, avgdl: float,
-                        cfg: BuildConfig) -> DataFrame:
-    """Deferred-impact chunks → final POSTINGS_SCHEMA: per-chunk max_impact
-    evaluated over the stored (tf, dl) Pareto frontier with the now-known
-    avgdl, frontier columns dropped. Same float32 arithmetic as the eager
-    path (and as query-time decode), so the stored value remains an ATTAINED
-    query-time impact — the exactness precondition of the batch tier's chunk
-    prefilter (operators/query.py:_plan_chunk_prune); verified bit-identical
-    to the eager path's output on a 2k-doc corpus. A vectorized pandas_udf
-    over ONLY the two frontier columns — the blob bytes (the bulk of every
-    chunk row) never cross the JVM↔Python boundary."""
-    from pyspark.sql.functions import pandas_udf
-
-    k1 = np.float32(cfg.bm25.k1)
-    b = np.float32(cfg.bm25.b)
-    # avgdl == 0 ⇔ no doc has tokens ⇔ no real chunks exist; the guard only
-    # keeps the f32 math finite on that empty plan
-    avgdl32 = np.float32(avgdl if avgdl > 0 else 1.0)
-
-    @pandas_udf("float")
-    def _frontier_max(fr_tf: pd.Series, fr_dl: pd.Series) -> pd.Series:
-        lens = fr_tf.str.len().to_numpy(dtype=np.int64)
-        if len(lens) == 0:
-            return pd.Series(np.empty(0, dtype=np.float32))
-        if not (lens > 0).all():  # every chunk has ≥ 1 posting
-            raise ValueError("chunk row with empty impact frontier")
-        imp = bm25_impact(np.concatenate(fr_tf.to_numpy()),
-                          np.concatenate(fr_dl.to_numpy()), k1, b, avgdl32)
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        return pd.Series(np.maximum.reduceat(imp, starts).astype(np.float32))
-
-    out_cols = [f.name for f in POSTINGS_SCHEMA.fields]
-    return (chunks.withColumn("max_impact",
-                              _frontier_max("fr_tf", "fr_dl"))
-            .select(*out_cols))
 
 
 def _chunk_bounds(codes: np.ndarray, parts: np.ndarray, chunk_size: int,
@@ -740,12 +647,11 @@ def build_posting_chunks_segment(corpus_ids: DataFrame,
     term (operators/compact.py: per-term metadata, not postings, drives the
     decision; its re-chunker is the shuffle-based build_posting_chunks).
 
-    Deferred impacts: avgdl is not known until this pass has tokenized the
-    corpus, so chunks carry a (tf, dl) Pareto frontier instead of
-    max_impact (see _chunks_recordbatch) and each task additionally emits
-    doc-stat carrier rows (term '', see _docstat_recordbatch) from which
-    build_index derives the doclen table, N, total_len and avgdl before
-    finalize_max_impact evaluates the stored frontiers."""
+    Impacts: avgdl is not known until this pass has tokenized the corpus,
+    so chunk rows carry none. Each task additionally emits doc-stat carrier
+    rows (term '', see _docstat_recordbatch) from which build_index derives
+    the doclen table, N, total_len and avgdl; write_postings_sorted then
+    computes each chunk's max_impact from its blob."""
     chunk_size = cfg.chunk_size
 
     def builder(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
@@ -810,17 +716,21 @@ def build_posting_chunks_segment(corpus_ids: DataFrame,
         # explicit segment sizing; range partitioning by doc_id keeps the
         # per-segment doc ranges disjoint (the correctness invariant)
         src = src.repartitionByRange(cfg.segment_partitions, "doc_id")
-    return src.mapInArrow(builder, schema=POSTINGS_BUILD_SCHEMA)
+    return src.mapInArrow(builder, schema=CHUNKS_SCHEMA)
 
 
-def build_posting_chunks(tokens: DataFrame, avgdl: float,
-                         cfg: BuildConfig) -> DataFrame:
+# doc-id block of the re-chunker's shuffle salt: a hot term spreads over
+# ~max_doc/DOC_BLOCK partitions
+DOC_BLOCK = 65536
+
+
+def build_posting_chunks(tokens: DataFrame, cfg: BuildConfig) -> DataFrame:
     """tokens (doc_id, term, tf, doc_len) → chunked, compressed posting rows.
     The compactions' re-chunker (operators/compact.py, streaming/ingest.py):
     the only builder whose input is token rows rather than content.
 
     Skew handling: hash-partition by (term, doc_block) where doc_block =
-    doc_id div cfg.doc_block — a DETERMINISTIC salt derived from doc ranges.
+    doc_id div DOC_BLOCK — a DETERMINISTIC salt derived from doc ranges.
     A hot term's postings spread across as many partitions as it has doc
     blocks, while each (term, block)'s rows stay together and doc ranges of
     different blocks never overlap — so every partition emits independent,
@@ -828,13 +738,7 @@ def build_posting_chunks(tokens: DataFrame, avgdl: float,
     to repartitionByRange this removes the range partitioner's sampling scan
     (a full extra pass over the token stream) and makes the physical layout
     reproducible run-to-run."""
-    spark = tokens.sparkSession
-    P = cfg.postings_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    k1 = np.float32(cfg.bm25.k1)
-    b = np.float32(cfg.bm25.b)
-    avgdl32 = np.float32(avgdl)
+    P = int(tokens.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     chunk_size = cfg.chunk_size
 
     def builder(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
@@ -868,8 +772,7 @@ def build_posting_chunks(tokens: DataFrame, avgdl: float,
             if not len(cst):
                 return None, leftover
             rb = _chunks_recordbatch(enc.dictionary, codes, ids,
-                                     tfs, dls, cst, cen,
-                                     k1, b, avgdl32)
+                                     tfs, dls, cst, cen)
             return rb, leftover
 
         buf: "pa.Table | None" = None
@@ -889,10 +792,10 @@ def build_posting_chunks(tokens: DataFrame, avgdl: float,
                 yield out_rb
 
     return (
-        tokens.withColumn("_blk", F.floor(F.col("doc_id") / cfg.doc_block))
+        tokens.withColumn("_blk", F.floor(F.col("doc_id") / DOC_BLOCK))
         .repartition(P, "term", "_blk")
         .sortWithinPartitions("term", "doc_id")
-        .mapInArrow(builder, schema=POSTINGS_SCHEMA)
+        .mapInArrow(builder, schema=CHUNKS_SCHEMA)
     )
 
 
@@ -978,7 +881,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # build's ONLY tokenize and derives doc_len/avgdl itself (a second
         # tokenize here to learn avgdl early measured 11 s of the 17 s
         # 8-core ids stage at 400k docs, DRAM-bandwidth-bound).
-        ids = assign_doc_ids(corpus, cfg.id_partitions).select(
+        ids = assign_doc_ids(corpus).select(
             "doc_id",
             F.substring(
                 F.sha2(F.concat_ws("", "repo", "path", "commit"), 256), 1, 16
@@ -994,11 +897,11 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     def stage_postings() -> dict:
         # THE corpus tokenize (the only one in the build, r6): the fused
-        # builder runs in deferred-impact mode — chunks carry (tf, dl)
-        # Pareto frontiers plus doc-stat carrier rows. The doclen write is
-        # the first action (populating the persist); N/total_len/avgdl come
-        # from a footer-cheap aggregate over it; finalize_max_impact then
-        # turns frontiers into attained per-chunk maxes with that avgdl.
+        # builder emits chunk rows without impacts plus doc-stat carrier
+        # rows. The doclen write is the first action (populating the
+        # persist); N/total_len/avgdl come from a footer-cheap aggregate
+        # over it; write_postings_sorted then computes every chunk's
+        # max_impact with that avgdl.
         from pyspark import StorageLevel
         ids = spark.read.parquet(ids_path).select("doc_id", "content", "seg")
         raw = build_posting_chunks_segment(ids, cfg).persist(
@@ -1023,13 +926,10 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
             # Chunk ROWS are shuffled here (compressed postings, a fraction
             # of corpus bytes), never token rows — the build itself stays
             # no-shuffle. The raw cache (populated by the doclen write)
-            # feeds the range-sampling pass and the shuffle; finalize runs
-            # post-sort so blobs stay cached exactly once (a second
-            # finalized-side persist measured +30 s at 2 cores — one full
-            # extra serialize of the blob bytes).
+            # feeds the range-sampling pass and the shuffle.
             write_postings_sorted(
-                raw.where(F.col("term") != ""), paths.postings,
-                post_sort=lambda df: finalize_max_impact(df, avgdl, cfg))
+                raw.where(F.col("term") != ""), paths.postings, avgdl,
+                cfg.bm25)
         finally:
             # doclen + postings are on disk: the cache is fully consumed
             raw.unpersist(blocking=False)
@@ -1045,13 +945,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         im = runner.metrics["postings"]
         N, total_len = int(im["N"]), int(im["total_len"])
         avgdl = float(total_len) / N if N else 0.0
-        # impact_avgdl: the avgdl every chunk's stored f32 impacts (max_impact)
-        # were computed with. While it equals the serving avgdl, stored chunk
-        # maxes are ATTAINED query-time impacts — the batch tier's chunk
-        # prefilter (operators/query.py) relies on that; incremental ingest
-        # drops the marker when generations mix avgdls.
         stats = {"N": N, "avgdl": avgdl, "total_len": total_len,
-                 "impact_avgdl": avgdl,
                  "k1": cfg.bm25.k1, "b": cfg.bm25.b,
                  "format": FORMAT_VERSION, "built_at": time.time()}
         with open(paths.stats, "w") as f:
@@ -1107,14 +1001,13 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
     if _docs_err:
         raise _docs_err[0]
 
-    if cfg.build_suggest:
-        def stage_suggest() -> dict:
-            from nextsearch_api_spark.operators.autocomplete import build_suggest
-            write_suggest_sorted(build_suggest(spark.read.parquet(paths.lexicon)),
-                                 paths.suggest)
-            return {"rows": _parquet_rows(paths.suggest)}
+    def stage_suggest() -> dict:
+        from nextsearch_api_spark.operators.autocomplete import build_suggest
+        write_suggest_sorted(build_suggest(spark.read.parquet(paths.lexicon)),
+                             paths.suggest)
+        return {"rows": _parquet_rows(paths.suggest)}
 
-        runner.run("suggest", stage_suggest, output=paths.suggest)
+    runner.run("suggest", stage_suggest, output=paths.suggest)
 
     manifest.data["completed_at"] = time.time()
     manifest.save()

@@ -11,11 +11,16 @@ fragmentation). This operator consolidates them:
      with build_posting_chunks, the shuffle-based builder over token rows
      (hash by (term, doc_block), doc-ordered, skew-safe),
   3. union with the untouched chunks, write postings + lexicon as a new
-     generation and publish both with one atomic pointer flip.
+     generation and publish both with one atomic pointer flip. The postings
+     writer (operators/build.py:write_postings_sorted) computes every
+     written chunk's max_impact from its blob with the k1/b and avgdl
+     stored in stats.json.
 
-Cost is proportional to the fragmented fraction, not the index size — the
-hot terms that dominate postings bytes are usually NOT fragmented (they fill
-whole chunks in every partition), so compaction touches the long tail.
+The decode to token rows and the re-chunk are proportional to the
+fragmented fraction, not the index size — the hot terms that dominate
+postings bytes are usually NOT fragmented (they fill whole chunks in every
+partition), so compaction re-chunks the long tail. Computing max_impact
+decodes the tf and doc_len streams of every chunk row written.
 
 The same decode → re-chunk round trip is the delta merge of streamed docs
 (streaming/ingest.py:compact_deltas), which also uses ``chunks_holding`` to
@@ -26,7 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
@@ -34,20 +38,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nextsearch_api_spark.config import BuildConfig, IndexPaths
+from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
 from nextsearch_api_spark.operators.build import (
-    TOKENS_SCHEMA, build_posting_chunks, write_lexicon, write_postings_sorted,
-    _parquet_rows,
+    CHUNKS_SCHEMA, TOKENS_SCHEMA, build_posting_chunks, write_lexicon,
+    write_postings_sorted, _parquet_rows,
 )
-
-
-def with_persisted_bm25(cfg: BuildConfig, stats: dict) -> BuildConfig:
-    """``cfg`` with the index's PERSISTED k1/b (stats.json). Re-chunking
-    recomputes max_impact, and the caller's defaults would under-estimate
-    chunk upper bounds and can drop true top-k results (ADVICE r1)."""
-    return replace(cfg, bm25=replace(
-        cfg.bm25, k1=float(stats.get("k1", cfg.bm25.k1)),
-        b=float(stats.get("b", cfg.bm25.b))))
 
 
 def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
@@ -110,7 +105,6 @@ def compact_postings(spark: SparkSession, index_root: str,
     paths = IndexPaths(index_root)
     with open(paths.stats) as f:
         stats = json.load(f)
-    cfg = with_persisted_bm25(cfg, stats)
 
     lex = spark.read.parquet(paths.lexicon)
     frag_terms = lex.where(
@@ -123,16 +117,15 @@ def compact_postings(spark: SparkSession, index_root: str,
 
     postings = spark.read.parquet(paths.postings)
     frag = postings.join(F.broadcast(frag_terms), "term", "left_semi")
-    keep = postings.join(F.broadcast(frag_terms), "term", "left_anti")
+    keep = (postings.select(*CHUNKS_SCHEMA.fieldNames())
+            .join(F.broadcast(frag_terms), "term", "left_anti"))
 
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path, next_gen,
     )
     gen = next_gen(index_root)
 
-    rebuilt = build_posting_chunks(
-        decode_postings_to_tokens(frag), stats["avgdl"], cfg
-    )
+    rebuilt = build_posting_chunks(decode_postings_to_tokens(frag), cfg)
     # persist before the range-partitioned write: repartitionByRange samples
     # its input with an extra execution, which would re-run the whole
     # decode + re-chunk subtree (same single-materialization fix as the
@@ -141,7 +134,8 @@ def compact_postings(spark: SparkSession, index_root: str,
     merged = keep.unionByName(rebuilt).persist(StorageLevel.MEMORY_AND_DISK)
     post_new = gen_path(index_root, "postings", gen)
     try:
-        write_postings_sorted(merged, post_new)
+        write_postings_sorted(merged, post_new, stats["avgdl"],
+                              BM25Params(k1=stats["k1"], b=stats["b"]))
     finally:
         merged.unpersist()
 

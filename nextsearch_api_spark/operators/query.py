@@ -227,10 +227,11 @@ def _plan_chunk_prune(
     → (whitelist: {term: [kept doc_lo...]},        # drop other chunks
        found_overrides: {qid: found})              # exact found for dropped
 
-    Sound EXACT pruning from chunk metadata alone, gated on the stored
-    per-chunk ``max_impact`` being an *attained* query-time impact
-    (stats.impact_avgdl == stats.avgdl and k1/b match — the marker
-    incremental ingest drops when generations mix avgdls).
+    Sound EXACT pruning from chunk metadata alone: every postings writer
+    stores each chunk's ``max_impact`` at the generation's own stats avgdl
+    (operators/build.py:write_postings_sorted), so it is an *attained*
+    query-time impact whenever the query's k1/b match the stored ones —
+    the one gate.
 
     Only terms whose every query is a single-present-term query prune:
     chunks of one term cover disjoint doc ranges, so the k highest chunk
@@ -240,9 +241,6 @@ def _plan_chunk_prune(
     keeps every chunk: that query's ``found`` counts the distinct docs of
     all its terms, so no chunk of it may be dropped."""
     stats = reader.stats
-    if stats.get("impact_avgdl") is None \
-            or stats.get("impact_avgdl") != stats.get("avgdl"):
-        return {}, {}
     if float(stats.get("k1", -1.0)) != float(params.k1) \
             or float(stats.get("b", -1.0)) != float(params.b):
         return {}, {}

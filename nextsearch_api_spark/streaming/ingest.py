@@ -24,7 +24,8 @@ streaming-shaped capability a Spark-native engine should have:
     and from the postings alone (no corpus copy, no forward table): only
     terms touched by the delta or by superseded doc versions are decoded
     back to token rows and re-chunked, untouched chunks are copied
-    through; then ALL components (postings, lexicon, docs, stats, suggest)
+    through with their max_impact recomputed at the merged avgdl; then ALL
+    components (postings, lexicon, docs, stats, suggest)
     flip to a new generation with ONE atomic CURRENT.json replace
     (plans/generations.py) — a crash can never mix generations (ADVICE r1).
 
@@ -358,24 +359,32 @@ def compact_deltas(spark: SparkSession, index_root: str,
     3. The affected terms' live postings are decoded to token rows
        (operators/compact.py:decode_postings_to_tokens), the superseded ids
        dropped and the delta rows added; build_posting_chunks re-chunks
-       them. Every other term's chunk rows are copied through unchanged.
-    4. N/avgdl come from the merged docs. Postings, lexicon, docs, stats
-       and suggest are written as new ``_g<N>`` generation dirs, and ONE
-       atomic CURRENT.json flip publishes them together.
+       them. Every other term's chunk rows are copied through with their
+       blobs unchanged.
+    4. N, total_len and avgdl come from the merged docs. The postings
+       writer (operators/build.py:write_postings_sorted) computes every
+       written chunk's max_impact at that avgdl and the stored k1/b.
+       Postings, lexicon, docs, stats and suggest are written as new
+       ``_g<N>`` generation dirs, and ONE atomic CURRENT.json flip
+       publishes them together.
 
-    Decode CPU grows with the affected terms' chunks, not with the index.
+    The decode to token rows and the re-chunk grow with the affected
+    terms' chunks, not with the index; computing max_impact decodes the tf
+    and doc_len streams of every chunk row written.
     Returns {N, avgdl, gen, affected_terms}."""
     import json
 
     import numpy as np
 
-    from nextsearch_api_spark.config import BuildConfig, IndexPaths
+    from pyspark import StorageLevel
+
+    from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
     from nextsearch_api_spark.operators.build import (
-        build_posting_chunks, write_docs_sorted, write_lexicon,
+        CHUNKS_SCHEMA, build_posting_chunks, write_docs_sorted, write_lexicon,
         write_postings_sorted, write_suggest_sorted,
     )
     from nextsearch_api_spark.operators.compact import (
-        chunks_holding, decode_postings_to_tokens, with_persisted_bm25,
+        chunks_holding, decode_postings_to_tokens,
     )
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path, next_gen,
@@ -384,7 +393,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
     paths = IndexPaths(index_root)
     with open(paths.stats) as f:
         stats = json.load(f)
-    cfg = with_persisted_bm25(cfg or BuildConfig(), stats)
+    cfg = cfg or BuildConfig()
 
     gen = next_gen(index_root)
 
@@ -420,17 +429,15 @@ def compact_deltas(spark: SparkSession, index_root: str,
     write_docs_sorted(union, docs_new)
 
     row = (spark.read.parquet(docs_new)
-           .agg(F.count("*").alias("N"), F.sum("doc_len").alias("tot")).collect()[0])
-    N = int(row["N"])
-    avgdl = float(row["tot"]) / N if N else 0.0
+           .agg(F.count("*").alias("N"),
+                F.sum("doc_len").alias("total_len")).collect()[0])
+    N, total_len = int(row["N"]), int(row["total_len"] or 0)
+    avgdl = float(total_len) / N if N else 0.0
 
     # INCREMENTAL re-chunk (VERDICT r1 'next' #9): only terms the delta
     # touches — terms in new/updated docs plus terms of superseded docs —
     # are decoded and rebuilt; every other term's chunks are copied through
-    # untouched (linear I/O, no decode/sort/encode). Untouched chunks keep
-    # their build-time max_impact computed with the OLD avgdl — harmless:
-    # stats drop the impact_avgdl marker below, which turns off the batch
-    # tier's chunk prune, and serving never prunes.
+    # untouched (no token decode, re-chunk or encode).
     fw_delta = (spark.read.parquet(delta_forward_dir)
                 .dropDuplicates(["doc_id", "term"]))   # replays
     old_post = spark.read.parquet(paths.postings)
@@ -444,24 +451,27 @@ def compact_deltas(spark: SparkSession, index_root: str,
             .select("term"))
     affected = affected.distinct().cache()
     n_affected = affected.count()
-    untouched = old_post.join(affected, "term", "left_anti")
+    untouched = (old_post.select(*CHUNKS_SCHEMA.fieldNames())
+                 .join(affected, "term", "left_anti"))
     live = (decode_postings_to_tokens(
                 old_post.join(affected, "term", "left_semi"))
             .join(F.broadcast(superseded), "doc_id", "left_anti"))
-    rebuilt = build_posting_chunks(live.unionByName(fw_delta), avgdl, cfg)
-    chunks = untouched.unionByName(rebuilt)
+    rebuilt = build_posting_chunks(live.unionByName(fw_delta), cfg)
+    # persist before the range-partitioned write: repartitionByRange samples
+    # its input with an extra execution, which would re-run the decode +
+    # re-chunk subtree
+    chunks = untouched.unionByName(rebuilt).persist(
+        StorageLevel.MEMORY_AND_DISK)
     post_new = gen_path(index_root, "postings", gen)
-    write_postings_sorted(chunks, post_new)
+    try:
+        write_postings_sorted(chunks, post_new, avgdl,
+                              BM25Params(k1=stats["k1"], b=stats["b"]))
+    finally:
+        chunks.unpersist()
     lex_new = gen_path(index_root, "lexicon", gen)
     write_lexicon(spark.read.parquet(post_new), lex_new)
 
-    stats.update(N=N, avgdl=avgdl, k1=cfg.bm25.k1, b=cfg.bm25.b)
-    # untouched chunks keep impacts computed with the OLD avgdl while the
-    # rebuilt ones use the new — once generations mix, stored chunk maxes
-    # are no longer attained query-time impacts, so the batch tier's chunk
-    # prefilter must disable itself (operators/query.py reads this marker)
-    if stats.get("impact_avgdl") != avgdl:
-        stats.pop("impact_avgdl", None)
+    stats.update(N=N, avgdl=avgdl, total_len=total_len)
     stats_new = gen_path(index_root, "stats", gen)
     with open(stats_new, "w") as f:
         json.dump(stats, f, indent=2)

@@ -174,9 +174,22 @@ def test_check_index_format_refuses_v4(tmp_path):
     from nextsearch_api_spark.operators.build import FORMAT_VERSION
     from nextsearch_api_spark.operators.wand import check_index_format
 
-    assert FORMAT_VERSION == 5
+    assert FORMAT_VERSION == 6
     path = tmp_path / "stats.json"
     path.write_text(json.dumps({"format": 4, "N": 1, "avgdl": 1.0}))
     with pytest.raises(ValueError, match="format 4.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))
-    check_index_format({"format": 5}, str(path))
+    check_index_format({"format": 6}, str(path))
+
+
+def test_check_index_format_refuses_v5(tmp_path):
+    """v5 chunk rows carry sum_tf/max_tf/min_dl and a lexicon cf and
+    max_impact, and a v5 index built by compact_deltas can hold max_impact
+    values from an older avgdl: a v6 engine refuses it."""
+    from nextsearch_api_spark.operators.wand import check_index_format
+
+    path = tmp_path / "stats.json"
+    path.write_text(json.dumps({"format": 5, "N": 1, "avgdl": 1.0,
+                                "impact_avgdl": 1.0}))
+    with pytest.raises(ValueError, match="format 5.*rebuild the index"):
+        check_index_format(json.loads(path.read_text()), str(path))

@@ -68,8 +68,8 @@ def test_generation_gc_deferred_one_flip(spark, tmp_path):
     assert m1["gc_pending"]  # superseded dirs recorded, NOT deleted
     for d in m1["gc_pending"]:
         assert os.path.exists(os.path.join(root, d)), d
-    # prune-on/off parity survives compaction (same avgdl → impact_avgdl
-    # marker still valid → prefilter active on the rebuilt chunks)
+    # prune-on/off parity survives compaction (the writer stored every
+    # chunk's max_impact at the index's avgdl)
     from nextsearch_api_spark.operators.query import (
         IndexReader, QuerySpec, batch_search,
     )
@@ -377,3 +377,80 @@ def test_legacy_forward_pointer_collected_one_flip_later(tmp_path):
     assert not os.path.exists(os.path.join(root, "postings_g1"))
     assert m3["gc_pending"] == []
     assert not hasattr(IndexPaths(root), "forward")
+
+
+def _assert_attained_block_max(root):
+    """Every chunk row's max_impact is the float32 max of bm25_impact over
+    its decoded postings at the generation's stats avgdl, k1 and b, and
+    stats total_len is the docs' summed doc_len."""
+    import json
+
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from nextsearch_api_spark.functions.codec import decode_chunks_concat
+    from nextsearch_api_spark.functions.scoring import bm25_impact
+
+    paths = IndexPaths(root)
+    with open(paths.stats) as f:
+        st = json.load(f)
+    t = ds.dataset(paths.postings).to_table()
+    counts = t.column("count").to_numpy()
+    _, tfs, dls = decode_chunks_concat(
+        t.column("blob").combine_chunks(), t.column("tf_off"),
+        t.column("dl_off"), counts, t.column("doc_lo"))
+    want = np.maximum.reduceat(
+        bm25_impact(tfs, dls, st["k1"], st["b"], st["avgdl"]),
+        np.cumsum(counts) - counts)
+    got = t.column("max_impact").to_numpy()
+    assert got.dtype == np.float32
+    assert np.array_equal(got, want), (int((got != want).sum()), len(got))
+    dl = ds.dataset(paths.docs).to_table(columns=["doc_len"]).column("doc_len")
+    assert st["total_len"] == pc.sum(dl).as_py()
+    assert st["N"] == len(dl)
+
+
+def test_every_generation_publishes_attained_block_max(spark, tmp_path):
+    """A fresh build, compact_postings and two compact_deltas in a row
+    (inserts and updates) each publish chunk maxima attained at their own
+    stats: the copied-through chunks of a delta merge are recomputed at
+    the merged avgdl, not kept from the build."""
+    from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, stream_corpus_to_forward,
+    )
+
+    p = str(tmp_path / "c")
+    write_corpus(generate_corpus(spark, 300, seed=42), p, partition_by=None)
+    corpus = read_corpus(spark, p)
+    root = str(tmp_path / "idx")
+    cfg = BuildConfig(chunk_size=16, segment_partitions=8)
+    build_index(spark, corpus, root, cfg)
+    _assert_attained_block_max(root)
+
+    assert compact_postings(spark, root, cfg)["swapped"]
+    _assert_attained_block_max(root)
+
+    keys = sorted(tuple(r) for r in
+                  corpus.select("repo", "path", "commit", "lang").collect())
+    avgdls = []
+    for n, rows in enumerate((
+        [(*keys[i][:3], keys[i][3], f"zzupdate{i} hotterm buffer")
+         for i in (0, 100, 200)]
+        + [("zz/new", f"n{i}.py", "c0", "py", f"zznew{i} hotterm load")
+           for i in range(6)],
+        [("zz/new", "n0.py", "c0", "py", "zzagain hotterm"),
+         (*keys[50][:3], keys[50][3], "zzupdate50 config")]
+        + [("zz/new", f"m{i}.py", "c0", "py", f"zznew{i} flush " * 40)
+           for i in range(4)],
+    )):
+        src = str(tmp_path / f"d{n}_src")
+        spark.createDataFrame(rows, CORPUS_SCHEMA).write.parquet(src)
+        deltas = str(tmp_path / f"d{n}")
+        stream_corpus_to_forward(spark, src, deltas,
+                                 str(tmp_path / f"d{n}_ck"),
+                                 trigger_once=True).awaitTermination(120)
+        avgdls.append(compact_deltas(spark, root, deltas, cfg)["avgdl"])
+        _assert_attained_block_max(root)
+    assert avgdls[0] != avgdls[1]

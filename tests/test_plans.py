@@ -169,14 +169,11 @@ def test_chunk_prefilter_prunes_and_stays_exact(spark, plan_env, tiny_index):
         rd, {0: ["hotterm"], 1: ["hotterm", "buffer"]}, {0: 2, 1: 2},
         {"hotterm": 100, "buffer": 50}, params) == ({}, {})
 
-    # drift gate: once impact_avgdl mismatches, the prefilter disables
-    stats2 = dict(rd.stats)
-    stats2["impact_avgdl"] = stats2["avgdl"] + 1.0
-    class _R:
-        pass
-    r2 = _R(); r2.stats = stats2; r2.chunk_meta = rd.chunk_meta
-    assert _plan_chunk_prune(r2, {0: ["hotterm"]}, {0: 2},
-                             {"hotterm": 100}, params) == ({}, {})
+    # k1/b gate: stored chunk maxes are attained impacts only at the k1/b
+    # in stats, so a query scored with other parameters keeps every chunk
+    for other in (BM25Params(k1=params.k1 + 0.3), BM25Params(b=params.b / 2)):
+        assert _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
+                                 {"hotterm": 100}, other) == ({}, {})
 
     # end-to-end identity: pruned vs exhaustive plans agree on every column
     specs = [QuerySpec(0, "hotterm", 2), QuerySpec(1, "buffer", 3),
@@ -390,7 +387,7 @@ def test_multi_prune_planner_soundness_randomized():
     chunk contains NO doc whose TRUE score reaches a using query's true
     k-th score, and each such query's found override is the term's df.
     Chunk maxes are attained by construction (derived from the synthetic
-    postings), mirroring the impact_avgdl gate."""
+    postings), as the postings writer stores them."""
     import random
 
     from nextsearch_api_spark.config import BM25Params
@@ -402,8 +399,7 @@ def test_multi_prune_planner_soundness_randomized():
 
     class _Reader:
         def __init__(self, meta):
-            self.stats = {"impact_avgdl": 1.0, "avgdl": 1.0,
-                          "k1": params.k1, "b": params.b}
+            self.stats = {"avgdl": 1.0, "k1": params.k1, "b": params.b}
             self._meta = meta
 
         def chunk_meta(self, terms):

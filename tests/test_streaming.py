@@ -106,8 +106,8 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     # incremental: only delta-touched terms were re-chunked
     total_terms = spark.read.parquet(IndexPaths(root).lexicon).count()
     assert 0 < stats2["affected_terms"] < total_terms
-    # serving stays exact across the avgdl drift of incremental merges
-    # (untouched chunks keep build-time max_impact): it equals the batch plan
+    # serving stays exact across the avgdl change of incremental merges:
+    # it equals the batch plan
     from tests.test_wand import (
         assert_matches_pruned_plan, assert_tiers_identical, parity_specs,
     )
@@ -153,26 +153,31 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     assert len(upd_rows) == 5
     assert all(r["doc_id"] >= (1 << 62) for r in upd_rows)
 
-    # the chunk-prefilter drift gate: incremental merges mix chunk
-    # generations with different avgdls, so stats must have DROPPED the
-    # impact_avgdl marker and batch_search must fall back to exhaustive
-    # decode (prefilter returns empty) while staying exact
-    import json as _json
-    with open(p2 := IndexPaths(root).stats) as f:
-        st = _json.load(f)
-    assert "impact_avgdl" not in st, p2
+    # the chunk prefilter stays on after compact_deltas: every generation's
+    # chunk maxes are attained impacts at its own avgdl, so the plan prunes
+    # the most-chunked untouched term and pruned and exhaustive plans agree
+    # on single-term queries
+    from nextsearch_api_spark.config import BM25Params
     from nextsearch_api_spark.operators.query import (
         IndexReader, QuerySpec, batch_search, _plan_chunk_prune,
     )
-    from nextsearch_api_spark.config import BM25Params
     rd = IndexReader(spark, root)
-    rd.term_dfs(["hotterm"])
-    assert _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
-                             {"hotterm": 10}, BM25Params()) == ({}, {})
-    a = batch_search(rd, [QuerySpec(0, "hotterm", 5)], prune_chunks=True)
-    b = batch_search(rd, [QuerySpec(0, "hotterm", 5)], prune_chunks=False)
-    assert ([(r["doc_id"], r["found"]) for r in a.orderBy("rank").collect()]
-            == [(r["doc_id"], r["found"]) for r in b.orderBy("rank").collect()])
+    lex = {r["term"]: (r["df"], r["n_chunks"]) for r in
+           spark.read.parquet(IndexPaths(root).lexicon).collect()}
+    many = max(sorted(lex), key=lambda t: lex[t][1])
+    assert lex[many][1] > 2
+    wl, _ = _plan_chunk_prune(rd, {0: [many]}, {0: 1}, rd.term_dfs([many]),
+                              BM25Params())
+    assert many in wl, (many, lex[many])
+
+    def rows(df):
+        return [(r["qid"], r["rank"], r["doc_id"], r["score"], r["found"])
+                for r in df.orderBy("qid", "rank").collect()]
+    for k in (1, 2, 5):
+        specs = [QuerySpec(0, "hotterm", k), QuerySpec(1, many, k)]
+        assert (rows(batch_search(rd, specs, prune_chunks=True,
+                                  small_query_max_postings=0))
+                == rows(batch_search(rd, specs, prune_chunks=False))), k
 
 
 def test_compaction_rows_match_token_oracle(spark, tmp_path):
@@ -183,10 +188,11 @@ def test_compaction_rows_match_token_oracle(spark, tmp_path):
     - ``affected_terms`` counts exactly the delta's terms plus the terms of
       superseded docs, though some untouched term has a chunk whose range
       covers a superseded id it does not hold;
-    - every untouched term's chunk rows are byte-identical to the base's."""
+    - every untouched term's chunk rows are byte-identical to the base's
+      but for max_impact, which the writer recomputes at the new avgdl."""
     from nextsearch_api_spark.config import BuildConfig, IndexPaths
     from nextsearch_api_spark.operators.build import (
-        assign_doc_ids, tokenize_tf,
+        CHUNKS_SCHEMA, assign_doc_ids, tokenize_tf,
     )
     from nextsearch_api_spark.operators.compact import (
         decode_postings_to_tokens,
@@ -244,7 +250,8 @@ def test_compaction_rows_match_token_oracle(spark, tmp_path):
                              for (d, t), (tf, dl) in want.items())
 
         def untouched(chunks):
-            return sorted(tuple(r) for r in chunks if r["term"] not in affected)
+            return sorted(tuple(r[c] for c in CHUNKS_SCHEMA.fieldNames())
+                          for r in chunks if r["term"] not in affected)
         assert untouched(after.collect()) == untouched(before)
         return want, out
 

@@ -162,19 +162,30 @@ def test_postings_writer_refuses_overlapping_chunks(spark, tmp_path):
     """write_postings_sorted (every postings writer's last step) raises
     when two chunks of one term overlap in doc range, and writes a
     disjoint frame; touching ranges of different terms are fine."""
+    from nextsearch_api_spark.config import BM25Params
+    from nextsearch_api_spark.functions.codec import encode_chunks
     from nextsearch_api_spark.operators.build import write_postings_sorted
 
     def frame(rows):
+        # n postings spread over [lo, hi], tf 1 and doc_len 5 each
+        out = []
+        for term, lo, hi, n in rows:
+            ids = np.linspace(lo, hi, n).astype(np.int64)
+            blobs, tfo, dlo = encode_chunks(ids, np.ones(n), np.full(n, 5),
+                                            [0])
+            out.append((term, lo, hi, n, int(tfo[0]), int(dlo[0]),
+                        blobs[0].as_py()))
         return spark.createDataFrame(
-            rows, "term string, doc_lo long, doc_hi long, count int")
+            out, "term string, doc_lo long, doc_hi long, count int, "
+                 "tf_off int, dl_off int, blob binary")
 
     ok = [("aa", 1, 10, 4), ("aa", 11, 20, 4), ("bb", 5, 30, 9),
           ("bb", 31, 31, 1)]
-    write_postings_sorted(frame(ok), str(tmp_path / "ok"))
+    write_postings_sorted(frame(ok), str(tmp_path / "ok"), 5.0, BM25Params())
     assert spark.read.parquet(str(tmp_path / "ok")).count() == 4
     with pytest.raises(ValueError, match="1 chunks overlapping"):
         write_postings_sorted(frame(ok + [("aa", 20, 25, 2)]),
-                              str(tmp_path / "bad"))
+                              str(tmp_path / "bad"), 5.0, BM25Params())
 
 
 @pytest.fixture(scope="session")
