@@ -1,7 +1,7 @@
 """Batch BM25 query execution over the built index.
 
 Reproduces the reference's search pipeline (src/api_engine.cpp:369-541) as
-one document-partitioned Spark plan per query batch:
+one document-partitioned Spark stage per query batch and a driver merge:
 
   query strings → tokenize + len/stopword filter (repeated terms keep
   repeating — the loop at api_engine.cpp:449 scores a duplicated term twice)
@@ -15,14 +15,16 @@ one document-partitioned Spark plan per query batch:
   (functions/scoring.py:rank_chunk_rows — decode each term's chunks, keep
   the range's postings, float32 impact, :478-479; Σ widf·impact per doc,
   :480; bounded top-k by (score desc, doc_id asc), :427-504) for every
-  query of the batch → per-query ``found`` sum and row_number windows over
-  ≤ (k + 1)·ranges rows.
+  query of the batch → one ``toArrow()`` of the ≤ (k + 1)·ranges rows per
+  query → a NumPy merge on the driver (``found`` = Σ per-range counts, the
+  same top-k rule) → a job-free Arrow LocalRelation.
 
 The ranges partition the doc-id space, so each doc is scored whole in one
 range and the per-range answers merge exactly; batches small enough for one
-process are answered on the driver by the same scoring helper. Every Python
-task pays a fixed start-up cost (~0.25 CPU-s measured), so the plan keeps a
-single Python stage.
+process are answered on the driver by the same scoring helper and handed
+back the same way. Every Python task pays a fixed start-up cost (~0.25 CPU-s
+measured), so the plan keeps a single Python stage, and every Spark job
+pays a fixed scheduling cost, so the few merge rows never run one.
 
 Precision: 'f32' (default) reproduces the reference float32 arithmetic
 (idf and impact in float32, summation in float64 — SURVEY.md §7.3
@@ -37,14 +39,16 @@ from dataclasses import dataclass
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import (
     BM25Params, IndexPaths, MIN_TOKEN_LEN, SEARCH_K_MAX, SEARCH_K_MIN,
 )
-from nextsearch_api_spark.functions.scoring import bm25_idf, rank_chunk_rows
-from nextsearch_api_spark.functions.sqlvalues import values_frame
+from nextsearch_api_spark.functions.scoring import (
+    bm25_idf, rank_chunk_rows, topk_tiebroken,
+)
 from nextsearch_api_spark.functions.text import STOPWORD_SET, tokenize_py
 
 _RESULT_SCHEMA = [("qid", "long"), ("rank", "int"), ("doc_id", "long"),
@@ -221,10 +225,11 @@ def _plan_chunk_prune(
     reader: IndexReader, per_qid_terms: dict[int, list[str]],
     per_qid_k: dict[int, int], df_map: dict[str, int],
     params: BM25Params,
-) -> tuple[dict, dict]:
+) -> tuple[dict, dict, dict]:
     """Driver-side chunk-level top-k prefilter plan (VERDICT r3 next #4).
 
-    → (whitelist: {term: [kept doc_lo...]},        # drop other chunks
+    → (whitelist: {term: [kept doc_lo...]},        # for the range cuts
+       thresholds: {term: theta},                  # kept ⇔ max_impact ≥ theta
        found_overrides: {qid: found})              # exact found for dropped
 
     Sound EXACT pruning from chunk metadata alone: every postings writer
@@ -243,7 +248,7 @@ def _plan_chunk_prune(
     stats = reader.stats
     if float(stats.get("k1", -1.0)) != float(params.k1) \
             or float(stats.get("b", -1.0)) != float(params.b):
-        return {}, {}
+        return {}, {}, {}
 
     single_users: dict[str, list[tuple[int, int]]] = {}
     multi_terms: set[str] = set()
@@ -263,6 +268,7 @@ def _plan_chunk_prune(
         if n_chunks.get(t, np.inf) > max(k for _, k in pure_single[t])
     ]
     whitelist: dict[str, list[int]] = {}
+    thresholds: dict[str, float] = {}
     overrides: dict[int, int] = {}
     meta = reader.chunk_meta(cand) if cand else {}
     for t in cand:
@@ -279,16 +285,17 @@ def _plan_chunk_prune(
         if len(kept) == len(chunks):
             continue
         whitelist[t] = sorted(kept)
+        thresholds[t] = theta
         for qid, _ in pure_single[t]:
             overrides[qid] = int(df_map[t])
-    return whitelist, overrides
+    return whitelist, thresholds, overrides
 
 
 def _driver_small_search(reader: IndexReader, present: "list[str]",
                          queries: "list[tuple]",
                          params: BM25Params) -> "list[tuple] | None":
-    """Driver-side exact TAAT for a volume-bounded query batch → result rows
-    (qid, rank, doc_id, score, found), or None to fall back to the
+    """Driver-side exact TAAT for a volume-bounded query batch →
+    [(qid, k, found, top doc ids, top scores)], or None to fall back to the
     distributed plan (any read failure / a present term without chunk
     rows).
 
@@ -304,12 +311,7 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
         return None
     if not set(present) <= set(t.column("term").to_pylist()):
         return None  # lexicon/postings disagree — let the full plan decide
-    out: list[tuple] = []
-    for qid, _k, found, ids, scores in rank_chunk_rows(
-            t, queries, reader.avgdl, params):
-        out.extend((qid, r + 1, int(doc), float(score), found)
-                   for r, (doc, score) in enumerate(zip(ids, scores)))
-    return out
+    return rank_chunk_rows(t, queries, reader.avgdl, params)
 
 
 def _doc_range_cuts(reader: IndexReader, present: "list[str]",
@@ -391,11 +393,8 @@ def _range_rank_udf(cuts: "list[int]", queries: "list[tuple]",
     each query, its ≤k best docs of the range (cnt null) plus one marker
     row (doc_id null) whose ``cnt`` is the query's matched docs in the
     range. The queries' weights and k ride in this closure."""
-    import pyarrow as pa
-
     schema = pa.schema([("qid", pa.int64()), ("doc_id", pa.int64()),
-                        ("score", pa.float64()), ("k", pa.int32()),
-                        ("cnt", pa.int64())])
+                        ("score", pa.float64()), ("cnt", pa.int64())])
 
     # unannotated: applyInArrow infers the UDF kind from complete type
     # hints only, and takes a bare (key, table) function as table → table
@@ -404,17 +403,153 @@ def _range_rank_udf(cuts: "list[int]", queries: "list[tuple]",
         lo = cuts[r - 1] if r > 0 else None
         hi = cuts[r] if r < len(cuts) else None
         cols: dict[str, list] = {name: [] for name in schema.names}
-        for qid, k, found, ids, scores in rank_chunk_rows(
+        for qid, _k, found, ids, scores in rank_chunk_rows(
                 chunks, queries, avgdl, params, lo, hi):
             n = len(ids)
             cols["qid"] += [qid] * (n + 1)
             cols["doc_id"] += ids.tolist() + [None]
             cols["score"] += scores.tolist() + [None]
-            cols["k"] += [k] * (n + 1)
             cols["cnt"] += [None] * n + [found]
         return pa.Table.from_pydict(cols, schema=schema)
 
     return rank_range
+
+
+def _parse_batch(reader: IndexReader, queries: Sequence[QuerySpec],
+                 params: BM25Params) -> "tuple[TermDfs, list[tuple]]":
+    """Driver-side query parsing → (df_map of the present terms,
+    [(qid, k, [(term, weight·idf), ...])] in qid order, for the queries
+    with a present term). Weight = occurrence count, so repeated terms
+    accumulate repeatedly like the reference's per-occurrence loop; terms
+    stay in query order (the kernel sums in that order, like serving); a
+    qid given by several specs takes the union of their terms and the
+    first spec's k."""
+    qrows: list[tuple[int, str, int]] = []  # qid, term, occ
+    k_of: dict[int, int] = {}
+    for qs in queries:
+        k_of.setdefault(qs.qid, clamp_k(qs.k))
+        occ: dict[str, int] = {}
+        for t in parse_query(qs.q):
+            occ[t] = occ.get(t, 0) + 1
+        qrows.extend((qs.qid, t, c) for t, c in occ.items())
+
+    # lexicon lookup for df → idf (bounded driver-side read: |query terms|)
+    df_map = reader.term_dfs(sorted({t for _, t, _ in qrows}))
+    present = sorted(df_map)
+    idfs = bm25_idf(reader.N, np.array([df_map[t] for t in present],
+                                       dtype=np.int64), params.precision)
+    idf_map = dict(zip(present, idfs))
+    terms_of: dict[int, list[tuple[str, float]]] = {}
+    for qid, t, occ in qrows:
+        if t in idf_map:
+            terms_of.setdefault(qid, []).append(
+                (t, float(occ) * float(idf_map[t])))
+    return df_map, [(qid, k_of[qid], tws)
+                    for qid, tws in sorted(terms_of.items())]
+
+
+def _range_stage(reader: IndexReader, df_map: TermDfs, ranked: "list[tuple]",
+                 params: BM25Params, prune_chunks: bool,
+                 ) -> "tuple[DataFrame, dict[int, int]]":
+    """Steps 1-4 of batch_search → (the per-range Arrow stage's frame,
+    found_overrides of the chunk prune)."""
+    present = sorted(df_map)
+    # chunk-level top-k prefilter (driver-side plan over chunk metadata)
+    whitelist: dict[str, list[int]] = {}
+    thresholds: dict[str, float] = {}
+    found_overrides: dict[int, int] = {}
+    if prune_chunks:
+        whitelist, thresholds, found_overrides = _plan_chunk_prune(
+            reader, {qid: list(dict.fromkeys(t for t, _ in tws))
+                     for qid, _k, tws in ranked},
+            {qid: k for qid, k, _ in ranked}, df_map, params)
+
+    # postings scan pruned to query terms (pushed filter → row-group pruning);
+    # a pruned term keeps the chunks whose max_impact reaches its threshold
+    # — the planner's kept set — through ONE literal map of one double per
+    # term: constant expression depth for any batch (a per-term OR chain
+    # overflowed the JVM stack past ~1000 terms); an unpruned term looks up
+    # null and keeps every chunk
+    chunks = reader.postings().where(F.col("term").isin(present))
+    if thresholds:
+        theta = F.create_map(*[
+            x for t, th in sorted(thresholds.items())
+            for x in (F.lit(t), F.lit(float(th)))])
+        chunks = chunks.where(F.coalesce(
+            F.col("max_impact") >= theta[F.col("term")], F.lit(True)))
+
+    # doc-id range of a chunk bound = number of cuts at or below it
+    cuts = _doc_range_cuts(reader, present, df_map, whitelist)
+    cut_arr = (F.array(*[F.lit(c).cast("long") for c in cuts]) if cuts
+               else F.array().cast("array<bigint>"))
+
+    def range_of(col: str):
+        return F.size(F.filter(cut_arr, lambda c: c <= F.col(col)))
+
+    stage = (
+        chunks.select(F.explode(F.sequence(range_of("doc_lo"),
+                                           range_of("doc_hi")))
+                      .alias("doc_range"),
+                      "term", "doc_lo", "count", "tf_off", "dl_off", "blob")
+        .groupBy("doc_range")
+        .applyInArrow(_range_rank_udf(cuts, ranked, reader.avgdl, params),
+                      "qid long, doc_id long, score double, cnt long")
+    )
+    return stage, found_overrides
+
+
+def _merge_ranges(per_range: pa.Table, ranked: "list[tuple]",
+                  found_overrides: "dict[int, int]") -> "list[tuple]":
+    """The range stage's gathered rows → [(qid, k, found, top doc ids,
+    top scores)] in qid order: ``found`` is the Σ of the query's marker
+    rows (or the prune's exact override), the top k by (score desc,
+    doc_id asc) through scoring.topk_tiebroken. Each doc was scored in
+    exactly one range, so a query's candidates are distinct docs."""
+    qid = per_range.column("qid").to_numpy()
+    marker = per_range.column("doc_id").is_null().to_numpy(
+        zero_copy_only=False)
+    mq, inv = np.unique(qid[marker], return_inverse=True)
+    found = np.zeros(mq.size, dtype=np.int64)
+    np.add.at(found, inv, per_range.filter(marker).column("cnt").to_numpy())
+    found_of = dict(zip(mq.tolist(), found.tolist()))
+
+    hits = per_range.filter(~marker)
+    hq = qid[~marker]
+    doc = hits.column("doc_id").to_numpy()
+    score = hits.column("score").to_numpy()
+    order = np.lexsort((doc, hq))  # per query, doc ids ascending
+    hq, doc, score = hq[order], doc[order], score[order]
+    qids, starts = np.unique(hq, return_index=True)
+    ends = np.append(starts[1:], hq.size)
+    k_of = {q: k for q, k, _ in ranked}
+    out: list[tuple] = []
+    for q, lo, hi in zip(qids.tolist(), starts, ends):
+        top = topk_tiebroken(score[lo:hi], doc[lo:hi], min(k_of[q], hi - lo))
+        out.append((q, k_of[q], found_overrides.get(q, found_of[q]),
+                    doc[lo:hi][top], score[lo:hi][top]))
+    return out
+
+
+def _result_table(ranked_rows: "list[tuple]") -> pa.Table:
+    """[(qid, k, found, top doc ids, top scores)] → the result rows
+    (qid, rank, doc_id, score, found) as one Arrow table."""
+    sizes = np.array([len(r[3]) for r in ranked_rows], dtype=np.int64)
+    starts = np.repeat(np.cumsum(sizes) - sizes, sizes)
+
+    def per_query(i: int, dtype) -> np.ndarray:
+        return np.repeat(np.array([r[i] for r in ranked_rows], dtype=dtype),
+                         sizes)
+
+    def concat(i: int, dtype) -> np.ndarray:
+        return np.concatenate([np.asarray(r[i], dtype=dtype)
+                               for r in ranked_rows]
+                              or [np.empty(0, dtype=dtype)])
+
+    cols = [per_query(0, np.int64),
+            (np.arange(sizes.sum()) - starts + 1).astype(np.int32),
+            concat(3, np.int64), concat(4, np.float64),
+            per_query(2, np.int64)]
+    return pa.table(dict(zip((name for name, _ in _RESULT_SCHEMA), cols)))
 
 
 def batch_search(
@@ -425,12 +560,13 @@ def batch_search(
     prune_chunks: bool = True,
     small_query_max_postings: "int | None" = None,
 ) -> DataFrame:
-    """Run all queries in one Spark plan.
+    """Rank a batch of queries; the Spark work runs when this is called.
 
-    Returns (qid, rank, doc_id, score, found) — found = total matched docs for
-    the query (reference's ``total_found``, api_engine.cpp:495; with one
-    logical segment it equals distinct matched docs). A qid given by
-    several specs ranks the union of their terms with the first spec's k.
+    Returns (qid, rank, doc_id, score, found) as a job-free Arrow
+    LocalRelation — found = total matched docs for the query (reference's
+    ``total_found``, api_engine.cpp:495; with one logical segment it equals
+    distinct matched docs). A qid given by several specs ranks the union of
+    their terms with the first spec's k.
 
     A batch whose Σdf is at most ``small_query_max_postings`` (default
     SMALL_QUERY_MAX_POSTINGS; 0 forces the distributed plan) is answered on
@@ -445,18 +581,20 @@ def batch_search(
        term's chunks, keep the range's postings and rank every query of the
        batch with scoring.rank_chunk_rows — ≤k rows plus one ``found``
        marker per (range, query);
-    5. per-qid windows: ``found`` = Σ markers, rank = row_number by
-       (score desc, doc_id asc), keep rank ≤ k.
+    5. one ``toArrow()`` gathers those rows, and the driver merges them in
+       NumPy (_merge_ranges): ``found`` = Σ markers, top k by (score desc,
+       doc_id asc) through scoring.topk_tiebroken.
 
     Scale safety: the ranges partition the doc-id space, so each doc's full
     score is computed in exactly one group — per-range found counts add up
     exactly and the merge of per-range top-k lists is exact. A group holds
     about SMALL_QUERY_MAX_POSTINGS postings at most (one group for the
-    whole batch when pyarrow cannot open the postings footers), the driver
-    plans the ranges from postings footers and whitelists, never from a
-    per-chunk read, and the final windows order ≤ (k + 1)·ranges rows per
-    query, never the matched set. The plan has one Python stage, and the
-    exchange carries compressed chunk rows, never decoded postings.
+    whole batch when pyarrow cannot open the postings footers), and the
+    driver plans the ranges from postings footers and whitelists, never
+    from a per-chunk read. The driver holds ≤ (k + 1) rows per query per
+    range, with ⌈Σdf / SMALL_QUERY_MAX_POSTINGS⌉ ranges, never the matched
+    set. The plan has one Python stage, and the exchange carries
+    compressed chunk rows, never decoded postings.
 
     ``prune_chunks`` enables the driver-side chunk prefilter
     (_plan_chunk_prune): on a drift-free index, a term queried only by
@@ -465,36 +603,7 @@ def batch_search(
     set False to force exhaustive decode, e.g. for parity testing; it also
     turns off the driver path)."""
     params = params or BM25Params()
-    spark = reader.spark
-
-    # driver-side query parsing (tiny), weight = occurrence count so repeated
-    # terms accumulate repeatedly like the reference's per-occurrence loop
-    qrows: list[tuple[int, str, int]] = []  # qid, term, occ
-    k_of: dict[int, int] = {}
-    for qs in queries:
-        k_of.setdefault(qs.qid, clamp_k(qs.k))
-        occ: dict[str, int] = {}
-        for t in parse_query(qs.q):
-            occ[t] = occ.get(t, 0) + 1
-        qrows.extend((qs.qid, t, c) for t, c in occ.items())
-
-    # lexicon lookup for df → idf (bounded driver-side read: |query terms|)
-    df_map = reader.term_dfs(sorted({t for _, t, _ in qrows}))
-    present = sorted(df_map)
-    if not present:
-        return values_frame(spark, [], _RESULT_SCHEMA)
-    idfs = bm25_idf(reader.N, np.array([df_map[t] for t in present],
-                                       dtype=np.int64), params.precision)
-    idf_map = dict(zip(present, idfs))
-
-    # [(qid, k, [(term, weight·idf), ...])] in qid order, terms in query
-    # order (the kernel sums in that order, like serving)
-    terms_of: dict[int, list[tuple[str, float]]] = {}
-    for qid, t, occ in qrows:
-        if t in idf_map:
-            terms_of.setdefault(qid, []).append(
-                (t, float(occ) * float(idf_map[t])))
-    ranked = [(qid, k_of[qid], tws) for qid, tws in sorted(terms_of.items())]
+    df_map, ranked = _parse_batch(reader, queries, params)
 
     # volume-bounded driver fast path (r7): Σ df across the batch's present
     # terms is known exactly before any data is read; under the budget the
@@ -503,111 +612,38 @@ def batch_search(
     # forces the distributed plan (the parity-testing escape hatch).
     budget = (SMALL_QUERY_MAX_POSTINGS if small_query_max_postings is None
               else small_query_max_postings)
-    if prune_chunks and budget > 0 \
-            and sum(df_map[t] for t in present) <= budget:
-        local_rows = _driver_small_search(reader, present, ranked, params)
-        if local_rows is not None:
-            topk = values_frame(spark, local_rows, _RESULT_SCHEMA)
-            return _hydrate_topk(reader, topk, queries) if hydrate else topk
-
-    # chunk-level top-k prefilter (driver-side plan over chunk metadata);
-    # a duplicate qid's terms are the union over its specs
-    whitelist: dict[str, list[int]] = {}
-    found_overrides: dict[int, int] = {}
-    if prune_chunks:
-        whitelist, found_overrides = _plan_chunk_prune(
-            reader, {qid: list(dict.fromkeys(t for t, _ in tws))
-                     for qid, _k, tws in ranked},
-            k_of, df_map, params)
-
-    # postings scan pruned to query terms (pushed filter → row-group pruning);
-    # whitelisted terms additionally restrict to their kept (doc_lo) chunks
-    # through ONE literal map lookup — constant expression depth for any
-    # batch (a per-term OR chain overflowed the JVM stack past ~1000 terms)
-    chunks = reader.postings().where(F.col("term").isin(present))
-    if whitelist:
-        full_terms = [t for t in present if t not in whitelist]
-        kept = F.create_map(*[
-            x for t, los in sorted(whitelist.items())
-            for x in (F.lit(t), F.array(*[F.lit(int(lo)).cast("long")
-                                          for lo in los]))])
-        chunks = chunks.where(
-            (F.col("term").isin(full_terms) if full_terms else F.lit(False))
-            | F.array_contains(kept[F.col("term")], F.col("doc_lo")))
-
-    # doc-id range of a chunk bound = number of cuts at or below it
-    cuts = _doc_range_cuts(reader, present, df_map, whitelist)
-    cut_arr = (F.array(*[F.lit(c).cast("long") for c in cuts]) if cuts
-               else F.array().cast("array<bigint>"))
-
-    def range_of(col: str):
-        return F.size(F.filter(cut_arr, lambda c: c <= F.col(col)))
-
-    pruned = (
-        chunks.select(F.explode(F.sequence(range_of("doc_lo"),
-                                           range_of("doc_hi")))
-                      .alias("doc_range"),
-                      "term", "doc_lo", "count", "tf_off", "dl_off", "blob")
-        .groupBy("doc_range")
-        .applyInArrow(_range_rank_udf(cuts, ranked, reader.avgdl, params),
-                      "qid long, doc_id long, score double, k int, cnt long")
-    )
-    w_found = Window.partitionBy("qid")
-    w_rank = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    topk = (
-        pruned.withColumn("found", F.sum("cnt").over(w_found))
-        .where(F.col("doc_id").isNotNull())
-        .withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= F.col("k"))
-        .select("qid", "rank", "doc_id", "score", "found")
-    )
-    if found_overrides:
-        # pruned single-term queries: the found markers only counted the
-        # kept chunks — found is exactly the lexicon df for one term.
-        # A literal MAP lookup, not a joined side-table (no per-batch driver
-        # round-trip / broadcast) and not a nested WHEN chain (whose
-        # expression tree grows linearly in depth with the batch size and
-        # can hit codegen/stack limits — ADVICE r4 #1): one flat
-        # create_map literal, constant expression depth for any batch.
-        ov_args: list = []
-        for qid, fv in sorted(found_overrides.items()):
-            ov_args.append(F.lit(qid).cast("long"))
-            ov_args.append(F.lit(int(fv)).cast("long"))
-        expr = F.coalesce(F.create_map(*ov_args)[F.col("qid")],
-                          F.col("found"))
-        topk = topk.select("qid", "rank", "doc_id", "score",
-                           expr.cast("long").alias("found"))
+    top = None
+    if not ranked:
+        top = []
+    elif prune_chunks and budget > 0 and sum(df_map.values()) <= budget:
+        top = _driver_small_search(reader, sorted(df_map), ranked, params)
+    if top is None:
+        stage, found_overrides = _range_stage(reader, df_map, ranked,
+                                              params, prune_chunks)
+        top = _merge_ranges(stage.toArrow(), ranked, found_overrides)
+    table = _result_table(top)
     if hydrate:
-        topk = _hydrate_topk(reader, topk, queries)
-    return topk
+        return _hydrate_topk(reader, table)
+    return reader.spark.createDataFrame(table)
 
 
-def _hydrate_topk(reader: IndexReader, topk: DataFrame,
-                  queries: Sequence[QuerySpec]) -> DataFrame:
-    """Attach doc metadata to a ≤Σk-row result frame.
+def _hydrate_topk(reader: IndexReader, table: pa.Table) -> DataFrame:
+    """Attach doc metadata to a ≤Σk-row result table.
 
     Bound the metadata side (VERDICT r4 wrong #4): the top-k result is
-    ≤ Σk rows (driver-known, k clamped ≤ 100), so materialize it ONCE
-    on the driver and push an isin filter of its doc_ids into the docs
-    scan — row-group pruning + an explicit broadcast of the ≤Σk matched
-    rows, never a full-docs exchange. The collected rows come back as a
-    local relation (no persist: the r5 `topk.persist()` here was never
-    unpersisted and leaked one cache entry per hydrated batch_search in
-    long-lived serving sessions — ADVICE r5). Very large batches (Σk
-    above the literal-filter budget) keep the plain left join and rely
-    on AQE's size-based broadcast."""
+    ≤ Σk rows (k clamped ≤ 100) already on the driver, so its doc_ids are
+    pushed as an isin filter into the docs scan — row-group pruning + an
+    explicit broadcast of the matched rows, never a full-docs exchange.
+    The result joins as a local relation (nothing persisted, no RDD job).
+    Very large batches (more ids than the literal-filter budget) keep the
+    plain left join and rely on AQE's size-based broadcast."""
     meta_cols = ["doc_id", "uid", "repo", "path", "commit", "lang"]
-    k_total = sum(clamp_k(qs.k) for qs in queries)
-    if k_total <= HYDRATE_PUSHDOWN_MAX_IDS:
-        rows = topk.collect()  # ≤ Σk rows by construction
-        ids = sorted({r["doc_id"] for r in rows})
-        local = reader.spark.createDataFrame(rows, schema=topk.schema)
-        docs = reader.docs().select(*meta_cols)
-        docs = (docs.where(F.col("doc_id").isin(ids)) if ids
-                else docs.where(F.lit(False)))
-        topk = local.join(F.broadcast(docs), "doc_id", "left")
-    else:
-        topk = topk.join(reader.docs().select(*meta_cols), "doc_id", "left")
+    ids = np.unique(table.column("doc_id").to_numpy()).tolist()
+    docs = reader.docs().select(*meta_cols)
+    if len(ids) <= HYDRATE_PUSHDOWN_MAX_IDS:
+        docs = F.broadcast(docs.where(F.col("doc_id").isin(ids)) if ids
+                           else docs.where(F.lit(False)))
+    topk = reader.spark.createDataFrame(table).join(docs, "doc_id", "left")
     return topk.select("qid", "rank", "doc_id", "score", "found",
                        "uid", "repo", "path", "commit", "lang")
 

@@ -41,49 +41,73 @@ def _exchanges(plan: str) -> list[str]:
             if re.match(r"\(\d+\) Exchange\b", sec.strip())]
 
 
+def _range_stage_of(rd, specs):
+    """The per-range Arrow stage (steps 1-4) that batch_search gathers for
+    ``specs`` on its distributed plan."""
+    from nextsearch_api_spark.config import BM25Params
+    from nextsearch_api_spark.operators import query
+
+    params = BM25Params()
+    df_map, ranked = query._parse_batch(rd, specs, params)
+    return query._range_stage(rd, df_map, ranked, params, True)[0]
+
+
 def test_batch_search_qterms_need_no_exchange(spark, plan_env):
     """Query-term weights and k ride in the Python UDF's closure, so the
     plan carries NO join, NO broadcast exchange and no literal term-weight
     map or explode for the query side; the batch has exactly ONE Python operator, the
     per-range FlatMapGroupsInArrow (every Python task pays a fixed start-up
-    cost), and no MapInPandas."""
-    topk = batch_search(plan_env, [QuerySpec(0, "buffer cache99", 5)],
-                        small_query_max_postings=0)
-    plan = _plan(topk)
+    cost), and no MapInPandas. The ranked answer is merged on the driver:
+    batch_search returns a local relation, with no Window anywhere."""
+    specs = [QuerySpec(0, "buffer cache99", 5)]
+    plan = _plan(_range_stage_of(plan_env, specs))
     python_ops = [op for op in _operators(plan)
                   if "Python" in op or "Pandas" in op or "Arrow" in op]
     assert python_ops == ["FlatMapGroupsInArrow"], python_ops
     assert "MapInPandas" not in plan
     assert "BroadcastExchange" not in plan
     assert "Join" not in plan
+    assert "Window" not in plan
     # the one Generate tags chunk rows with doc-id ranges; no query-side
     # explode
     gens = [ln for ln in plan.splitlines() if "explode(" in ln]
     assert gens and all("explode(sequence(" in ln for ln in gens), gens
-    # top-k is a window row_number bounded filter, not a global sort
-    assert "row_number" in plan.lower()
+    topk = batch_search(plan_env, specs, small_query_max_postings=0)
+    ops = _operators(_plan(topk))
+    assert ops == ["LocalTableScan"], ops
 
 
 def test_batch_search_found_and_rank_are_scale_safe(spark, plan_env):
     """`found` must be a fused partial count (marker rows from the per-range
     Arrow groups), NOT a per-qid count window over the full matched set,
-    and the whole plan needs exactly two hash exchanges: the first moves
-    compressed chunk rows by doc-id range — no per-posting ``impact``
-    column below it — and the second is one shared qid exchange for the two
-    tiny windows (VERDICT r1 'what's wrong' #2)."""
-    topk = batch_search(plan_env, [QuerySpec(0, "buffer cache99", 5)],
-                        small_query_max_postings=0)
-    plan = _plan(topk)
+    and the plan needs exactly one hash exchange: it moves compressed chunk
+    rows by doc-id range — no per-posting ``impact`` column below it. No
+    qid exchange or window follows: the ≤ (k + 1)·ranges rows per query
+    merge on the driver (VERDICT r1 'what's wrong' #2)."""
+    plan = _plan(_range_stage_of(plan_env, [QuerySpec(0, "buffer cache99", 5)]))
     assert "count(1) windowspecdefinition" not in plan
-    assert plan.count("hashpartitioning(") == 2, plan.count("hashpartitioning(")
-    first, second = _exchanges(plan)
+    assert plan.count("hashpartitioning(") == 1, plan.count("hashpartitioning(")
+    [first] = _exchanges(plan)
     assert "hashpartitioning(doc_range#" in first, first
     inputs = set(re.findall(r"(\w+)#\d+", first.split("Arguments")[0]))
     assert inputs <= {"doc_range", "term", "doc_lo", "count", "tf_off",
                       "dl_off", "blob"}, inputs
     assert {"doc_range", "blob"} <= inputs, inputs
     assert "impact" not in plan.split(first)[0] + first
-    assert "hashpartitioning(qid#" in second, second
+    assert "hashpartitioning(qid#" not in plan
+    assert "Window" not in plan
+
+
+def test_distributed_batch_runs_two_jobs(spark, plan_env):
+    """A distributed batch without hydration is the range stage's shuffle
+    job and one gather: at most two Spark jobs, and the returned local
+    relation collects job-free."""
+    from tests.test_wand import spark_jobs
+
+    specs = [QuerySpec(0, "buffer cache99", 5), QuerySpec(1, "hotterm", 3)]
+    rows, jobs = spark_jobs(spark, lambda: batch_search(
+        plan_env, specs, small_query_max_postings=0).collect())
+    assert rows and 1 <= jobs <= 2, jobs
 
 
 def test_docs_scan_prunes_columns(spark, tiny_index):
@@ -157,23 +181,27 @@ def test_chunk_prefilter_prunes_and_stays_exact(spark, plan_env, tiny_index):
     n_chunks = rd.postings().where(F.col("term") == "hotterm").count()
     assert n_chunks >= 3  # segment-mode build → one chunk per segment ≥ 3
 
-    wl, ov = _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
-                               {"hotterm": 100}, params)
+    wl, th, ov = _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
+                                   {"hotterm": 100}, params)
     assert "hotterm" in wl and len(wl["hotterm"]) < n_chunks  # fewer decoded
     assert len(wl["hotterm"]) >= 2                            # ≥ k kept
     assert ov == {0: 100}                                     # found = df
+    # the threshold keeps exactly the whitelisted chunks
+    assert set(th) == set(wl)
+    assert sorted(lo for lo, _hi, mi in rd.chunk_meta(["hotterm"])["hotterm"]
+                  if mi >= th["hotterm"]) == wl["hotterm"]
 
     # multi-term queries are never pruned, and a shared term is blocked
     # from the single-term full-drop
     assert _plan_chunk_prune(
         rd, {0: ["hotterm"], 1: ["hotterm", "buffer"]}, {0: 2, 1: 2},
-        {"hotterm": 100, "buffer": 50}, params) == ({}, {})
+        {"hotterm": 100, "buffer": 50}, params) == ({}, {}, {})
 
     # k1/b gate: stored chunk maxes are attained impacts only at the k1/b
     # in stats, so a query scored with other parameters keeps every chunk
     for other in (BM25Params(k1=params.k1 + 0.3), BM25Params(b=params.b / 2)):
         assert _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
-                                 {"hotterm": 100}, other) == ({}, {})
+                                 {"hotterm": 100}, other) == ({}, {}, {})
 
     # end-to-end identity: pruned vs exhaustive plans agree on every column
     specs = [QuerySpec(0, "hotterm", 2), QuerySpec(1, "buffer", 3),
@@ -274,8 +302,9 @@ def test_multi_term_chunk_prefilter(spark, skewed_index):
     df_map = rd.term_dfs(["needle", "common"])
     assert _plan_chunk_prune(
         rd, {7: ["needle", "common"], 8: ["needle"]}, {7: 2, 8: 2},
-        df_map, params) == ({}, {})
-    wl, ov = _plan_chunk_prune(rd, {8: ["needle"]}, {8: 2}, df_map, params)
+        df_map, params) == ({}, {}, {})
+    wl, _th, ov = _plan_chunk_prune(rd, {8: ["needle"]}, {8: 2}, df_map,
+                                    params)
     assert "needle" in wl and ov == {8: df_map["needle"]}
 
     # end-to-end: pruned == exhaustive on every column (incl. exact found),
@@ -306,6 +335,66 @@ def test_tiers_bit_identical_skewed(spark, skewed_index):
     specs = [QuerySpec(100 + i, "needle common", k)
              for i, k in enumerate((1, 10, 100))] + parity_specs(eng)
     assert_tiers_identical(spark, skewed_index, eng, specs)
+
+
+@pytest.fixture(scope="module")
+def ranges_index(spark, tmp_path_factory):
+    """120 docs of 6 tokens each, in 8-posting chunks: ``tie`` (tf 1 in
+    every third doc, so all its docs tie), ``spike`` (in every doc, tf 3 in
+    two of them, so its single-term queries prune) and ``mid`` (every
+    fourth doc)."""
+    from nextsearch_api_spark.config import BuildConfig
+    from nextsearch_api_spark.operators.build import build_index
+
+    rows = []
+    for i in range(120):
+        words = ["spike"] * (3 if i in (17, 95) else 1)
+        words += ["tie"] * (i % 3 == 0) + ["mid"] * (i % 4 == 0)
+        words += [f"fill{i}w{j}" for j in range(6 - len(words))]
+        rows.append(("r", f"{i:04d}", "c", "py", " ".join(words)))
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ).repartition(3)
+    root = str(tmp_path_factory.mktemp("rangesidx"))
+    build_index(spark, corpus, root, cfg=BuildConfig(chunk_size=8))
+    return root
+
+
+def test_range_merge_edges_across_cuts(spark, ranges_index, monkeypatch):
+    """The driver merge of per-range rows, with the batch split over ≥ 3
+    doc-id ranges: duplicate qids, a query with no present term, a pruned
+    single-term query (found = df from the prune, not from its kept
+    chunks) and k=1 ties that straddle a cut all return the same rows as
+    every other tier."""
+    from nextsearch_api_spark.config import BM25Params
+    from nextsearch_api_spark.operators import query
+    from nextsearch_api_spark.operators.wand import WandEngine
+    from tests.test_wand import assert_tiers_identical
+
+    monkeypatch.setattr(query, "SMALL_QUERY_MAX_POSTINGS", 25)
+    rd = IndexReader(spark, ranges_index)
+    eng = WandEngine(ranges_index)
+    specs = [QuerySpec(0, "tie", 1), QuerySpec(1, "spike", 1),
+             QuerySpec(2, "tie mid", 1), QuerySpec(3, "zzznotaterm", 4),
+             QuerySpec(4, "tie", 3), QuerySpec(4, "mid", 5),
+             QuerySpec(5, "mid", 1)]
+    df_map, ranked = query._parse_batch(rd, specs, BM25Params())
+    wl, _th, ov = query._plan_chunk_prune(
+        rd, {q: [t for t, _ in tws] for q, _k, tws in ranked},
+        {q: k for q, k, _ in ranked}, df_map, BM25Params())
+    assert "spike" in wl and ov == {1: 120}
+    cuts = query._doc_range_cuts(rd, sorted(df_map), df_map, wl)
+    assert len(cuts) >= 2, cuts  # ≥ 3 ranges
+    tied = [r["doc_id"] for r in rd.docs().collect()
+            if int(r["path"]) % 3 == 0]
+    assert any(min(tied) < c <= max(tied) for c in cuts), (cuts, tied)
+
+    assert_tiers_identical(spark, ranges_index, eng, specs)
+    got = {(r["qid"], r["rank"]): r for r in batch_search(
+        rd, specs, small_query_max_postings=0).collect()}
+    assert got[(0, 1)]["doc_id"] == min(tied) and got[(0, 1)]["found"] == 40
+    assert got[(1, 1)]["found"] == 120
+    assert not any(q == 3 for q, _ in got)
 
 
 def _letters(i: int) -> str:
@@ -343,7 +432,7 @@ def test_many_whitelisted_terms_plan_at_constant_depth(spark, tmp_path):
     terms = ["wl" + _letters(i) for i in range(n_terms)]
     specs = [QuerySpec(i, t, 1) for i, t in enumerate(terms)]
     df_map = rd.term_dfs(terms)
-    wl, ov = _plan_chunk_prune(
+    wl, _th, ov = _plan_chunk_prune(
         rd, {i: [t] for i, t in enumerate(terms)}, {i: 1 for i in range(n_terms)},
         df_map, BM25Params())
     assert len(wl) >= 1500 and len(ov) == len(wl)
@@ -430,8 +519,8 @@ def test_multi_prune_planner_soundness_randomized():
             per_qid_terms[qid] = qt
             per_qid_k[qid] = rng.choice([1, 2, 3, 5, 10])
             widf[qid] = {t: rng.uniform(0.05, 2.0) for t in qt}
-        wl, ov = _plan_chunk_prune(rd, per_qid_terms, per_qid_k,
-                                   df_map, params)
+        wl, th, ov = _plan_chunk_prune(rd, per_qid_terms, per_qid_k,
+                                       df_map, params)
 
         def score(d, qid):
             return sum(widf[qid][t] * imp[t].get(d, 0.0)
@@ -449,7 +538,11 @@ def test_multi_prune_planner_soundness_randomized():
         dropped += len(wl)
         # single-term full-drops: no dropped doc reaches the k-th score,
         # and found is overridden with the exact df
+        assert set(th) == set(wl)
         for t, kept in wl.items():
+            # the scan filter max_impact ≥ theta keeps exactly these chunks
+            assert sorted(lo for lo, _hi, mi in meta[t]
+                          if mi >= th[t]) == kept
             pruned_docs = {d for lo, hi, _ in meta[t]
                            if lo not in set(kept)
                            for d in imp[t] if lo <= d <= hi}

@@ -1,4 +1,4 @@
-"""Driver-assembled VALUES frames (functions/sqlvalues.py): the batch tier's
+"""Driver-assembled result frames (functions/sqlvalues.py): the batch tier's
 and the cosine tier's result frames keep every double bit for bit, NaN and
 ±inf included, and refuse non-int ids and ranks."""
 
@@ -53,3 +53,20 @@ def test_values_frames_reject_non_int_ids(spark, bad):
         values_frame(spark, [(0, 1, bad, 1.0, 1)], _RESULT_SCHEMA)
     with pytest.raises(TypeError):
         values_frame(spark, [(bad, 3, 0.5)], _RANK_SCHEMA)
+
+
+def test_large_values_frame_runs_no_job(spark):
+    """Any row count hands over as one Arrow LocalRelation: building and
+    collecting 5000 rows runs no Spark job."""
+    from nextsearch_api_spark.functions.sqlvalues import values_frame
+    from nextsearch_api_spark.operators.query import _RESULT_SCHEMA
+    from tests.test_wand import spark_jobs
+
+    rows = [(i // 10, i % 10 + 1, 7 * i, VALUES[i % len(VALUES)], i // 3)
+            for i in range(5000)]
+    got, jobs = spark_jobs(spark, lambda: values_frame(
+        spark, rows, _RESULT_SCHEMA).collect())
+    assert jobs == 0
+    assert [(r["qid"], r["rank"], r["doc_id"], r["found"]) for r in got] \
+        == [(q, r, d, f) for q, r, d, _, f in rows]
+    assert all(_same(r["score"], row[3]) for r, row in zip(got, rows))

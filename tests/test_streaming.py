@@ -166,8 +166,8 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
            spark.read.parquet(IndexPaths(root).lexicon).collect()}
     many = max(sorted(lex), key=lambda t: lex[t][1])
     assert lex[many][1] > 2
-    wl, _ = _plan_chunk_prune(rd, {0: [many]}, {0: 1}, rd.term_dfs([many]),
-                              BM25Params())
+    wl, _th, _ov = _plan_chunk_prune(rd, {0: [many]}, {0: 1},
+                                     rd.term_dfs([many]), BM25Params())
     assert many in wl, (many, lex[many])
 
     def rows(df):

@@ -9,6 +9,20 @@ from nextsearch_api_spark.operators.wand import WandEngine
 from tests.test_build_query import QUERIES
 
 
+def spark_jobs(spark, fn):
+    """→ (fn(), number of Spark jobs fn ran), counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_tiers_identical(spark, root, eng, specs):
     """Every ranking tier returns the same rows, scores compared with ==:
     the distributed plan with the chunk prune on
@@ -33,11 +47,9 @@ def assert_tiers_identical(spark, root, eng, specs):
     pruned = ranked(batch_search(rd, specs, eng.params,
                                  small_query_max_postings=0))
     full = ranked(batch_search(rd, specs, eng.params, prune_chunks=False))
-    driver_df = batch_search(rd, specs, eng.params,
-                             small_query_max_postings=1 << 62)
-    assert "parquet" not in driver_df._jdf.queryExecution() \
-        .executedPlan().toString().lower()  # answered on the driver
-    driver = ranked(driver_df)
+    driver, jobs = spark_jobs(spark, lambda: ranked(batch_search(
+        rd, specs, eng.params, small_query_max_postings=1 << 62)))
+    assert jobs == 0  # answered on the driver
     assert pruned == full, root
     assert pruned == driver, root
     texts: dict = {}
