@@ -51,51 +51,44 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 # single-file pointer that maps logical index components to physical dirs;
 # compaction writes new generation dirs and flips this pointer with ONE
 # atomic os.replace, so a crash mid-compaction can never mix postings and
-# lexicon (or stats) from different generations (ADVICE r1)
+# lexicon (or stats) from different generations. Only plans/generations.py
+# reads or writes it.
 CURRENT_POINTER = "CURRENT.json"
 
 
 @dataclass(frozen=True)
 class IndexPaths:
-    """On-disk layout of a built index (the Parquet analog of the reference's
-    segment directory: stats.bin/docs.bin/lexicon_b*/inverted_b*, see
-    include/segment_writer.hpp:65-167).
+    """On-disk layout of one generation of a built index (the Parquet analog
+    of the reference's segment directory: stats.bin/docs.bin/lexicon_b*/
+    inverted_b*, see include/segment_writer.hpp:65-167).
 
-    Component paths resolve through ``CURRENT.json`` when present (written
-    only by compaction generation flips); fresh builds use the base names."""
+    The generation pointer is read once, here: every component path comes
+    from that snapshot, so a handle holding an IndexPaths reads one
+    generation until it is reopened, whatever later compactions flip.
+    ``root`` is a local or mounted filesystem path: stats, the pointer, the
+    manifest and backups go through ``open``/``os``/``shutil``."""
 
     root: str
+    gen: int = field(init=False)
+    docs: str = field(init=False)
+    postings: str = field(init=False)
+    lexicon: str = field(init=False)
+    suggest: str = field(init=False)
+    stats: str = field(init=False)
 
-    def _resolve(self, name: str, default: str) -> str:
-        try:
-            import json
-            with open(os.path.join(self.root, CURRENT_POINTER)) as f:
-                mapping = json.load(f)
-            return os.path.join(self.root, mapping.get(name, default))
-        except (FileNotFoundError, NotADirectoryError):
-            return os.path.join(self.root, default)
-        except Exception:
-            return os.path.join(self.root, default)
-
-    @property
-    def docs(self) -> str:
-        return self._resolve("docs", "docs")
-
-    @property
-    def postings(self) -> str:
-        return self._resolve("postings", "postings")
-
-    @property
-    def lexicon(self) -> str:
-        return self._resolve("lexicon", "lexicon")
-
-    @property
-    def suggest(self) -> str:
-        return self._resolve("suggest", "suggest")
-
-    @property
-    def stats(self) -> str:
-        return self._resolve("stats", "stats.json")
+    def __post_init__(self) -> None:
+        if "://" in self.root:
+            raise ValueError(
+                f"index root {self.root!r} is a URI; give a local or mounted "
+                "filesystem path (e.g. /data/index)")
+        from nextsearch_api_spark.plans.generations import (
+            DEFAULT_COMPONENTS, current_mapping,
+        )
+        mapping = current_mapping(self.root)
+        object.__setattr__(self, "gen", int(mapping["gen"]))
+        for name in DEFAULT_COMPONENTS:
+            object.__setattr__(self, name,
+                               os.path.join(self.root, mapping[name]))
 
     @property
     def manifest(self) -> str:

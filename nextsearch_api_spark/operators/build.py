@@ -815,35 +815,15 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
     deleted, ``ids`` runs before ``postings``; a complete build with
     unchanged inputs runs nothing."""
     cfg = cfg or BuildConfig()
-    paths = IndexPaths(out_root)
     os.makedirs(out_root, exist_ok=True)
     # A batch (re)build claims the base-name generation: drop any compaction
     # pointer and its generation dirs so every stage reads/writes one
     # consistent layout. (Streamed deltas are not part of the batch corpus —
     # rebuilding from the corpus supersedes them by definition; after a
     # generation flip the base dirs are gone anyway, so stages re-run.)
-    from nextsearch_api_spark.config import CURRENT_POINTER
-    cur_ptr = os.path.join(out_root, CURRENT_POINTER)
-    if os.path.exists(cur_ptr):
-        from nextsearch_api_spark.plans.generations import (
-            DEFAULT_COMPONENTS, RETIRED_COMPONENTS, current_mapping,
-        )
-        mapping = current_mapping(out_root)
-        os.remove(cur_ptr)
-        stale_names = {
-            mapping.get(comp, default)
-            for comp, default in DEFAULT_COMPONENTS.items()
-            if mapping.get(comp, default) != default
-        } | set(mapping.get("gc_pending", [])) \
-            | {mapping[comp] for comp in RETIRED_COMPONENTS if comp in mapping}
-        for phys in stale_names:
-            if phys in DEFAULT_COMPONENTS.values():
-                continue
-            stale = os.path.join(out_root, phys)
-            if os.path.isdir(stale):
-                shutil.rmtree(stale, ignore_errors=True)
-            elif os.path.exists(stale):
-                os.remove(stale)
+    from nextsearch_api_spark.plans.generations import drop_generations
+    drop_generations(out_root)
+    paths = IndexPaths(out_root)
     manifest = BuildManifest.load(paths.manifest) if resume else BuildManifest(
         paths.manifest, {"stages": {}, "created_at": time.time()}
     )

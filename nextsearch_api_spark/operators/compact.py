@@ -7,14 +7,14 @@ fragmentation). This operator consolidates them:
 
   1. pick fragmented terms from the LEXICON ONLY (metadata decision — df,
      n_chunks; no postings touched),
-  2. decode just those terms' chunks back to token rows and re-chunk them
-     with build_posting_chunks, the shuffle-based builder over token rows
-     (hash by (term, doc_block), doc-ordered, skew-safe),
-  3. union with the untouched chunks, write postings + lexicon as a new
-     generation and publish both with one atomic pointer flip. The postings
-     writer (operators/build.py:write_postings_sorted) computes every
-     written chunk's max_impact from its blob with the k1/b and avgdl
-     stored in stats.json.
+  2. ``merge_postings``: decode just those terms' chunks back to token rows
+     and re-chunk them with build_posting_chunks, the shuffle-based builder
+     over token rows (hash by (term, doc_block), doc-ordered, skew-safe);
+     union with the untouched chunks and write postings + lexicon as a new
+     generation. The postings writer (operators/build.py:
+     write_postings_sorted) computes every written chunk's max_impact from
+     its blob with the k1/b and avgdl stored in stats.json,
+  3. publish both with one atomic pointer flip.
 
 The decode to token rows and the re-chunk are proportional to the
 fragmented fraction, not the index size — the hot terms that dominate
@@ -22,9 +22,10 @@ postings bytes are usually NOT fragmented (they fill whole chunks in every
 partition), so compaction re-chunks the long tail. Computing max_impact
 decodes the tf and doc_len streams of every chunk row written.
 
-The same decode → re-chunk round trip is the delta merge of streamed docs
-(streaming/ingest.py:compact_deltas), which also uses ``chunks_holding`` to
-find the chunks a superseded doc version can sit in.
+The delta merge of streamed docs (streaming/ingest.py:compact_deltas) runs
+the same ``merge_postings``, with superseded doc ids to drop and delta
+token rows to add; it uses ``chunks_holding`` to find the chunks a
+superseded doc version can sit in.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from nextsearch_api_spark.operators.build import (
     CHUNKS_SCHEMA, TOKENS_SCHEMA, build_posting_chunks, write_lexicon,
     write_postings_sorted, _parquet_rows,
 )
+from nextsearch_api_spark.plans.generations import flip_generation, gen_path
 
 
 def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
@@ -96,6 +98,47 @@ def chunks_holding(chunks: DataFrame, doc_ids: np.ndarray) -> DataFrame:
     return chunks.where(_holds("doc_lo", "doc_hi"))
 
 
+def merge_postings(spark: SparkSession, paths: IndexPaths, gen: int,
+                   stats: dict, affected: DataFrame, cfg: BuildConfig,
+                   superseded: "DataFrame | None" = None,
+                   delta: "DataFrame | None" = None) -> "tuple[str, str]":
+    """The merge both compactions run, from the generation ``paths`` names
+    into generation ``gen`` → (postings dir, lexicon dir), not yet live.
+
+    1. The chunks of the ``affected`` terms (a one-column ``term`` frame)
+       are decoded to token rows; the ``superseded`` doc ids are dropped
+       and the ``delta`` token rows added.
+    2. build_posting_chunks re-chunks them, and every other term's chunk
+       rows are copied through with their blobs unchanged.
+    3. write_postings_sorted writes the union at ``stats``' avgdl, k1 and
+       b, and the lexicon is aggregated from the written postings."""
+    postings = spark.read.parquet(paths.postings)
+    untouched = (postings.select(*CHUNKS_SCHEMA.fieldNames())
+                 .join(affected, "term", "left_anti"))
+    live = decode_postings_to_tokens(
+        postings.join(affected, "term", "left_semi"))
+    if superseded is not None:
+        live = live.join(F.broadcast(superseded), "doc_id", "left_anti")
+    if delta is not None:
+        live = live.unionByName(delta)
+    # persist before the range-partitioned write: repartitionByRange samples
+    # its input with an extra execution, which would re-run the whole
+    # decode + re-chunk subtree (same single-materialization fix as the
+    # build's serving-layout rewrite)
+    from pyspark import StorageLevel
+    merged = untouched.unionByName(build_posting_chunks(live, cfg)).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    post_new = gen_path(paths.root, "postings", gen)
+    try:
+        write_postings_sorted(merged, post_new, stats["avgdl"],
+                              BM25Params(k1=stats["k1"], b=stats["b"]))
+    finally:
+        merged.unpersist()
+    lex_new = gen_path(paths.root, "lexicon", gen)
+    write_lexicon(spark.read.parquet(post_new), lex_new)
+    return post_new, lex_new
+
+
 def compact_postings(spark: SparkSession, index_root: str,
                      cfg: BuildConfig | None = None,
                      min_fill: float = 0.25) -> dict:
@@ -115,33 +158,9 @@ def compact_postings(spark: SparkSession, index_root: str,
     if n_frag == 0:
         return {"fragmented_terms": 0, "swapped": False}
 
-    postings = spark.read.parquet(paths.postings)
-    frag = postings.join(F.broadcast(frag_terms), "term", "left_semi")
-    keep = (postings.select(*CHUNKS_SCHEMA.fieldNames())
-            .join(F.broadcast(frag_terms), "term", "left_anti"))
-
-    from nextsearch_api_spark.plans.generations import (
-        flip_generation, gen_path, next_gen,
-    )
-    gen = next_gen(index_root)
-
-    rebuilt = build_posting_chunks(decode_postings_to_tokens(frag), cfg)
-    # persist before the range-partitioned write: repartitionByRange samples
-    # its input with an extra execution, which would re-run the whole
-    # decode + re-chunk subtree (same single-materialization fix as the
-    # build's serving-layout rewrite)
-    from pyspark import StorageLevel
-    merged = keep.unionByName(rebuilt).persist(StorageLevel.MEMORY_AND_DISK)
-    post_new = gen_path(index_root, "postings", gen)
-    try:
-        write_postings_sorted(merged, post_new, stats["avgdl"],
-                              BM25Params(k1=stats["k1"], b=stats["b"]))
-    finally:
-        merged.unpersist()
-
-    lex_new = gen_path(index_root, "lexicon", gen)
-    write_lexicon(spark.read.parquet(post_new), lex_new)
-
+    gen = paths.gen + 1
+    post_new, lex_new = merge_postings(spark, paths, gen, stats,
+                                       F.broadcast(frag_terms), cfg)
     # ONE atomic pointer flip publishes postings + lexicon together — a
     # crash can never leave them from different generations (ADVICE r1)
     flip_generation(index_root, {
@@ -151,7 +170,7 @@ def compact_postings(spark: SparkSession, index_root: str,
 
     return {
         "fragmented_terms": int(n_frag),
-        "chunks_after": _parquet_rows(paths.postings),
+        "chunks_after": _parquet_rows(post_new),
         "swapped": True,
         "gen": gen,
     }

@@ -31,16 +31,34 @@ the cluster path for one logical index.
 
 from __future__ import annotations
 
-import bisect
 import threading
 
 from nextsearch_api_spark.config import (
     SUGGEST_MAX_PREFIX_LEN, SUGGEST_TOP_PER_PREFIX,
 )
+from nextsearch_api_spark.operators.autocomplete import _SuggestServing
 from nextsearch_api_spark.operators.query import clamp_k
 from nextsearch_api_spark.operators.wand import WandEngine
 
-_PREFIX_TOP = SUGGEST_TOP_PER_PREFIX
+
+class _MergedSuggester(_SuggestServing):
+    """The build's suggest table (operators/autocomplete.py:build_suggest —
+    each prefix up to SUGGEST_MAX_PREFIX_LEN keeps its top
+    SUGGEST_TOP_PER_PREFIX terms by (df desc, term asc)) over a merged
+    term → df map, served with the single-index suggest rules."""
+
+    def __init__(self, df: "dict[str, int]"):
+        by_prefix: dict[str, list[tuple[int, str]]] = {}
+        for term, c in df.items():
+            for i in range(1, min(len(term), SUGGEST_MAX_PREFIX_LEN) + 1):
+                by_prefix.setdefault(term[:i], []).append((-c, term))
+        self.table = {p: [t for _, t in sorted(v)[:SUGGEST_TOP_PER_PREFIX]]
+                      for p, v in by_prefix.items()}
+        self.df_lookup = df
+        self.max_prefix_len = SUGGEST_MAX_PREFIX_LEN
+
+    def _candidates(self, tok: str) -> list[str]:
+        return self.table.get(tok, [])
 
 
 class MultiSegmentEngine:
@@ -59,8 +77,7 @@ class MultiSegmentEngine:
         self.segments = [WandEngine(r) for r in self.roots]
         self._lock = threading.RLock()
         self._merged_df: dict[str, int] | None = None
-        self._prefix_table: dict[str, list[str]] | None = None
-        self._sorted_terms: list[str] | None = None
+        self._suggester: _MergedSuggester | None = None
 
     # ------------------------------------------------------------- search --
     def search(self, query: str, k: int = 10, hydrate: bool = False) -> dict:
@@ -114,47 +131,18 @@ class MultiSegmentEngine:
                     self._merged_df = total
         return self._merged_df
 
-    def _suggest_structures(self) -> tuple[dict[str, list[str]], list[str]]:
-        """(prefix → top-SUGGEST_K completions, sorted term list), memoized.
-
-        The prefix table serves prefixes up to SUGGEST_MAX_PREFIX_LEN in
-        O(1); longer prefixes bisect the sorted term list to the exact
-        prefix range (O(log vocab) + range scan over that narrow range) —
-        never a full-vocab scan per call."""
-        if self._prefix_table is None:
+    def suggest(self, q: str, k: int = 10) -> list[str]:
+        """Completions of the last token of ``q`` by (summed df desc, term
+        asc) over the merged lexicons, with the preceding text echoed and k
+        clamped like the single-index suggest (api.Engine.suggest). The
+        table is built once per engine instance (segments are immutable)
+        under the engine lock."""
+        if self._suggester is None:
             with self._lock:
-                if self._prefix_table is None:
-                    df = self.merged_suggest_df()
-                    by_prefix: dict[str, list[tuple[int, str]]] = {}
-                    for term, c in df.items():
-                        for i in range(1, min(len(term),
-                                              SUGGEST_MAX_PREFIX_LEN) + 1):
-                            by_prefix.setdefault(term[:i], []).append((-c, term))
-                    table: dict[str, list[str]] = {}
-                    for p, v in by_prefix.items():
-                        v.sort()
-                        table[p] = [t for _, t in v[:_PREFIX_TOP]]
-                    self._sorted_terms = sorted(df)
-                    self._prefix_table = table
-        return self._prefix_table, self._sorted_terms
-
-    def suggest(self, prefix: str, k: int = 10) -> list[str]:
-        """Top-k completions by (summed df desc, term asc) over the merged
-        lexicons — the engine-level view of per-segment vocabularies."""
-        table, terms = self._suggest_structures()
-        p = prefix.lower()
-        if not p:
-            df = self.merged_suggest_df()
-            hits = sorted(df.items(), key=lambda tc: (-tc[1], tc[0]))
-            return [t for t, _ in hits[:k]]
-        if len(p) <= SUGGEST_MAX_PREFIX_LEN and k <= _PREFIX_TOP:
-            return table.get(p, [])[:k]
-        # long-prefix / large-k path: exact scan over the bisected range only
-        lo = bisect.bisect_left(terms, p)
-        hi = bisect.bisect_left(terms, p[:-1] + chr(ord(p[-1]) + 1))
-        df = self.merged_suggest_df()
-        hits = sorted(terms[lo:hi], key=lambda t: (-df[t], t))
-        return hits[:k]
+                if self._suggester is None:
+                    self._suggester = _MergedSuggester(
+                        self.merged_suggest_df())
+        return self._suggester.suggest(q, k)
 
     # -------------------------------------------------------------- stats --
     def health(self) -> dict:

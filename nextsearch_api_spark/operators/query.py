@@ -90,8 +90,10 @@ class IndexReader:
     DataFrame handles are memoized: ``spark.read.parquet`` re-lists the
     directory and re-reads footers on every call (~0.15 s against a 64-file
     postings dir), which was pure per-query overhead in the r2 bench. A
-    reader is pinned to the generation it opened (like any snapshot reader);
-    create a new IndexReader after compaction/reload."""
+    reader is pinned to the generation its IndexPaths snapshot names: stats,
+    tables and footer indexes all come from it, so it answers from that
+    generation until it is dropped; create a new IndexReader to serve a
+    later compaction's generation."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -121,14 +123,8 @@ class IndexReader:
     def postings(self) -> DataFrame:
         return self._table(self.paths.postings)
 
-    def lexicon(self) -> DataFrame:
-        return self._table(self.paths.lexicon)
-
     def docs(self) -> DataFrame:
         return self._table(self.paths.docs)
-
-    def suggest_table(self) -> DataFrame:
-        return self._table(self.paths.suggest)
 
     def _by_term(self, path: str) -> "RowGroupIndex":  # noqa: F821
         """Footer index over a term-sorted table (postings, lexicon), opened
@@ -148,13 +144,9 @@ class IndexReader:
         requested term — column-pruned to four scalar columns, never the
         blobs. Volume is df/chunk_size rows per term, a small fraction of
         the decode volume it lets the batch tier skip. Nothing is cached:
-        each call re-reads the bounded slice. Terms it cannot read are left
-        out (the prefilter then keeps all their chunks)."""
-        try:
-            t = self._by_term(self.paths.postings).read(
-                terms, ["doc_lo", "doc_hi", "max_impact"])
-        except Exception:
-            return {}
+        each call re-reads the bounded slice."""
+        t = self._by_term(self.paths.postings).read(
+            terms, ["doc_lo", "doc_hi", "max_impact"])
         out: dict[str, list[tuple[int, int, float]]] = {}
         for term, lo, hi, mi in zip(
                 *(t.column(c).to_pylist()
@@ -169,23 +161,13 @@ class IndexReader:
         Driver-side read of the term-sorted lexicon through its footer index
         (only the row groups whose term range holds a requested term) — a
         bounded O(|terms|) lookup, without paying a Spark job's scheduling
-        latency per query (~0.3 s). Falls back to a Spark collect for
-        filesystems pyarrow can't open."""
+        latency per query (~0.3 s)."""
         terms = list(terms)
         if not terms:
             return TermDfs()
-        try:
-            t = self._by_term(self.paths.lexicon).read(
-                terms, ["df", "n_chunks"])
-            rows = zip(*(t.column(c).to_pylist()
-                         for c in ("term", "df", "n_chunks")))
-        except Exception:
-            rows = (
-                self.lexicon()
-                .where(F.col("term").isin(terms))
-                .select("term", "df", "n_chunks")
-                .collect()
-            )
+        t = self._by_term(self.paths.lexicon).read(terms, ["df", "n_chunks"])
+        rows = zip(*(t.column(c).to_pylist()
+                     for c in ("term", "df", "n_chunks")))
         dfs: dict[str, int] = {}
         n_chunks: dict[str, int] = {}
         for term, df, nc in rows:
@@ -272,9 +254,7 @@ def _plan_chunk_prune(
     overrides: dict[int, int] = {}
     meta = reader.chunk_meta(cand) if cand else {}
     for t in cand:
-        chunks = meta.get(t)
-        if not chunks:
-            continue
+        chunks = meta[t]
         # the largest k among this term's queries bounds the prune for all
         k_req = max(k for _, k in pure_single[t])
         if len(chunks) <= k_req:
@@ -293,24 +273,17 @@ def _plan_chunk_prune(
 
 def _driver_small_search(reader: IndexReader, present: "list[str]",
                          queries: "list[tuple]",
-                         params: BM25Params) -> "list[tuple] | None":
+                         params: BM25Params) -> "list[tuple]":
     """Driver-side exact TAAT for a volume-bounded query batch →
-    [(qid, k, found, top doc ids, top scores)], or None to fall back to the
-    distributed plan (any read failure / a present term without chunk
-    rows).
+    [(qid, k, found, top doc ids, top scores)].
 
     ONE footer-indexed read of the present terms' chunk rows (only the
     postings row groups whose term range holds a present term), then
     functions/scoring.py's rank_chunk_rows over the whole doc-id space —
     the helper each range group of the distributed plan and the serving
     tier run, so all return identical rows."""
-    try:
-        t = reader._by_term(reader.paths.postings).read(
-            list(present), ["doc_lo", "count", "tf_off", "dl_off", "blob"])
-    except Exception:
-        return None
-    if not set(present) <= set(t.column("term").to_pylist()):
-        return None  # lexicon/postings disagree — let the full plan decide
+    t = reader._by_term(reader.paths.postings).read(
+        list(present), ["doc_lo", "count", "tf_off", "dl_off", "blob"])
     return rank_chunk_rows(t, queries, reader.avgdl, params)
 
 
@@ -339,9 +312,7 @@ def _doc_range_cuts(reader: IndexReader, present: "list[str]",
       most the first and last of each term's run) are read for their
       chunks' ``doc_lo`` and ``count``.
     A range then holds about kept/n postings, give or take one row group
-    per term at each boundary. Nothing is cached. A postings table pyarrow
-    cannot open (the same failure that turns off the driver path and the
-    prune) gets one range."""
+    per term at each boundary. Nothing is cached."""
     if sum(df_map[t] for t in present) <= SMALL_QUERY_MAX_POSTINGS:
         return []
     n_chunks = getattr(df_map, "n_chunks", {})
@@ -354,25 +325,22 @@ def _doc_range_cuts(reader: IndexReader, present: "list[str]",
         wts.extend([per_chunk[t]] * len(kept))
     rest = [t for t in present if t not in whitelist]
     if rest:
-        try:
-            idx = reader._by_term(reader.paths.postings)
-            groups = idx.row_groups(rest)
-            to_read = []
-            for g, (t_lo, t_hi, lo, _hi, rows) in zip(
-                    groups, idx.stats(groups, "doc_lo")):
-                w = rows * per_chunk.get(t_lo, 0.0)
-                if t_lo == t_hi and t_lo in per_chunk and lo is not None \
-                        and w <= SMALL_QUERY_MAX_POSTINGS:
-                    los.append(int(lo))
-                    wts.append(w)
-                else:
-                    to_read.append(g)
-            if to_read:
-                edge = idx.read(rest, ["doc_lo", "count"], groups=to_read)
-                los.extend(edge.column("doc_lo").to_pylist())
-                wts.extend(edge.column("count").to_pylist())
-        except Exception:
-            return []
+        idx = reader._by_term(reader.paths.postings)
+        groups = idx.row_groups(rest)
+        to_read = []
+        for g, (t_lo, t_hi, lo, _hi, rows) in zip(
+                groups, idx.stats(groups, "doc_lo")):
+            w = rows * per_chunk.get(t_lo, 0.0)
+            if t_lo == t_hi and t_lo in per_chunk and lo is not None \
+                    and w <= SMALL_QUERY_MAX_POSTINGS:
+                los.append(int(lo))
+                wts.append(w)
+            else:
+                to_read.append(g)
+        if to_read:
+            edge = idx.read(rest, ["doc_lo", "count"], groups=to_read)
+            los.extend(edge.column("doc_lo").to_pylist())
+            wts.extend(edge.column("count").to_pylist())
     weights = np.asarray(wts, dtype=np.float64)
     n = int(np.ceil(weights.sum() / SMALL_QUERY_MAX_POSTINGS))
     if n <= 1:
@@ -588,9 +556,7 @@ def batch_search(
     Scale safety: the ranges partition the doc-id space, so each doc's full
     score is computed in exactly one group — per-range found counts add up
     exactly and the merge of per-range top-k lists is exact. A group holds
-    about SMALL_QUERY_MAX_POSTINGS postings at most (one group for the
-    whole batch when pyarrow cannot open the postings footers), and the
-    driver plans the ranges from postings footers and whitelists, never
+    about SMALL_QUERY_MAX_POSTINGS postings at most, and the driver plans the ranges from postings footers and whitelists, never
     from a per-chunk read. The driver holds ≤ (k + 1) rows per query per
     range, with ⌈Σdf / SMALL_QUERY_MAX_POSTINGS⌉ ranges, never the matched
     set. The plan has one Python stage, and the exchange carries
@@ -612,12 +578,11 @@ def batch_search(
     # forces the distributed plan (the parity-testing escape hatch).
     budget = (SMALL_QUERY_MAX_POSTINGS if small_query_max_postings is None
               else small_query_max_postings)
-    top = None
     if not ranked:
         top = []
     elif prune_chunks and budget > 0 and sum(df_map.values()) <= budget:
         top = _driver_small_search(reader, sorted(df_map), ranked, params)
-    if top is None:
+    else:
         stage, found_overrides = _range_stage(reader, df_map, ranked,
                                               params, prune_chunks)
         top = _merge_ranges(stage.toArrow(), ranked, found_overrides)

@@ -58,6 +58,10 @@ def check_index_format(stats: dict, stats_path: str) -> None:
 
 
 class WandEngine:
+    """Driver-side TAAT serving over one index generation: the one its
+    IndexPaths snapshot names when the engine opens. Searches and the lazy
+    docs hydration read that generation until the engine is dropped."""
+
     def __init__(self, index_root: str, params: BM25Params | None = None):
         import glob
 

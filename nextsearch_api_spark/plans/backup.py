@@ -2,17 +2,16 @@
 ``scripts/backup_data.cpp`` (segment-directory snapshot utility), built on
 the generations layer instead of raw file copies.
 
-A backup is a CONSISTENT snapshot: every component path is resolved through
-``CURRENT.json`` at one instant (the same single-pointer semantics readers
-use), so a backup taken concurrently with a compaction flip is either
-all-old-generation or all-new-generation, never mixed. The snapshot is
-written under base component names with no pointer file — a restored (or
-directly opened) backup serves exactly like a fresh build.
+A backup is a CONSISTENT snapshot: every component path comes from one
+``IndexPaths``, which reads ``CURRENT.json`` once (the same snapshot a
+reader holds), so a backup taken concurrently with a compaction flip is
+either all-old-generation or all-new-generation, never mixed. The snapshot
+is written under base component names with no pointer file — a restored
+(or directly opened) backup serves exactly like a fresh build.
 
-Scale note: backup is file copying, deliberately driver-side and
-Spark-free — on a real deployment the same layout maps to an object-store
-prefix copy (`aws s3 sync` of the resolved component prefixes). The
-manifest records what was copied and from which generation.
+Backup is file copying, deliberately driver-side and Spark-free, between
+local or mounted filesystem paths. The manifest records what was copied
+and from which generation.
 """
 
 from __future__ import annotations
@@ -23,9 +22,7 @@ import shutil
 import time
 
 from nextsearch_api_spark.config import IndexPaths
-from nextsearch_api_spark.plans.generations import (
-    DEFAULT_COMPONENTS, current_mapping,
-)
+from nextsearch_api_spark.plans.generations import DEFAULT_COMPONENTS
 
 BACKUP_MANIFEST = "_backup.json"
 
@@ -34,7 +31,7 @@ def backup_index(index_root: str, backup_dir: str,
                  components: "list[str] | None" = None) -> dict:
     """Snapshot the LIVE generation of ``index_root`` into ``backup_dir``.
 
-    Components resolve through CURRENT.json once (consistent cut); a
+    Components come from one IndexPaths snapshot (consistent cut); a
     missing optional component (suggest) is skipped. The snapshot holds
     only serving components, and that is all ``compact_deltas`` needs: it
     merges from the postings, so a restored root compacts like the source.
@@ -42,7 +39,6 @@ def backup_index(index_root: str, backup_dir: str,
     source_gen, created_at}.
     """
     paths = IndexPaths(index_root)
-    mapping = current_mapping(index_root)
     wanted = components or list(DEFAULT_COMPONENTS)
     unknown = set(wanted) - set(DEFAULT_COMPONENTS)
     if unknown:
@@ -51,13 +47,7 @@ def backup_index(index_root: str, backup_dir: str,
     os.makedirs(backup_dir, exist_ok=True)
     copied: dict[str, str] = {}
     for name in wanted:
-        # Resolve from the ONE mapping snapshot taken above — NOT through
-        # IndexPaths properties, which re-read CURRENT.json on every access.
-        # A compaction flip between component copies would otherwise yield a
-        # mixed-generation backup (postings gen N+1 + lexicon/stats gen N →
-        # wrong idf/avgdl after restore), the exact hazard the generations
-        # layer exists to prevent (ADVICE r5, high).
-        src = os.path.join(index_root, mapping.get(name, DEFAULT_COMPONENTS[name]))
+        src = getattr(paths, name)
         dst = os.path.join(backup_dir, DEFAULT_COMPONENTS[name])
         if os.path.isdir(src):
             if os.path.exists(dst):
@@ -75,7 +65,7 @@ def backup_index(index_root: str, backup_dir: str,
     manifest = {
         "components": copied,
         "source_root": os.path.abspath(index_root),
-        "source_gen": int(mapping.get("gen", 0)),
+        "source_gen": paths.gen,
         "created_at": time.time(),
     }
     with open(os.path.join(backup_dir, BACKUP_MANIFEST), "w") as f:

@@ -7,17 +7,19 @@ lexicon from different generations (df/N mismatch → wrong idf; ADVICE r1).
 
 Now every compaction writes brand-new ``<component>_g<N>`` directories and
 flips the single ``CURRENT.json`` pointer with one atomic ``os.replace``.
-Readers (IndexPaths._resolve) either see the old generation or the new one,
-never a mix. Superseded generation dirs are garbage-collected best-effort
-after the flip.
+This module is the only one that reads or writes the pointer. A reader's
+``IndexPaths`` reads it once, when it is constructed, so a handle serves
+one generation until it is reopened (``Engine.reload``, a new
+``IndexReader``) — never a mix. Superseded generation dirs are
+garbage-collected best-effort one flip later.
 
 The components are exactly what serving reads. Older compactions also
 kept a ``forward`` table (one row per (doc, term)) as a component; a
 pointer that still names one has it retired at its next flip: the directory
 goes to ``gc_pending`` like any superseded one and is collected a flip later.
 
-Note: single-file atomic replace is a local/NFS/HDFS-rename property; on
-object stores the same pointer flip works because it is one small PUT.
+Index roots are local or mounted filesystem paths (``IndexPaths`` refuses
+a URI): the flip relies on ``os.replace`` being atomic there.
 """
 
 from __future__ import annotations
@@ -48,13 +50,28 @@ def current_mapping(index_root: str) -> dict:
     try:
         with open(os.path.join(index_root, CURRENT_POINTER)) as f:
             mapping.update(json.load(f))
-    except Exception:
+    except FileNotFoundError:
         pass
     return mapping
 
 
-def next_gen(index_root: str) -> int:
-    return int(current_mapping(index_root).get("gen", 0)) + 1
+def drop_generations(index_root: str) -> None:
+    """Return ``index_root`` to the base-name layout: remove the pointer and
+    every generation dir it names, live or pending. Base-name dirs stay."""
+    cur = os.path.join(index_root, CURRENT_POINTER)
+    if not os.path.exists(cur):
+        return
+    mapping = current_mapping(index_root)
+    os.remove(cur)
+    named = ({mapping[comp] for comp in DEFAULT_COMPONENTS}
+             | set(mapping.get("gc_pending", []))
+             | {mapping[comp] for comp in RETIRED_COMPONENTS if comp in mapping})
+    for phys in named - set(DEFAULT_COMPONENTS.values()):
+        stale = os.path.join(index_root, phys)
+        if os.path.isdir(stale):
+            shutil.rmtree(stale, ignore_errors=True)
+        elif os.path.exists(stale):
+            os.remove(stale)
 
 
 def gen_path(index_root: str, component: str, gen: int) -> str:
@@ -64,13 +81,6 @@ def gen_path(index_root: str, component: str, gen: int) -> str:
     if base.endswith(".json"):
         return os.path.join(index_root, base[:-5] + suffix + ".json")
     return os.path.join(index_root, base + suffix)
-
-
-def _is_uri(path: str) -> bool:
-    """True for object-store/remote roots (s3a://, gs://, hdfs://, ...) where
-    POSIX rmtree/os.replace semantics do not apply. The pointer flip itself is
-    still safe there (one small PUT); only local GC is skipped."""
-    return "://" in path
 
 
 def flip_generation(index_root: str, components: dict[str, str],
@@ -86,14 +96,12 @@ def flip_generation(index_root: str, components: dict[str, str],
     into FileNotFoundError 500s until /api/reload (ADVICE r2). Superseded
     dirs are instead recorded as ``gc_pending`` in the pointer and removed at
     the START of the NEXT flip, by which point any process still serving the
-    two-generations-old layout has had a full compaction cycle to reload.
-    On URI-scheme roots (object stores) local GC is skipped entirely and
-    ``gc_pending`` accumulates for an external lifecycle policy."""
+    two-generations-old layout has had a full compaction cycle to reload."""
     unknown = set(components) - set(DEFAULT_COMPONENTS)
     if unknown:
         raise ValueError(f"unknown index components: {sorted(unknown)}")
     old = current_mapping(index_root)
-    new = {k: v for k, v in old.items() if k not in RETIRED_COMPONENTS}
+    new = {name: old[name] for name in DEFAULT_COMPONENTS}
     new.update(components)
     new["gen"] = gen
 
@@ -105,14 +113,7 @@ def flip_generation(index_root: str, components: dict[str, str],
         if old.get(name, DEFAULT_COMPONENTS[name]) != new[name]
     ] + [old[name] for name in RETIRED_COMPONENTS if name in old]
     prior_pending = [p for p in old.get("gc_pending", []) if p not in pending]
-    uri_root = _is_uri(index_root)
-    new["gc_pending"] = sorted(
-        set(pending) | (set(prior_pending) if uri_root else set())
-    )
-    # record the commit semantics for operators/reviewers (stretch, VERDICT
-    # r2 #8): local/NFS/HDFS get an atomic rename; object stores get a
-    # last-writer-wins PUT of one small file — equally safe for one writer
-    new["atomic_rename"] = "put" if uri_root else "local"
+    new["gc_pending"] = sorted(set(pending))
 
     def _write_pointer(mapping: dict) -> None:
         cur = os.path.join(index_root, CURRENT_POINTER)
@@ -128,23 +129,22 @@ def flip_generation(index_root: str, components: dict[str, str],
     # that FAILS (permissions, open handles on non-POSIX mounts) is kept in
     # gc_pending so the next flip retries instead of leaking the directory
     # untracked (ADVICE r3).
-    if not uri_root:
-        live = {new[name] for name in DEFAULT_COMPONENTS} | set(new["gc_pending"])
-        leaked: list[str] = []
-        for prev in prior_pending:
-            if prev in live:
-                continue
-            stale = os.path.join(index_root, prev)
-            if os.path.isdir(stale):
-                shutil.rmtree(stale, ignore_errors=True)
-            elif os.path.exists(stale):
-                try:
-                    os.remove(stale)
-                except OSError:
-                    pass
-            if os.path.exists(stale):
-                leaked.append(prev)
-        if leaked:
-            new["gc_pending"] = sorted(set(new["gc_pending"]) | set(leaked))
-            _write_pointer(new)
+    live = {new[name] for name in DEFAULT_COMPONENTS} | set(new["gc_pending"])
+    leaked: list[str] = []
+    for prev in prior_pending:
+        if prev in live:
+            continue
+        stale = os.path.join(index_root, prev)
+        if os.path.isdir(stale):
+            shutil.rmtree(stale, ignore_errors=True)
+        elif os.path.exists(stale):
+            try:
+                os.remove(stale)
+            except OSError:
+                pass
+        if os.path.exists(stale):
+            leaked.append(prev)
+    if leaked:
+        new["gc_pending"] = sorted(set(new["gc_pending"]) | set(leaked))
+        _write_pointer(new)
     return new

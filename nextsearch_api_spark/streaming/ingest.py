@@ -356,11 +356,10 @@ def compact_deltas(spark: SparkSession, index_root: str,
        superseded id, only those are decoded, and a term counts only when a
        decoded id really is superseded. (Re-chunking a term that did not
        change would alter its chunk layout.)
-    3. The affected terms' live postings are decoded to token rows
-       (operators/compact.py:decode_postings_to_tokens), the superseded ids
-       dropped and the delta rows added; build_posting_chunks re-chunks
-       them. Every other term's chunk rows are copied through with their
-       blobs unchanged.
+    3. operators/compact.py:merge_postings decodes the affected terms' live
+       postings to token rows, drops the superseded ids, adds the delta
+       rows and re-chunks them with build_posting_chunks. Every other
+       term's chunk rows are copied through with their blobs unchanged.
     4. N, total_len and avgdl come from the merged docs. The postings
        writer (operators/build.py:write_postings_sorted) computes every
        written chunk's max_impact at that avgdl and the stored k1/b.
@@ -376,18 +375,15 @@ def compact_deltas(spark: SparkSession, index_root: str,
 
     import numpy as np
 
-    from pyspark import StorageLevel
-
-    from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
+    from nextsearch_api_spark.config import BuildConfig, IndexPaths
     from nextsearch_api_spark.operators.build import (
-        CHUNKS_SCHEMA, build_posting_chunks, write_docs_sorted, write_lexicon,
-        write_postings_sorted, write_suggest_sorted,
+        write_docs_sorted, write_suggest_sorted,
     )
     from nextsearch_api_spark.operators.compact import (
-        chunks_holding, decode_postings_to_tokens,
+        chunks_holding, decode_postings_to_tokens, merge_postings,
     )
     from nextsearch_api_spark.plans.generations import (
-        flip_generation, gen_path, next_gen,
+        flip_generation, gen_path,
     )
 
     paths = IndexPaths(index_root)
@@ -395,7 +391,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
         stats = json.load(f)
     cfg = cfg or BuildConfig()
 
-    gen = next_gen(index_root)
+    gen = paths.gen + 1
 
     # ---- docs upsert + doc_id collision check (ADVICE r1) -----------------
     # A delta uid already present in the base docs is an UPDATED document:
@@ -433,6 +429,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
                 F.sum("doc_len").alias("total_len")).collect()[0])
     N, total_len = int(row["N"]), int(row["total_len"] or 0)
     avgdl = float(total_len) / N if N else 0.0
+    stats.update(N=N, avgdl=avgdl, total_len=total_len)
 
     # INCREMENTAL re-chunk (VERDICT r1 'next' #9): only terms the delta
     # touches — terms in new/updated docs plus terms of superseded docs —
@@ -451,27 +448,9 @@ def compact_deltas(spark: SparkSession, index_root: str,
             .select("term"))
     affected = affected.distinct().cache()
     n_affected = affected.count()
-    untouched = (old_post.select(*CHUNKS_SCHEMA.fieldNames())
-                 .join(affected, "term", "left_anti"))
-    live = (decode_postings_to_tokens(
-                old_post.join(affected, "term", "left_semi"))
-            .join(F.broadcast(superseded), "doc_id", "left_anti"))
-    rebuilt = build_posting_chunks(live.unionByName(fw_delta), cfg)
-    # persist before the range-partitioned write: repartitionByRange samples
-    # its input with an extra execution, which would re-run the decode +
-    # re-chunk subtree
-    chunks = untouched.unionByName(rebuilt).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    post_new = gen_path(index_root, "postings", gen)
-    try:
-        write_postings_sorted(chunks, post_new, avgdl,
-                              BM25Params(k1=stats["k1"], b=stats["b"]))
-    finally:
-        chunks.unpersist()
-    lex_new = gen_path(index_root, "lexicon", gen)
-    write_lexicon(spark.read.parquet(post_new), lex_new)
+    post_new, lex_new = merge_postings(spark, paths, gen, stats, affected,
+                                       cfg, superseded, fw_delta)
 
-    stats.update(N=N, avgdl=avgdl, total_len=total_len)
     stats_new = gen_path(index_root, "stats", gen)
     with open(stats_new, "w") as f:
         json.dump(stats, f, indent=2)

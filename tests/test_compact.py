@@ -93,7 +93,6 @@ def test_generation_gc_deferred_one_flip(spark, tmp_path):
     for d in m1["gc_pending"]:
         assert not os.path.exists(os.path.join(root, d)), d
     assert m2["gc_pending"] == []
-    assert m2["atomic_rename"] == "local"
     # fresh reader on the new generation agrees
     w = WandEngine(root)
     now = w.search("hotterm buffer", 10)

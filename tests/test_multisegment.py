@@ -146,10 +146,30 @@ def test_multisegment_suggest_memoized_and_concurrent(two_segments):
     assert not errors
     assert set(results) == {tuple(expect)}
 
-    # long-prefix / k>10 fallback path stays exact (bisected range, not a
-    # full-vocab scan) — parity vs brute force over the merged df
+    # k clamps to SUGGEST_K_MAX (10), like the single-index suggest; the
+    # long-prefix path stays exact — parity vs brute force over the merged df
     brute = sorted((t for t in df if t.startswith("b")),
                    key=lambda t: (-df[t], t))
-    assert eng.suggest("b", 25) == brute[:25]
+    assert eng.suggest("b", 25) == brute[:10]
     long_p = max(df, key=len)
     assert eng.suggest(long_p, 3)[0] == long_p
+
+
+def test_multisegment_suggest_matches_engine(two_segments):
+    """One segment suggests exactly as ``api.Engine`` over the same root
+    does: the last token is completed and the text before it echoed, k is
+    clamped to [1, 10], and an input without a token completes nothing."""
+    from nextsearch_api_spark.api import Engine
+
+    root = two_segments[0]
+    multi, eng = MultiSegmentEngine([root]), Engine(root)
+    df = eng.wand._df
+    by_df = sorted(df, key=lambda t: (-df[t], t))
+    hot, mid, rare = by_df[0], by_df[len(by_df) // 2], by_df[-1]
+    longest = max(by_df, key=len)
+    probes = [(hot[:2], 5), (mid[:3], 10), (rare[:4], 5), ("qqzz", 5),
+              (f"{hot} {mid[:2]}", 10), (hot, 3), ("def bu", 5),
+              ("Load_Config bu", 5), ("bu", 0), ("bu", 25), ("", 5),
+              ("  ", 5), ("bu ", 5), (longest, 3), (longest[:13], 10)]
+    for q, k in probes:
+        assert multi.suggest(q, k) == eng.suggest(q, k)["suggestions"], (q, k)

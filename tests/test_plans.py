@@ -225,8 +225,8 @@ def test_chunk_prefilter_randomized_parity(spark, plan_env):
 
     rng = random.Random(1234)
     vocab = [r["term"] for r in
-             plan_env.lexicon().select("term").orderBy(F.desc("df"))
-             .limit(40).collect()]
+             spark.read.parquet(plan_env.paths.lexicon).select("term")
+             .orderBy(F.desc("df")).limit(40).collect()]
     specs = []
     for qid in range(12):
         n_terms = rng.choice([1, 1, 1, 2, 3])  # bias to the pruned shape
@@ -601,8 +601,8 @@ def test_reader_holds_no_per_term_state(spark, tiny_index):
     reader holds nothing keyed by a term."""
     root, _ = tiny_index
     rd = IndexReader(spark, root)
-    lex = dict(tuple(r) for r in
-               rd.lexicon().select("term", "n_chunks").collect())
+    lex = dict(tuple(r) for r in spark.read.parquet(rd.paths.lexicon)
+               .select("term", "n_chunks").collect())
     terms = sorted(lex)[:60]
     for i in range(0, len(terms), 15):
         specs = [QuerySpec(j, t, 5) for j, t in enumerate(terms[i:i + 15])]

@@ -300,8 +300,7 @@ def test_doc_range_cuts_from_postings_footer(tmp_path, monkeypatch, base):
     """A term's row groups that hold only it become one cut-planning point
     each, from footer statistics alone: only the row groups it shares with
     other terms are read. Ranges stay balanced for build ids and for
-    streamed 2^62-range ids, and a postings table pyarrow cannot open
-    plans one range."""
+    streamed 2^62-range ids, and unreadable postings footers raise."""
     from types import SimpleNamespace
 
     import pyarrow as pa
@@ -350,10 +349,11 @@ def test_doc_range_cuts_from_postings_footer(tmp_path, monkeypatch, base):
     assert len(cuts) == 1 and cuts[0] in kept
 
     def unreadable(_p):
-        raise OSError("no pyarrow filesystem")
+        raise OSError("unreadable postings footer")
 
     rd._by_term = unreadable
-    assert query._doc_range_cuts(rd, present, df_map, {}) == []
+    with pytest.raises(OSError, match="unreadable postings footer"):
+        query._doc_range_cuts(rd, present, df_map, {})
 
 
 def test_topk_boundary_tiebreak_canonical(spark, tmp_path):
