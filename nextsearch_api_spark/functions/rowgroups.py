@@ -1,15 +1,16 @@
 """Footer index: point reads by key that touch only the row groups holding
 the keys.
 
-The serving tier reads by key — k doc ids to hydrate, a query's terms, one
-suggest prefix. A pyarrow dataset scan with an ``isin`` filter does not
-prune row groups by their footer statistics (it reads every row group of
-every file and filters rows afterwards), so a keyed read used to cost a
-full-table scan. :class:`RowGroupIndex` scans the footers ONCE when it
+The serving tier reads by key — a query's terms, one suggest prefix, the
+batch tier's lexicon and chunk metadata. A pyarrow dataset scan with an
+``isin`` filter does not prune row groups by their footer statistics (it
+reads every row group of every file and filters rows afterwards), so a
+keyed read used to cost a full-table scan. :class:`RowGroupIndex` scans the footers ONCE when it
 opens, keeps each row group's [min, max] of one sort column, and reads only
 the row groups whose range can hold a requested key — the analog of the
-reference's O(1) ``docs[docId]`` / lexicon-offset seek
-(src/api_engine.cpp:453-475, :508-532).
+reference's lexicon-offset seek (src/api_engine.cpp:453-475). Hit
+hydration does not come here: it takes rows from the memory-mapped doc
+store (functions/docstore.py).
 
 Correct on any layout; bounded on sorted ones. When the table is written
 range-partitioned and sorted by the column (the build's serving layout,

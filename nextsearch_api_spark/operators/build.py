@@ -23,7 +23,9 @@ Spark-first re-design (NOT a port):
     ranges are disjoint across partitions.
   * serving layout — the chunk rows (compressed postings, a fraction of
     corpus bytes) are range-partitioned + sorted by (term, doc_lo) in
-    bounded row groups; docs by doc_id; lexicon and suggest by key.
+    bounded row groups; docs by doc_id, as zstd Parquet plus the doc
+    store's memory-mapped Arrow twins (functions/docstore.py); lexicon and
+    suggest by key.
   * postings format v6 — per chunk: a blob of doc-id gaps from doc_lo, tf
     and frame-of-reference doc_len (functions/codec.py owns the layout) and
     the float32 block-max impact (functions/scoring.py:bm25_impact), the
@@ -59,6 +61,7 @@ from pyspark.sql.types import (
 )
 
 from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
+from nextsearch_api_spark.functions.docstore import uid_column, write_doc_store
 from nextsearch_api_spark.functions.scoring import bm25_impact
 from nextsearch_api_spark.functions.text import arrow_kept_tokens
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
@@ -84,9 +87,11 @@ CHUNKS_SCHEMA = StructType([
 
 _KEY_SEP = "\x01"
 
-# bump when the on-disk chunk/lexicon format changes — forces resume logic to
-# rebuild indexes created by older code
-FORMAT_VERSION = 6
+# bump when the on-disk format of any component changes — forces resume
+# logic to rebuild indexes created by older code. 6: postings blobs as in
+# functions/codec.py; 7: the docs component also carries the doc store
+# (functions/docstore.py) that hydration reads
+FORMAT_VERSION = 7
 
 
 def _parquet_rows(path: str) -> int:
@@ -370,14 +375,13 @@ def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen):
     )
 
 
-# Row-group byte targets of the serving tables (parquet.block.size). The
-# serving tier reads by key through footer indexes (functions/rowgroups.py),
-# so a point read costs about one row group: hydrating k hits reads ≤ k docs
-# row groups, a term fetch reads its own postings row groups plus at most a
-# partial neighbor at each end. Smaller groups cut the bytes per read but
-# add footer metadata and weaken per-group compression; the values come from
-# a sweep of the k=100 serving tail against index bytes (CHANGES.md).
-DOCS_ROW_GROUP_BYTES = 32 << 10
+# Row-group byte targets of the keyed serving tables (parquet.block.size).
+# The serving tier reads postings and suggest by key through footer indexes
+# (functions/rowgroups.py), so a point read costs about one row group: a
+# term fetch reads its own postings row groups plus at most a partial
+# neighbor at each end. Smaller groups cut the bytes per read but add footer
+# metadata and weaken per-group compression; the values come from a sweep of
+# the k=100 serving tail against index bytes (CHANGES.md).
 POSTINGS_ROW_GROUP_BYTES = 256 << 10
 SUGGEST_ROW_GROUP_BYTES = 1 << 20
 SUGGEST_ROWS_PER_FILE = 2_000_000
@@ -483,13 +487,18 @@ def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
 
 
 def write_docs_sorted(docs: DataFrame, out_path: str) -> None:
-    """Write doc rows range-partitioned + sorted by doc_id in bounded row
-    groups: row-group doc-id ranges are disjoint and ascending, so hydrating
-    k hits reads at most k row groups (the reference's O(1) ``docs[docId]``,
-    api_engine.cpp:508-532)."""
-    _write_range_sorted(
-        docs, out_path, ["doc_id"], DOCS_ROW_GROUP_BYTES,
-        _serving_partitions(docs.sparkSession))
+    """Write the docs component: doc rows range-partitioned + sorted by
+    doc_id as zstd Parquet, then the doc store's Arrow twin of every part
+    (functions/docstore.py:write_doc_store, one more Spark job), which
+    serving and batch hydration read — the reference's O(1)
+    ``docs[docId]`` (api_engine.cpp:508-532). No keyed Parquet read of docs
+    remains, so the Parquet files keep Spark's default row groups."""
+    (docs.repartitionByRange(_serving_partitions(docs.sparkSession), "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .parquet(out_path))
+    write_doc_store(docs.sparkSession, out_path)
 
 
 def write_lexicon(postings: DataFrame, out_path: str) -> None:
@@ -863,9 +872,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # 8-core ids stage at 400k docs, DRAM-bandwidth-bound).
         ids = assign_doc_ids(corpus).select(
             "doc_id",
-            F.substring(
-                F.sha2(F.concat_ws("", "repo", "path", "commit"), 256), 1, 16
-            ).alias("uid"),
+            uid_column().alias("uid"),
             "repo", "path", "commit", "lang",
             F.sha2(F.col("content"), 256).alias("content_sha256"),
             "content", "seg",
@@ -940,8 +947,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # with the doclen table the postings tokenize emitted —
         # metadata-only rows on both sides, no content bytes move, and the
         # zero-token filter IS the inner join (such docs have no doclen
-        # row). Written doc-id-sorted in small row groups: serving
-        # hydration reads only the row groups holding its hits.
+        # row). Written doc-id-sorted with the doc store beside it:
+        # serving hydration takes its hits from the store's mapped files.
         docs = (
             spark.read.parquet(ids_path)
             .select("doc_id", "uid", "repo", "path", "commit", "lang",

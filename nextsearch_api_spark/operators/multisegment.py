@@ -107,8 +107,8 @@ class MultiSegmentEngine:
     def _hydrate(self, out: dict) -> dict:
         """Per-segment doc-metadata join (reference hydration reads each
         hit's metadata from ITS segment's doc store, api_engine.cpp:508-532;
-        left-join semantics — missing meta tolerated): each segment's
-        footer-indexed docs read, the same as the single-segment Engine."""
+        left-join semantics — missing meta tolerated): each segment's doc
+        store, the same as the single-segment Engine."""
         by_seg: dict[int, list[dict]] = {}
         for r in out["results"]:
             by_seg.setdefault(r["segment"], []).append(r)

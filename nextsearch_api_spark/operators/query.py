@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from nextsearch_api_spark.config import (
     BM25Params, IndexPaths, MIN_TOKEN_LEN, SEARCH_K_MAX, SEARCH_K_MIN,
 )
+from nextsearch_api_spark.functions.docstore import HIT_FIELDS, DocStore
 from nextsearch_api_spark.functions.scoring import (
     bm25_idf, rank_chunk_rows, topk_tiebroken,
 )
@@ -180,12 +181,6 @@ class IndexReader:
 # difference never prunes a true top-k doc
 _CHUNK_PRUNE_SLACK = 1.0 - 1e-5
 
-# hydrate pushdown budget: largest Σk for which the matched doc_ids are
-# collected and pushed as an isin literal into the docs scan (above it the
-# literal filter itself becomes the bottleneck; AQE handles the join then)
-HYDRATE_PUSHDOWN_MAX_IDS = 100_000
-
-
 # driver-side small-query budget: largest Σ_t df (total postings across the
 # query batch's present terms — known EXACTLY from the lexicon before any
 # data is read) for which the batch tier answers from a bounded pyarrow
@@ -197,9 +192,8 @@ HYDRATE_PUSHDOWN_MAX_IDS = 100_000
 # while a hot term on a 100 TB corpus blows the budget immediately and
 # keeps the distributed plan. It is also the most postings one range group
 # of that plan scores in one Python process (_doc_range_cuts). The same
-# volume-bounded driver-lookup pattern as term_dfs / chunk_meta /
-# HYDRATE_PUSHDOWN_MAX_IDS; nothing is memoized — every call re-reads the
-# parquet postings.
+# volume-bounded driver-lookup pattern as term_dfs / chunk_meta; nothing is
+# memoized — every call re-reads the parquet postings.
 SMALL_QUERY_MAX_POSTINGS = 8_000_000
 
 
@@ -593,24 +587,17 @@ def batch_search(
 
 
 def _hydrate_topk(reader: IndexReader, table: pa.Table) -> DataFrame:
-    """Attach doc metadata to a ≤Σk-row result table.
+    """Attach doc metadata to a ≤Σk-row result table, on the driver.
 
-    Bound the metadata side (VERDICT r4 wrong #4): the top-k result is
-    ≤ Σk rows (k clamped ≤ 100) already on the driver, so its doc_ids are
-    pushed as an isin filter into the docs scan — row-group pruning + an
-    explicit broadcast of the matched rows, never a full-docs exchange.
-    The result joins as a local relation (nothing persisted, no RDD job).
-    Very large batches (more ids than the literal-filter budget) keep the
-    plain left join and rely on AQE's size-based broadcast."""
-    meta_cols = ["doc_id", "uid", "repo", "path", "commit", "lang"]
-    ids = np.unique(table.column("doc_id").to_numpy()).tolist()
-    docs = reader.docs().select(*meta_cols)
-    if len(ids) <= HYDRATE_PUSHDOWN_MAX_IDS:
-        docs = F.broadcast(docs.where(F.col("doc_id").isin(ids)) if ids
-                           else docs.where(F.lit(False)))
-    topk = reader.spark.createDataFrame(table).join(docs, "doc_id", "left")
-    return topk.select("qid", "rank", "doc_id", "score", "found",
-                       "uid", "repo", "path", "commit", "lang")
+    The hits come from the docs component's doc store
+    (functions/docstore.py) — the same memory-mapped take the serving tier
+    hydrates with — and join as five string columns of the Arrow table, so
+    the answer stays a job-free LocalRelation. Left-join semantics: a hit
+    without a docs row keeps null metadata."""
+    meta = DocStore(reader.paths.docs).hits(table.column("doc_id").to_numpy())
+    for f in HIT_FIELDS:
+        table = table.append_column(f, pa.array(meta[f], type=pa.string()))
+    return reader.spark.createDataFrame(table)
 
 
 def search_one(reader: IndexReader, q: str, k: int = 10,

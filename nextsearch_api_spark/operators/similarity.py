@@ -627,7 +627,9 @@ def _collect_vectors(emb: DataFrame, vec_col: str,
     row-count statistic — job-free, ~2 ms, and exact for materialized
     caches (r7: the bench trainers run over a cached frame, whose
     _fast_count fallback was a count() job per training call) — before
-    _fast_count's footer-then-count() ladder."""
+    _fast_count's footer-then-count() ladder. Neither is an upper bound
+    (footers count each input file once, however often the plan reads it),
+    so the collected size is checked against the budget again."""
     from nextsearch_api_spark.operators.build import _fast_count
     try:
         rc = (emb._jdf.queryExecution()  # noqa: SLF001
@@ -639,7 +641,10 @@ def _collect_vectors(emb: DataFrame, vec_col: str,
         return None
     try:
         col = emb.select(vec_col).toArrow().column(0).combine_chunks()
-        if col.null_count:
+        # the estimate under-counts plans that multiply rows (a union of a
+        # file scan with itself lists each file once): re-check the budget
+        # on what was collected
+        if col.null_count or len(col) * dim > DRIVER_TRAIN_MAX_ELEMS:
             return None
         vals = col.values.to_numpy(zero_copy_only=False)
         return vals.astype(np.float64).reshape(len(col), dim)
@@ -793,10 +798,14 @@ def _collect_frame_vectors(df: DataFrame, id_col: str, vec_col: str, dim: int,
     cached frame (inputFiles() is empty once an InMemoryRelation takes
     over), an estimate propagated from exact leaves otherwise, and absent
     (→ distributed) for lazy caches and shapes Catalyst can't count.
-    Footers/estimates over-count filtered frames, which only makes the
-    gate conservative. The collect itself is ``toArrow()`` — it executes
-    the frame's own plan (filters, cache), one column-pruned JVM-only job.
-    Nulls, ragged rows, or a non-integer id column also fall back.
+    The estimate is no bound either way: footers over-count filtered
+    frames and under-count plans that multiply rows (``inputFiles()`` lists
+    a file once however often a union or self-join reads it), so the
+    collected rows × ``dim`` are checked against the budget again and an
+    over-budget collect goes distributed. The collect itself is
+    ``toArrow()`` — it executes the frame's own plan (filters, cache), one
+    column-pruned JVM-only job. Nulls, ragged rows, or a non-integer id
+    column also fall back.
 
     A budget ≤ 0 always goes distributed (the parity escape hatch, also for
     empty frames), and so does ``dim`` ≤ 0: an empty query vector proves
@@ -820,6 +829,8 @@ def _collect_frame_vectors(df: DataFrame, id_col: str, vec_col: str, dim: int,
         t = df.select(id_col, vec_col).toArrow()
         col = t.column(vec_col).combine_chunks()
         n = len(col)
+        if n * dim > max_elems:
+            return None
         if n == 0:
             return (np.zeros(0, dtype=np.int64),
                     np.zeros((0, dim), dtype=np.float64))

@@ -35,6 +35,7 @@ import numpy as np
 import pyarrow as pa
 
 from nextsearch_api_spark.config import BM25Params, IndexPaths
+from nextsearch_api_spark.functions.docstore import HIT_FIELDS, DocStore
 from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
 from nextsearch_api_spark.functions.scoring import bm25_idf, rank_chunk_rows
 from nextsearch_api_spark.operators.query import clamp_k, parse_query
@@ -59,8 +60,8 @@ def check_index_format(stats: dict, stats_path: str) -> None:
 
 class WandEngine:
     """Driver-side TAAT serving over one index generation: the one its
-    IndexPaths snapshot names when the engine opens. Searches and the lazy
-    docs hydration read that generation until the engine is dropped."""
+    IndexPaths snapshot names when the engine opens. Searches and docs
+    hydration read that generation until the engine is dropped."""
 
     def __init__(self, index_root: str, params: BM25Params | None = None):
         import glob
@@ -88,9 +89,10 @@ class WandEngine:
         # blob reads go through the postings footer index: a term fetch reads
         # only the row groups whose term range holds it (the build writes
         # postings term-sorted in bounded row groups — the offset-seek
-        # analog). The docs index for hydration opens on first use.
+        # analog). Hydration takes hits from the docs component's
+        # memory-mapped doc store, mapped here and read without a lock.
         self._postings = RowGroupIndex(self.paths.postings, "term")
-        self._docs: RowGroupIndex | None = None
+        self._store = DocStore(self.paths.docs)
 
         # bounded term→blobs cache (the reference keeps ALL postings in RAM,
         # api_engine.cpp:453-475; we cache the hot working set — real query
@@ -115,27 +117,19 @@ class WandEngine:
         self.expander = exp if exp.terms else None
         return self.expander is not None
 
-    DOC_FIELDS = ("uid", "repo", "path", "commit", "lang")
-
     def hydrate(self, results: list[dict]) -> None:
-        """Fill each hit's doc metadata in place (reference hydration,
-        api_engine.cpp:508-532 — left-join semantics: a hit without a docs
-        row keeps only its rank/score fields). Reads only the docs row
-        groups whose doc-id range holds a hit: ≤ k on the build's
-        doc-id-sorted layout."""
+        """Fill each hit's doc metadata (uid, repo, path, commit, lang) in
+        place from the doc store (functions/docstore.py): per store file one
+        ``searchsorted`` and one ``take`` over memory-mapped Arrow columns,
+        O(k · log N) and no Parquet read — the reference's ``docs[docId]``
+        (api_engine.cpp:508-532). Left-join semantics: a hit without a docs
+        row keeps only its rank/score fields."""
         if not results:
             return
-        with self._cache_lock:
-            if self._docs is None:
-                self._docs = RowGroupIndex(self.paths.docs, "doc_id")
-            docs = self._docs
-        meta = docs.read([r["doc_id"] for r in results],
-                         self.DOC_FIELDS).to_pydict()
-        row_of = {d: i for i, d in enumerate(meta["doc_id"])}
-        for r in results:
-            i = row_of.get(r["doc_id"])
-            if i is not None:
-                r.update({f: meta[f][i] for f in self.DOC_FIELDS})
+        meta = self._store.hits([r["doc_id"] for r in results])
+        for i, r in enumerate(results):
+            if meta["uid"][i] is not None:
+                r.update({f: meta[f][i] for f in HIT_FIELDS})
 
     # ------------------------------------------------------------- scoring --
 

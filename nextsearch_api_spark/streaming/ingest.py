@@ -45,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nextsearch_api_spark.functions.docstore import uid_column
 from nextsearch_api_spark.operators.build import append_doc_len, tokenize_tf
 from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA
 
@@ -93,9 +94,7 @@ def stream_corpus_to_forward(spark: SparkSession, src_dir: str, out_dir: str,
         docs = append_doc_len(
             with_ids.select(
                 "doc_id",
-                F.substring(
-                    F.sha2(F.concat_ws("", "repo", "path", "commit"), 256), 1, 16
-                ).alias("uid"),
+                uid_column().alias("uid"),
                 "repo", "path", "commit", "lang",
                 F.sha2(F.col("content"), 256).alias("content_sha256"),
                 "content",

@@ -174,12 +174,12 @@ def test_check_index_format_refuses_v4(tmp_path):
     from nextsearch_api_spark.operators.build import FORMAT_VERSION
     from nextsearch_api_spark.operators.wand import check_index_format
 
-    assert FORMAT_VERSION == 6
+    assert FORMAT_VERSION == 7
     path = tmp_path / "stats.json"
     path.write_text(json.dumps({"format": 4, "N": 1, "avgdl": 1.0}))
     with pytest.raises(ValueError, match="format 4.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))
-    check_index_format({"format": 6}, str(path))
+    check_index_format({"format": 7}, str(path))
 
 
 def test_check_index_format_refuses_v5(tmp_path):
@@ -192,4 +192,16 @@ def test_check_index_format_refuses_v5(tmp_path):
     path.write_text(json.dumps({"format": 5, "N": 1, "avgdl": 1.0,
                                 "impact_avgdl": 1.0}))
     with pytest.raises(ValueError, match="format 5.*rebuild the index"):
+        check_index_format(json.loads(path.read_text()), str(path))
+
+
+def test_check_index_format_refuses_v6(tmp_path):
+    """A v6 index has no doc store beside its Parquet docs, and its docs
+    row groups were sized for keyed Parquet reads: a v7 engine refuses it
+    rather than hydrate from it."""
+    from nextsearch_api_spark.operators.wand import check_index_format
+
+    path = tmp_path / "stats.json"
+    path.write_text(json.dumps({"format": 6, "N": 1, "avgdl": 1.0}))
+    with pytest.raises(ValueError, match="format 6.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))

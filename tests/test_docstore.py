@@ -1,0 +1,289 @@
+"""Doc store (functions/docstore.py): the docs component's memory-mapped
+Arrow twins hydrate serving and batch hits exactly like a left join against
+the Parquet docs, stay out of Parquet reads of docs, travel with the docs
+through compaction and backup, and are the only code that maps Arrow
+files."""
+
+import ast
+import os
+import pathlib
+import shutil
+
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from nextsearch_api_spark.config import IndexPaths
+from nextsearch_api_spark.functions.docstore import (
+    HIT_FIELDS, DocStore, uid_column, uid_of, write_doc_store,
+)
+from nextsearch_api_spark.operators.build import build_index
+from nextsearch_api_spark.sources.corpus import generate_corpus, write_corpus
+
+META = HIT_FIELDS  # uid, repo, path, commit, lang
+
+
+@pytest.fixture(scope="module")
+def compacted_index(spark, tmp_path_factory):
+    """A 100-doc build plus a streamed delta of new docs, compacted into
+    generation 1 → (root, (stats N, Spark rows, pyarrow.dataset rows) of
+    the docs right after the build)."""
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, stream_corpus_to_forward,
+    )
+
+    tmp = tmp_path_factory.mktemp("compacted")
+    base_dir = str(tmp / "base")
+    write_corpus(generate_corpus(spark, 100, seed=42), base_dir,
+                 partition_by=None)
+    root = str(tmp / "idx")
+    build_index(spark, spark.read.parquet(base_dir), root)
+    docs = IndexPaths(root).docs
+    built = (_stats_n(root), spark.read.parquet(docs).count(),
+             ds.dataset(docs).count_rows())
+    stream_src = str(tmp / "incoming")
+    new_docs = generate_corpus(spark, 140, seed=42).join(
+        generate_corpus(spark, 100, seed=42).select("repo", "path", "commit"),
+        ["repo", "path", "commit"], "left_anti",
+    )
+    write_corpus(new_docs, stream_src, partition_by=None)
+    deltas = str(tmp / "deltas")
+    stream_corpus_to_forward(spark, stream_src, deltas, str(tmp / "ckpt"),
+                             trigger_once=True).awaitTermination(120)
+    compact_deltas(spark, root, deltas)
+    return root, built
+
+
+def _stats_n(root: str) -> int:
+    import json
+    with open(IndexPaths(root).stats) as f:
+        return int(json.load(f)["N"])
+
+
+def _full_join(docs_path: str) -> dict:
+    t = ds.dataset(docs_path).to_table(columns=["doc_id", *META]).to_pydict()
+    return {d: {f: t[f][i] for f in META} for i, d in enumerate(t["doc_id"])}
+
+
+_field = st.one_of(
+    st.none(),
+    st.text(alphabet=st.characters(blacklist_categories=("Cs",)),
+            max_size=12),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.tuples(_field, _field, _field), min_size=1, max_size=20))
+def test_uid_twin_equals_spark_expression(spark, rows):
+    """uid_of equals uid_column on rows with non-ASCII and null fields
+    (concat_ws skips nulls; an all-null row hashes the empty string)."""
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string")
+    got = [r[0] for r in df.select(uid_column()).collect()]
+    assert got == [uid_of(*r) for r in rows]
+
+
+@pytest.mark.parametrize("which", ["built", "compacted"])
+def test_uid_twin_equals_stored_uid(tiny_index, compacted_index, which):
+    """Every docs row's stored uid — written by the build, and by the
+    streaming sink for streamed docs — equals the twin hydration uses."""
+    root = tiny_index[0] if which == "built" else compacted_index[0]
+    t = ds.dataset(IndexPaths(root).docs).to_table(
+        columns=["uid", "repo", "path", "commit"]).to_pydict()
+    assert t["uid"]
+    assert t["uid"] == [uid_of(*r) for r in
+                        zip(t["repo"], t["path"], t["commit"])]
+
+
+def test_built_doc_store_files_are_disjoint_and_ascending(tiny_index):
+    """One Arrow file per non-empty docs part; in doc-id order their
+    [first, last] ranges are disjoint and ascending, and within every file
+    the ids ascend. Together they hold exactly the Parquet docs' ids."""
+    import pyarrow as pa
+    from pyarrow import ipc
+
+    root, _ = tiny_index
+    docs = IndexPaths(root).docs
+    spans = DocStore(docs).ranges()
+    parts = [p for p in os.listdir(docs) if p.endswith(".parquet")
+             and pq.read_metadata(os.path.join(docs, p)).num_rows]
+    assert spans and len(spans) == len(parts)
+    for (lo, hi, _), (lo2, _, _) in zip(spans, spans[1:]):
+        assert lo <= hi < lo2
+    ids = []
+    for lo, hi, path in spans:
+        with pa.memory_map(path) as mm:
+            t = ipc.open_file(mm).read_all()
+        col = t.column("doc_id").to_pylist()
+        assert col == sorted(col) and (col[0], col[-1]) == (lo, hi)
+        ids += col
+    parquet_ids = ds.dataset(docs).to_table(
+        columns=["doc_id"]).column("doc_id").to_pylist()
+    assert ids == sorted(parquet_ids)
+
+
+def test_engine_hydration_matches_full_join(spark, tiny_index, tmp_path,
+                                            monkeypatch):
+    """Engine.search fills the same fields as a left join against the whole
+    docs table, for k in {1, 10, 100} — including a hit whose docs row is
+    missing from both halves (Parquet and doc store), which keeps only its
+    rank/score fields. Hydration opens no Parquet file."""
+    import pyarrow.dataset as pds
+
+    from nextsearch_api_spark.api import Engine
+
+    root, _ = tiny_index
+    clone = str(tmp_path / "idx")
+    shutil.copytree(root, clone)
+    eng = Engine(clone)
+    q = "hotterm buffer"
+    top = eng.search(q, 1)["results"][0]["doc_id"]
+    # drop the top hit's docs row: one Parquet file without it, and the
+    # doc store rewritten from that file
+    docs_dir = IndexPaths(clone).docs
+    t = ds.dataset(docs_dir).to_table()
+    shutil.rmtree(docs_dir)
+    os.makedirs(docs_dir)
+    t = t.filter(pc.not_equal(t.column("doc_id"), top))
+    pq.write_table(t.sort_by("doc_id"), os.path.join(docs_dir, "p.parquet"))
+    write_doc_store(spark, docs_dir)
+    eng.reload()
+    meta = _full_join(docs_dir)
+    assert top not in meta
+    for k in (1, 10, 100):
+        out = eng.search(q, k)
+        res = out["results"]
+        assert len(res) == min(k, out["found"])
+        for r in res:
+            if r["doc_id"] == top:
+                assert not set(META) & set(r), r
+            else:
+                assert {f: r[f] for f in META} == meta[r["doc_id"]], r
+        assert res[0]["doc_id"] == top
+
+    def no_parquet(*a, **kw):
+        raise AssertionError("hydration opened a Parquet file")
+
+    results = eng.wand.search(q + " cache", 100)["results"]
+    for name in ("ParquetFile", "read_table", "read_metadata"):
+        monkeypatch.setattr(pq, name, no_parquet)
+    monkeypatch.setattr(pds, "dataset", no_parquet)
+    eng.wand.hydrate(results)
+    monkeypatch.undo()
+    assert results and all(
+        {f: r[f] for f in META} == meta[r["doc_id"]]
+        for r in results if r["doc_id"] != top)
+
+
+def test_concurrent_hits_share_one_store(tiny_index):
+    """Threads hydrating through one DocStore get the same rows as a
+    left join against the Parquet docs, absent ids included."""
+    import sys
+    import threading
+
+    root, _ = tiny_index
+    docs = IndexPaths(root).docs
+    store = DocStore(docs)
+    meta = _full_join(docs)
+    ids = sorted(meta)
+    errors: list = []
+
+    def worker(seed: int) -> None:
+        try:
+            for i in range(40):
+                want = [ids[(seed * 37 + i * 11 + j * 53) % len(ids)]
+                        for j in range(1 + i % 7)] + [-5, 10**12]
+                got = store.hits(want)
+                for n, d in enumerate(want):
+                    row = {f: got[f][n] for f in META}
+                    assert row == meta.get(d, dict.fromkeys(META)), (d, row)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+
+
+def test_docs_read_as_n_parquet_rows(spark, compacted_index):
+    """The doc store's directory is hidden from Parquet reads: after
+    build_index and after compact_deltas, Spark and pyarrow.dataset both
+    read the docs component as exactly stats N rows."""
+    root, (n_built, spark_built, ds_built) = compacted_index
+    assert spark_built == ds_built == n_built > 0
+    p = IndexPaths(root)
+    assert p.docs.endswith("_g1")
+    n = _stats_n(root)
+    assert n > n_built
+    assert spark.read.parquet(p.docs).count() == n
+    assert ds.dataset(p.docs).count_rows() == n
+
+
+def test_backup_restore_serves_identical_hydrated_answers(
+        spark, compacted_index, tmp_path):
+    """A backup of a compacted generation, restored under base names,
+    serves answers == the source's, hydrated metadata included, on the
+    serving tier and the batch tier."""
+    from nextsearch_api_spark.api import Engine
+    from nextsearch_api_spark.operators.query import (
+        IndexReader, QuerySpec, batch_search,
+    )
+    from nextsearch_api_spark.plans.backup import backup_index, restore_index
+
+    root, _ = compacted_index
+    backup_index(root, str(tmp_path / "bak"))
+    restored = str(tmp_path / "restored")
+    restore_index(str(tmp_path / "bak"), restored)
+    specs = [QuerySpec(0, "hotterm buffer", 10), QuerySpec(1, "hotterm", 100)]
+
+    def answers(r):
+        eng = Engine(r)
+        serving = [eng.search(s.q, s.k)["results"] for s in specs]
+        batch = sorted(tuple(row) for row in batch_search(
+            IndexReader(spark, r), specs, hydrate=True).collect())
+        return serving, batch
+
+    src, dst = answers(root), answers(restored)
+    assert src == dst
+    # streamed hits come back hydrated
+    assert any(r["doc_id"] >= (1 << 62) and r["uid"]
+               for res in src[0] for r in res)
+
+
+def test_only_the_docstore_maps_arrow_files():
+    """Walking the package source, only functions/docstore.py calls
+    ``pa.memory_map``, ``ipc.open_file`` or ``ipc.new_file``, or names the
+    ``_meta`` directory: the store's layout has one owner."""
+    import nextsearch_api_spark
+
+    pkg = pathlib.Path(nextsearch_api_spark.__file__).parent
+    owner = "functions/docstore.py"
+    calls = {"memory_map", "open_file", "new_file"}
+    found: set[str] = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = None
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = (f.attr if isinstance(f, ast.Attribute)
+                        else f.id if isinstance(f, ast.Name) else None)
+            hit = (name in calls
+                   or (isinstance(node, ast.Constant)
+                       and isinstance(node.value, str)
+                       and "_meta" in node.value.split("/")))
+            if hit:
+                found.add(rel)
+    assert found == {owner}, found

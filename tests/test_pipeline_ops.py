@@ -1463,6 +1463,33 @@ def test_collect_frame_vectors_zero_budget_or_dim_never_collects(
     assert got is not None and got[1].shape == (5, 2) and collects == [1]
 
 
+def test_collect_gates_refuse_a_self_union_over_budget(
+        spark, tmp_path, monkeypatch):
+    """Footer row counts list each input file once, so a Parquet embedding
+    frame unioned with itself estimates N rows and collects 2N. At a
+    budget of N·dim both driver collects return None — the distributed
+    plan runs — while the frame alone still fits."""
+    from nextsearch_api_spark.operators import similarity
+    from nextsearch_api_spark.operators.similarity import (
+        _collect_frame_vectors, _collect_vectors)
+
+    n, dim = 6, 3
+    path = str(tmp_path / "emb")
+    spark.createDataFrame([(i, [float(i), 1.0, 2.0]) for i in range(n)],
+                          "vec_id long, embedding array<float>"
+                          ).write.parquet(path)
+    emb = spark.read.parquet(path)
+    twice = emb.unionByName(emb)
+    assert twice.count() == 2 * n
+    assert _collect_frame_vectors(emb, "vec_id", "embedding", dim,
+                                  n * dim) is not None
+    assert _collect_frame_vectors(twice, "vec_id", "embedding", dim,
+                                  n * dim) is None
+    monkeypatch.setattr(similarity, "DRIVER_TRAIN_MAX_ELEMS", n * dim)
+    assert _collect_vectors(emb, "embedding", dim).shape == (n, dim)
+    assert _collect_vectors(twice, "embedding", dim) is None
+
+
 def test_jpeg_marker_fill_bytes_and_standalone_markers():
     """T.81 §B.1.1.2: 0xFF fill bytes may pad before any marker, and
     standalone markers (TEM 0x01) carry no length — both spec-legal streams

@@ -1,22 +1,14 @@
 """Footer index (functions/rowgroups.py): keyed reads touch only the row
-groups that can hold the keys, stay exact on any layout, and back the
-serving tier's hydration."""
+groups that can hold the keys and stay exact on any layout."""
 
-import os
-import shutil
 import sys
 import threading
 
 import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 
-from nextsearch_api_spark.config import IndexPaths
 from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
-
-META = ("uid", "repo", "path", "commit", "lang")
 
 
 def _table(keys):
@@ -130,64 +122,3 @@ def test_concurrent_readers_share_one_index(sorted_dir):
     assert not errors, errors[:3]
     # every read's counter update landed (none lost to a race)
     assert idx.row_groups_read == sum(expected_groups)
-
-
-def test_built_docs_row_groups_are_disjoint_and_ascending(tiny_index):
-    root, _ = tiny_index
-    idx = RowGroupIndex(IndexPaths(root).docs, "doc_id")
-    assert idx.num_unranged == 0
-    spans = idx.ranges()
-    assert spans
-    for (lo, hi, _, _), (lo2, _, _, _) in zip(spans, spans[1:]):
-        assert lo <= hi < lo2
-    # within every file the row groups ascend too (range-sorted write)
-    by_file: dict = {}
-    for lo, hi, p, rg in spans:
-        by_file.setdefault(p, []).append((rg, lo))
-    for groups in by_file.values():
-        los = [lo for _, lo in sorted(groups)]
-        assert los == sorted(los)
-
-
-def _full_join(docs_path: str) -> dict:
-    t = ds.dataset(docs_path).to_table(columns=["doc_id", *META]).to_pydict()
-    return {d: {f: t[f][i] for f in META} for i, d in enumerate(t["doc_id"])}
-
-
-def test_engine_hydration_matches_full_join(tiny_index, tmp_path):
-    """Engine.search fills the same fields as a left join against the whole
-    docs table, for k in {1, 10, 100} — including a hit whose docs row is
-    missing, which keeps only its rank/score fields."""
-    from nextsearch_api_spark.api import Engine
-
-    root, _ = tiny_index
-    clone = str(tmp_path / "idx")
-    shutil.copytree(root, clone)
-    eng = Engine(clone)
-    q = "hotterm buffer"
-    top = eng.search(q, 1)["results"][0]["doc_id"]
-    # drop the top hit's docs row (one sorted file, small row groups)
-    docs_dir = IndexPaths(clone).docs
-    t = ds.dataset(docs_dir).to_table()
-    shutil.rmtree(docs_dir)
-    os.makedirs(docs_dir)
-    t = t.filter(pc.not_equal(t.column("doc_id"), top))
-    pq.write_table(t.sort_by("doc_id"), os.path.join(docs_dir, "p.parquet"),
-                   row_group_size=16)
-    eng.reload()
-    meta = _full_join(docs_dir)
-    assert top not in meta
-    for k in (1, 10, 100):
-        out = eng.search(q, k)
-        res = out["results"]
-        assert len(res) == min(k, out["found"])
-        for r in res:
-            if r["doc_id"] == top:
-                assert not set(META) & set(r), r
-            else:
-                assert {f: r[f] for f in META} == meta[r["doc_id"]], r
-        assert res[0]["doc_id"] == top
-    n_rg = eng.wand._docs.num_row_groups
-    before = eng.wand._docs.row_groups_read
-    eng.search(q + " cache", 10)
-    assert eng.wand._docs.row_groups_read - before <= min(10, n_rg)
