@@ -101,7 +101,3 @@ class BuildConfig:
 
     bm25: BM25Params = field(default_factory=BM25Params)
     chunk_size: int = CHUNK_SIZE
-    # explicit segment count for the no-shuffle postings build (None →
-    # follow input splits); uses repartitionByRange(doc_id) so segment
-    # doc-ranges stay disjoint
-    segment_partitions: int | None = None

@@ -9,7 +9,9 @@ CHUNK_SIZE postings sorted by doc_id, with its doc-id range in the row's
     blob = varbyte(doc-id gaps) ‖ varbyte(tf) ‖ FOR(doc_len)
 
 ``tf_off`` and ``dl_off`` (row columns) are the byte offsets where the tf
-and doc_len streams start.
+and doc_len streams start. It is the only binary layout the build
+writes: the segment build's doc lengths travel as chunks of the reserved
+term '' in it too (operators/build.py:build_posting_chunks_segment).
 
 * Doc-id gaps restart at every chunk: the first is taken from the row's
   ``doc_lo`` (so it is 0), each later one from the previous id. A chunk
@@ -38,13 +40,6 @@ Python loops run over varbyte byte positions (≤ 10) and the four bytes of a
 FOR base, never over chunks or postings. Packed doc_len values are written
 and read through 64-bit words: the decoder gathers two aligned words per
 value (the one holding its first bit and the next, for a spill).
-
-The doc-stat carrier rows of the segment build (term '', see
-operators/build.py:_docstat_recordbatch) reuse the chunk schema: doc-id
-range in ``doc_lo``/``doc_hi``, doc count in ``count`` and their own blob,
-``int64 doc_ids ‖ int32 doc_lens`` split at ``tf_off``
-(:func:`pack_doc_stats`, :func:`unpack_doc_stats`). They never reach the
-postings table.
 """
 
 from __future__ import annotations
@@ -58,8 +53,6 @@ __all__ = [
     "encode_chunks",
     "decode_doc_ids",
     "decode_chunks_concat",
-    "pack_doc_stats",
-    "unpack_doc_stats",
 ]
 
 FOR_HEADER_BYTES = 5  # u32 base + u8 bit width
@@ -322,21 +315,3 @@ def decode_chunks_concat(
     dls += np.repeat(base, counts)
     return doc_ids, tfs, dls
 
-
-def pack_doc_stats(doc_ids: np.ndarray, doc_lens: np.ndarray) -> tuple[bytes, int]:
-    """One doc-stat carrier blob → (``int64 doc_ids ‖ int32 doc_lens``, the
-    split offset stored in the row's ``tf_off``)."""
-    ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    dls = np.ascontiguousarray(doc_lens, dtype=np.int32)
-    return ids.tobytes() + dls.tobytes(), 8 * ids.size
-
-
-def unpack_doc_stats(blobs, splits) -> tuple[np.ndarray, np.ndarray]:
-    """Doc-stat carrier blobs and their split offsets → concatenated
-    (doc_ids int64[], doc_lens int32[])."""
-    data, starts = _blob_bytes(blobs)
-    splits = np.asarray(splits, dtype=np.int64)
-    ends = np.append(starts[1:], data.size)
-    ids = data[_segments(starts, splits)].view(np.int64)
-    dls = data[_segments(starts + splits, ends - starts - splits)].view(np.int32)
-    return ids, dls

@@ -93,17 +93,3 @@ def arrow_kept_tokens(content: "pa.Array") -> "tuple[pa.Array, pa.Array]":  # no
         pc.invert(pc.is_in(flat, value_set=pa.array(STOPWORDS, pa.string()))),
     )
     return pc.filter(flat, keep), pc.filter(parent, keep)
-
-
-def normalize_token_expr(col: Column | str) -> Column:
-    """Autocomplete normalization: strip non-alnum, lowercase — no splitting
-    (reference: AutocompleteIndex::normalize_token, api_autocomplete.cpp:23-30)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(c), "[^a-z0-9]", "")
-
-
-def first_of_semicolon_expr(col: Column | str) -> Column:
-    """First element of a ';'-separated list, trimmed (reference:
-    pick_first_path src/ForwardIndex.cpp:44-52; url split api_engine.cpp:525-527)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.split(c, ";").getItem(0))

@@ -34,9 +34,13 @@ Spark-first re-design (NOT a port):
     write_postings_sorted, the one postings writer, computes each chunk's
     max from its own blob after the sort — for every row it publishes,
     the rows a compaction copies through included.
-  * compaction re-chunks token rows with build_posting_chunks: a hash
-    shuffle by (term, doc_id div doc_block), a deterministic doc-range salt
-    that splits a hot term across partitions while each block stays whole.
+  * one chunker (_chunk_partition) turns every posting into chunk rows:
+    the segment build hands it one input split, doc lengths included as
+    postings of the reserved term ''; compaction re-chunks token rows with
+    build_posting_chunks, a hash shuffle by (term, doc_id div doc_block) —
+    a deterministic doc-range salt that splits a hot term across
+    partitions while each block stays whole — then hands it each
+    partition.
   * every stage materializes to Parquet and checkpoints via the lineage
     manifest (plans/checkpoint.py) — resume skips completed stages. The
     ids and doclen tables are scratch: removed once the build completes,
@@ -144,7 +148,9 @@ def assign_doc_ids(corpus: DataFrame, n_buckets: int | None = None,
     8-core ids stage at 400k docs). Driver-side comparison is on UTF-8
     bytes, the same binary order Spark's UTF8String uses, so the
     driver-computed counts match the JVM bucket expression exactly. Larger
-    corpora keep the fully distributed sample+count path.
+    corpora keep the fully distributed sample+count path, and so does a
+    plan whose key collect exceeds ``driver_keys_max`` (footer counts see
+    each input file once, however often the plan reads it).
     """
     spark = corpus.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -167,14 +173,19 @@ def assign_doc_ids(corpus: DataFrame, n_buckets: int | None = None,
 
     bounds: list[str] = []
     counts: dict[int, int] | None = None
+    arr = None
     if B > 1 and n <= driver_keys_max:
         # one column-pruned Arrow collect; sort + split points run in Arrow
         # C kernels on UTF-8 binary (the same byte order Spark's UTF8String
         # compares with) — no Python string objects materialize
-        import pyarrow as pa
-        import pyarrow.compute as pc
         arr = (keyed.select("_key").toArrow().column(0)
                .combine_chunks().cast(pa.binary()))
+        # a self-union reads its files twice: re-check the budget on what
+        # was collected
+        if len(arr) > driver_keys_max:
+            arr = None
+    if arr is not None:
+        import pyarrow.compute as pc
         skeys = pc.take(arr, pc.sort_indices(arr))
         m = len(skeys)
         bkeys = sorted({skeys[(m * i) // B].as_py() for i in range(1, B)})
@@ -314,28 +325,6 @@ def tokenize_tf(corpus_ids: DataFrame) -> DataFrame:
     )
 
 
-def append_doc_len(df: DataFrame) -> DataFrame:
-    """Append a doc_len column (kept-token count) to a DataFrame that
-    carries (doc_id, content, ...) — all other columns pass through as Arrow
-    buffers (no conversion cost)."""
-    out_schema = StructType(df.schema.fields + [
-        StructField("doc_len", IntegerType(), False)
-    ])
-
-    def app(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            _, parent = arrow_kept_tokens(batch.column("content"))
-            dl = np.bincount(parent.to_numpy(zero_copy_only=False),
-                             minlength=batch.num_rows).astype(np.int32)
-            yield batch.append_column("doc_len", pa.array(dl))
-
-    return df.mapInArrow(app, schema=out_schema)
-
-
 # ----------------------------------------------------------------- chunks --
 
 _PA_CHUNKS_SCHEMA = pa.schema([
@@ -349,21 +338,37 @@ _PA_CHUNKS_SCHEMA = pa.schema([
 ])
 
 
-def _chunks_recordbatch(dictionary, codes, ids, tfs, dls, cst, cen):
-    """Vectorized chunk emission from (term-code, doc)-sorted arrays and
-    chunk boundaries [cst, cen), which tile rows [0, cen[-1]): one
-    functions/codec.py:encode_chunks call for every blob of the batch.
-    The rows carry no impact: write_postings_sorted computes each chunk's
-    max_impact from its blob once the index's avgdl is known."""
+def _chunk_partition(terms: list, ids: list, tfs: list, dls: list,
+                     parts: list, chunk_size: int) -> pa.RecordBatch:
+    """The chunker: one partition's postings → its chunk rows. Both
+    builders hand every posting they emit to it.
+
+    Each argument is a list of per-batch pieces: Arrow string arrays of
+    terms (dictionary-encoded here, so term strings never become Python
+    objects) and NumPy doc ids, tfs, doc_lens and ``parts``, the doc range
+    a chunk must not span. One NumPy lexsort orders the postings by
+    (term, doc_id), _chunk_bounds breaks them on (term, part) and every
+    chunk_size rows, and one functions/codec.py:encode_chunks call writes
+    every blob. The rows carry no impact: write_postings_sorted computes
+    each chunk's max_impact from its blob once the index's avgdl is
+    known."""
     import pyarrow.compute as pc
 
     from nextsearch_api_spark.functions.codec import encode_chunks
 
-    m = int(cen[-1])  # rows covered by chunks (any held-back tail excluded)
-    blobs, tfo, dlo = encode_chunks(ids[:m], tfs[:m], dls[:m], cst)
+    enc = pc.dictionary_encode(pa.concat_arrays(terms))
+    if isinstance(enc, pa.ChunkedArray):
+        enc = enc.combine_chunks()
+    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    ids, tfs, dls, parts = (np.concatenate(x) for x in (ids, tfs, dls, parts))
+    order = np.lexsort((ids, codes))
+    codes, ids, tfs, dls, parts = (
+        x[order] for x in (codes, ids, tfs, dls, parts))
+    cst, cen = _chunk_bounds(codes, parts, chunk_size)
+    blobs, tfo, dlo = encode_chunks(ids, tfs, dls, cst)
     return pa.RecordBatch.from_arrays(
         [
-            pc.take(dictionary, pa.array(codes[cst].astype(np.int32))),
+            pc.take(enc.dictionary, pa.array(codes[cst].astype(np.int32))),
             pa.array(ids[cst]),
             pa.array(ids[cen - 1]),
             pa.array((cen - cst).astype(np.int32)),
@@ -537,88 +542,15 @@ def write_suggest_sorted(sug: DataFrame, out_path: str) -> None:
         sug.unpersist()
 
 
-# Doc-stat carrier rows (segment build): the fused tokenize pass is the ONLY
-# place doc_len exists, so each task packs its (doc_id, doc_len) pairs —
-# zero-token docs excluded — into chunk-schema rows with term '' (real terms
-# are ≥ 2 chars, so '' can never collide). Packing ~64k docs per row keeps
-# the stat rows a vanishing fraction of the chunk table (one row per ~64k
-# docs vs one chunk row per ≤ chunk_size postings); one row per doc would
-# INVERT that ratio at 10^12 docs. The blob layout is
-# functions/codec.py:pack_doc_stats, split point in tf_off.
-_DOCSTAT_PACK = 65536
-
-DOCLEN_SCHEMA = StructType([
-    StructField("doc_id", LongType(), False),
-    StructField("doc_len", IntegerType(), False),
-])
-
-
-def _docstat_recordbatch(stat_ids: list, stat_dls: list):
-    from nextsearch_api_spark.functions.codec import pack_doc_stats
-
-    sids = np.concatenate(stat_ids)
-    sdls = np.concatenate(stat_dls).astype(np.int32)
-    o = np.argsort(sids, kind="stable")  # file order is already ~sorted
-    sids, sdls = sids[o], sdls[o]
-    cols: dict[str, list] = {k: [] for k in ("lo", "hi", "n", "off", "blob")}
-    for s in range(0, len(sids), _DOCSTAT_PACK):
-        e = min(s + _DOCSTAT_PACK, len(sids))
-        cols["lo"].append(int(sids[s]))
-        cols["hi"].append(int(sids[e - 1]))
-        cols["n"].append(e - s)
-        blob, split = pack_doc_stats(sids[s:e], sdls[s:e])
-        cols["off"].append(split)
-        cols["blob"].append(blob)
-    k = len(cols["lo"])
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([""] * k, type=pa.string()),
-            pa.array(cols["lo"], type=pa.int64()),
-            pa.array(cols["hi"], type=pa.int64()),
-            pa.array(cols["n"], type=pa.int32()),
-            pa.array(cols["off"], type=pa.int32()),
-            pa.array([0] * k, type=pa.int32()),
-            pa.array(cols["blob"], type=pa.binary()),
-        ],
-        schema=_PA_CHUNKS_SCHEMA,
-    )
-
-
-def decode_doclen_rows(stat_rows: DataFrame) -> DataFrame:
-    """Doc-stat carrier rows → (doc_id, doc_len) DataFrame (one row per doc
-    with ≥ 1 kept token — exactly the reference's N population,
-    src/ForwardIndex.cpp:152)."""
-    def go(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-
-        from nextsearch_api_spark.functions.codec import unpack_doc_stats
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids, dls = unpack_doc_stats(batch.column("blob"),
-                                        batch.column("tf_off"))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(dls)],
-                schema=pa.schema([("doc_id", pa.int64()),
-                                  ("doc_len", pa.int32())]),
-            )
-
-    return stat_rows.select("blob", "tf_off").mapInArrow(go, DOCLEN_SCHEMA)
-
-
-def _chunk_bounds(codes: np.ndarray, parts: np.ndarray, chunk_size: int,
-                  hold_tail: bool = False) -> tuple[np.ndarray, np.ndarray]:
+def _chunk_bounds(codes: np.ndarray, parts: np.ndarray,
+                  chunk_size: int) -> tuple[np.ndarray, np.ndarray]:
     """Chunk row ranges [cst, cen) along a (term, doc_id)-sorted run. Rows
     group on every change of term code or of ``parts`` (the doc range a
     chunk must not span), and each group splits into consecutive chunks of
-    ≤ chunk_size rows. ``hold_tail`` leaves out the last group's partial
-    trailing chunk, whose term may continue in the next input batch, so
-    cen[-1] can stop short of len(codes)."""
+    ≤ chunk_size rows."""
     change = (codes[1:] != codes[:-1]) | (parts[1:] != parts[:-1])
     starts = np.flatnonzero(np.concatenate(([True], change)))
     ends = np.append(starts[1:], len(codes))
-    if hold_tail:
-        ends[-1] -= (ends[-1] - starts[-1]) % chunk_size
     per = -(-(ends - starts) // chunk_size)
     grp = np.repeat(np.arange(len(starts)), per)
     nth = np.arange(len(grp)) - np.repeat(np.cumsum(per) - per, per)
@@ -626,111 +558,99 @@ def _chunk_bounds(codes: np.ndarray, parts: np.ndarray, chunk_size: int,
     return cst, np.minimum(cst + chunk_size, ends[grp])
 
 
+def _segment_chunks(batches: Iterator[pa.RecordBatch],
+                    chunk_size: int) -> Iterator[pa.RecordBatch]:
+    """One input split's (doc_id, content, seg) batches → its chunk rows:
+    tokenize and count every batch, then chunk the whole split, breaking
+    chunks on ``seg``. Each doc with kept tokens also posts its length
+    under the reserved term '' (real terms are ≥ 2 chars), tf = doc_len."""
+    terms: list = []
+    ids: list = []
+    tfs: list = []
+    dls: list = []
+    segs: list = []
+    for batch in batches:
+        got = _term_counts(batch.column("content"), batch.num_rows)
+        if got is None:
+            continue
+        words, row, tf, doc_lens = got
+        docs = np.flatnonzero(doc_lens)  # zero-token docs are outside N
+        row = np.concatenate((row, docs))
+        terms.append(pa.concat_arrays(
+            [words, pa.repeat(pa.scalar("", words.type), docs.size)]))
+        tfs.append(np.concatenate((tf, doc_lens[docs])))
+        ids.append(batch.column("doc_id").to_numpy(zero_copy_only=False)[row])
+        dls.append(doc_lens[row])
+        segs.append(batch.column("seg").to_numpy(zero_copy_only=False)[row])
+    if ids:
+        yield _chunk_partition(terms, ids, tfs, dls, segs, chunk_size)
+
+
 def build_posting_chunks_segment(corpus_ids: DataFrame,
                                  cfg: BuildConfig) -> DataFrame:
     """NO-SHUFFLE postings build (Lucene-segment-style) — build_index's
     postings stage and the corpus's ONLY tokenize.
 
-    Input: (doc_id, content[, seg]). Each partition is one *segment*: fused
-    Arrow tokenize → in-partition lexsort by (term, doc_id) → chunk emission.
-    Token rows are born and consumed inside the Python worker — they NEVER
-    cross the JVM↔Python boundary and there is NO exchange: per-partition
-    transfer is content in (~split bytes), chunk rows out (~compressed
-    postings).
+    Input: (doc_id, content, seg). Each partition is one *segment*: fused
+    Arrow tokenize → in-partition lexsort by (term, doc_id) → chunk
+    emission (_segment_chunks, _chunk_partition), holding one input split
+    in memory. Token rows are born and consumed inside the Python worker —
+    they NEVER cross the JVM↔Python boundary and there is NO exchange:
+    per-partition transfer is content in (~split bytes), chunk rows out
+    (~compressed postings).
 
     Disjointness invariant: every emitted chunk's [doc_lo, doc_hi] range must
     be disjoint from every other chunk's of the same term, across ALL
     partitions (the query tiers' cursor model depends on it). ``seg`` — the
     id-assignment bucket, a contiguous disjoint doc-id range — enforces it:
-    chunks additionally break on seg boundaries, so a chunk's range is always
-    a sub-range of one seg. Without seg breaks the invariant silently relied
+    chunks break on seg boundaries, so a chunk's range is always a
+    sub-range of one seg. Without seg breaks the invariant silently relied
     on ids files being doc-range-disjoint, which the shuffle's hash placement
     of buckets into files does NOT guarantee (caught by an overlapping-chunk
-    WAND failure when building over a lang-partitioned corpus). Callers
-    without a seg column (single contiguous range per partition, e.g. after
-    repartitionByRange(doc_id)) may omit it.
+    WAND failure when building over a lang-partitioned corpus).
 
-    Scale notes: chunks-per-term grows with partition count (like Lucene
-    segments); hot terms are naturally split by doc range. For extreme
-    partition counts, compact small chunks with a follow-up merge keyed by
-    term (operators/compact.py: per-term metadata, not postings, drives the
+    Scale notes: chunks-per-term grows with the id-bucket count (like
+    Lucene segments); hot terms are naturally split by doc range. Small
+    chunks are merged by a follow-up pass keyed by term
+    (operators/compact.py: per-term metadata, not postings, drives the
     decision; its re-chunker is the shuffle-based build_posting_chunks).
 
-    Impacts: avgdl is not known until this pass has tokenized the corpus,
-    so chunk rows carry none. Each task additionally emits doc-stat carrier
-    rows (term '', see _docstat_recordbatch) from which build_index derives
-    the doclen table, N, total_len and avgdl; write_postings_sorted then
-    computes each chunk's max_impact from its blob."""
+    Doc lengths: avgdl is not known until this pass has tokenized the
+    corpus, so chunk rows carry no impact. Every doc's length is a posting
+    of the reserved term '' with tf = doc_len, chunked and encoded like any
+    other term; build_index decodes those rows into the doclen table (N,
+    total_len, avgdl) and write_postings_sorted then computes each real
+    chunk's max_impact from its blob."""
     chunk_size = cfg.chunk_size
-
-    def builder(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        term_parts: list = []   # arrow string arrays (no python objects)
-        ids_parts: list = []
-        tf_parts: list = []
-        dl_parts: list = []
-        seg_parts: list = []
-        stat_ids: list = []     # per-doc (id, len) for the doc-stat rows
-        stat_dls: list = []
-
-        for batch in batches:
-            got = _term_counts(batch.column("content"), batch.num_rows)
-            if got is None:
-                continue
-            terms, row, tf, doc_lens = got
-            doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            seg_ids = (
-                batch.column("seg").to_numpy(zero_copy_only=False).astype(np.int64)
-                if "seg" in batch.schema.names
-                else np.zeros(batch.num_rows, dtype=np.int64)
-            )
-            term_parts.append(terms)
-            ids_parts.append(doc_ids[row])
-            tf_parts.append(tf)
-            dl_parts.append(doc_lens[row])
-            seg_parts.append(seg_ids[row])
-            mask = doc_lens > 0  # zero-token docs are outside N
-            stat_ids.append(doc_ids[mask].astype(np.int64))
-            stat_dls.append(doc_lens[mask])
-
-        if not ids_parts:
-            return
-        enc_all = pc.dictionary_encode(pa.concat_arrays(term_parts))
-        if isinstance(enc_all, pa.ChunkedArray):
-            enc_all = enc_all.combine_chunks()
-        codes = enc_all.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        ids = np.concatenate(ids_parts)
-        tfs = np.concatenate(tf_parts)
-        dls = np.concatenate(dl_parts)
-        segs = np.concatenate(seg_parts)
-        order = np.lexsort((ids, codes))
-        codes, ids, tfs, dls, segs = (
-            codes[order], ids[order], tfs[order], dls[order], segs[order]
-        )
-        # chunk runs break on term AND seg change: segs are disjoint
-        # contiguous doc ranges, so along the (term, doc_id) sort each seg's
-        # docs are consecutive and the break keeps every chunk inside one seg
-        cst, cen = _chunk_bounds(codes, segs, chunk_size)
-        yield _chunks_recordbatch(enc_all.dictionary, codes, ids, tfs, dls,
-                                  cst, cen)
-        yield _docstat_recordbatch(stat_ids, stat_dls)
-
-    cols = ["doc_id", "content"]
-    if "seg" in [f.name for f in corpus_ids.schema.fields]:
-        cols.append("seg")
-    src = corpus_ids.select(*cols)
-    if cfg.segment_partitions:
-        # explicit segment sizing; range partitioning by doc_id keeps the
-        # per-segment doc ranges disjoint (the correctness invariant)
-        src = src.repartitionByRange(cfg.segment_partitions, "doc_id")
-    return src.mapInArrow(builder, schema=CHUNKS_SCHEMA)
+    return corpus_ids.select("doc_id", "content", "seg").mapInArrow(
+        lambda batches: _segment_chunks(batches, chunk_size),
+        schema=CHUNKS_SCHEMA)
 
 
 # doc-id block of the re-chunker's shuffle salt: a hot term spreads over
 # ~max_doc/DOC_BLOCK partitions
 DOC_BLOCK = 65536
+
+
+def _rechunk(batches: Iterator[pa.RecordBatch],
+             chunk_size: int) -> Iterator[pa.RecordBatch]:
+    """One partition's (doc_id, term, tf, doc_len, _blk) token batches →
+    its chunk rows, breaking chunks on the doc block ``_blk``."""
+    terms: list = []
+    ids: list = []
+    tfs: list = []
+    dls: list = []
+    blks: list = []
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        terms.append(batch.column("term"))
+        ids.append(batch.column("doc_id").to_numpy(zero_copy_only=False))
+        tfs.append(batch.column("tf").to_numpy(zero_copy_only=False))
+        dls.append(batch.column("doc_len").to_numpy(zero_copy_only=False))
+        blks.append(batch.column("_blk").to_numpy(zero_copy_only=False))
+    if ids:
+        yield _chunk_partition(terms, ids, tfs, dls, blks, chunk_size)
 
 
 def build_posting_chunks(tokens: DataFrame, cfg: BuildConfig) -> DataFrame:
@@ -742,70 +662,57 @@ def build_posting_chunks(tokens: DataFrame, cfg: BuildConfig) -> DataFrame:
     doc_id div DOC_BLOCK — a DETERMINISTIC salt derived from doc ranges.
     A hot term's postings spread across as many partitions as it has doc
     blocks, while each (term, block)'s rows stay together and doc ranges of
-    different blocks never overlap — so every partition emits independent,
-    disjoint, doc-ordered chunks with memory bounded by chunk_size. Compared
-    to repartitionByRange this removes the range partitioner's sampling scan
-    (a full extra pass over the token stream) and makes the physical layout
-    reproducible run-to-run."""
+    different blocks never overlap. Compared to repartitionByRange this
+    removes the range partitioner's sampling scan (a full extra pass over
+    the token stream) and makes the physical layout reproducible
+    run-to-run.
+
+    Each partition then goes to the segment build's chunker
+    (_chunk_partition) whole, with chunks breaking on (term, doc_block): a
+    partition may hold two blocks of one term while a block between them
+    lives elsewhere, and a chunk spanning them would overlap its range.
+    Like the segment build, it holds one partition's token rows in
+    memory."""
     P = int(tokens.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     chunk_size = cfg.chunk_size
-
-    def builder(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        """Arrow-native chunk builder. Term strings NEVER become Python
-        objects: the term column rides through as an Arrow array (dictionary-
-        encoded for group detection, pc.take for per-chunk output); numerics
-        are zero-copy NumPy.
-
-        Chunk runs break on (term, _blk) so chunks never span doc blocks —
-        two blocks of one term may share a partition while a block between
-        them lives elsewhere, and a spanning chunk would overlap its range."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def emit(tbl: "pa.Table", complete_only: bool):
-            terms = tbl.column("term").combine_chunks()
-            blks = tbl.column("_blk").to_numpy(zero_copy_only=False)
-            ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-            tfs = tbl.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-            dls = tbl.column("doc_len").to_numpy(zero_copy_only=False).astype(np.int64)
-            enc = pc.dictionary_encode(terms)
-            if isinstance(enc, pa.ChunkedArray):
-                enc = enc.combine_chunks()
-            codes = enc.indices.to_numpy(zero_copy_only=False)
-            # a held-back tail carries over to the next batch: its term's
-            # rows may continue there
-            cst, cen = _chunk_bounds(codes, blks, chunk_size,
-                                     hold_tail=complete_only)
-            done = int(cen[-1]) if len(cen) else 0
-            leftover = tbl.slice(done) if done < len(codes) else None
-            if not len(cst):
-                return None, leftover
-            rb = _chunks_recordbatch(enc.dictionary, codes, ids,
-                                     tfs, dls, cst, cen)
-            return rb, leftover
-
-        buf: "pa.Table | None" = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            if buf is not None:
-                tbl = pa.concat_tables([buf, tbl]).combine_chunks()
-                buf = None
-            out_rb, buf = emit(tbl, complete_only=True)
-            if out_rb is not None:
-                yield out_rb
-        if buf is not None and buf.num_rows:
-            out_rb, _ = emit(buf, complete_only=False)
-            if out_rb is not None:
-                yield out_rb
-
     return (
         tokens.withColumn("_blk", F.floor(F.col("doc_id") / DOC_BLOCK))
         .repartition(P, "term", "_blk")
-        .sortWithinPartitions("term", "doc_id")
-        .mapInArrow(builder, schema=CHUNKS_SCHEMA)
+        .mapInArrow(lambda batches: _rechunk(batches, chunk_size),
+                    schema=CHUNKS_SCHEMA)
     )
+
+
+def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
+    """Inverse of the chunker: posting chunks → (doc_id, term, tf, doc_len)
+    rows. Each Arrow batch decodes in one decode_chunks_concat call; a
+    chunk's term repeats once per posting."""
+    def dec(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from nextsearch_api_spark.functions.codec import decode_chunks_concat
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            counts = batch.column("count").to_numpy(zero_copy_only=False)
+            ids, tfs, dls = decode_chunks_concat(
+                batch.column("blob"), batch.column("tf_off"),
+                batch.column("dl_off"), counts, batch.column("doc_lo"))
+            rows = np.repeat(np.arange(batch.num_rows), counts)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, type=pa.int64()),
+                    pc.take(batch.column("term"), pa.array(rows)),
+                    pa.array(tfs.astype(np.int32), type=pa.int32()),
+                    pa.array(dls.astype(np.int32), type=pa.int32()),
+                ],
+                names=["doc_id", "term", "tf", "doc_len"],
+            )
+
+    return chunks.select("term", "doc_lo", "count", "tf_off", "dl_off",
+                         "blob") \
+        .mapInArrow(dec, schema=TOKENS_SCHEMA)
 
 
 # ------------------------------------------------------------------ build --
@@ -847,7 +754,6 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # the postings stage's recorded N/total_len.
         "build_layout": 3,
         "chunk_size": cfg.chunk_size,
-        "segment_partitions": cfg.segment_partitions,
         "k1": cfg.bm25.k1, "b": cfg.bm25.b,
         "corpus": _corpus_fingerprint(corpus),
     }
@@ -884,17 +790,19 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     def stage_postings() -> dict:
         # THE corpus tokenize (the only one in the build, r6): the fused
-        # builder emits chunk rows without impacts plus doc-stat carrier
-        # rows. The doclen write is the first action (populating the
-        # persist); N/total_len/avgdl come from a footer-cheap aggregate
-        # over it; write_postings_sorted then computes every chunk's
-        # max_impact with that avgdl.
+        # builder emits chunk rows without impacts, doc lengths among them
+        # as the postings of term ''. The doclen write decodes those rows
+        # and is the first action (populating the persist); N/total_len/
+        # avgdl come from a footer-cheap aggregate over it;
+        # write_postings_sorted then computes every chunk's max_impact with
+        # that avgdl.
         from pyspark import StorageLevel
         ids = spark.read.parquet(ids_path).select("doc_id", "content", "seg")
         raw = build_posting_chunks_segment(ids, cfg).persist(
             StorageLevel.MEMORY_AND_DISK)
         try:
-            decode_doclen_rows(raw.where(F.col("term") == "")) \
+            decode_postings_to_tokens(raw.where(F.col("term") == "")) \
+                .select("doc_id", "doc_len") \
                 .write.mode("overwrite").parquet(doclen_path)
             row = (
                 spark.read.parquet(doclen_path)

@@ -1,17 +1,17 @@
 """Posting-chunk compaction — the merge pass of the segment build model.
 
 The no-shuffle segment build (operators/build.py:build_posting_chunks_segment)
-emits one chunk run per (term, input partition). At high partition counts,
-rare terms accumulate many tiny chunks (classic Lucene small-segment
+emits one chunk run per (term, id bucket). At high bucket counts, rare
+terms accumulate many tiny chunks (classic Lucene small-segment
 fragmentation). This operator consolidates them:
 
   1. pick fragmented terms from the LEXICON ONLY (metadata decision — df,
      n_chunks; no postings touched),
   2. ``merge_postings``: decode just those terms' chunks back to token rows
-     and re-chunk them with build_posting_chunks, the shuffle-based builder
-     over token rows (hash by (term, doc_block), doc-ordered, skew-safe);
-     union with the untouched chunks and write postings + lexicon as a new
-     generation. The postings writer (operators/build.py:
+     and re-chunk them with build_posting_chunks (hash by (term,
+     doc_block), skew-safe; each partition goes to the segment build's
+     chunker); union with the untouched chunks and write postings +
+     lexicon as a new generation. The postings writer (operators/build.py:
      write_postings_sorted) computes every written chunk's max_impact from
      its blob with the k1/b and avgdl stored in stats.json,
   3. publish both with one atomic pointer flip.
@@ -30,9 +30,7 @@ superseded doc version can sit in.
 
 from __future__ import annotations
 
-import json
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,43 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
+# decode_postings_to_tokens is re-exported: the compactions' callers and
+# tests import it from here
 from nextsearch_api_spark.operators.build import (
-    CHUNKS_SCHEMA, TOKENS_SCHEMA, build_posting_chunks, write_lexicon,
-    write_postings_sorted, _parquet_rows,
+    CHUNKS_SCHEMA, build_posting_chunks, decode_postings_to_tokens,
+    write_lexicon, write_postings_sorted, _parquet_rows,
 )
+from nextsearch_api_spark.operators.wand import read_index_stats
 from nextsearch_api_spark.plans.generations import flip_generation, gen_path
-
-
-def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
-    """Inverse of the chunk builders: posting chunks → (doc_id, term, tf,
-    doc_len) rows. Each Arrow batch decodes in one decode_chunks_concat
-    call; a chunk's term repeats once per posting."""
-    def dec(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from nextsearch_api_spark.functions.codec import decode_chunks_concat
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            counts = batch.column("count").to_numpy(zero_copy_only=False)
-            ids, tfs, dls = decode_chunks_concat(
-                batch.column("blob"), batch.column("tf_off"),
-                batch.column("dl_off"), counts, batch.column("doc_lo"))
-            rows = np.repeat(np.arange(batch.num_rows), counts)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, type=pa.int64()),
-                    pc.take(batch.column("term"), pa.array(rows)),
-                    pa.array(tfs.astype(np.int32), type=pa.int32()),
-                    pa.array(dls.astype(np.int32), type=pa.int32()),
-                ],
-                names=["doc_id", "term", "tf", "doc_len"],
-            )
-
-    return chunks.select("term", "doc_lo", "count", "tf_off", "dl_off",
-                         "blob") \
-        .mapInArrow(dec, schema=TOKENS_SCHEMA)
 
 
 def chunks_holding(chunks: DataFrame, doc_ids: np.ndarray) -> DataFrame:
@@ -146,8 +115,7 @@ def compact_postings(spark: SparkSession, index_root: str,
     its mean chunk fill is below ``min_fill`` of chunk_size. Returns stats."""
     cfg = cfg or BuildConfig()
     paths = IndexPaths(index_root)
-    with open(paths.stats) as f:
-        stats = json.load(f)
+    stats = read_index_stats(paths.stats)
 
     lex = spark.read.parquet(paths.lexicon)
     frag_terms = lex.where(

@@ -34,7 +34,6 @@ SQL oracles.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -99,10 +98,8 @@ class IndexReader:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.paths = IndexPaths(root)
-        with open(self.paths.stats) as f:
-            self.stats = json.load(f)
-        from nextsearch_api_spark.operators.wand import check_index_format
-        check_index_format(self.stats, self.paths.stats)
+        from nextsearch_api_spark.operators.wand import read_index_stats
+        self.stats = read_index_stats(self.paths.stats)
         self._dfs: dict[str, DataFrame] = {}
         # footer indexes for driver-side keyed reads, by table path
         self._indexes: dict[str, "RowGroupIndex"] = {}  # noqa: F821

@@ -58,6 +58,16 @@ def check_index_format(stats: dict, stats_path: str) -> None:
         )
 
 
+def read_index_stats(stats_path: str) -> dict:
+    """One generation's stats.json, refused unless check_index_format
+    passes — every reader and both compactions load stats through here, so
+    none of them reads or rewrites an index of another format."""
+    with open(stats_path) as f:
+        stats = json.load(f)
+    check_index_format(stats, stats_path)
+    return stats
+
+
 class WandEngine:
     """Driver-side TAAT serving over one index generation: the one its
     IndexPaths snapshot names when the engine opens. Searches and docs
@@ -70,9 +80,7 @@ class WandEngine:
 
         self.params = params or BM25Params()
         self.paths = IndexPaths(index_root)
-        with open(self.paths.stats) as f:
-            self.stats = json.load(f)
-        check_index_format(self.stats, self.paths.stats)
+        self.stats = read_index_stats(self.paths.stats)
         self.N = int(self.stats["N"])
         self.avgdl = float(self.stats["avgdl"])
 

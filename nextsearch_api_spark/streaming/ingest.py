@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextsearch_api_spark.functions.docstore import uid_column
-from nextsearch_api_spark.operators.build import append_doc_len, tokenize_tf
+from nextsearch_api_spark.operators.build import tokenize_tf
 from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA
 
 # streamed docs get ids in [2^62, 2^62 + 2^60) — disjoint from any dense
@@ -73,9 +73,10 @@ def stream_corpus_to_forward(spark: SparkSession, src_dir: str, out_dir: str,
 
     foreachBatch writes two appends per micro-batch: the tokenized forward
     delta at ``out_dir`` and the docs delta at ``delta_docs_dir(out_dir)``.
-    Both tokenize with the batch build's Arrow kernel
+    Each micro-batch is tokenized once, with the batch build's Arrow kernel
     (functions/text.py:arrow_kept_tokens), so streamed docs index exactly
-    like batch-built ones. Returns the StreamingQuery. trigger_once=True
+    like batch-built ones; the docs delta takes each doc's doc_len from
+    those token rows. Returns the StreamingQuery. trigger_once=True
     processes all available input then stops. foreachBatch appends are
     at-least-once on retry; compact_deltas dedups by doc_id
     (content-addressed, so replays are byte-identical rows).
@@ -88,19 +89,28 @@ def stream_corpus_to_forward(spark: SparkSession, src_dir: str, out_dir: str,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        from pyspark import StorageLevel
+
         with_ids = batch_df.withColumn("doc_id", _stream_doc_id())
-        tokens = tokenize_tf(with_ids)
-        tokens.write.mode("append").parquet(out_dir)
-        docs = append_doc_len(
-            with_ids.select(
+        tokens = tokenize_tf(with_ids).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            tokens.write.mode("append").parquet(out_dir)
+            # the docs delta takes doc_len from the token rows (the write
+            # above populated the persist); a doc that keeps no token has
+            # none, so its doc_len is 0
+            doc_lens = tokens.select("doc_id", "doc_len").distinct()
+            docs = with_ids.select(
                 "doc_id",
                 uid_column().alias("uid"),
                 "repo", "path", "commit", "lang",
                 F.sha2(F.col("content"), 256).alias("content_sha256"),
-                "content",
-            )
-        ).drop("content")
-        docs.write.mode("append").parquet(docs_out)
+            ).join(doc_lens, "doc_id", "left").select(
+                "doc_id", "uid", "repo", "path", "commit", "lang",
+                "content_sha256",
+                F.coalesce("doc_len", F.lit(0)).alias("doc_len"))
+            docs.write.mode("append").parquet(docs_out)
+        finally:
+            tokens.unpersist()
 
     writer = (
         src.writeStream.foreachBatch(sink)
@@ -381,13 +391,13 @@ def compact_deltas(spark: SparkSession, index_root: str,
     from nextsearch_api_spark.operators.compact import (
         chunks_holding, decode_postings_to_tokens, merge_postings,
     )
+    from nextsearch_api_spark.operators.wand import read_index_stats
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path,
     )
 
     paths = IndexPaths(index_root)
-    with open(paths.stats) as f:
-        stats = json.load(f)
+    stats = read_index_stats(paths.stats)
     cfg = cfg or BuildConfig()
 
     gen = paths.gen + 1

@@ -169,3 +169,35 @@ def test_assign_doc_ids_non_ascii_keys(spark):
     assert out_fast == out_dist
     ranked = sorted(out_fast, key=lambda r: r.encode("utf-8"))
     assert [out_fast[r] for r in ranked] == [1, 2, 3, 4, 5]
+
+
+def test_assign_doc_ids_self_union_over_budget(spark, tmp_path, monkeypatch):
+    """Footers count each input file once, so a Parquet corpus unioned
+    with itself counts half its rows. The keys collect re-checks what it
+    got against ``driver_keys_max`` and, over it, the distributed
+    sample+count path assigns the ids — still a dense 1..n rank of the
+    keys."""
+    from nextsearch_api_spark.operators.build import _fast_count, assign_doc_ids
+    from nextsearch_api_spark.sources.corpus import (
+        generate_corpus, read_corpus, write_corpus,
+    )
+
+    p = str(tmp_path / "c")
+    write_corpus(generate_corpus(spark, 100, seed=42), p, partition_by=None)
+    c = read_corpus(spark, p)
+    u = c.unionByName(c)
+    assert _fast_count(u) == 100
+    sampled = []
+    sample = type(u).sample
+
+    def spy(self, *a, **k):
+        sampled.append(a)
+        return sample(self, *a, **k)
+
+    monkeypatch.setattr(type(u), "sample", spy)
+    rows = [(("\x01".join((r["repo"], r["path"], r["commit"]))
+              .encode("utf-8")), r["doc_id"])
+            for r in assign_doc_ids(u, driver_keys_max=100).collect()]
+    assert sampled  # the distributed path's sample job ran
+    assert len(rows) == 200
+    assert [d for _, d in sorted(rows)] == list(range(1, 201))

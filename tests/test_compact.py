@@ -16,9 +16,9 @@ def test_compact_preserves_search(spark, tmp_path):
     write_corpus(generate_corpus(spark, 400, seed=42), p, partition_by=None)
     corpus = read_corpus(spark, p)
     root = str(tmp_path / "idx")
-    # many explicit segments over a tiny corpus → fragmented chunks (the
-    # condition compaction exists for)
-    build_index(spark, corpus, root, BuildConfig(segment_partitions=12))
+    # chunks break on every id bucket, so a tiny corpus has fragmented
+    # chunks (the condition compaction exists for)
+    build_index(spark, corpus, root)
 
     before = spark.read.parquet(IndexPaths(root).postings).count()
     df_sum_before = spark.read.parquet(IndexPaths(root).lexicon).agg(
@@ -57,7 +57,7 @@ def test_generation_gc_deferred_one_flip(spark, tmp_path):
     write_corpus(generate_corpus(spark, 300, seed=42), p, partition_by=None)
     corpus = read_corpus(spark, p)
     root = str(tmp_path / "idx")
-    build_index(spark, corpus, root, BuildConfig(segment_partitions=8))
+    build_index(spark, corpus, root)
 
     old = WandEngine(root)  # long-lived reader (e.g. the HTTP server)
     before = old.search("hotterm buffer", 10)
@@ -126,6 +126,47 @@ def test_index_format_version_checked(spark, tmp_path, tiny_index):
         WandEngine(clone)
     with _pytest.raises(ValueError, match="format"):
         IndexReader(spark, clone)
+
+
+def test_compactions_refuse_other_format(spark, tmp_path, tiny_index):
+    """Both compactions load stats through the readers' format check: over
+    an index whose stats.json says format 6 they raise "rebuild the index"
+    before writing anything, so neither CURRENT.json nor a ``_g<N>`` dir
+    appears."""
+    import json
+    import os
+    import shutil
+
+    from nextsearch_api_spark.config import CURRENT_POINTER
+    from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, stream_corpus_to_forward,
+    )
+
+    root, _ = tiny_index
+    clone = str(tmp_path / "v6_idx")
+    shutil.copytree(root, clone)
+    stats_path = IndexPaths(clone).stats
+    with open(stats_path) as f:
+        stats = json.load(f)
+    stats["format"] = 6
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
+    src = str(tmp_path / "d_src")
+    spark.createDataFrame([("zz/new", "n0.py", "c0", "py", "zznew hotterm")],
+                          CORPUS_SCHEMA).write.parquet(src)
+    deltas = str(tmp_path / "d")
+    stream_corpus_to_forward(spark, src, deltas, str(tmp_path / "d_ck"),
+                             trigger_once=True).awaitTermination(120)
+    listing = sorted(os.listdir(clone))
+
+    with pytest.raises(ValueError, match="rebuild the index"):
+        compact_postings(spark, clone)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        compact_deltas(spark, clone, deltas)
+    assert sorted(os.listdir(clone)) == listing
+    assert CURRENT_POINTER not in listing
+    assert not [d for d in listing if "_g" in d]
 
 
 def test_generation_gc_failed_delete_retried(tmp_path, monkeypatch):
@@ -424,7 +465,7 @@ def test_every_generation_publishes_attained_block_max(spark, tmp_path):
     write_corpus(generate_corpus(spark, 300, seed=42), p, partition_by=None)
     corpus = read_corpus(spark, p)
     root = str(tmp_path / "idx")
-    cfg = BuildConfig(chunk_size=16, segment_partitions=8)
+    cfg = BuildConfig(chunk_size=16)
     build_index(spark, corpus, root, cfg)
     _assert_attained_block_max(root)
 

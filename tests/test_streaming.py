@@ -10,6 +10,23 @@ from nextsearch_api_spark.operators.build import build_index
 from nextsearch_api_spark.sources.corpus import generate_corpus, write_corpus
 
 
+def _assert_delta_doc_lens(spark, src, deltas):
+    """One docs-delta row per streamed doc, whose doc_len is the reference
+    tokenizer's kept-token count of its content — 0 for a doc that keeps
+    none."""
+    from nextsearch_api_spark.functions.text import kept_tokens_py
+    from nextsearch_api_spark.streaming.ingest import (
+        _stream_doc_id, delta_docs_dir,
+    )
+    want = sorted(
+        (r["doc_id"], len(kept_tokens_py(r["content"] or "")))
+        for r in spark.read.parquet(src)
+        .select(_stream_doc_id().alias("doc_id"), "content").collect())
+    got = sorted(tuple(r) for r in spark.read.parquet(delta_docs_dir(deltas))
+                 .select("doc_id", "doc_len").collect())
+    assert got == want
+
+
 def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     from nextsearch_api_spark.operators.wand import WandEngine
     from nextsearch_api_spark.streaming.ingest import (
@@ -60,6 +77,7 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     ddocs = spark.read.parquet(delta_docs_dir(deltas))
     assert ddocs.count() == 60
     assert {"doc_id", "uid", "repo", "doc_len", "content_sha256"} <= set(ddocs.columns)
+    _assert_delta_doc_lens(spark, stream_src, deltas)
 
     stats = compact_deltas(spark, root, deltas)
     assert stats["N"] == n_before + 60 and stats["gen"] == 1
@@ -309,6 +327,7 @@ def test_update_without_tokens_supersedes_base_version(spark, tmp_path):
     deltas = str(tmp_path / "upd")
     stream_corpus_to_forward(spark, src, deltas, str(tmp_path / "upd_ck"),
                              trigger_once=True).awaitTermination(120)
+    _assert_delta_doc_lens(spark, src, deltas)
     out = compact_deltas(spark, root, deltas)
 
     assert out["N"] == n_before - 1
