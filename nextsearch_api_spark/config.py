@@ -31,8 +31,9 @@ SUGGEST_K_MIN, SUGGEST_K_MAX = 1, 10
 MIN_TOKEN_LEN = 2
 
 # Posting-list physical layout (north-rule extension — the reference stores raw
-# uncompressed u32 pairs, lexicon.cpp:122-126; we chunk and compress, format v6
-# in functions/codec.py).
+# uncompressed u32 pairs, lexicon.cpp:122-126; we chunk and compress doc-id
+# gaps and tf, format v8 in functions/codec.py; doc lengths live in the doc
+# store, functions/docstore.py).
 CHUNK_SIZE = 4096          # postings per chunk row (the skew-split unit)
 # (r1 stored intra-chunk skip-doc lists too; dropped in format v3 — the batch
 # tier's chunk prune skips at chunk granularity via doc_lo/doc_hi metadata

@@ -1,4 +1,4 @@
-"""Posting-list codec, postings format v6 — the only module that knows a
+"""Posting-list codec, postings format v8 — the only module that knows a
 blob's layout.
 
 The reference stores raw interleaved u32 (docId, tf) pairs
@@ -6,10 +6,10 @@ The reference stores raw interleaved u32 (docId, tf) pairs
 CHUNK_SIZE postings sorted by doc_id, with its doc-id range in the row's
 ``doc_lo``/``doc_hi`` columns and
 
-    blob = varbyte(doc-id gaps) ‖ varbyte(tf) ‖ FOR(doc_len)
+    blob = varbyte(doc-id gaps) ‖ varbyte(tf)
 
-``tf_off`` and ``dl_off`` (row columns) are the byte offsets where the tf
-and doc_len streams start. It is the only binary layout the build
+``tf_off`` (a row column) is the byte offset where the tf stream starts;
+it runs to the end of the blob. It is the only binary layout the build
 writes: the segment build's doc lengths travel as chunks of the reserved
 term '' in it too (operators/build.py:build_posting_chunks_segment).
 
@@ -19,27 +19,19 @@ term '' in it too (operators/build.py:build_posting_chunks_segment).
   first gap.
 * Varbyte: little-endian 7-bit groups, MSB set on every byte except the
   last of a value (standard v-byte; Manning/Raghavan/Schütze IIR §5.3).
-* FOR(doc_len), frame of reference per chunk (Lemire & Boytsov, *Decoding
-  billions of integers per second through vectorization*, SPE 2015): a
-  5-byte header — u32 ``base`` = the chunk's minimum doc_len, u8 bit width
-  ``w`` — then each ``doc_len − base`` in ``w`` bits, packed little-endian
-  (value i starts at bit i·w), padded to a whole byte. A chunk whose
-  doc lengths are all equal has ``w = 0`` and no packed bytes.
 
-Why doc_len stays inline: BM25 needs it for every scored posting, and the
-chunk row is what the batch plan shuffles to its doc-id range groups.
-Reading it from ``docs`` instead made postings 0.375× as large with the same
-answers, but every range group would then fetch doc_len by id from docs row
-groups: 100 scattered ids touched 84 row groups (4.3 ms), about one
-row-group read per matched doc on sparse matches, against ~1.5 inline
-bytes per posting here. On the 50k-doc serving index varbyte spent 2 bytes
-on each doc_len where a chunk's spread needs about 9 bits.
+Doc lengths are not in the blobs: BM25 reads them by doc id from the docs
+component's doc store (functions/docstore.py:DocStore.doc_lens), the
+reference's ``seg.docs[docId].doc_len`` (api_engine.cpp:477). Up to format
+7 every blob carried a frame-of-reference doc_len stream, about 40% of the
+raw blob bytes, which snappy barely compressed. It stayed inline while a
+range group of the batch plan would have fetched lengths from scattered
+docs row groups; the memory-mapped store answers a range with one offset
+gather instead.
 
 Encode and decode are vectorized over whole batches of chunks: the only
-Python loops run over varbyte byte positions (≤ 10) and the four bytes of a
-FOR base, never over chunks or postings. Packed doc_len values are written
-and read through 64-bit words: the decoder gathers two aligned words per
-value (the one holding its first bit and the next, for a spill).
+Python loops run over varbyte byte positions (≤ 10), never over chunks or
+postings.
 """
 
 from __future__ import annotations
@@ -54,8 +46,6 @@ __all__ = [
     "decode_doc_ids",
     "decode_chunks_concat",
 ]
-
-FOR_HEADER_BYTES = 5  # u32 base + u8 bit width
 
 
 def varbyte_encode(vals: np.ndarray) -> bytes:
@@ -141,39 +131,25 @@ def _segments(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) + np.repeat(starts - before, lens)
 
 
-def _or_runs(words: np.ndarray, idx: np.ndarray, vals: np.ndarray) -> None:
-    """words[idx[i]] |= vals[i] for a non-decreasing ``idx``: one OR-reduce
-    per run of equal indices, so no scatter ever writes a word twice."""
-    if not idx.size:
-        return
-    first = np.flatnonzero(np.concatenate(([True], idx[1:] != idx[:-1])))
-    words[idx[first]] |= np.bitwise_or.reduceat(vals, first)
-
-
-def encode_chunks(doc_ids, tfs, dls, starts) -> "tuple[pa.Array, np.ndarray, np.ndarray]":  # noqa: F821
+def encode_chunks(doc_ids, tfs, starts) -> "tuple[pa.Array, np.ndarray]":  # noqa: F821
     """Encode many chunks in one vectorized pass.
 
-    ``doc_ids``/``tfs``/``dls`` hold the postings of consecutive chunks;
-    chunk i is rows [starts[i], starts[i+1]) (the last runs to the end),
-    doc ids strictly ascending inside a chunk. Returns (blobs as an Arrow
-    ``binary`` array, tf_off int32[], dl_off int32[]); each chunk's doc_lo
-    is its first doc id."""
+    ``doc_ids``/``tfs`` hold the postings of consecutive chunks; chunk i is
+    rows [starts[i], starts[i+1]) (the last runs to the end), doc ids
+    strictly ascending inside a chunk. Returns (blobs as an Arrow
+    ``binary`` array, tf_off int32[]); each chunk's doc_lo is its first
+    doc id."""
     import pyarrow as pa
 
     ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
-    dls = np.asarray(dls, dtype=np.int64)
     starts = np.asarray(starts, dtype=np.int64)
     n, k = ids.size, starts.size
     ends = np.append(starts[1:], n)
-    counts = ends - starts
-    if k and (starts[0] != 0 or (counts <= 0).any()):
+    if k and (starts[0] != 0 or (ends - starts <= 0).any()):
         raise ValueError("chunk starts must begin at 0 and be increasing")
-    if n and (dls.min() < 0 or dls.max() > 0xFFFFFFFF):
-        raise ValueError("doc_len outside the u32 range of the FOR header")
     if not k:
-        empty = np.zeros(0, dtype=np.int32)
-        return pa.array([], type=pa.binary()), empty, empty.copy()
+        return pa.array([], type=pa.binary()), np.zeros(0, dtype=np.int32)
 
     gaps = np.zeros(n, dtype=np.int64)
     gaps[1:] = ids[1:] - ids[:-1]
@@ -183,49 +159,23 @@ def encode_chunks(doc_ids, tfs, dls, starts) -> "tuple[pa.Array, np.ndarray, np.
     glen = goffs[ends] - goffs[starts]
     tlen = toffs[ends] - toffs[starts]
 
-    base = np.minimum.reduceat(dls, starts)
-    spread = np.maximum.reduceat(dls, starts) - base
-    width = np.frexp(spread.astype(np.float64))[1].astype(np.int64)  # bit length
-    plen = (counts * width + 7) // 8
-
-    # packed FOR payloads of all chunks back to back, built in 64-bit words:
-    # value i of chunk c sits at bit pstart[c]·8 + i·w[c]; each value ORs
-    # into its word and the spill into the next one (w ≤ 32)
-    pstart = np.cumsum(plen) - plen
-    bit = (np.repeat(8 * pstart - starts * width, counts)
-           + np.arange(n, dtype=np.int64) * np.repeat(width, counts))
-    vals = (dls - np.repeat(base, counts)).astype(np.uint64)
-    words = np.zeros(int(plen.sum()) // 8 + 2, dtype=np.uint64)
-    word = bit >> 6
-    shift = (bit & 63).astype(np.uint64)
-    _or_runs(words, word, vals << shift)
-    _or_runs(words, word + 1, (vals >> np.uint64(1)) >> (np.uint64(63) - shift))
-    packed = words.view(np.uint8)[: int(plen.sum())]
-
-    blob_len = glen + tlen + FOR_HEADER_BYTES + plen
     offs = np.zeros(k + 1, dtype=np.int64)
-    np.cumsum(blob_len, out=offs[1:])
+    np.cumsum(glen + tlen, out=offs[1:])
     if offs[-1] > np.iinfo(np.int32).max:
         raise ValueError("one batch of chunk blobs exceeds 2 GiB")
     out = np.empty(int(offs[-1]), dtype=np.uint8)
     out[_segments(offs[:-1], glen)] = gbytes
     out[_segments(offs[:-1] + glen, tlen)] = tbytes
-    head = offs[:-1] + glen + tlen
-    for j in range(4):
-        out[head + j] = (base >> (8 * j)) & 0xFF
-    out[head + 4] = width
-    out[_segments(head + FOR_HEADER_BYTES, plen)] = packed
-
     blobs = pa.Array.from_buffers(
         pa.binary(), k,
         [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(out)])
-    return blobs, glen.astype(np.int32), (glen + tlen).astype(np.int32)
+    return blobs, glen.astype(np.int32)
 
 
 def _blob_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     """Blobs (an Arrow binary array, or a sequence of bytes-like values) →
-    (their bytes back to back as uint8[], each blob's start offset in it).
-    Zero-copy for an Arrow array."""
+    (their bytes back to back as uint8[], the start offset of each blob in
+    it and the end of the last). Zero-copy for an Arrow array."""
     import pyarrow as pa
 
     if not isinstance(blobs, pa.Array):
@@ -236,7 +186,7 @@ def _blob_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
         blobs.offset: blobs.offset + len(blobs) + 1].astype(np.int64)
     data = (np.frombuffer(dbuf, dtype=np.uint8)[offs[0]: offs[-1]]
             if dbuf is not None and len(blobs) else np.zeros(0, np.uint8))
-    return data, offs[:-1] - offs[0]
+    return data, offs - offs[0]
 
 
 def _doc_ids(data, starts, tf_offs, counts, doc_los) -> np.ndarray:
@@ -256,62 +206,29 @@ def _chunk_args(*cols) -> list[np.ndarray]:
 
 
 def decode_doc_ids(blobs, tf_offs, counts, doc_los) -> np.ndarray:
-    """Doc ids only of many chunks (the gap stream; tf and doc_len bytes are
-    never read) → int64[], chunks in input order."""
+    """Doc ids only of many chunks (the gap stream; tf bytes are never
+    read) → int64[], chunks in input order."""
     tf_offs, counts, doc_los = _chunk_args(tf_offs, counts, doc_los)
     if not counts.size:
         return np.zeros(0, dtype=np.int64)
-    data, starts = _blob_bytes(blobs)
-    return _doc_ids(data, starts, tf_offs, counts, doc_los)
+    data, offs = _blob_bytes(blobs)
+    return _doc_ids(data, offs[:-1], tf_offs, counts, doc_los)
 
 
 def decode_chunks_concat(
-    blobs, tf_offs, dl_offs, counts, doc_los,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode many chunks at once → concatenated (doc_ids, tfs, dls), all
+    blobs, tf_offs, counts, doc_los,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode many chunks at once → concatenated (doc_ids, tfs), both
     int64, chunks in input order. ``counts`` and ``doc_los`` are the chunk
-    rows' ``count`` and ``doc_lo`` columns. One vectorized pass per stream;
-    doc_len takes two aligned 64-bit word gathers per value — the serving
-    tier's hot decode path."""
-    tf_offs, dl_offs, counts, doc_los = _chunk_args(
-        tf_offs, dl_offs, counts, doc_los)
+    rows' ``count`` and ``doc_lo`` columns. One vectorized pass per
+    stream — the serving tier's hot decode path."""
+    tf_offs, counts, doc_los = _chunk_args(tf_offs, counts, doc_los)
     if not counts.size:
         z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    data, starts = _blob_bytes(blobs)
+        return z, z.copy()
+    data, offs = _blob_bytes(blobs)
+    starts = offs[:-1]
     doc_ids = _doc_ids(data, starts, tf_offs, counts, doc_los)
     tfs = varbyte_decode(
-        data[_segments(starts + tf_offs, dl_offs - tf_offs)]).astype(np.int64)
-
-    # word-aligned copy of the bytes, padded so the spill read of the last
-    # value stays inside
-    words = np.zeros(data.size // 8 + 2, dtype=np.uint64)
-    words.view(np.uint8)[: data.size] = data
-    head = starts + dl_offs
-    base = np.zeros(counts.size, dtype=np.int64)
-    for j in range(4):
-        base |= data[head + j].astype(np.int64) << (8 * j)
-    width = data[head + 4].astype(np.int64)
-    # bit position of value i of chunk c: 8·(head[c] + 5) + (i − first[c])·w[c];
-    # the arithmetic runs in place on a few n-long arrays
-    rw = np.repeat(width, counts)
-    bit = np.arange(rw.size, dtype=np.int64)
-    bit *= rw
-    bit += np.repeat(8 * (head + FOR_HEADER_BYTES)
-                     - (np.cumsum(counts) - counts) * width, counts)
-    word = bit >> 6
-    shift = (bit & 63).view(np.uint64)
-    dls = words[word]                      # aligned word holding the start
-    dls >>= shift
-    word += 1
-    hi = words[word]                       # the next word, for the spill
-    hi <<= np.uint64(1)
-    np.subtract(np.uint64(63), shift, out=shift)
-    hi <<= shift
-    dls |= hi
-    dls &= np.repeat((np.uint64(1) << width.astype(np.uint64)) - np.uint64(1),
-                     counts)
-    dls = dls.view(np.int64)
-    dls += np.repeat(base, counts)
-    return doc_ids, tfs, dls
-
+        data[_segments(starts + tf_offs, offs[1:] - starts - tf_offs)])
+    return doc_ids, tfs.astype(np.int64)

@@ -7,8 +7,9 @@ serving tier (operators/wand.py, per segment under
 operators/multisegment.py), the batch tier's driver path and every doc-id
 range group of its distributed plan (operators/query.py) all call it. The
 build and compaction use ``bm25_impact`` for block-max impacts
-(operators/build.py). ``oracle.py`` keeps its own independent loop as the
-test reference.
+(operators/build.py). Both read doc lengths from the doc store
+(functions/docstore.py:DocStore.doc_lens). ``oracle.py`` keeps its own
+independent loop as the test reference.
 
 Precision: 'f32' (default) computes idf and impact in float32 like the
 reference, 'f64' in float64; per-doc sums are float64 either way, added in
@@ -100,17 +101,19 @@ def rank_postings(
 
 
 def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
-                    params: "BM25Params", lo: "int | None" = None,  # noqa: F821
+                    params: "BM25Params", store: "DocStore",  # noqa: F821
+                    lo: "int | None" = None,
                     hi: "int | None" = None) -> "list[tuple]":
     """Chunk rows → [(qid, k, found, top doc ids, top scores)] for each
     query with a posting among them.
 
     ``chunks`` is an Arrow table of postings chunk rows (term, doc_lo,
-    count, tf_off, dl_off, blob); ``queries`` is
-    [(qid, k, [(term, widf), ...])].
-    Each term's chunks decode in one ``decode_chunks_concat`` call, in
-    table order (a term's chunks cover disjoint doc ranges, so the order
-    does not change any sum), and only doc ids in [lo, hi) are kept (None:
+    count, tf_off, blob); ``queries`` is [(qid, k, [(term, widf), ...])];
+    ``store`` is the generation's doc store (functions/docstore.py), which
+    gives each posting's doc length. Each term's chunks decode in one
+    ``decode_chunks_concat`` call in doc_lo order (a term's chunks cover
+    disjoint doc ranges, so its ids come out ascending and the order
+    changes no sum), and only doc ids in [lo, hi) are kept (None:
     unbounded). Terms decode one after another: a thread pool per call
     cost more CPU and saved no wall time on serving queries and 0.5M-posting
     batches (it saved ~20% wall at the 8M-posting driver budget)."""
@@ -123,25 +126,26 @@ def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
         rows_by_term.setdefault(term, []).append(i)
     # blobs stay Arrow: a term's rows are taken as one binary array
     blobs = chunks.column("blob").combine_chunks()
-    doc_los, counts, tf_offs, dl_offs = (
+    doc_los, counts, tf_offs = (
         chunks.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
-        for c in ("doc_lo", "count", "tf_off", "dl_off"))
+        for c in ("doc_lo", "count", "tf_off"))
 
     per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     for term, rows in rows_by_term.items():
         idx = np.asarray(rows)
-        ids, tfs, dls = decode_chunks_concat(
-            blobs.take(idx), tf_offs[idx], dl_offs[idx], counts[idx],
-            doc_los[idx])
+        idx = idx[np.argsort(doc_los[idx], kind="stable")]
+        ids, tfs = decode_chunks_concat(
+            blobs.take(idx), tf_offs[idx], counts[idx], doc_los[idx])
         if lo is not None or hi is not None:
             keep = np.ones(ids.size, dtype=bool)
             if lo is not None:
                 keep &= ids >= lo
             if hi is not None:
                 keep &= ids < hi
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        per_term[term] = ids, bm25_impact(tfs, dls, params.k1, params.b,
-                                          avgdl, params.precision)
+            ids, tfs = ids[keep], tfs[keep]
+        per_term[term] = ids, bm25_impact(tfs, store.doc_lens(ids),
+                                          params.k1, params.b, avgdl,
+                                          params.precision)
 
     out: list[tuple] = []
     for qid, k, tws in queries:

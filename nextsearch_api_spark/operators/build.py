@@ -26,14 +26,16 @@ Spark-first re-design (NOT a port):
     bounded row groups; docs by doc_id, as zstd Parquet plus the doc
     store's memory-mapped Arrow twins (functions/docstore.py); lexicon and
     suggest by key.
-  * postings format v6 — per chunk: a blob of doc-id gaps from doc_lo, tf
-    and frame-of-reference doc_len (functions/codec.py owns the layout) and
-    the float32 block-max impact (functions/scoring.py:bm25_impact), the
-    per-chunk bound the batch tier's chunk prune plans with. avgdl is only
-    known after the pass, so the builders emit chunks without impacts and
-    write_postings_sorted, the one postings writer, computes each chunk's
-    max from its own blob after the sort — for every row it publishes,
-    the rows a compaction copies through included.
+  * postings format v8 — per chunk: a blob of doc-id gaps from doc_lo and
+    tf (functions/codec.py owns the layout) and the float32 block-max
+    impact (functions/scoring.py:bm25_impact), the per-chunk bound the
+    batch tier's chunk prune plans with. Doc lengths live once, in the
+    docs component's doc store (functions/docstore.py), which every BM25
+    read gathers them from. avgdl is only known after the pass, so the
+    builders emit chunks without impacts and write_postings_sorted, the
+    one postings writer, computes each chunk's max from its own blob and
+    the doc store after the sort — for every row it publishes, the rows a
+    compaction copies through included.
   * one chunker (_chunk_partition) turns every posting into chunk rows:
     the segment build hands it one input split, doc lengths included as
     postings of the reserved term ''; compaction re-chunks token rows with
@@ -43,8 +45,8 @@ Spark-first re-design (NOT a port):
     partition.
   * every stage materializes to Parquet and checkpoints via the lineage
     manifest (plans/checkpoint.py) — resume skips completed stages. The
-    ids and doclen tables are scratch: removed once the build completes,
-    re-created only when a stage that reads them must run again.
+    ids table is scratch: removed once the build completes, re-created
+    only when a stage that reads it must run again.
 """
 
 from __future__ import annotations
@@ -70,11 +72,12 @@ from nextsearch_api_spark.functions.scoring import bm25_impact
 from nextsearch_api_spark.functions.text import arrow_kept_tokens
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
 
+# token rows, one per (doc, term), as the compactions decode and re-chunk
+# them
 TOKENS_SCHEMA = StructType([
     StructField("doc_id", LongType(), False),
     StructField("term", StringType(), False),
     StructField("tf", IntegerType(), False),
-    StructField("doc_len", IntegerType(), False),
 ])
 
 # chunk rows as both builders emit them; write_postings_sorted adds each
@@ -85,17 +88,17 @@ CHUNKS_SCHEMA = StructType([
     StructField("doc_hi", LongType(), False),
     StructField("count", IntegerType(), False),
     StructField("tf_off", IntegerType(), False),
-    StructField("dl_off", IntegerType(), False),
     StructField("blob", BinaryType(), False),
 ])
 
 _KEY_SEP = "\x01"
 
 # bump when the on-disk format of any component changes — forces resume
-# logic to rebuild indexes created by older code. 6: postings blobs as in
-# functions/codec.py; 7: the docs component also carries the doc store
-# (functions/docstore.py) that hydration reads
-FORMAT_VERSION = 7
+# logic to rebuild indexes created by older code. 7: the docs component
+# also carries the doc store (functions/docstore.py) that hydration reads;
+# 8: postings blobs hold doc-id gaps and tf only (functions/codec.py), and
+# doc lengths are read from the doc store
+FORMAT_VERSION = 8
 
 
 def _parquet_rows(path: str) -> int:
@@ -321,8 +324,9 @@ def tokenize_tf(corpus_ids: DataFrame) -> DataFrame:
             )
 
     return corpus_ids.select("doc_id", "content").mapInArrow(
-        tok, schema=TOKENS_SCHEMA
-    )
+        tok, schema=StructType(
+            TOKENS_SCHEMA.fields
+            + [StructField("doc_len", IntegerType(), False)]))
 
 
 # ----------------------------------------------------------------- chunks --
@@ -333,25 +337,24 @@ _PA_CHUNKS_SCHEMA = pa.schema([
     ("doc_hi", pa.int64()),
     ("count", pa.int32()),
     ("tf_off", pa.int32()),
-    ("dl_off", pa.int32()),
     ("blob", pa.binary()),
 ])
 
 
-def _chunk_partition(terms: list, ids: list, tfs: list, dls: list,
-                     parts: list, chunk_size: int) -> pa.RecordBatch:
+def _chunk_partition(terms: list, ids: list, tfs: list, parts: list,
+                     chunk_size: int) -> pa.RecordBatch:
     """The chunker: one partition's postings → its chunk rows. Both
     builders hand every posting they emit to it.
 
     Each argument is a list of per-batch pieces: Arrow string arrays of
     terms (dictionary-encoded here, so term strings never become Python
-    objects) and NumPy doc ids, tfs, doc_lens and ``parts``, the doc range
-    a chunk must not span. One NumPy lexsort orders the postings by
+    objects) and NumPy doc ids, tfs and ``parts``, the doc range a chunk
+    must not span. One NumPy lexsort orders the postings by
     (term, doc_id), _chunk_bounds breaks them on (term, part) and every
     chunk_size rows, and one functions/codec.py:encode_chunks call writes
     every blob. The rows carry no impact: write_postings_sorted computes
-    each chunk's max_impact from its blob once the index's avgdl is
-    known."""
+    each chunk's max_impact from its blob and the doc store once the
+    index's avgdl is known."""
     import pyarrow.compute as pc
 
     from nextsearch_api_spark.functions.codec import encode_chunks
@@ -360,12 +363,11 @@ def _chunk_partition(terms: list, ids: list, tfs: list, dls: list,
     if isinstance(enc, pa.ChunkedArray):
         enc = enc.combine_chunks()
     codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    ids, tfs, dls, parts = (np.concatenate(x) for x in (ids, tfs, dls, parts))
+    ids, tfs, parts = (np.concatenate(x) for x in (ids, tfs, parts))
     order = np.lexsort((ids, codes))
-    codes, ids, tfs, dls, parts = (
-        x[order] for x in (codes, ids, tfs, dls, parts))
+    codes, ids, tfs, parts = (x[order] for x in (codes, ids, tfs, parts))
     cst, cen = _chunk_bounds(codes, parts, chunk_size)
-    blobs, tfo, dlo = encode_chunks(ids, tfs, dls, cst)
+    blobs, tfo = encode_chunks(ids, tfs, cst)
     return pa.RecordBatch.from_arrays(
         [
             pc.take(enc.dictionary, pa.array(codes[cst].astype(np.int32))),
@@ -373,7 +375,6 @@ def _chunk_partition(terms: list, ids: list, tfs: list, dls: list,
             pa.array(ids[cen - 1]),
             pa.array((cen - cst).astype(np.int32)),
             pa.array(tfo),
-            pa.array(dlo),
             blobs,
         ],
         schema=_PA_CHUNKS_SCHEMA,
@@ -383,11 +384,13 @@ def _chunk_partition(terms: list, ids: list, tfs: list, dls: list,
 # Row-group byte targets of the keyed serving tables (parquet.block.size).
 # The serving tier reads postings and suggest by key through footer indexes
 # (functions/rowgroups.py), so a point read costs about one row group: a
-# term fetch reads its own postings row groups plus at most a partial
+# term fetch decodes its own postings row groups plus at most a partial
 # neighbor at each end. Smaller groups cut the bytes per read but add footer
-# metadata and weaken per-group compression; the values come from a sweep of
-# the k=100 serving tail against index bytes (CHANGES.md).
-POSTINGS_ROW_GROUP_BYTES = 256 << 10
+# metadata and weaken per-group compression; the values come from sweeps of
+# the cold serving CPU against index bytes (CHANGES.md). The postings value
+# was re-derived for format 8, whose blobs are half as large, so a group of
+# the same bytes holds twice the chunk rows.
+POSTINGS_ROW_GROUP_BYTES = 128 << 10
 SUGGEST_ROW_GROUP_BYTES = 1 << 20
 SUGGEST_ROWS_PER_FILE = 2_000_000
 
@@ -410,46 +413,55 @@ def _serving_partitions(spark: SparkSession) -> int:
     return min(64, max(8, int(spark.conf.get("spark.sql.shuffle.partitions"))))
 
 
-def _block_max_impact(avgdl: float, params: BM25Params):
-    """Column expression over a chunk row's (blob, tf_off, dl_off, count,
-    doc_lo) → the chunk's block-max impact: the float32 maximum of
+def _block_max_impact(avgdl: float, params: BM25Params, docs_path: str):
+    """Column expression over a chunk row's (blob, tf_off, count, doc_lo) →
+    the chunk's block-max impact: the float32 maximum of
     functions/scoring.py:bm25_impact over its decoded postings at
-    ``avgdl`` — an ATTAINED query-time impact, which the batch tier's chunk
-    prune (operators/query.py:_plan_chunk_prune) needs to stay exact. One
-    Arrow UDF call per batch: the blobs arrive as one zero-copy Arrow
-    array, decode in one decode_chunks_concat call and reduce with one
-    maximum.reduceat; only the float column goes back."""
+    ``avgdl``, with each doc's length from the doc store at ``docs_path``
+    — an ATTAINED query-time impact, which the batch tier's chunk prune
+    (operators/query.py:_plan_chunk_prune) needs to stay exact. One Arrow
+    UDF call per batch: the blobs arrive as one zero-copy Arrow array,
+    decode in one decode_chunks_concat call, gather their lengths in one
+    DocStore.doc_lens call and reduce with one maximum.reduceat; only the
+    float column goes back. The store is mapped once per task."""
     from pyspark.sql.functions import arrow_udf
+
+    from nextsearch_api_spark.functions.docstore import DocStore
 
     k1 = np.float32(params.k1)
     b = np.float32(params.b)
     # avgdl == 0 ⇔ no doc has tokens ⇔ no chunks exist; the guard only
     # keeps the f32 math finite on that empty plan
     avgdl32 = np.float32(avgdl if avgdl > 0 else 1.0)
+    stores: list[DocStore] = []
 
     @arrow_udf("float")
-    def block_max(blob: pa.Array, tf_off: pa.Array, dl_off: pa.Array,
-                  count: pa.Array, doc_lo: pa.Array) -> pa.Array:
+    def block_max(blob: pa.Array, tf_off: pa.Array, count: pa.Array,
+                  doc_lo: pa.Array) -> pa.Array:
         from nextsearch_api_spark.functions.codec import decode_chunks_concat
 
         counts = count.to_numpy(zero_copy_only=False).astype(np.int64)
         if not counts.size:
             return pa.array([], type=pa.float32())
-        _, tfs, dls = decode_chunks_concat(blob, tf_off, dl_off, counts,
-                                           doc_lo)
-        imp = bm25_impact(tfs, dls, k1, b, avgdl32)
+        if not stores:
+            stores.append(DocStore(docs_path))
+        ids, tfs = decode_chunks_concat(blob, tf_off, counts, doc_lo)
+        imp = bm25_impact(tfs, stores[0].doc_lens(ids), k1, b, avgdl32)
         return pa.array(np.maximum.reduceat(imp, np.cumsum(counts) - counts))
 
-    return block_max("blob", "tf_off", "dl_off", "count", "doc_lo")
+    return block_max("blob", "tf_off", "count", "doc_lo")
 
 
 def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
-                          params: BM25Params) -> None:
-    """Publish chunk rows as the postings table: range-partitioned + sorted
-    by (term, doc_lo) in bounded row groups (tight per-row-group term
-    min/max stats → a term fetch reads only the few row groups actually
-    holding the term), each row with its block-max ``max_impact`` at the
-    index's ``avgdl`` and ``params``' k1/b.
+                          params: BM25Params, docs_path: str) -> None:
+    """Publish chunk rows as the postings table: zstd Parquet,
+    range-partitioned + sorted by (term, doc_lo) in bounded row groups
+    (tight per-row-group term min/max stats → a term fetch reads only the
+    few row groups actually holding the term), each row with its block-max
+    ``max_impact`` at the index's ``avgdl`` and ``params``' k1/b.
+    ``docs_path`` is the docs component of the generation being written,
+    already on disk: its doc store gives the doc lengths, and it must hold
+    every posting's doc.
 
     Every postings writer (build_index, compact_postings, compact_deltas)
     goes through here, so this is the one place ``max_impact`` is computed,
@@ -474,10 +486,14 @@ def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
         .repartitionByRange(_serving_partitions(spark), "term", "doc_lo")
         .sortWithinPartitions("term", "doc_lo")
         .select("term", "doc_lo", "doc_hi", "count",
-                _block_max_impact(avgdl, params).alias("max_impact"),
-                "tf_off", "dl_off", "blob")
+                _block_max_impact(avgdl, params, docs_path)
+                .alias("max_impact"),
+                "tf_off", "blob")
         .write.mode("overwrite")
         .option("parquet.block.size", POSTINGS_ROW_GROUP_BYTES)
+        # zstd stores the varbyte streams in ~2/3 of snappy's bytes, at the
+        # same serving, batch and build CPU (CHANGES.md)
+        .option("compression", "zstd")
         .parquet(out_path))
     prev_hi = F.lag("doc_hi").over(
         Window.partitionBy("term").orderBy("doc_lo"))
@@ -567,7 +583,6 @@ def _segment_chunks(batches: Iterator[pa.RecordBatch],
     terms: list = []
     ids: list = []
     tfs: list = []
-    dls: list = []
     segs: list = []
     for batch in batches:
         got = _term_counts(batch.column("content"), batch.num_rows)
@@ -580,10 +595,9 @@ def _segment_chunks(batches: Iterator[pa.RecordBatch],
             [words, pa.repeat(pa.scalar("", words.type), docs.size)]))
         tfs.append(np.concatenate((tf, doc_lens[docs])))
         ids.append(batch.column("doc_id").to_numpy(zero_copy_only=False)[row])
-        dls.append(doc_lens[row])
         segs.append(batch.column("seg").to_numpy(zero_copy_only=False)[row])
     if ids:
-        yield _chunk_partition(terms, ids, tfs, dls, segs, chunk_size)
+        yield _chunk_partition(terms, ids, tfs, segs, chunk_size)
 
 
 def build_posting_chunks_segment(corpus_ids: DataFrame,
@@ -618,9 +632,9 @@ def build_posting_chunks_segment(corpus_ids: DataFrame,
     Doc lengths: avgdl is not known until this pass has tokenized the
     corpus, so chunk rows carry no impact. Every doc's length is a posting
     of the reserved term '' with tf = doc_len, chunked and encoded like any
-    other term; build_index decodes those rows into the doclen table (N,
-    total_len, avgdl) and write_postings_sorted then computes each real
-    chunk's max_impact from its blob."""
+    other term; build_index decodes those rows into the docs component
+    (N, total_len, avgdl and the doc store) and write_postings_sorted then
+    computes each real chunk's max_impact from its blob and the store."""
     chunk_size = cfg.chunk_size
     return corpus_ids.select("doc_id", "content", "seg").mapInArrow(
         lambda batches: _segment_chunks(batches, chunk_size),
@@ -634,12 +648,11 @@ DOC_BLOCK = 65536
 
 def _rechunk(batches: Iterator[pa.RecordBatch],
              chunk_size: int) -> Iterator[pa.RecordBatch]:
-    """One partition's (doc_id, term, tf, doc_len, _blk) token batches →
-    its chunk rows, breaking chunks on the doc block ``_blk``."""
+    """One partition's (doc_id, term, tf, _blk) token batches → its chunk
+    rows, breaking chunks on the doc block ``_blk``."""
     terms: list = []
     ids: list = []
     tfs: list = []
-    dls: list = []
     blks: list = []
     for batch in batches:
         if not batch.num_rows:
@@ -647,14 +660,13 @@ def _rechunk(batches: Iterator[pa.RecordBatch],
         terms.append(batch.column("term"))
         ids.append(batch.column("doc_id").to_numpy(zero_copy_only=False))
         tfs.append(batch.column("tf").to_numpy(zero_copy_only=False))
-        dls.append(batch.column("doc_len").to_numpy(zero_copy_only=False))
         blks.append(batch.column("_blk").to_numpy(zero_copy_only=False))
     if ids:
-        yield _chunk_partition(terms, ids, tfs, dls, blks, chunk_size)
+        yield _chunk_partition(terms, ids, tfs, blks, chunk_size)
 
 
 def build_posting_chunks(tokens: DataFrame, cfg: BuildConfig) -> DataFrame:
-    """tokens (doc_id, term, tf, doc_len) → chunked, compressed posting rows.
+    """tokens (doc_id, term, tf) → chunked, compressed posting rows.
     The compactions' re-chunker (operators/compact.py, streaming/ingest.py):
     the only builder whose input is token rows rather than content.
 
@@ -684,9 +696,9 @@ def build_posting_chunks(tokens: DataFrame, cfg: BuildConfig) -> DataFrame:
 
 
 def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
-    """Inverse of the chunker: posting chunks → (doc_id, term, tf, doc_len)
-    rows. Each Arrow batch decodes in one decode_chunks_concat call; a
-    chunk's term repeats once per posting."""
+    """Inverse of the chunker: posting chunks → (doc_id, term, tf) rows.
+    Each Arrow batch decodes in one decode_chunks_concat call; a chunk's
+    term repeats once per posting."""
     def dec(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -696,22 +708,20 @@ def decode_postings_to_tokens(chunks: DataFrame) -> DataFrame:
             if batch.num_rows == 0:
                 continue
             counts = batch.column("count").to_numpy(zero_copy_only=False)
-            ids, tfs, dls = decode_chunks_concat(
-                batch.column("blob"), batch.column("tf_off"),
-                batch.column("dl_off"), counts, batch.column("doc_lo"))
+            ids, tfs = decode_chunks_concat(
+                batch.column("blob"), batch.column("tf_off"), counts,
+                batch.column("doc_lo"))
             rows = np.repeat(np.arange(batch.num_rows), counts)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(ids, type=pa.int64()),
                     pc.take(batch.column("term"), pa.array(rows)),
                     pa.array(tfs.astype(np.int32), type=pa.int32()),
-                    pa.array(dls.astype(np.int32), type=pa.int32()),
                 ],
-                names=["doc_id", "term", "tf", "doc_len"],
+                names=TOKENS_SCHEMA.fieldNames(),
             )
 
-    return chunks.select("term", "doc_lo", "count", "tf_off", "dl_off",
-                         "blob") \
+    return chunks.select("term", "doc_lo", "count", "tf_off", "blob") \
         .mapInArrow(dec, schema=TOKENS_SCHEMA)
 
 
@@ -723,13 +733,13 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     A completed root holds only what serving reads: postings, lexicon,
     docs, suggest and stats.json (plus the ``_manifest.json`` lineage).
-    ``ids`` (doc ids, metadata and a copy of every doc's content) and
-    ``doclen`` are build scratch: they stay while the build is incomplete,
-    so a killed build resumes from them, and are removed right after the
-    manifest records ``completed_at``. A resume re-creates a scratch table
-    only when a stage that reads it must run again: with ``postings``
-    deleted, ``ids`` runs before ``postings``; a complete build with
-    unchanged inputs runs nothing."""
+    ``ids`` (doc ids, metadata and a copy of every doc's content) is build
+    scratch: it stays while the build is incomplete, so a killed build
+    resumes from it, and is removed right after the manifest records
+    ``completed_at``. A resume re-creates it only when the docs or
+    postings stage must run again (with ``postings`` deleted, ``ids`` runs
+    before ``postings``); a complete build with unchanged inputs runs
+    nothing."""
     cfg = cfg or BuildConfig()
     os.makedirs(out_root, exist_ok=True)
     # A batch (re)build claims the base-name generation: drop any compaction
@@ -751,8 +761,10 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # doc_len in ids; doclen table + stats derived from the postings
         # pass; deferred max_impact finalize). 3 = ids and doclen are
         # scratch, removed once the build completes; stats come only from
-        # the postings stage's recorded N/total_len.
-        "build_layout": 3,
+        # the postings stage's recorded N/total_len. 4 = no doclen table:
+        # docs is written from the postings tokenize and records
+        # N/total_len for the postings and stats stages.
+        "build_layout": 4,
         "chunk_size": cfg.chunk_size,
         "k1": cfg.bm25.k1, "b": cfg.bm25.b,
         "corpus": _corpus_fingerprint(corpus),
@@ -760,13 +772,9 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
     runner = StageRunner(manifest, base_fp)
 
     ids_path = os.path.join(out_root, "ids")
-    doclen_path = os.path.join(out_root, "doclen")
-    # Scratch planning: postings reads ids and writes doclen, docs reads
-    # both. A scratch table a completed build removed is re-created only
-    # when one of its readers must run again.
-    docs_todo = not runner.done("docs", paths.docs)
-    postings_out = [paths.postings] + ([doclen_path] if docs_todo else [])
-    ids_needed = docs_todo or not runner.done("postings", postings_out)
+    # ids is read by the docs and postings stages only
+    ids_needed = not (runner.done("docs", paths.docs)
+                      and runner.done("postings", paths.postings))
 
     def stage_ids() -> dict:
         # One corpus pass: deterministic ids + content hashes, materialized
@@ -788,57 +796,77 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     runner.run("ids", stage_ids, output=ids_path if ids_needed else None)
 
-    def stage_postings() -> dict:
-        # THE corpus tokenize (the only one in the build, r6): the fused
-        # builder emits chunk rows without impacts, doc lengths among them
-        # as the postings of term ''. The doclen write decodes those rows
-        # and is the first action (populating the persist); N/total_len/
-        # avgdl come from a footer-cheap aggregate over it;
-        # write_postings_sorted then computes every chunk's max_impact with
-        # that avgdl.
-        from pyspark import StorageLevel
-        ids = spark.read.parquet(ids_path).select("doc_id", "content", "seg")
-        raw = build_posting_chunks_segment(ids, cfg).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        try:
-            decode_postings_to_tokens(raw.where(F.col("term") == "")) \
-                .select("doc_id", "doc_len") \
-                .write.mode("overwrite").parquet(doclen_path)
-            row = (
-                spark.read.parquet(doclen_path)
-                .agg(F.count("*").alias("N"),
-                     F.sum("doc_len").alias("total_len"))
-                .collect()[0]
-            )
-            N, total_len = int(row["N"]), int(row["total_len"] or 0)
-            avgdl = float(total_len) / N if N else 0.0
-            # Term-locality layout for the serving tier: the builder's
-            # output files each span ~the whole vocab, so a query-term
-            # predicate would prune nothing. Range-partition + sort by
-            # (term, doc_lo) so Parquet footer min/max confine each term to
-            # 1-2 row groups — the on-disk analog of the reference's
-            # contiguous per-term posting regions (lexicon offset + seek).
-            # Chunk ROWS are shuffled here (compressed postings, a fraction
-            # of corpus bytes), never token rows — the build itself stays
-            # no-shuffle. The raw cache (populated by the doclen write)
-            # feeds the range-sampling pass and the shuffle.
-            write_postings_sorted(
-                raw.where(F.col("term") != ""), paths.postings, avgdl,
-                cfg.bm25)
-        finally:
-            # doclen + postings are on disk: the cache is fully consumed
-            raw.unpersist(blocking=False)
-        return {"rows": _parquet_rows(paths.postings),
-                "N": N, "total_len": total_len}
+    # THE corpus tokenize (the only one in the build, r6): the fused
+    # builder emits chunk rows without impacts, doc lengths among them as
+    # the postings of term ''. Persisted on first use, so the docs and
+    # postings stages share one tokenize; whichever runs first populates
+    # the cache.
+    raw_cache: list[DataFrame] = []
 
-    runner.run("postings", stage_postings, output=postings_out)
+    def raw_chunks() -> DataFrame:
+        if not raw_cache:
+            from pyspark import StorageLevel
+            ids = spark.read.parquet(ids_path).select("doc_id", "content",
+                                                      "seg")
+            raw_cache.append(build_posting_chunks_segment(ids, cfg).persist(
+                StorageLevel.MEMORY_AND_DISK))
+        return raw_cache[0]
+
+    def stage_docs() -> dict:
+        # reference parity: docs = rows with ≥ 1 kept token
+        # (src/ForwardIndex.cpp:152). Joins the content-pruned ids scan
+        # with the doc lengths decoded from the tokenize's '' rows —
+        # metadata-only rows on both sides, no content bytes move, and the
+        # zero-token filter IS the inner join (such docs post no length).
+        # Written doc-id-sorted with the doc store beside it: hydration
+        # and every doc-length lookup read the store. N and total_len are
+        # recorded here, for avgdl and the stats.
+        lens = (decode_postings_to_tokens(
+                    raw_chunks().where(F.col("term") == ""))
+                .select("doc_id", F.col("tf").alias("doc_len")))
+        docs = (
+            spark.read.parquet(ids_path)
+            .select("doc_id", "uid", "repo", "path", "commit", "lang",
+                    "content_sha256")
+            .join(lens, "doc_id")
+            .select("doc_id", "uid", "repo", "path", "commit", "lang",
+                    "doc_len", "content_sha256")
+        )
+        write_docs_sorted(docs, paths.docs)
+        row = (spark.read.parquet(paths.docs)
+               .agg(F.count("*").alias("N"),
+                    F.sum("doc_len").alias("total_len"))
+               .collect()[0])
+        return {"rows": int(row["N"]), "total_len": int(row["total_len"] or 0)}
+
+    def stage_postings() -> dict:
+        # Term-locality layout for the serving tier: the builder's output
+        # files each span ~the whole vocab, so a query-term predicate would
+        # prune nothing. Range-partition + sort by (term, doc_lo) so
+        # Parquet footer min/max confine each term to 1-2 row groups — the
+        # on-disk analog of the reference's contiguous per-term posting
+        # regions (lexicon offset + seek). Chunk ROWS are shuffled here
+        # (compressed postings, a fraction of corpus bytes), never token
+        # rows — the build itself stays no-shuffle. max_impact takes avgdl
+        # from the docs stage and each doc's length from its store.
+        N, total_len = _docs_totals(runner)
+        write_postings_sorted(
+            raw_chunks().where(F.col("term") != ""), paths.postings,
+            float(total_len) / N if N else 0.0, cfg.bm25, paths.docs)
+        return {"rows": _parquet_rows(paths.postings)}
+
+    try:
+        runner.run("docs", stage_docs, output=paths.docs)
+        runner.run("postings", stage_postings, output=paths.postings)
+    finally:
+        # docs + postings are on disk: the cache is fully consumed
+        for raw in raw_cache:
+            raw.unpersist(blocking=False)
 
     def stage_stats() -> dict:
-        # N/total_len were observed by the postings stage (the one that
-        # tokenized the corpus); metrics persist in the manifest so resume
-        # keeps them across processes.
-        im = runner.metrics["postings"]
-        N, total_len = int(im["N"]), int(im["total_len"])
+        # N/total_len were recorded by the docs stage; metrics persist in
+        # the manifest so resume keeps them across processes.
+        N, total_len = _docs_totals(runner)
         avgdl = float(total_len) / N if N else 0.0
         stats = {"N": N, "avgdl": avgdl, "total_len": total_len,
                  "k1": cfg.bm25.k1, "b": cfg.bm25.b,
@@ -849,52 +877,13 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     runner.run("stats", stage_stats, output=paths.stats)
 
-    def stage_docs() -> dict:
-        # reference parity: docs = rows with ≥ 1 kept token
-        # (src/ForwardIndex.cpp:152). Joins the content-pruned ids scan
-        # with the doclen table the postings tokenize emitted —
-        # metadata-only rows on both sides, no content bytes move, and the
-        # zero-token filter IS the inner join (such docs have no doclen
-        # row). Written doc-id-sorted with the doc store beside it:
-        # serving hydration takes its hits from the store's mapped files.
-        docs = (
-            spark.read.parquet(ids_path)
-            .select("doc_id", "uid", "repo", "path", "commit", "lang",
-                    "content_sha256")
-            .join(spark.read.parquet(doclen_path), "doc_id")
-            .select("doc_id", "uid", "repo", "path", "commit", "lang",
-                    "doc_len", "content_sha256")
-        )
-        write_docs_sorted(docs, paths.docs)
-        return {"rows": _parquet_rows(paths.docs)}
-
-    # docs rewrite ∥ lexicon: docs depends only on ids + doclen, so its
-    # tasks fill the lexicon stage's scheduling gaps instead of occupying
-    # the serial critical path.
-    import threading
-    _docs_err: list[BaseException] = []
-
-    def _docs_job() -> None:
-        try:
-            runner.run("docs", stage_docs, output=paths.docs)
-        except BaseException as e:  # propagate into the build thread
-            _docs_err.append(e)
-
-    docs_thread = threading.Thread(target=_docs_job, name="docs-stage")
-    docs_thread.start()
-
     def stage_lexicon() -> dict:
         # the written postings serve the aggregate's 4 small columns
         # column-pruned — blobs are never read
         write_lexicon(spark.read.parquet(paths.postings), paths.lexicon)
         return {"rows": _parquet_rows(paths.lexicon)}
 
-    try:
-        runner.run("lexicon", stage_lexicon, output=paths.lexicon)
-    finally:
-        docs_thread.join()
-    if _docs_err:
-        raise _docs_err[0]
+    runner.run("lexicon", stage_lexicon, output=paths.lexicon)
 
     def stage_suggest() -> dict:
         from nextsearch_api_spark.operators.autocomplete import build_suggest
@@ -906,11 +895,17 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
 
     manifest.data["completed_at"] = time.time()
     manifest.save()
-    # every serving component is written: the scratch tables go (ids holds
-    # a copy of the corpus, most of a built root's bytes)
-    for scratch in (ids_path, doclen_path):
-        shutil.rmtree(scratch, ignore_errors=True)
+    # every serving component is written: the scratch table goes (ids
+    # holds a copy of the corpus, most of a built root's bytes)
+    shutil.rmtree(ids_path, ignore_errors=True)
     return runner.metrics
+
+
+def _docs_totals(runner: StageRunner) -> tuple[int, int]:
+    """(N, total_len) the docs stage recorded, in this run or a resumed
+    one."""
+    docs = runner.metrics["docs"]
+    return int(docs["rows"]), int(docs["total_len"])
 
 
 def _corpus_fingerprint(corpus: DataFrame) -> str:

@@ -13,14 +13,16 @@ fragmentation). This operator consolidates them:
      chunker); union with the untouched chunks and write postings +
      lexicon as a new generation. The postings writer (operators/build.py:
      write_postings_sorted) computes every written chunk's max_impact from
-     its blob with the k1/b and avgdl stored in stats.json,
+     its blob with the k1/b and avgdl stored in stats.json and the doc
+     lengths of the live docs' doc store (functions/docstore.py),
   3. publish both with one atomic pointer flip.
 
 The decode to token rows and the re-chunk are proportional to the
 fragmented fraction, not the index size — the hot terms that dominate
 postings bytes are usually NOT fragmented (they fill whole chunks in every
 partition), so compaction re-chunks the long tail. Computing max_impact
-decodes the tf and doc_len streams of every chunk row written.
+decodes the doc-id and tf streams of every chunk row written and gathers
+their doc lengths from the doc store.
 
 The delta merge of streamed docs (streaming/ingest.py:compact_deltas) runs
 the same ``merge_postings``, with superseded doc ids to drop and delta
@@ -69,18 +71,20 @@ def chunks_holding(chunks: DataFrame, doc_ids: np.ndarray) -> DataFrame:
 
 def merge_postings(spark: SparkSession, paths: IndexPaths, gen: int,
                    stats: dict, affected: DataFrame, cfg: BuildConfig,
-                   superseded: "DataFrame | None" = None,
+                   docs_path: str, superseded: "DataFrame | None" = None,
                    delta: "DataFrame | None" = None) -> "tuple[str, str]":
     """The merge both compactions run, from the generation ``paths`` names
     into generation ``gen`` → (postings dir, lexicon dir), not yet live.
 
     1. The chunks of the ``affected`` terms (a one-column ``term`` frame)
-       are decoded to token rows; the ``superseded`` doc ids are dropped
-       and the ``delta`` token rows added.
+       are decoded to (doc_id, term, tf) token rows; the ``superseded`` doc
+       ids are dropped and the ``delta`` token rows added.
     2. build_posting_chunks re-chunks them, and every other term's chunk
        rows are copied through with their blobs unchanged.
     3. write_postings_sorted writes the union at ``stats``' avgdl, k1 and
-       b, and the lexicon is aggregated from the written postings."""
+       b, with the doc lengths of the docs component at ``docs_path`` (the
+       new generation's docs, which hold every merged posting's doc), and
+       the lexicon is aggregated from the written postings."""
     postings = spark.read.parquet(paths.postings)
     untouched = (postings.select(*CHUNKS_SCHEMA.fieldNames())
                  .join(affected, "term", "left_anti"))
@@ -100,7 +104,8 @@ def merge_postings(spark: SparkSession, paths: IndexPaths, gen: int,
     post_new = gen_path(paths.root, "postings", gen)
     try:
         write_postings_sorted(merged, post_new, stats["avgdl"],
-                              BM25Params(k1=stats["k1"], b=stats["b"]))
+                              BM25Params(k1=stats["k1"], b=stats["b"]),
+                              docs_path)
     finally:
         merged.unpersist()
     lex_new = gen_path(paths.root, "lexicon", gen)
@@ -128,7 +133,8 @@ def compact_postings(spark: SparkSession, index_root: str,
 
     gen = paths.gen + 1
     post_new, lex_new = merge_postings(spark, paths, gen, stats,
-                                       F.broadcast(frag_terms), cfg)
+                                       F.broadcast(frag_terms), cfg,
+                                       paths.docs)
     # ONE atomic pointer flip publishes postings + lexicon together — a
     # crash can never leave them from different generations (ADVICE r1)
     flip_generation(index_root, {

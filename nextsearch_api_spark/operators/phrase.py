@@ -95,8 +95,8 @@ def term_doc_ids(reader, terms: "list[str]") -> DataFrame:
     index: the pushed ``term isin`` predicate row-group-prunes the postings
     scan (chunks are (term, doc_lo)-sorted), and the mapInArrow decode
     reads ONLY each chunk's doc-id gap stream
-    (functions/codec.py:decode_doc_ids) — the tf/doc_len streams and the
-    impact math are skipped."""
+    (functions/codec.py:decode_doc_ids) — the tf stream and the impact
+    math are skipped."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     out_schema = StructType([

@@ -103,6 +103,7 @@ class IndexReader:
         self._dfs: dict[str, DataFrame] = {}
         # footer indexes for driver-side keyed reads, by table path
         self._indexes: dict[str, "RowGroupIndex"] = {}  # noqa: F821
+        self._store: "DocStore | None" = None
 
     @property
     def N(self) -> int:
@@ -123,6 +124,13 @@ class IndexReader:
 
     def docs(self) -> DataFrame:
         return self._table(self.paths.docs)
+
+    def store(self) -> DocStore:
+        """The generation's doc store (functions/docstore.py), mapped on
+        first use: the driver's doc lengths and hydration read it."""
+        if self._store is None:
+            self._store = DocStore(self.paths.docs)
+        return self._store
 
     def _by_term(self, path: str) -> "RowGroupIndex":  # noqa: F821
         """Footer index over a term-sorted table (postings, lexicon), opened
@@ -274,8 +282,8 @@ def _driver_small_search(reader: IndexReader, present: "list[str]",
     the helper each range group of the distributed plan and the serving
     tier run, so all return identical rows."""
     t = reader._by_term(reader.paths.postings).read(
-        list(present), ["doc_lo", "count", "tf_off", "dl_off", "blob"])
-    return rank_chunk_rows(t, queries, reader.avgdl, params)
+        list(present), ["doc_lo", "count", "tf_off", "blob"])
+    return rank_chunk_rows(t, queries, reader.avgdl, params, reader.store())
 
 
 def _doc_range_cuts(reader: IndexReader, present: "list[str]",
@@ -347,13 +355,17 @@ def _doc_range_cuts(reader: IndexReader, present: "list[str]",
 
 
 def _range_rank_udf(cuts: "list[int]", queries: "list[tuple]",
-                    avgdl: float, params: BM25Params):
+                    avgdl: float, params: BM25Params, docs_path: str):
     """groupBy(doc_range).applyInArrow body: one range's chunk rows → for
     each query, its ≤k best docs of the range (cnt null) plus one marker
     row (doc_id null) whose ``cnt`` is the query's matched docs in the
-    range. The queries' weights and k ride in this closure."""
+    range. The queries' weights and k ride in this closure; doc lengths
+    come from the doc store at ``docs_path`` (the index's local docs
+    component), mapped once per task on its first group."""
     schema = pa.schema([("qid", pa.int64()), ("doc_id", pa.int64()),
                         ("score", pa.float64()), ("cnt", pa.int64())])
+
+    stores: list[DocStore] = []
 
     # unannotated: applyInArrow infers the UDF kind from complete type
     # hints only, and takes a bare (key, table) function as table → table
@@ -361,9 +373,11 @@ def _range_rank_udf(cuts: "list[int]", queries: "list[tuple]",
         r = key[0].as_py()
         lo = cuts[r - 1] if r > 0 else None
         hi = cuts[r] if r < len(cuts) else None
+        if not stores:
+            stores.append(DocStore(docs_path))
         cols: dict[str, list] = {name: [] for name in schema.names}
         for qid, _k, found, ids, scores in rank_chunk_rows(
-                chunks, queries, avgdl, params, lo, hi):
+                chunks, queries, avgdl, params, stores[0], lo, hi):
             n = len(ids)
             cols["qid"] += [qid] * (n + 1)
             cols["doc_id"] += ids.tolist() + [None]
@@ -449,9 +463,10 @@ def _range_stage(reader: IndexReader, df_map: TermDfs, ranked: "list[tuple]",
         chunks.select(F.explode(F.sequence(range_of("doc_lo"),
                                            range_of("doc_hi")))
                       .alias("doc_range"),
-                      "term", "doc_lo", "count", "tf_off", "dl_off", "blob")
+                      "term", "doc_lo", "count", "tf_off", "blob")
         .groupBy("doc_range")
-        .applyInArrow(_range_rank_udf(cuts, ranked, reader.avgdl, params),
+        .applyInArrow(_range_rank_udf(cuts, ranked, reader.avgdl, params,
+                                      reader.paths.docs),
                       "qid long, doc_id long, score double, cnt long")
     )
     return stage, found_overrides
@@ -591,7 +606,7 @@ def _hydrate_topk(reader: IndexReader, table: pa.Table) -> DataFrame:
     hydrates with — and join as five string columns of the Arrow table, so
     the answer stays a job-free LocalRelation. Left-join semantics: a hit
     without a docs row keeps null metadata."""
-    meta = DocStore(reader.paths.docs).hits(table.column("doc_id").to_numpy())
+    meta = reader.store().hits(table.column("doc_id").to_numpy())
     for f in HIT_FIELDS:
         table = table.append_column(f, pa.array(meta[f], type=pa.string()))
     return reader.spark.createDataFrame(table)

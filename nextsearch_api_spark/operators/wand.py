@@ -97,8 +97,9 @@ class WandEngine:
         # blob reads go through the postings footer index: a term fetch reads
         # only the row groups whose term range holds it (the build writes
         # postings term-sorted in bounded row groups — the offset-seek
-        # analog). Hydration takes hits from the docs component's
-        # memory-mapped doc store, mapped here and read without a lock.
+        # analog). Hydration and doc lengths come from the docs
+        # component's memory-mapped doc store, mapped here and read
+        # without a lock.
         self._postings = RowGroupIndex(self.paths.postings, "term")
         self._store = DocStore(self.paths.docs)
 
@@ -142,7 +143,7 @@ class WandEngine:
     # ------------------------------------------------------------- scoring --
 
     def _load_term_chunks(self, terms: list[str]) -> "list[pa.Table]":
-        """Chunk rows (term, doc_lo, count, tf_off, dl_off, blob) of
+        """Chunk rows (term, doc_lo, count, tf_off, blob) of
         ``terms``, one table per term that has any: ONE footer-indexed read
         for the uncached terms (only the row groups whose term range holds
         one of them), merged with the bounded LRU of previously fetched
@@ -158,7 +159,7 @@ class WandEngine:
                     missing.append(term)
         if missing:
             t = self._postings.read(
-                missing, ["doc_lo", "count", "tf_off", "dl_off", "blob"])
+                missing, ["doc_lo", "count", "tf_off", "blob"])
             rows: dict[str, list[int]] = {}
             for i, term in enumerate(t.column("term").to_pylist()):
                 rows.setdefault(term, []).append(i)
@@ -210,7 +211,7 @@ class WandEngine:
                            for (t, w), idf in zip(qterms, idfs)]
             ranked = rank_chunk_rows(
                 pa.concat_tables(parts), [(0, k, query_terms)],
-                self.avgdl, self.params) if parts else []
+                self.avgdl, self.params, self._store) if parts else []
             if ranked:
                 _, _, found, ids, scores = ranked[0]
         return {

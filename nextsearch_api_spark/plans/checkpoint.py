@@ -76,19 +76,13 @@ class BuildManifest:
 
 
 class StageRunner:
-    """Runs named stages, skipping completed ones on resume.
-
-    Thread-compatible: independent stages may run concurrently from
-    separate Python threads (build_index overlaps the docs rewrite with the
-    postings build); manifest mutation + save are serialized by a lock so a
-    record() in one thread can never corrupt the json dump in another."""
+    """Runs named stages one after another, skipping completed ones on
+    resume."""
 
     def __init__(self, manifest: BuildManifest, base_fingerprint: Any):
-        import threading
         self.manifest = manifest
         self.base = base_fingerprint
         self.metrics: dict[str, dict] = {}
-        self._lock = threading.Lock()
 
     def done(self, name: str, output: "str | Sequence[str] | None" = None,
              extra_fp: Any = None) -> bool:
@@ -107,9 +101,8 @@ class StageRunner:
         optional metrics dict (e.g. {'rows': n}). Returns True if it ran."""
         fp = _fingerprint([self.base, extra_fp])
         if self.manifest.stage_done(name, fp, output):
-            with self._lock:
-                self.metrics[name] = {**self.manifest.data["stages"][name],
-                                      "skipped": True}
+            self.metrics[name] = {**self.manifest.data["stages"][name],
+                                  "skipped": True}
             return False
         t0 = time.time()
         info = fn() or {}
@@ -125,7 +118,6 @@ class StageRunner:
         }
         if rows is not None and dt > 0:
             entry["rows_per_sec"] = round(rows / dt, 1)
-        with self._lock:
-            self.manifest.record(name, **entry)
-            self.metrics[name] = entry
+        self.manifest.record(name, **entry)
+        self.metrics[name] = entry
         return True

@@ -371,14 +371,16 @@ def compact_deltas(spark: SparkSession, index_root: str,
        term's chunk rows are copied through with their blobs unchanged.
     4. N, total_len and avgdl come from the merged docs. The postings
        writer (operators/build.py:write_postings_sorted) computes every
-       written chunk's max_impact at that avgdl and the stored k1/b.
+       written chunk's max_impact at that avgdl and the stored k1/b, with
+       each doc's length from the merged docs' doc store.
        Postings, lexicon, docs, stats and suggest are written as new
        ``_g<N>`` generation dirs, and ONE atomic CURRENT.json flip
        publishes them together.
 
     The decode to token rows and the re-chunk grow with the affected
-    terms' chunks, not with the index; computing max_impact decodes the tf
-    and doc_len streams of every chunk row written.
+    terms' chunks, not with the index; computing max_impact decodes the
+    doc-id and tf streams of every chunk row written and gathers their
+    doc lengths from the doc store.
     Returns {N, avgdl, gen, affected_terms}."""
     import json
 
@@ -457,8 +459,9 @@ def compact_deltas(spark: SparkSession, index_root: str,
             .select("term"))
     affected = affected.distinct().cache()
     n_affected = affected.count()
-    post_new, lex_new = merge_postings(spark, paths, gen, stats, affected,
-                                       cfg, superseded, fw_delta)
+    post_new, lex_new = merge_postings(
+        spark, paths, gen, stats, affected, cfg, docs_new, superseded,
+        fw_delta.select("doc_id", "term", "tf"))
 
     stats_new = gen_path(index_root, "stats", gen)
     with open(stats_new, "w") as f:

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import BM25Params, IndexPaths
 from nextsearch_api_spark.functions.codec import decode_chunks_concat
+from nextsearch_api_spark.functions.docstore import DocStore
 from nextsearch_api_spark.operators.query import IndexReader, QuerySpec, batch_search
 
 # Reference query-set classes (FIXTURES.md §2)
@@ -42,7 +43,9 @@ def test_index_invariants(spark, tiny_index):
     lex_map = {r["term"]: r["df"] for r in lex.collect()}
     assert lex_map == oracle.df
 
-    # postings decode: sorted by doc_id, within-term chunks disjoint; tf parity
+    # postings decode: sorted by doc_id, within-term chunks disjoint; tf
+    # parity, and the doc store's length of every posting's doc
+    store = DocStore(paths.docs)
     rows = postings.collect()
     by_term: dict[str, list] = {}
     for r in rows:
@@ -52,9 +55,9 @@ def test_index_invariants(spark, tiny_index):
         all_ids, all_tfs, all_dls = [], [], []
         prev_hi = -1
         for c in chunks:
-            ids, tfs, dls = decode_chunks_concat(
-                [c["blob"]], [c["tf_off"]], [c["dl_off"]], [c["count"]],
-                [c["doc_lo"]])
+            ids, tfs = decode_chunks_concat(
+                [c["blob"]], [c["tf_off"]], [c["count"]], [c["doc_lo"]])
+            dls = store.doc_lens(ids)
             assert ids[0] == c["doc_lo"] and ids[-1] == c["doc_hi"]
             assert len(ids) == c["count"]
             assert c["doc_lo"] > prev_hi  # disjoint ordered chunks

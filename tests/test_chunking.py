@@ -23,11 +23,11 @@ WORDS = ["ab", "cd", "the", "x", "hotterm", "zz9", "load", "a1"]
 
 
 def reference_chunks(postings, chunk_size):
-    """(term, part, doc_id, tf, doc_len) postings → sorted chunk tuples
-    (term, doc_lo, doc_hi, count, ((doc_id, tf, doc_len), ...))."""
+    """(term, part, doc_id, tf) postings → sorted chunk tuples
+    (term, doc_lo, doc_hi, count, ((doc_id, tf), ...))."""
     groups: dict = {}
-    for term, part, doc, tf, dl in postings:
-        groups.setdefault((term, part), []).append((doc, tf, dl))
+    for term, part, doc, tf in postings:
+        groups.setdefault((term, part), []).append((doc, tf))
     out = []
     for (term, _), rows in groups.items():
         rows.sort()
@@ -42,10 +42,10 @@ def chunk_tuples(table: pa.Table):
     if not table.num_rows:
         return []
     counts = table.column("count").to_numpy()
-    ids, tfs, dls = decode_chunks_concat(
+    ids, tfs = decode_chunks_concat(
         table.column("blob").combine_chunks(), table.column("tf_off"),
-        table.column("dl_off"), counts, table.column("doc_lo"))
-    posts = list(zip(ids.tolist(), tfs.tolist(), dls.tolist()))
+        counts, table.column("doc_lo"))
+    posts = list(zip(ids.tolist(), tfs.tolist()))
     first = np.cumsum(counts) - counts
     return sorted(
         (term, lo, hi, n, tuple(posts[f:f + n]))
@@ -63,10 +63,9 @@ def segment_postings(docs):
     out = []
     for doc, content, seg in docs:
         toks = kept_tokens_py(content)
-        out += [(t, seg, doc, tf, len(toks))
-                for t, tf in Counter(toks).items()]
+        out += [(t, seg, doc, tf) for t, tf in Counter(toks).items()]
         if toks:
-            out.append(("", seg, doc, len(toks), len(toks)))
+            out.append(("", seg, doc, len(toks)))
     return out
 
 
@@ -127,9 +126,8 @@ def token_rows(draw):
     rows = []
     for blk, off in docs:
         doc = blk * DOC_BLOCK + off
-        dl = draw(st.integers(1, 5000))
         for term in sorted(draw(st.sets(st.sampled_from(WORDS), min_size=1))):
-            rows.append((doc, term, draw(st.integers(1, 300)), dl))
+            rows.append((doc, term, draw(st.integers(1, 300))))
     rows = draw(st.permutations(rows))
     sizes = draw(st.lists(st.integers(1, 10), min_size=1, max_size=6))
     return rows, sizes
@@ -143,14 +141,12 @@ def test_rechunker_matches_reference(part, chunk_size):
         "doc_id": pa.array([r[0] for r in rows], pa.int64()),
         "term": pa.array([r[1] for r in rows], pa.string()),
         "tf": pa.array([r[2] for r in rows], pa.int32()),
-        "doc_len": pa.array([r[3] for r in rows], pa.int32()),
         "_blk": pa.array([r[0] // DOC_BLOCK for r in rows], pa.int64()),
     }, sizes)
     got = chunk_tuples(pa.Table.from_batches(
         list(_rechunk(iter(batches), chunk_size))))
     want = reference_chunks(
-        [(t, d // DOC_BLOCK, d, tf, dl) for d, t, tf, dl in rows],
-        chunk_size)
+        [(t, d // DOC_BLOCK, d, tf) for d, t, tf in rows], chunk_size)
     assert got == want
 
 
@@ -168,13 +164,11 @@ def test_spark_builders_match_reference(spark):
     got = chunk_tuples(build_posting_chunks_segment(seg_df, cfg).toArrow())
     assert got == reference_chunks(segment_postings(docs), 3)
 
-    rows = [(blk * DOC_BLOCK + off, term, 1 + (off * 7 + len(term)) % 200,
-             10 + off)
+    rows = [(blk * DOC_BLOCK + off, term, 1 + (off * 7 + len(term)) % 200)
             for blk in range(3) for off in range(5)
             for term in WORDS[off % 3: off % 3 + 4]]
-    tok_df = spark.createDataFrame(
-        rows, "doc_id long, term string, tf int, doc_len int")
+    tok_df = spark.createDataFrame(rows, "doc_id long, term string, tf int")
     got = chunk_tuples(build_posting_chunks(tok_df, cfg).toArrow())
     want = reference_chunks(
-        [(t, d // DOC_BLOCK, d, tf, dl) for d, t, tf, dl in rows], 3)
+        [(t, d // DOC_BLOCK, d, tf) for d, t, tf in rows], 3)
     assert got == want

@@ -1,5 +1,5 @@
-"""Posting codec, format v5: the vectorized encoder and decoders against an
-independent pure-Python reference decoder of the blob layout
+"""Posting codec, format v8: the vectorized encoder and decoders against an
+independent pure-Python reference decoder of the two-stream blob layout
 (functions/codec.py docstring)."""
 
 import json
@@ -29,63 +29,55 @@ def ref_varbyte(buf: bytes) -> list[int]:
     return vals
 
 
-def ref_decode_chunk(blob: bytes, tf_off: int, dl_off: int, count: int,
-                     doc_lo: int) -> tuple[list[int], list[int], list[int]]:
-    """One chunk, straight from the layout: varbyte gaps from doc_lo,
-    varbyte tf, then FOR doc_len (u32 base, u8 width, bit loop)."""
+def ref_decode_chunk(blob: bytes, tf_off: int, count: int,
+                     doc_lo: int) -> tuple[list[int], list[int]]:
+    """One chunk, straight from the layout: varbyte gaps from doc_lo, then
+    varbyte tf to the end of the blob."""
     gaps = ref_varbyte(blob[:tf_off])
-    tfs = ref_varbyte(blob[tf_off:dl_off])
-    for_bytes = blob[dl_off:]
-    base = int.from_bytes(for_bytes[:4], "little")
-    width = for_bytes[4]
-    packed = for_bytes[5:]
-    assert len(packed) == (count * width + 7) // 8
-    dls = []
-    for i in range(count):
-        v = 0
-        for j in range(width):
-            bit = i * width + j
-            v |= ((packed[bit // 8] >> (bit % 8)) & 1) << j
-        dls.append(base + v)
+    tfs = ref_varbyte(blob[tf_off:])
     ids, cur = [], doc_lo
     for g in gaps:
         cur += g
         ids.append(cur)
     assert len(ids) == len(tfs) == count
-    return ids, tfs, dls
+    return ids, tfs
 
 
 def encode(chunks):
-    """[(ids, tfs, dls)] → (blobs, tf_off, dl_off, counts, doc_los)."""
+    """[(ids, tfs)] → (blobs, tf_off, counts, doc_los)."""
     counts = np.array([len(c[0]) for c in chunks], dtype=np.int64)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     cat = [np.concatenate([np.asarray(c[i], dtype=np.int64) for c in chunks])
-           for i in range(3)]
-    blobs, tfo, dlo = encode_chunks(*cat, starts)
-    return blobs, tfo, dlo, counts, cat[0][starts]
+           for i in range(2)]
+    blobs, tfo = encode_chunks(*cat, starts)
+    return blobs, tfo, counts, cat[0][starts]
 
 
 def check_against_reference(chunks):
-    blobs, tfo, dlo, counts, doc_los = encode(chunks)
+    blobs, tfo, counts, doc_los = encode(chunks)
     assert len(blobs) == len(chunks)
-    for i, (ids, tfs, dls) in enumerate(chunks):
-        got = ref_decode_chunk(blobs[i].as_py(), int(tfo[i]), int(dlo[i]),
-                               int(counts[i]), int(doc_los[i]))
-        assert got == (list(ids), list(tfs), list(dls))
+    for i, (ids, tfs) in enumerate(chunks):
+        got = ref_decode_chunk(blobs[i].as_py(), int(tfo[i]), int(counts[i]),
+                               int(doc_los[i]))
+        assert got == (list(ids), list(tfs))
         assert blobs[i].as_py()[0] == 0  # first gap is taken from doc_lo
-    g_ids, g_tfs, g_dls = decode_chunks_concat(blobs, tfo, dlo, counts,
-                                               doc_los)
-    assert g_ids.dtype == g_tfs.dtype == g_dls.dtype == np.int64
+    g_ids, g_tfs = decode_chunks_concat(blobs, tfo, counts, doc_los)
+    assert g_ids.dtype == g_tfs.dtype == np.int64
     assert g_ids.tolist() == [d for c in chunks for d in c[0]]
     assert g_tfs.tolist() == [t for c in chunks for t in c[1]]
-    assert g_dls.tolist() == [d for c in chunks for d in c[2]]
     assert decode_doc_ids(blobs, tfo, counts, doc_los).tolist() \
         == g_ids.tolist()
-    # a plain list of bytes decodes the same as the Arrow array
-    l_ids, _, l_dls = decode_chunks_concat(blobs.to_pylist(), tfo, dlo,
-                                           counts, doc_los)
+    # a plain list of bytes decodes the same as the Arrow array, and so
+    # does a sliced Arrow array (a non-zero array offset)
+    l_ids, l_tfs = decode_chunks_concat(blobs.to_pylist(), tfo, counts,
+                                        doc_los)
     assert l_ids.tolist() == g_ids.tolist()
-    assert l_dls.tolist() == g_dls.tolist()
+    assert l_tfs.tolist() == g_tfs.tolist()
+    if len(chunks) > 1:
+        s_ids, s_tfs = decode_chunks_concat(blobs.slice(1), tfo[1:],
+                                            counts[1:], doc_los[1:])
+        assert s_ids.tolist() == [d for c in chunks[1:] for d in c[0]]
+        assert s_tfs.tolist() == [t for c in chunks[1:] for t in c[1]]
     return blobs
 
 
@@ -99,12 +91,8 @@ def chunk(draw):
                          max_size=n - 1))
     ids = (doc_lo + np.concatenate(([0], np.cumsum(gaps, dtype=np.int64)))
            ).tolist()
-    tfs = draw(st.lists(st.integers(1, 2**16), min_size=n, max_size=n))
-    width = draw(st.sampled_from([0, 1, 3, 9, 17, 31]))
-    base = draw(st.integers(0, 2**31 - 1 - (2**width - 1)))
-    dls = draw(st.lists(st.integers(base, base + 2**width - 1),
-                        min_size=n, max_size=n))
-    return ids, tfs, dls
+    tfs = draw(st.lists(st.integers(1, 2**31 - 1), min_size=n, max_size=n))
+    return ids, tfs
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**40), max_size=300))
@@ -137,49 +125,46 @@ def test_decode_chunks_concat_matches_per_chunk(chunks):
 
 
 def test_chunk_edge_layouts():
-    """Single-posting chunks at doc_lo 0 and near 2^62, a width-0 chunk
-    (all doc_len equal: header only) and a width-31 chunk (doc_len
-    2^31−1), all in one decode call."""
+    """Single-posting chunks at doc_lo 0 and near 2^62, a chunk of
+    one-byte gaps and tfs and a chunk of multi-byte values, all in one
+    decode call: each blob is its gap bytes then its tf bytes, nothing
+    after them."""
     chunks = [
-        ([0], [1], [7]),
-        ([2**62 + 5], [3], [2**31 - 1]),
-        ([10, 11, 12, 40], [1, 2, 3, 4], [300, 300, 300, 300]),
-        ([2**62 - 2, 2**62 - 1, 2**62], [9, 8, 7], [1, 2**31 - 1, 5]),
+        ([0], [1]),
+        ([2**62 + 5], [2**31 - 1]),
+        ([10, 11, 12, 40], [1, 2, 3, 4]),
+        ([2**62 - 2**40, 2**62 - 1, 2**62], [9, 300, 70000]),
     ]
     blobs = check_against_reference(chunks)
-    _, tfo, dlo, _, _ = encode(chunks)
-    widths = [blobs[i].as_py()[int(dlo[i]) + 4] for i in range(len(chunks))]
-    assert widths == [0, 0, 0, 31]
-    assert len(blobs[2].as_py()) == int(dlo[2]) + 5  # width 0: no payload
-    z = decode_chunks_concat([], [], [], [], [])
-    assert all(len(a) == 0 for a in z)
+    _, tfo, _, _ = encode(chunks)
+    assert tfo.tolist() == [1, 1, 4, 1 + 6 + 1]
+    assert [len(b) for b in blobs.to_pylist()] == [2, 6, 8, 8 + 1 + 2 + 3]
+    z = decode_chunks_concat([], [], [], [])
+    assert len(z) == 2 and all(len(a) == 0 for a in z)
     assert len(decode_doc_ids([], [], [], [])) == 0
 
 
 def test_chunk_compression_beats_raw():
-    # dense doc ids → gaps ~1 → ~2 bytes/posting plus the packed doc_len
-    # spread, vs 8 raw (the reference stores 2×u32)
-    rng = np.random.default_rng(3)
+    # dense doc ids → gaps ~1 → one byte per gap and one per small tf, vs
+    # 8 raw (the reference stores 2×u32); no doc_len bytes at all
     ids = np.arange(10_000, 20_000, 2, dtype=np.int64)
     tfs = np.ones(len(ids), dtype=np.int64)
-    dls = rng.integers(300, 800, len(ids))
-    blobs, tfo, dlo = encode_chunks(ids, tfs, dls, [0])
+    blobs, tfo = encode_chunks(ids, tfs, [0])
     blob = blobs[0].as_py()
-    assert len(blob) < len(ids) * 8
-    # 500 distinct lengths need 9 bits each, not varbyte's 2 bytes
-    assert len(blob) - int(dlo[0]) == 5 + (len(ids) * 9 + 7) // 8
+    assert int(tfo[0]) == len(ids)
+    assert len(blob) == 2 * len(ids)
 
 
 def test_check_index_format_refuses_v4(tmp_path):
     from nextsearch_api_spark.operators.build import FORMAT_VERSION
     from nextsearch_api_spark.operators.wand import check_index_format
 
-    assert FORMAT_VERSION == 7
+    assert FORMAT_VERSION == 8
     path = tmp_path / "stats.json"
     path.write_text(json.dumps({"format": 4, "N": 1, "avgdl": 1.0}))
     with pytest.raises(ValueError, match="format 4.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))
-    check_index_format({"format": 7}, str(path))
+    check_index_format({"format": 8}, str(path))
 
 
 def test_check_index_format_refuses_v5(tmp_path):
@@ -204,4 +189,16 @@ def test_check_index_format_refuses_v6(tmp_path):
     path = tmp_path / "stats.json"
     path.write_text(json.dumps({"format": 6, "N": 1, "avgdl": 1.0}))
     with pytest.raises(ValueError, match="format 6.*rebuild the index"):
+        check_index_format(json.loads(path.read_text()), str(path))
+
+
+def test_check_index_format_refuses_v7(tmp_path):
+    """A v7 index carries a doc_len stream in every blob and a ``dl_off``
+    column, and its doc store has no doc-length files: a v8 engine refuses
+    it rather than decode its blobs as two streams."""
+    from nextsearch_api_spark.operators.wand import check_index_format
+
+    path = tmp_path / "stats.json"
+    path.write_text(json.dumps({"format": 7, "N": 1, "avgdl": 1.0}))
+    with pytest.raises(ValueError, match="format 7.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))

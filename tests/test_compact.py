@@ -421,8 +421,9 @@ def test_legacy_forward_pointer_collected_one_flip_later(tmp_path):
 
 def _assert_attained_block_max(root):
     """Every chunk row's max_impact is the float32 max of bm25_impact over
-    its decoded postings at the generation's stats avgdl, k1 and b, and
-    stats total_len is the docs' summed doc_len."""
+    its decoded postings at the generation's stats avgdl, k1 and b, with
+    the doc lengths of the generation's docs Parquet, and stats total_len
+    is the docs' summed doc_len."""
     import json
 
     import numpy as np
@@ -437,9 +438,13 @@ def _assert_attained_block_max(root):
         st = json.load(f)
     t = ds.dataset(paths.postings).to_table()
     counts = t.column("count").to_numpy()
-    _, tfs, dls = decode_chunks_concat(
-        t.column("blob").combine_chunks(), t.column("tf_off"),
-        t.column("dl_off"), counts, t.column("doc_lo"))
+    ids, tfs = decode_chunks_concat(
+        t.column("blob").combine_chunks(), t.column("tf_off"), counts,
+        t.column("doc_lo"))
+    docs = ds.dataset(paths.docs).to_table(columns=["doc_id", "doc_len"])
+    len_of = dict(zip(docs.column("doc_id").to_pylist(),
+                      docs.column("doc_len").to_pylist()))
+    dls = np.array([len_of[d] for d in ids.tolist()])
     want = np.maximum.reduceat(
         bm25_impact(tfs, dls, st["k1"], st["b"], st["avgdl"]),
         np.cumsum(counts) - counts)

@@ -128,9 +128,11 @@ def test_built_doc_store_files_are_disjoint_and_ascending(tiny_index):
 def test_engine_hydration_matches_full_join(spark, tiny_index, tmp_path,
                                             monkeypatch):
     """Engine.search fills the same fields as a left join against the whole
-    docs table, for k in {1, 10, 100} — including a hit whose docs row is
-    missing from both halves (Parquet and doc store), which keeps only its
-    rank/score fields. Hydration opens no Parquet file."""
+    docs table, for k in {1, 10, 100}; a hit whose docs row is missing from
+    the store keeps only its rank/score fields, and hydration opens no
+    Parquet file. A posting whose doc is missing from both halves (Parquet
+    and doc store) has no doc length, so a search that scores it raises
+    rather than rank it."""
     import pyarrow.dataset as pds
 
     from nextsearch_api_spark.api import Engine
@@ -139,11 +141,35 @@ def test_engine_hydration_matches_full_join(spark, tiny_index, tmp_path,
     clone = str(tmp_path / "idx")
     shutil.copytree(root, clone)
     eng = Engine(clone)
+    docs_dir = IndexPaths(clone).docs
+    meta = _full_join(docs_dir)
     q = "hotterm buffer"
-    top = eng.search(q, 1)["results"][0]["doc_id"]
+    for k in (1, 10, 100):
+        out = eng.search(q, k)
+        res = out["results"]
+        assert len(res) == min(k, out["found"])
+        for r in res:
+            assert {f: r[f] for f in META} == meta[r["doc_id"]], r
+
+    def no_parquet(*a, **kw):
+        raise AssertionError("hydration opened a Parquet file")
+
+    absent = max(meta) + 1
+    results = eng.wand.search(q + " cache", 100)["results"]
+    results.append({"rank": len(results) + 1, "doc_id": absent, "score": 0.0})
+    for name in ("ParquetFile", "read_table", "read_metadata"):
+        monkeypatch.setattr(pq, name, no_parquet)
+    monkeypatch.setattr(pds, "dataset", no_parquet)
+    eng.wand.hydrate(results)
+    monkeypatch.undo()
+    assert results[-1] == {"rank": len(results), "doc_id": absent,
+                           "score": 0.0}
+    assert all({f: r[f] for f in META} == meta[r["doc_id"]]
+               for r in results[:-1])
+
     # drop the top hit's docs row: one Parquet file without it, and the
     # doc store rewritten from that file
-    docs_dir = IndexPaths(clone).docs
+    top = eng.search(q, 1)["results"][0]["doc_id"]
     t = ds.dataset(docs_dir).to_table()
     shutil.rmtree(docs_dir)
     os.makedirs(docs_dir)
@@ -151,31 +177,8 @@ def test_engine_hydration_matches_full_join(spark, tiny_index, tmp_path,
     pq.write_table(t.sort_by("doc_id"), os.path.join(docs_dir, "p.parquet"))
     write_doc_store(spark, docs_dir)
     eng.reload()
-    meta = _full_join(docs_dir)
-    assert top not in meta
-    for k in (1, 10, 100):
-        out = eng.search(q, k)
-        res = out["results"]
-        assert len(res) == min(k, out["found"])
-        for r in res:
-            if r["doc_id"] == top:
-                assert not set(META) & set(r), r
-            else:
-                assert {f: r[f] for f in META} == meta[r["doc_id"]], r
-        assert res[0]["doc_id"] == top
-
-    def no_parquet(*a, **kw):
-        raise AssertionError("hydration opened a Parquet file")
-
-    results = eng.wand.search(q + " cache", 100)["results"]
-    for name in ("ParquetFile", "read_table", "read_metadata"):
-        monkeypatch.setattr(pq, name, no_parquet)
-    monkeypatch.setattr(pds, "dataset", no_parquet)
-    eng.wand.hydrate(results)
-    monkeypatch.undo()
-    assert results and all(
-        {f: r[f] for f in META} == meta[r["doc_id"]]
-        for r in results if r["doc_id"] != top)
+    with pytest.raises(KeyError, match=f"e.g. {top}"):
+        eng.search(q + " cache", 10)
 
 
 def test_concurrent_hits_share_one_store(tiny_index):
@@ -287,3 +290,112 @@ def test_only_the_docstore_maps_arrow_files():
             if hit:
                 found.add(rel)
     assert found == {owner}, found
+
+
+# ------------------------------------------------------------ doc lengths --
+
+STREAM = 1 << 62
+
+# one docs component with a part of each shape, in doc-id order:
+# gapless (dense, span == rows), zero-token holes (dense with 0 entries),
+# dense and streamed ids in one part, and streamed ids only (row-aligned)
+LEN_PARTS = {
+    "gapless": [(d, 1 + d % 7) for d in range(1, 51)],
+    "holes": [(d, 3 + d % 11) for d in range(100, 200) if d % 3],
+    "straddle": [(300, 4), (301, 9), (STREAM + 5, 2), (STREAM + 10**12, 70)],
+    "streamed": [(STREAM + 2 * 10**12 + d * 7919, 1 + d) for d in range(40)],
+}
+
+
+@pytest.fixture(scope="module")
+def len_store(spark, tmp_path_factory):
+    import pyarrow as pa
+
+    docs = tmp_path_factory.mktemp("lens") / "docs"
+    docs.mkdir()
+    for i, rows in enumerate(LEN_PARTS.values()):
+        n = len(rows)
+        pq.write_table(pa.table({
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "repo": ["r"] * n, "path": [f"p{r[0]}" for r in rows],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "doc_len": pa.array([r[1] for r in rows], pa.int32()),
+        }), docs / f"part-{i:05d}.parquet")
+    write_doc_store(spark, str(docs))
+    return str(docs)
+
+
+def _len_file_rows(docs: str) -> dict:
+    import pyarrow as pa
+    from pyarrow import ipc
+
+    meta = os.path.join(docs, "_meta")
+    out = {}
+    for i, name in enumerate(LEN_PARTS):
+        with pa.memory_map(os.path.join(meta, f"part-{i:05d}.doclen")) as mm:
+            out[name] = ipc.open_file(mm).read_all().num_rows
+    return out
+
+
+def test_doc_len_files_take_the_part_shape(len_store):
+    """A part whose id span is at most twice its rows stores a dense array
+    over the span; any other part a row-aligned column."""
+    assert _len_file_rows(len_store) == {
+        "gapless": 50, "holes": 100, "straddle": 4, "streamed": 40}
+
+
+@pytest.mark.parametrize("shape", list(LEN_PARTS))
+def test_doc_lens_per_part_shape(len_store, shape):
+    """Every id of one part, in doc order and shuffled, gets its length."""
+    import numpy as np
+
+    store = DocStore(len_store)
+    ids = np.array([r[0] for r in LEN_PARTS[shape]], dtype=np.int64)
+    want = [r[1] for r in LEN_PARTS[shape]]
+    got = store.doc_lens(ids)
+    assert got.dtype == np.uint32 and got.tolist() == want
+    perm = np.random.default_rng(7).permutation(ids.size)
+    assert store.doc_lens(ids[perm]).tolist() == [want[i] for i in perm]
+    assert store.doc_lens(ids[:0]).tolist() == []
+
+
+ALL_LENS = dict(r for rows in LEN_PARTS.values() for r in rows)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.sampled_from(sorted(ALL_LENS)), max_size=60),
+       st.booleans())
+def test_doc_lens_across_parts(len_store, ids, ascending):
+    """Ids of any parts, repeated, ascending or in any order."""
+    ids = sorted(ids) if ascending else ids
+    assert DocStore(len_store).doc_lens(ids).tolist() \
+        == [ALL_LENS[d] for d in ids]
+
+
+@pytest.mark.parametrize("missing", [
+    0,                      # before the first part
+    102,                    # a zero-token hole of a dense part
+    51,                     # past a dense part's last id, before the next
+    302,                    # between the dense ids of a straddling part
+    STREAM + 6,             # between its streamed ids
+    STREAM + 2 * 10**12 + 1,  # inside a row-aligned part
+    STREAM + 3 * 10**12,    # past the last part
+])
+def test_doc_lens_raises_on_an_id_without_a_doc(len_store, missing):
+    store = DocStore(len_store)
+    with pytest.raises(KeyError, match=str(missing)):
+        store.doc_lens([1, missing, 300])
+
+
+@pytest.mark.parametrize("which", ["built", "compacted"])
+def test_doc_lens_equal_parquet_doc_len(tiny_index, compacted_index, which):
+    """On a built index (dense parts, zero-token holes among them) and
+    after compact_deltas (streamed ids above 2^62 in the last parts), the
+    store's length of every doc equals its Parquet ``doc_len``."""
+    root = tiny_index[0] if which == "built" else compacted_index[0]
+    t = ds.dataset(IndexPaths(root).docs).to_table(
+        columns=["doc_id", "doc_len"])
+    got = DocStore(IndexPaths(root).docs).doc_lens(t.column("doc_id"))
+    assert got.tolist() == t.column("doc_len").to_pylist()
+    assert any(d >= STREAM for d in t.column("doc_id").to_pylist()) \
+        == (which == "compacted")

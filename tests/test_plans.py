@@ -91,7 +91,7 @@ def test_batch_search_found_and_rank_are_scale_safe(spark, plan_env):
     assert "hashpartitioning(doc_range#" in first, first
     inputs = set(re.findall(r"(\w+)#\d+", first.split("Arguments")[0]))
     assert inputs <= {"doc_range", "term", "doc_lo", "count", "tf_off",
-                      "dl_off", "blob"}, inputs
+                      "blob"}, inputs
     assert {"doc_range", "blob"} <= inputs, inputs
     assert "impact" not in plan.split(first)[0] + first
     assert "hashpartitioning(qid#" not in plan

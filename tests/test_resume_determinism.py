@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import IndexPaths
 from nextsearch_api_spark.functions.codec import decode_chunks_concat
+from nextsearch_api_spark.functions.docstore import DocStore
 from nextsearch_api_spark.operators.build import build_index
 from nextsearch_api_spark.sources.corpus import generate_corpus, read_corpus, write_corpus
 
@@ -23,13 +24,15 @@ def corpus_path(spark, tmp_path_factory):
 
 
 def _decoded_index(spark, root) -> dict:
-    """Logical index content: term → [(doc_id, tf, dl)...] + stats."""
+    """Logical index content: term → [(doc_id, tf, dl)...] + stats, with
+    each posting's dl from the doc store."""
+    store = DocStore(IndexPaths(root).docs)
     postings = spark.read.parquet(IndexPaths(root).postings).collect()
     out: dict = {}
     for r in sorted(postings, key=lambda r: (r["term"], r["doc_lo"])):
-        ids, tfs, dls = decode_chunks_concat(
-            [r["blob"]], [r["tf_off"]], [r["dl_off"]], [r["count"]],
-            [r["doc_lo"]])
+        ids, tfs = decode_chunks_concat(
+            [r["blob"]], [r["tf_off"]], [r["count"]], [r["doc_lo"]])
+        dls = store.doc_lens(ids)
         out.setdefault(r["term"], []).extend(zip(ids.tolist(), tfs.tolist(), dls.tolist()))
     with open(IndexPaths(root).stats) as f:
         stats = json.load(f)
@@ -80,9 +83,9 @@ SERVING_ROOT = ["_manifest.json", "docs", "lexicon", "postings",
 
 def test_completed_build_keeps_serving_components_only(spark, corpus_path,
                                                        tmp_path):
-    """ids (a copy of every doc's content) and doclen are build scratch: a
-    completed root holds only what serving reads, and resuming it with the
-    same inputs runs nothing and re-creates no scratch."""
+    """ids (a copy of every doc's content) is build scratch: a completed
+    root holds only what serving reads, and resuming it with the same
+    inputs runs nothing and re-creates no scratch."""
     c = read_corpus(spark, corpus_path)
     root = str(tmp_path / "idx")
     build_index(spark, c, root)
@@ -97,8 +100,8 @@ def test_completed_build_keeps_serving_components_only(spark, corpus_path,
 
 def test_killed_build_resumes_from_scratch(spark, corpus_path, tmp_path,
                                            monkeypatch):
-    """A build killed in the lexicon stage keeps its scratch tables, and the
-    resume reads them instead of re-running ids or postings."""
+    """A build killed in the lexicon stage keeps its scratch table, and the
+    resume reads it instead of re-running ids, docs or postings."""
     from nextsearch_api_spark.operators import build
 
     def killed(*_a, **_kw):
@@ -109,7 +112,7 @@ def test_killed_build_resumes_from_scratch(spark, corpus_path, tmp_path,
     monkeypatch.setattr(build, "write_lexicon", killed)
     with pytest.raises(RuntimeError, match="killed"):
         build_index(spark, c, root)
-    assert {"ids", "doclen"} <= set(os.listdir(root))
+    assert "ids" in os.listdir(root)
     with open(IndexPaths(root).manifest) as f:
         assert "completed_at" not in json.load(f)
 
@@ -138,7 +141,7 @@ def test_hot_term_skew_split(spark, corpus_path, tmp_path):
     hot.sort(key=lambda r: r["doc_lo"])
     all_ids = decode_chunks_concat(
         *([r[c] for r in hot]
-          for c in ("blob", "tf_off", "dl_off", "count", "doc_lo")))[0]
+          for c in ("blob", "tf_off", "count", "doc_lo")))[0]
     assert np.all(np.diff(all_ids) > 0)
     # df from lexicon equals decoded length
     lex = spark.read.parquet(IndexPaths(root).lexicon)

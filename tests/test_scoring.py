@@ -168,3 +168,60 @@ def test_one_query_time_decode_and_impact_site():
             walk(ast.parse(path.read_text()), rel, "")
     expected = [("functions/scoring.py", "rank_chunk_rows")]
     assert sites == {name: expected for name in sites}, sites
+
+
+def test_doc_len_reaches_bm25_impact_only_from_the_doc_store():
+    """Walking the package source, every ``bm25_impact`` call takes its
+    doc-length argument from ``DocStore.doc_lens`` — a ``.doc_lens(...)``
+    call in the argument itself — and the calls are exactly the
+    query-time one (scoring.rank_chunk_rows) and the postings writer's
+    block max (build._block_max_impact), which both compactions reach
+    through write_postings_sorted with the docs of the generation they
+    write. ``doc_lens`` is defined once, on DocStore."""
+    import ast
+    import pathlib
+
+    import nextsearch_api_spark
+
+    pkg = pathlib.Path(nextsearch_api_spark.__file__).parent
+    impact_sites: list[tuple[str, str, bool]] = []
+    writer_calls: list[tuple[str, str, int]] = []
+    defs: list[tuple[str, str]] = []
+
+    def name_of(call):
+        f = call.func
+        return (f.id if isinstance(f, ast.Name)
+                else f.attr if isinstance(f, ast.Attribute) else None)
+
+    def walk(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+                if child.name == "doc_lens":
+                    defs.append((rel, scope))
+            if isinstance(child, ast.Call):
+                if name_of(child) == "bm25_impact":
+                    dl = (child.args[1] if len(child.args) > 1 else
+                          next(k.value for k in child.keywords
+                               if k.arg == "dl"))
+                    from_store = (isinstance(dl, ast.Call)
+                                  and name_of(dl) == "doc_lens")
+                    impact_sites.append((rel, scope, from_store))
+                if name_of(child) == "write_postings_sorted":
+                    writer_calls.append((rel, scope, len(child.args)))
+            walk(child, rel, inner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        walk(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(),
+             "")
+    assert sorted(impact_sites) == [
+        ("functions/scoring.py", "rank_chunk_rows", True),
+        ("operators/build.py", "_block_max_impact.block_max", True),
+    ], impact_sites
+    assert sorted(writer_calls) == [
+        ("operators/build.py", "build_index.stage_postings", 5),
+        ("operators/compact.py", "merge_postings", 5),
+    ], writer_calls
+    assert defs == [("functions/docstore.py", "DocStore")], defs

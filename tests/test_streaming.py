@@ -202,13 +202,15 @@ def test_compaction_rows_match_token_oracle(spark, tmp_path):
     """compact_deltas re-chunks from the postings. Over two compactions in a
     row (inserts and updates; the second also updates a streamed doc):
     - the compacted postings decode to exactly tokenize_tf of the base
-      corpus minus the superseded ids plus the delta rows;
+      corpus minus the superseded ids plus the delta rows, with each doc's
+      length from the new generation's doc store;
     - ``affected_terms`` counts exactly the delta's terms plus the terms of
       superseded docs, though some untouched term has a chunk whose range
       covers a superseded id it does not hold;
     - every untouched term's chunk rows are byte-identical to the base's
       but for max_impact, which the writer recomputes at the new avgdl."""
     from nextsearch_api_spark.config import BuildConfig, IndexPaths
+    from nextsearch_api_spark.functions.docstore import DocStore
     from nextsearch_api_spark.operators.build import (
         CHUNKS_SCHEMA, assign_doc_ids, tokenize_tf,
     )
@@ -262,8 +264,11 @@ def test_compaction_rows_match_token_oracle(spark, tmp_path):
         want = {k: v for k, v in oracle.items() if k[0] not in sup}
         want.update(rows)
         after = spark.read.parquet(IndexPaths(root).postings)
-        got = sorted(tuple(r) for r in
-                     decode_postings_to_tokens(after).collect())
+        tok = decode_postings_to_tokens(after).toArrow()
+        dls = DocStore(IndexPaths(root).docs).doc_lens(tok.column("doc_id"))
+        got = sorted(zip(*(tok.column(c).to_pylist()
+                           for c in ("doc_id", "term", "tf")),
+                         dls.tolist()))
         assert got == sorted((d, t, tf, dl)
                              for (d, t), (tf, dl) in want.items())
 

@@ -176,28 +176,36 @@ def test_postings_writer_refuses_overlapping_chunks(spark, tmp_path):
     disjoint frame; touching ranges of different terms are fine."""
     from nextsearch_api_spark.config import BM25Params
     from nextsearch_api_spark.functions.codec import encode_chunks
-    from nextsearch_api_spark.operators.build import write_postings_sorted
+    from nextsearch_api_spark.operators.build import (
+        write_docs_sorted, write_postings_sorted,
+    )
+
+    # docs 1..31, doc_len 5 each
+    docs = str(tmp_path / "docs")
+    write_docs_sorted(spark.createDataFrame(
+        [(d, "r", f"p{d}", "c", "py", 5) for d in range(1, 32)],
+        "doc_id long, repo string, path string, commit string, "
+        "lang string, doc_len int"), docs)
 
     def frame(rows):
-        # n postings spread over [lo, hi], tf 1 and doc_len 5 each
+        # n postings spread over [lo, hi], tf 1 each
         out = []
         for term, lo, hi, n in rows:
             ids = np.linspace(lo, hi, n).astype(np.int64)
-            blobs, tfo, dlo = encode_chunks(ids, np.ones(n), np.full(n, 5),
-                                            [0])
-            out.append((term, lo, hi, n, int(tfo[0]), int(dlo[0]),
-                        blobs[0].as_py()))
+            blobs, tfo = encode_chunks(ids, np.ones(n), [0])
+            out.append((term, lo, hi, n, int(tfo[0]), blobs[0].as_py()))
         return spark.createDataFrame(
             out, "term string, doc_lo long, doc_hi long, count int, "
-                 "tf_off int, dl_off int, blob binary")
+                 "tf_off int, blob binary")
 
     ok = [("aa", 1, 10, 4), ("aa", 11, 20, 4), ("bb", 5, 30, 9),
           ("bb", 31, 31, 1)]
-    write_postings_sorted(frame(ok), str(tmp_path / "ok"), 5.0, BM25Params())
+    write_postings_sorted(frame(ok), str(tmp_path / "ok"), 5.0, BM25Params(),
+                          docs)
     assert spark.read.parquet(str(tmp_path / "ok")).count() == 4
     with pytest.raises(ValueError, match="1 chunks overlapping"):
         write_postings_sorted(frame(ok + [("aa", 20, 25, 2)]),
-                              str(tmp_path / "bad"), 5.0, BM25Params())
+                              str(tmp_path / "bad"), 5.0, BM25Params(), docs)
 
 
 @pytest.fixture(scope="session")
