@@ -7,18 +7,10 @@ A docs component holds one row set in two forms:
   content_sha256), written range-partitioned and doc-id-sorted by
   operators/build.py:write_docs_sorted — what Spark reads (phrase search,
   compaction, the stats aggregate);
-* beside them, under ``docs/_meta/``, two uncompressed Arrow IPC files per
-  non-empty part:
-  - ``<part>.arrow``, that part's (doc_id, repo, path, commit, lang)
-    sorted by doc id, with ``repo`` and ``lang`` dictionary-encoded — what
-    hydration reads;
-  - ``<part>.doclen``, one u32 ``doc_len`` column in one of two shapes. A
-    part whose doc-id span [first, last] is at most twice its row count
-    stores a dense array over the span, 0 where no doc exists (a doc keeps
-    at least one token, so 0 is never a length). Any other part — streamed
-    ids hashed above 2^62, or dense and streamed ids in one part — stores
-    the column row-aligned with ``<part>.arrow``'s doc ids. A gapless part
-    is both: its span equals its row count.
+* beside them, under ``docs/_meta/``, one uncompressed Arrow IPC file per
+  non-empty part, ``<part>.arrow``: that part's (doc_id, doc_len, repo,
+  path, commit, lang) sorted by doc id, ``doc_len`` as u32 and ``repo``
+  and ``lang`` dictionary-encoded — what hydration and BM25 read.
 
 Hydrating hits (:meth:`DocStore.hits`) bisects on each file's first doc id,
 then runs one ``searchsorted`` and one ``take`` per file over the
@@ -26,8 +18,10 @@ memory-mapped columns: no Parquet decode, no cache beyond the OS page
 cache — the analog of the reference's O(1) ``docs[docId]`` index and lazy
 row read by offset (api_engine.cpp:508-532, api_metadata.cpp:188-249).
 :meth:`DocStore.doc_lens` is the engine's one doc-length lookup, the
-reference's ``seg.docs[docId].doc_len`` (api_engine.cpp:477): an offset
-gather from a dense part, a ``searchsorted`` into a row-aligned one.
+reference's ``seg.docs[docId].doc_len`` (api_engine.cpp:477): the open
+spreads the ``doc_len`` column of each file whose ids are dense over the
+file's id span, so a lookup there is an offset gather; in a file of
+streamed ids it is a ``searchsorted``, as in hydration.
 
 ``uid`` is not stored in the Arrow files: hydration derives it with the
 index's own definition, :func:`uid_column`, through its Python twin
@@ -83,23 +77,12 @@ def _twin_name(part_path: str) -> str:
     return os.path.splitext(os.path.basename(part_path))[0] + ".arrow"
 
 
-def _lens_path(twin_path: str) -> str:
-    return os.path.splitext(twin_path)[0] + ".doclen"
-
-
-def _write_ipc(dst: str, t: pa.Table) -> None:
-    """Write ``t`` as an Arrow IPC file under an attempt-unique temporary
-    name, then rename it into place: a retried or speculative attempt
-    writes the same bytes over the same name."""
-    tmp = f"{dst}.{uuid.uuid4().hex}.tmp"
-    with ipc.new_file(tmp, t.schema) as w:
-        w.write_table(t)
-    os.replace(tmp, dst)
-
-
 def _write_twin(part_path: str) -> tuple[str, int]:
-    """Convert one Parquet part into its Arrow twin and its doc-length
-    file → (twin name, rows). Runs in a Spark task."""
+    """Convert one Parquet part into its Arrow twin → (twin name, rows).
+
+    Runs in a Spark task. The file is written under an attempt-unique
+    temporary name and renamed into place, so a retried or speculative
+    attempt writes the same bytes over the same name."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -108,30 +91,28 @@ def _write_twin(part_path: str) -> tuple[str, int]:
                     use_threads=False)
     # one chunk, so each dictionary column gets one dictionary
     t = t.sort_by("doc_id").combine_chunks()
-    ids = t.column("doc_id").to_numpy()
-    lens = t.column("doc_len").to_numpy().astype(np.uint32)
-    if (lens == 0).any():
+    if pc.any(pc.equal(t.column("doc_len"), 0)).as_py():
+        # a doc keeps at least one token: doc_lens reads 0 as "no doc"
         raise ValueError(f"{part_path} holds a doc without tokens")
-    span = int(ids[-1]) - int(ids[0]) + 1
-    if span <= 2 * len(ids):
-        dense = np.zeros(span, dtype=np.uint32)
-        dense[ids - ids[0]] = lens
-        lens = dense
-    twin = pa.table({name: (pc.dictionary_encode(t.column(name))
-                            if name in _DICT_FIELDS else t.column(name))
-                     for name in ("doc_id", *STORE_FIELDS)})
+    t = t.set_column(t.schema.get_field_index("doc_len"), "doc_len",
+                     t.column("doc_len").cast(pa.uint32()))
+    t = pa.table({name: (pc.dictionary_encode(t.column(name))
+                         if name in _DICT_FIELDS else t.column(name))
+                  for name in t.column_names})
     name = _twin_name(part_path)
     dst = os.path.join(os.path.dirname(part_path), META_DIR, name)
-    _write_ipc(_lens_path(dst), pa.table({"doc_len": lens}))
-    _write_ipc(dst, twin)
-    return name, twin.num_rows
+    tmp = f"{dst}.{uuid.uuid4().hex}.tmp"
+    with ipc.new_file(tmp, t.schema) as w:
+        w.write_table(t)
+    os.replace(tmp, dst)
+    return name, t.num_rows
 
 
 def write_doc_store(spark: SparkSession, docs_path: str) -> None:
-    """Write the Arrow twin and the doc-length file of every non-empty
-    Parquet part under ``docs_path`` in ONE Spark job, one task per part,
-    then check on the driver that each such part has both, its twin with
-    the part's row count. Replaces any files a previous write left."""
+    """Write the Arrow twin of every non-empty Parquet part under
+    ``docs_path`` in ONE Spark job, one task per part, then check on the
+    driver that each such part has its twin with the part's row count.
+    Replaces any twins a previous write left."""
     import pyarrow.parquet as pq
 
     parts = {}
@@ -151,26 +132,17 @@ def write_doc_store(spark: SparkSession, docs_path: str) -> None:
                        .map(_write_twin).collect())
     missing = [name for name, (_, rows) in parts.items()
                if written.get(name) != rows
-               or not os.path.isfile(os.path.join(meta, name))
-               or not os.path.isfile(_lens_path(os.path.join(meta, name)))]
+               or not os.path.isfile(os.path.join(meta, name))]
     if missing:
         raise RuntimeError(
-            f"doc store under {docs_path} lacks the files of "
+            f"doc store under {docs_path} lacks the twins of "
             f"{len(missing)} Parquet parts: {missing[:3]}")
 
 
 # ------------------------------------------------------------------ read --
 
-def _map(path: str) -> pa.Table:
-    """One Arrow IPC file as a single-chunk table over its memory map. The
-    table's buffers keep the mapping alive once the file is closed; it is
-    unmapped when the table is dropped."""
-    with pa.memory_map(path) as mm:
-        return ipc.open_file(mm).read_all().combine_chunks()
-
-
 class DocStore:
-    """The Arrow files of one docs component, memory-mapped at open.
+    """The Arrow twins of one docs component, memory-mapped at open.
 
     Files are ordered by their first doc id; their doc-id ranges must be
     disjoint (the range-partitioned write makes them so), which the open
@@ -185,14 +157,16 @@ class DocStore:
             if not name.endswith(".arrow"):
                 continue
             path = os.path.join(meta, name)
-            t = _map(path)
+            # the table's buffers keep the mapping alive once the file is
+            # closed; it is unmapped when the store is dropped
+            with pa.memory_map(path) as mm:
+                t = ipc.open_file(mm).read_all().combine_chunks()
             if t.num_rows:
                 rb = t.to_batches()[0]
                 ids = rb.column("doc_id").to_numpy()
-                lens = (_map(_lens_path(path)).to_batches()[0]
-                        .column("doc_len").to_numpy())
                 files.append((int(ids[0]), int(ids[-1]), path, ids,
-                              rb.select(list(STORE_FIELDS)), lens))
+                              rb.column("doc_len").to_numpy(),
+                              rb.select(list(STORE_FIELDS))))
         files.sort(key=lambda f: f[0])
         for a, b in zip(files, files[1:]):
             if b[0] <= a[1]:
@@ -201,11 +175,19 @@ class DocStore:
         self._ranges = [(lo, hi, path) for lo, hi, path, *_ in files]
         self._firsts = np.array([f[0] for f in files], dtype=np.int64)
         self._ids = [f[3] for f in files]
-        self._tables = [f[4] for f in files]
-        # per file: (first id, doc-length array, dense?) — dense when the
-        # array covers the whole id span, else row-aligned with the ids
-        self._lens = [(f[0], f[5], f[5].size == f[1] - f[0] + 1)
-                      for f in files]
+        # per file: (first id, doc lengths, dense?) — an array over the
+        # file's whole id span, 0 where no doc exists, when that span is at
+        # most twice its rows; else the twin's column, row-aligned with its
+        # ids (streamed ids hashed above 2^62)
+        self._lens = []
+        for first, last, _, ids, lens, _ in files:
+            if last - first + 1 <= 2 * ids.size:
+                dense = np.zeros(last - first + 1, dtype=np.uint32)
+                dense[ids - first] = lens
+                self._lens.append((first, dense, True))
+            else:
+                self._lens.append((first, lens, False))
+        self._tables = [f[5] for f in files]
 
     def ranges(self) -> list[tuple[int, int, str]]:
         """(first doc id, last doc id, file) of every non-empty file, in
@@ -250,9 +232,9 @@ class DocStore:
     def doc_lens(self, doc_ids) -> np.ndarray:
         """Doc length of every id in ``doc_ids`` → uint32[] aligned with
         them — the engine's only doc-length lookup. Per file, an offset
-        gather from a dense array or one ``searchsorted`` into a
-        row-aligned one. Raises KeyError on an id without a doc: every
-        posting's doc is in the docs of its generation."""
+        gather from a dense array or one ``searchsorted`` into the twin's
+        ids. Raises KeyError on an id without a doc: every posting's doc
+        is in the docs of its generation."""
         ids = np.asarray(doc_ids, dtype=np.int64).reshape(-1)
         order = None
         if ids.size > 1 and (ids[1:] < ids[:-1]).any():

@@ -111,12 +111,12 @@ def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
     count, tf_off, blob); ``queries`` is [(qid, k, [(term, widf), ...])];
     ``store`` is the generation's doc store (functions/docstore.py), which
     gives each posting's doc length. Each term's chunks decode in one
-    ``decode_chunks_concat`` call in doc_lo order (a term's chunks cover
-    disjoint doc ranges, so its ids come out ascending and the order
-    changes no sum), and only doc ids in [lo, hi) are kept (None:
-    unbounded). Terms decode one after another: a thread pool per call
-    cost more CPU and saved no wall time on serving queries and 0.5M-posting
-    batches (it saved ~20% wall at the 8M-posting driver budget)."""
+    ``decode_chunks_concat`` call, in table order (a term's chunks cover
+    disjoint doc ranges, so the order does not change any sum), and only
+    doc ids in [lo, hi) are kept (None: unbounded). Terms decode one
+    after another: a thread pool per call cost more CPU and saved no wall
+    time on serving queries and 0.5M-posting batches (it saved ~20% wall
+    at the 8M-posting driver budget)."""
     # looked up at call time, so a wrapper installed on the codec module
     # (perfbench's tracer) sees every decode
     from nextsearch_api_spark.functions.codec import decode_chunks_concat
@@ -133,7 +133,6 @@ def rank_chunk_rows(chunks: "pa.Table", queries, avgdl: float,  # noqa: F821
     per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     for term, rows in rows_by_term.items():
         idx = np.asarray(rows)
-        idx = idx[np.argsort(doc_los[idx], kind="stable")]
         ids, tfs = decode_chunks_concat(
             blobs.take(idx), tf_offs[idx], counts[idx], doc_los[idx])
         if lo is not None or hi is not None:

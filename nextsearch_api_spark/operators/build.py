@@ -763,8 +763,9 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # scratch, removed once the build completes; stats come only from
         # the postings stage's recorded N/total_len. 4 = no doclen table:
         # docs is written from the postings tokenize and records
-        # N/total_len for the postings and stats stages.
-        "build_layout": 4,
+        # N/total_len for the postings and stats stages. 5 = doc lengths
+        # are a column of the doc store's Arrow twins.
+        "build_layout": 5,
         "chunk_size": cfg.chunk_size,
         "k1": cfg.bm25.k1, "b": cfg.bm25.b,
         "corpus": _corpus_fingerprint(corpus),

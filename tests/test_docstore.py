@@ -297,8 +297,8 @@ def test_only_the_docstore_maps_arrow_files():
 STREAM = 1 << 62
 
 # one docs component with a part of each shape, in doc-id order:
-# gapless (dense, span == rows), zero-token holes (dense with 0 entries),
-# dense and streamed ids in one part, and streamed ids only (row-aligned)
+# gapless ids, ids with zero-token holes, dense and streamed ids in one
+# part, and streamed ids only
 LEN_PARTS = {
     "gapless": [(d, 1 + d % 7) for d in range(1, 51)],
     "holes": [(d, 3 + d % 11) for d in range(100, 200) if d % 3],
@@ -323,25 +323,6 @@ def len_store(spark, tmp_path_factory):
         }), docs / f"part-{i:05d}.parquet")
     write_doc_store(spark, str(docs))
     return str(docs)
-
-
-def _len_file_rows(docs: str) -> dict:
-    import pyarrow as pa
-    from pyarrow import ipc
-
-    meta = os.path.join(docs, "_meta")
-    out = {}
-    for i, name in enumerate(LEN_PARTS):
-        with pa.memory_map(os.path.join(meta, f"part-{i:05d}.doclen")) as mm:
-            out[name] = ipc.open_file(mm).read_all().num_rows
-    return out
-
-
-def test_doc_len_files_take_the_part_shape(len_store):
-    """A part whose id span is at most twice its rows stores a dense array
-    over the span; any other part a row-aligned column."""
-    assert _len_file_rows(len_store) == {
-        "gapless": 50, "holes": 100, "straddle": 4, "streamed": 40}
 
 
 @pytest.mark.parametrize("shape", list(LEN_PARTS))
@@ -374,11 +355,11 @@ def test_doc_lens_across_parts(len_store, ids, ascending):
 
 @pytest.mark.parametrize("missing", [
     0,                      # before the first part
-    102,                    # a zero-token hole of a dense part
-    51,                     # past a dense part's last id, before the next
+    102,                    # a zero-token hole of a part
+    51,                     # past a part's last id, before the next
     302,                    # between the dense ids of a straddling part
     STREAM + 6,             # between its streamed ids
-    STREAM + 2 * 10**12 + 1,  # inside a row-aligned part
+    STREAM + 2 * 10**12 + 1,  # inside a streamed part
     STREAM + 3 * 10**12,    # past the last part
 ])
 def test_doc_lens_raises_on_an_id_without_a_doc(len_store, missing):
@@ -389,7 +370,7 @@ def test_doc_lens_raises_on_an_id_without_a_doc(len_store, missing):
 
 @pytest.mark.parametrize("which", ["built", "compacted"])
 def test_doc_lens_equal_parquet_doc_len(tiny_index, compacted_index, which):
-    """On a built index (dense parts, zero-token holes among them) and
+    """On a built index (zero-token holes among its ids) and
     after compact_deltas (streamed ids above 2^62 in the last parts), the
     store's length of every doc equals its Parquet ``doc_len``."""
     root = tiny_index[0] if which == "built" else compacted_index[0]
