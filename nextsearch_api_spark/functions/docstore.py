@@ -6,7 +6,7 @@ A docs component holds one row set in two forms:
 * Parquet part files (doc_id, uid, repo, path, commit, lang, doc_len,
   content_sha256), written range-partitioned and doc-id-sorted by
   operators/build.py:write_docs_sorted — what Spark reads (phrase search,
-  compaction, the stats aggregate);
+  compaction);
 * beside them, under ``docs/_meta/``, one uncompressed Arrow IPC file per
   non-empty part, ``<part>.arrow``: that part's (doc_id, doc_len, repo,
   path, commit, lang) sorted by doc id, ``doc_len`` as u32 and ``repo``
@@ -77,8 +77,9 @@ def _twin_name(part_path: str) -> str:
     return os.path.splitext(os.path.basename(part_path))[0] + ".arrow"
 
 
-def _write_twin(part_path: str) -> tuple[str, int]:
-    """Convert one Parquet part into its Arrow twin → (twin name, rows).
+def _write_twin(part_path: str) -> tuple[str, int, int]:
+    """Convert one Parquet part into its Arrow twin → (twin name, rows,
+    Σ doc_len).
 
     Runs in a Spark task. The file is written under an attempt-unique
     temporary name and renamed into place, so a retried or speculative
@@ -105,14 +106,16 @@ def _write_twin(part_path: str) -> tuple[str, int]:
     with ipc.new_file(tmp, t.schema) as w:
         w.write_table(t)
     os.replace(tmp, dst)
-    return name, t.num_rows
+    return name, t.num_rows, pc.sum(t.column("doc_len")).as_py()
 
 
-def write_doc_store(spark: SparkSession, docs_path: str) -> None:
+def write_doc_store(spark: SparkSession,
+                    docs_path: str) -> tuple[int, int]:
     """Write the Arrow twin of every non-empty Parquet part under
     ``docs_path`` in ONE Spark job, one task per part, then check on the
     driver that each such part has its twin with the part's row count.
-    Replaces any twins a previous write left."""
+    Replaces any twins a previous write left. → (N, total_len): the docs'
+    row count and Σ doc_len, summed from the twins' tasks."""
     import pyarrow.parquet as pq
 
     parts = {}
@@ -125,18 +128,21 @@ def write_doc_store(spark: SparkSession, docs_path: str) -> None:
     meta = os.path.join(docs_path, META_DIR)
     shutil.rmtree(meta, ignore_errors=True)
     os.makedirs(meta)
-    written: dict[str, int] = {}
+    written: dict[str, tuple[int, int]] = {}
     if parts:
         tasks = [p for p, _ in parts.values()]
-        written = dict(spark.sparkContext.parallelize(tasks, len(tasks))
-                       .map(_write_twin).collect())
+        written = {name: (rows, total) for name, rows, total in
+                   spark.sparkContext.parallelize(tasks, len(tasks))
+                   .map(_write_twin).collect()}
     missing = [name for name, (_, rows) in parts.items()
-               if written.get(name) != rows
+               if written.get(name, (0, 0))[0] != rows
                or not os.path.isfile(os.path.join(meta, name))]
     if missing:
         raise RuntimeError(
             f"doc store under {docs_path} lacks the twins of "
             f"{len(missing)} Parquet parts: {missing[:3]}")
+    return (sum(rows for rows, _ in written.values()),
+            sum(total for _, total in written.values()))
 
 
 # ------------------------------------------------------------------ read --

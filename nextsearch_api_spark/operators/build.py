@@ -507,24 +507,26 @@ def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
             "the previous chunk of their term; refusing to publish them")
 
 
-def write_docs_sorted(docs: DataFrame, out_path: str) -> None:
+def write_docs_sorted(docs: DataFrame, out_path: str) -> tuple[int, int]:
     """Write the docs component: doc rows range-partitioned + sorted by
     doc_id as zstd Parquet, then the doc store's Arrow twin of every part
     (functions/docstore.py:write_doc_store, one more Spark job), which
     serving and batch hydration read — the reference's O(1)
     ``docs[docId]`` (api_engine.cpp:508-532). No keyed Parquet read of docs
-    remains, so the Parquet files keep Spark's default row groups."""
+    remains, so the Parquet files keep Spark's default row groups.
+    → (N, total_len) of the written docs, counted by the twins' job."""
     (docs.repartitionByRange(_serving_partitions(docs.sparkSession), "doc_id")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .parquet(out_path))
-    write_doc_store(docs.sparkSession, out_path)
+    return write_doc_store(docs.sparkSession, out_path)
 
 
 def write_lexicon(postings: DataFrame, out_path: str) -> None:
     """Aggregate chunk rows into the lexicon — per term df (posting count)
-    and n_chunks — written range-partitioned + sorted by term, so footer
+    and n_chunks — written range-partitioned into _serving_partitions
+    ranges, like postings and docs, + sorted by term, so footer
     min/max stats confine a term lookup to its row group (the reference's
     barrel/offset seek analog). persist(): repartitionByRange samples its
     input with an extra execution, which would otherwise run the aggregate
@@ -534,7 +536,9 @@ def write_lexicon(postings: DataFrame, out_path: str) -> None:
         F.count("*").cast("int").alias("n_chunks"),
     ).persist()
     try:
-        (lex.repartitionByRange(64, "term").sortWithinPartitions("term")
+        (lex.repartitionByRange(_serving_partitions(postings.sparkSession),
+                                "term")
+            .sortWithinPartitions("term")
             .write.mode("overwrite").parquet(out_path))
     finally:
         lex.unpersist()
@@ -820,8 +824,9 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # metadata-only rows on both sides, no content bytes move, and the
         # zero-token filter IS the inner join (such docs post no length).
         # Written doc-id-sorted with the doc store beside it: hydration
-        # and every doc-length lookup read the store. N and total_len are
-        # recorded here, for avgdl and the stats.
+        # and every doc-length lookup read the store. N and total_len come
+        # from the store's write and are recorded here, for avgdl and the
+        # stats.
         lens = (decode_postings_to_tokens(
                     raw_chunks().where(F.col("term") == ""))
                 .select("doc_id", F.col("tf").alias("doc_len")))
@@ -833,12 +838,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
             .select("doc_id", "uid", "repo", "path", "commit", "lang",
                     "doc_len", "content_sha256")
         )
-        write_docs_sorted(docs, paths.docs)
-        row = (spark.read.parquet(paths.docs)
-               .agg(F.count("*").alias("N"),
-                    F.sum("doc_len").alias("total_len"))
-               .collect()[0])
-        return {"rows": int(row["N"]), "total_len": int(row["total_len"] or 0)}
+        N, total_len = write_docs_sorted(docs, paths.docs)
+        return {"rows": N, "total_len": total_len}
 
     def stage_postings() -> dict:
         # Term-locality layout for the serving tier: the builder's output

@@ -46,7 +46,7 @@ from nextsearch_api_spark.operators.build import (
     CHUNKS_SCHEMA, build_posting_chunks, decode_postings_to_tokens,
     write_lexicon, write_postings_sorted, _parquet_rows,
 )
-from nextsearch_api_spark.operators.wand import read_index_stats
+from nextsearch_api_spark.operators.query import read_index_stats
 from nextsearch_api_spark.plans.generations import flip_generation, gen_path
 
 

@@ -22,7 +22,11 @@ one document-partitioned Spark stage per query batch and a driver merge:
 The ranges partition the doc-id space, so each doc is scored whole in one
 range and the per-range answers merge exactly; batches small enough for one
 process are answered on the driver by the same scoring helper and handed
-back the same way. Every Python task pays a fixed start-up cost (~0.25 CPU-s
+back the same way.
+
+Both tiers share one reader (IndexReader; the serving engine,
+operators/wand.py:WandEngine, subclasses it), one weigher (weigh) and one
+driver-side rank call (rank_on_driver). Every Python task pays a fixed start-up cost (~0.25 CPU-s
 measured), so the plan keeps a single Python stage, and every Spark job
 pays a fixed scheduling cost, so the few merge rows never run one.
 
@@ -34,6 +38,8 @@ SQL oracles.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -46,6 +52,7 @@ from nextsearch_api_spark.config import (
     BM25Params, IndexPaths, MIN_TOKEN_LEN, SEARCH_K_MAX, SEARCH_K_MIN,
 )
 from nextsearch_api_spark.functions.docstore import HIT_FIELDS, DocStore
+from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
 from nextsearch_api_spark.functions.scoring import (
     bm25_idf, rank_chunk_rows, topk_tiebroken,
 )
@@ -84,26 +91,55 @@ class TermDfs(dict):
         self.n_chunks = dict(n_chunks or {})
 
 
+def check_index_format(stats: dict, stats_path: str) -> None:
+    """Fail fast on indexes written by an incompatible chunk format.
+
+    Builds stamp ``format`` into stats.json (operators/build.py
+    FORMAT_VERSION). Current writers also refuse overlapping chunk ranges
+    (operators/build.py:write_postings_sorted), so a load that passes this
+    check needs no postings scan."""
+    from nextsearch_api_spark.operators.build import FORMAT_VERSION
+    fmt = stats.get("format")
+    if fmt is not None and int(fmt) != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {os.path.dirname(stats_path)} has on-disk format "
+            f"{fmt}, this engine reads format {FORMAT_VERSION} — rebuild "
+            "the index"
+        )
+
+
+def read_index_stats(stats_path: str) -> dict:
+    """One generation's stats.json, refused unless check_index_format
+    passes — every reader and both compactions load stats through here, so
+    none of them reads or rewrites an index of another format."""
+    with open(stats_path) as f:
+        stats = json.load(f)
+    check_index_format(stats, stats_path)
+    return stats
+
+
 class IndexReader:
-    """Lazy handles on a built index's tables + stats.
+    """One generation of a built index, opened once: stats, the mapped doc
+    store and, on first use, footer indexes over the term-sorted tables.
+    ``spark`` may be None for a reader that never asks for ``postings()``
+    or ``docs()`` (the serving engine).
 
     DataFrame handles are memoized: ``spark.read.parquet`` re-lists the
     directory and re-reads footers on every call (~0.15 s against a 64-file
     postings dir), which was pure per-query overhead in the r2 bench. A
     reader is pinned to the generation its IndexPaths snapshot names: stats,
-    tables and footer indexes all come from it, so it answers from that
-    generation until it is dropped; create a new IndexReader to serve a
-    later compaction's generation."""
+    tables, store and footer indexes all come from it, so it answers from
+    that generation until it is dropped; create a new IndexReader to serve
+    a later compaction's generation."""
 
-    def __init__(self, spark: SparkSession, root: str):
+    def __init__(self, spark: "SparkSession | None", root: str):
         self.spark = spark
         self.paths = IndexPaths(root)
-        from nextsearch_api_spark.operators.wand import read_index_stats
         self.stats = read_index_stats(self.paths.stats)
+        self.store = DocStore(self.paths.docs)
         self._dfs: dict[str, DataFrame] = {}
         # footer indexes for driver-side keyed reads, by table path
-        self._indexes: dict[str, "RowGroupIndex"] = {}  # noqa: F821
-        self._store: "DocStore | None" = None
+        self._indexes: dict[str, RowGroupIndex] = {}
 
     @property
     def N(self) -> int:
@@ -125,22 +161,21 @@ class IndexReader:
     def docs(self) -> DataFrame:
         return self._table(self.paths.docs)
 
-    def store(self) -> DocStore:
-        """The generation's doc store (functions/docstore.py), mapped on
-        first use: the driver's doc lengths and hydration read it."""
-        if self._store is None:
-            self._store = DocStore(self.paths.docs)
-        return self._store
-
-    def _by_term(self, path: str) -> "RowGroupIndex":  # noqa: F821
+    def _by_term(self, path: str) -> RowGroupIndex:
         """Footer index over a term-sorted table (postings, lexicon), opened
         on first use: keyed reads touch only the row groups whose term range
         holds a requested term."""
         idx = self._indexes.get(path)
         if idx is None:
-            from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
             idx = self._indexes[path] = RowGroupIndex(path, "term")
         return idx
+
+    def term_chunks(self, terms: Sequence[str]) -> pa.Table:
+        """Chunk rows (term, doc_lo, count, tf_off, blob) of ``terms``: ONE
+        read through the postings footer index, of only the row groups whose
+        term range holds one of them. Nothing is cached."""
+        return self._by_term(self.paths.postings).read(
+            list(terms), ["doc_lo", "count", "tf_off", "blob"])
 
     def chunk_meta(self, terms: Sequence[str]) -> "dict[str, list[tuple[int, int, float]]]":
         """Per-term chunk metadata → {term: [(doc_lo, doc_hi, max_impact)]}.
@@ -270,20 +305,17 @@ def _plan_chunk_prune(
     return whitelist, thresholds, overrides
 
 
-def _driver_small_search(reader: IndexReader, present: "list[str]",
-                         queries: "list[tuple]",
-                         params: BM25Params) -> "list[tuple]":
-    """Driver-side exact TAAT for a volume-bounded query batch →
-    [(qid, k, found, top doc ids, top scores)].
-
-    ONE footer-indexed read of the present terms' chunk rows (only the
-    postings row groups whose term range holds a present term), then
-    functions/scoring.py's rank_chunk_rows over the whole doc-id space —
-    the helper each range group of the distributed plan and the serving
-    tier run, so all return identical rows."""
-    t = reader._by_term(reader.paths.postings).read(
-        list(present), ["doc_lo", "count", "tf_off", "blob"])
-    return rank_chunk_rows(t, queries, reader.avgdl, params, reader.store())
+def rank_on_driver(reader: IndexReader, weighted: "list[tuple]",
+                   params: BM25Params) -> "list[tuple]":
+    """The one driver-side rank call: weigh's queries → [(qid, k, found,
+    top doc ids, top scores)], by rank_chunk_rows over the whole doc-id
+    space — the helper each range group of the distributed plan runs too,
+    so every tier returns identical rows. Chunk rows come from
+    ``reader.term_chunks``: one footer-indexed read for a batch reader,
+    the blob LRU for the serving engine."""
+    present = sorted({t for _, _, tws in weighted for t, _ in tws})
+    return rank_chunk_rows(reader.term_chunks(present), weighted,
+                           reader.avgdl, params, reader.store)
 
 
 def _doc_range_cuts(reader: IndexReader, present: "list[str]",
@@ -388,37 +420,45 @@ def _range_rank_udf(cuts: "list[int]", queries: "list[tuple]",
     return rank_range
 
 
+def weigh(reader: IndexReader, queries: "Sequence[tuple]",
+          params: BM25Params) -> "tuple[TermDfs, list[tuple]]":
+    """The one query weigher: [(qid, k, [(term, weight)])] → (df map of
+    the present terms, [(qid, k, [(term, weight·idf)])] for the queries
+    with a present term, in input order). df comes from
+    ``reader.term_dfs``, so absent terms drop out (the reference's
+    ``seg.lex.find``, api_engine.cpp:453-455); terms keep their order,
+    which the kernel sums in."""
+    df_map = reader.term_dfs(
+        sorted({t for _, _, tws in queries for t, _ in tws}))
+    present = sorted(df_map)
+    idf = dict(zip(present, bm25_idf(
+        reader.N, np.array([df_map[t] for t in present], dtype=np.int64),
+        params.precision).tolist()))
+    weighted: list[tuple] = []
+    for qid, k, tws in queries:
+        tws = [(t, float(w) * idf[t]) for t, w in tws if t in idf]
+        if tws:
+            weighted.append((qid, k, tws))
+    return df_map, weighted
+
+
 def _parse_batch(reader: IndexReader, queries: Sequence[QuerySpec],
                  params: BM25Params) -> "tuple[TermDfs, list[tuple]]":
-    """Driver-side query parsing → (df_map of the present terms,
-    [(qid, k, [(term, weight·idf), ...])] in qid order, for the queries
-    with a present term). Weight = occurrence count, so repeated terms
-    accumulate repeatedly like the reference's per-occurrence loop; terms
-    stay in query order (the kernel sums in that order, like serving); a
-    qid given by several specs takes the union of their terms and the
-    first spec's k."""
-    qrows: list[tuple[int, str, int]] = []  # qid, term, occ
+    """Driver-side parsing of a batch → weigh's (df map, weighted queries)
+    in qid order. Weight = occurrence count, so repeated terms accumulate
+    repeatedly like the reference's per-occurrence loop
+    (api_engine.cpp:449); a qid given by several specs takes the terms of
+    all of them and the first spec's k."""
     k_of: dict[int, int] = {}
+    terms_of: dict[int, list[tuple[str, int]]] = {}
     for qs in queries:
         k_of.setdefault(qs.qid, clamp_k(qs.k))
         occ: dict[str, int] = {}
         for t in parse_query(qs.q):
             occ[t] = occ.get(t, 0) + 1
-        qrows.extend((qs.qid, t, c) for t, c in occ.items())
-
-    # lexicon lookup for df → idf (bounded driver-side read: |query terms|)
-    df_map = reader.term_dfs(sorted({t for _, t, _ in qrows}))
-    present = sorted(df_map)
-    idfs = bm25_idf(reader.N, np.array([df_map[t] for t in present],
-                                       dtype=np.int64), params.precision)
-    idf_map = dict(zip(present, idfs))
-    terms_of: dict[int, list[tuple[str, float]]] = {}
-    for qid, t, occ in qrows:
-        if t in idf_map:
-            terms_of.setdefault(qid, []).append(
-                (t, float(occ) * float(idf_map[t])))
-    return df_map, [(qid, k_of[qid], tws)
-                    for qid, tws in sorted(terms_of.items())]
+        terms_of.setdefault(qs.qid, []).extend(occ.items())
+    return weigh(reader, [(qid, k_of[qid], tws)
+                          for qid, tws in sorted(terms_of.items())], params)
 
 
 def _range_stage(reader: IndexReader, df_map: TermDfs, ranked: "list[tuple]",
@@ -544,7 +584,7 @@ def batch_search(
 
     A batch whose Σdf is at most ``small_query_max_postings`` (default
     SMALL_QUERY_MAX_POSTINGS; 0 forces the distributed plan) is answered on
-    the driver by _driver_small_search. Otherwise the plan is:
+    the driver by rank_on_driver. Otherwise the plan is:
 
     1. scan the postings chunk rows of the present terms (pushed
        ``term IN`` filter), pruned by the chunk prefilter below;
@@ -587,7 +627,7 @@ def batch_search(
     if not ranked:
         top = []
     elif prune_chunks and budget > 0 and sum(df_map.values()) <= budget:
-        top = _driver_small_search(reader, sorted(df_map), ranked, params)
+        top = rank_on_driver(reader, ranked, params)
     else:
         stage, found_overrides = _range_stage(reader, df_map, ranked,
                                               params, prune_chunks)
@@ -606,27 +646,7 @@ def _hydrate_topk(reader: IndexReader, table: pa.Table) -> DataFrame:
     hydrates with — and join as five string columns of the Arrow table, so
     the answer stays a job-free LocalRelation. Left-join semantics: a hit
     without a docs row keeps null metadata."""
-    meta = reader.store().hits(table.column("doc_id").to_numpy())
+    meta = reader.store.hits(table.column("doc_id").to_numpy())
     for f in HIT_FIELDS:
         table = table.append_column(f, pa.array(meta[f], type=pa.string()))
     return reader.spark.createDataFrame(table)
-
-
-def search_one(reader: IndexReader, q: str, k: int = 10,
-               params: BM25Params | None = None,
-               hydrate: bool = True) -> dict:
-    """Single-query convenience → reference-shaped JSON dict
-    (README.md:72-94: {query, k, segments, found, results[]})."""
-    df = batch_search(reader, [QuerySpec(0, q, k)], params, hydrate=hydrate)
-    rows = [r.asDict() for r in df.orderBy("rank").collect()]
-    found = rows[0]["found"] if rows else 0
-    results = []
-    for r in rows:
-        item = {"rank": r["rank"], "doc_id": r["doc_id"],
-                "score": float(r["score"]) if r["score"] is not None else None}
-        for col in ("uid", "repo", "path", "commit", "lang"):
-            if col in r and r[col] is not None:
-                item[col] = r[col]
-        results.append(item)
-    return {"query": q, "k": clamp_k(k), "segments": 1,
-            "found": int(found), "results": results}

@@ -81,26 +81,23 @@ class StageRunner:
 
     def __init__(self, manifest: BuildManifest, base_fingerprint: Any):
         self.manifest = manifest
-        self.base = base_fingerprint
+        self.fp = _fingerprint(base_fingerprint)
         self.metrics: dict[str, dict] = {}
 
-    def done(self, name: str, output: "str | Sequence[str] | None" = None,
-             extra_fp: Any = None) -> bool:
+    def done(self, name: str,
+             output: "str | Sequence[str] | None" = None) -> bool:
         """Would ``run`` skip this stage?"""
-        return self.manifest.stage_done(
-            name, _fingerprint([self.base, extra_fp]), output)
+        return self.manifest.stage_done(name, self.fp, output)
 
     def run(
         self,
         name: str,
         fn: Callable[[], dict | None],
         output: "str | Sequence[str] | None" = None,
-        extra_fp: Any = None,
     ) -> bool:
         """Execute stage ``fn`` unless already checkpointed. ``fn`` returns an
         optional metrics dict (e.g. {'rows': n}). Returns True if it ran."""
-        fp = _fingerprint([self.base, extra_fp])
-        if self.manifest.stage_done(name, fp, output):
+        if self.manifest.stage_done(name, self.fp, output):
             self.metrics[name] = {**self.manifest.data["stages"][name],
                                   "skipped": True}
             return False
@@ -109,7 +106,7 @@ class StageRunner:
         dt = time.time() - t0
         rows = info.get("rows")
         entry = {
-            "fingerprint": fp,
+            "fingerprint": self.fp,
             "status": "ok",
             "output": output,
             "seconds": round(dt, 3),

@@ -369,7 +369,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
        postings to token rows, drops the superseded ids, adds the delta
        rows and re-chunks them with build_posting_chunks. Every other
        term's chunk rows are copied through with their blobs unchanged.
-    4. N, total_len and avgdl come from the merged docs. The postings
+    4. N, total_len and avgdl come from the merged docs' write. The postings
        writer (operators/build.py:write_postings_sorted) computes every
        written chunk's max_impact at that avgdl and the stored k1/b, with
        each doc's length from the merged docs' doc store.
@@ -393,7 +393,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
     from nextsearch_api_spark.operators.compact import (
         chunks_holding, decode_postings_to_tokens, merge_postings,
     )
-    from nextsearch_api_spark.operators.wand import read_index_stats
+    from nextsearch_api_spark.operators.query import read_index_stats
     from nextsearch_api_spark.plans.generations import (
         flip_generation, gen_path,
     )
@@ -433,12 +433,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
     # the build's serving layouts: doc-id-sorted docs and prefix-sorted
     # suggest keep a flipped generation's point reads as bounded as a build's
     docs_new = gen_path(index_root, "docs", gen)
-    write_docs_sorted(union, docs_new)
-
-    row = (spark.read.parquet(docs_new)
-           .agg(F.count("*").alias("N"),
-                F.sum("doc_len").alias("total_len")).collect()[0])
-    N, total_len = int(row["N"]), int(row["total_len"] or 0)
+    N, total_len = write_docs_sorted(union, docs_new)
     avgdl = float(total_len) / N if N else 0.0
     stats.update(N=N, avgdl=avgdl, total_len=total_len)
 
@@ -458,10 +453,13 @@ def compact_deltas(spark: SparkSession, index_root: str,
             .join(F.broadcast(superseded), "doc_id", "left_semi")
             .select("term"))
     affected = affected.distinct().cache()
-    n_affected = affected.count()
-    post_new, lex_new = merge_postings(
-        spark, paths, gen, stats, affected, cfg, docs_new, superseded,
-        fw_delta.select("doc_id", "term", "tf"))
+    try:
+        n_affected = affected.count()
+        post_new, lex_new = merge_postings(
+            spark, paths, gen, stats, affected, cfg, docs_new, superseded,
+            fw_delta.select("doc_id", "term", "tf"))
+    finally:
+        affected.unpersist()
 
     stats_new = gen_path(index_root, "stats", gen)
     with open(stats_new, "w") as f:
@@ -480,5 +478,4 @@ def compact_deltas(spark: SparkSession, index_root: str,
         "stats": os.path.basename(stats_new),
         "suggest": os.path.basename(sug_new),
     }, gen)
-    affected.unpersist()
     return {"N": N, "avgdl": avgdl, "gen": gen, "affected_terms": n_affected}

@@ -127,18 +127,6 @@ def test_empty_query_results(reader):
     assert len(res) == 0
 
 
-def test_search_one_json_shape(reader):
-    from nextsearch_api_spark.operators.query import search_one
-
-    out = search_one(reader, "buffer hotterm", k=3)
-    assert set(out) == {"query", "k", "segments", "found", "results"}
-    assert out["k"] == 3 and out["segments"] == 1
-    assert len(out["results"]) <= 3
-    if out["results"]:
-        r = out["results"][0]
-        assert {"rank", "doc_id", "score", "uid", "repo", "path"} <= set(r)
-
-
 def test_assign_doc_ids_paths_agree(spark, tiny_corpus):
     """The keys-collect fast path and the distributed sample+count path must
     assign identical dense ids — and both must equal the global key rank."""

@@ -155,50 +155,20 @@ def test_chunk_compression_beats_raw():
     assert len(blob) == 2 * len(ids)
 
 
-def test_check_index_format_refuses_v4(tmp_path):
+@pytest.mark.parametrize("fmt", [4, 5, 6, 7])
+def test_check_index_format_refuses_old_formats(tmp_path, fmt):
+    """An engine reads format 8 only, and refuses older indexes with
+    "rebuild the index": v5 chunk rows carry sum_tf/max_tf/min_dl and a
+    lexicon cf and max_impact, and a v5 index built by compact_deltas can
+    hold max_impact values from an older avgdl; a v6 index has no doc store
+    beside its Parquet docs; a v7 index carries a doc_len stream in every
+    blob and a ``dl_off`` column."""
     from nextsearch_api_spark.operators.build import FORMAT_VERSION
-    from nextsearch_api_spark.operators.wand import check_index_format
+    from nextsearch_api_spark.operators.query import check_index_format
 
     assert FORMAT_VERSION == 8
     path = tmp_path / "stats.json"
-    path.write_text(json.dumps({"format": 4, "N": 1, "avgdl": 1.0}))
-    with pytest.raises(ValueError, match="format 4.*rebuild the index"):
+    path.write_text(json.dumps({"format": fmt, "N": 1, "avgdl": 1.0}))
+    with pytest.raises(ValueError, match=f"format {fmt}.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))
     check_index_format({"format": 8}, str(path))
-
-
-def test_check_index_format_refuses_v5(tmp_path):
-    """v5 chunk rows carry sum_tf/max_tf/min_dl and a lexicon cf and
-    max_impact, and a v5 index built by compact_deltas can hold max_impact
-    values from an older avgdl: a v6 engine refuses it."""
-    from nextsearch_api_spark.operators.wand import check_index_format
-
-    path = tmp_path / "stats.json"
-    path.write_text(json.dumps({"format": 5, "N": 1, "avgdl": 1.0,
-                                "impact_avgdl": 1.0}))
-    with pytest.raises(ValueError, match="format 5.*rebuild the index"):
-        check_index_format(json.loads(path.read_text()), str(path))
-
-
-def test_check_index_format_refuses_v6(tmp_path):
-    """A v6 index has no doc store beside its Parquet docs, and its docs
-    row groups were sized for keyed Parquet reads: a v7 engine refuses it
-    rather than hydrate from it."""
-    from nextsearch_api_spark.operators.wand import check_index_format
-
-    path = tmp_path / "stats.json"
-    path.write_text(json.dumps({"format": 6, "N": 1, "avgdl": 1.0}))
-    with pytest.raises(ValueError, match="format 6.*rebuild the index"):
-        check_index_format(json.loads(path.read_text()), str(path))
-
-
-def test_check_index_format_refuses_v7(tmp_path):
-    """A v7 index carries a doc_len stream in every blob and a ``dl_off``
-    column, and its doc store has no doc-length files: a v8 engine refuses
-    it rather than decode its blobs as two streams."""
-    from nextsearch_api_spark.operators.wand import check_index_format
-
-    path = tmp_path / "stats.json"
-    path.write_text(json.dumps({"format": 7, "N": 1, "avgdl": 1.0}))
-    with pytest.raises(ValueError, match="format 7.*rebuild the index"):
-        check_index_format(json.loads(path.read_text()), str(path))

@@ -165,7 +165,7 @@ def test_unreadable_postings_raise_on_every_batch_path(broken_postings):
     specs = [QuerySpec(0, term["term"], 1)]
     df_map, ranked = query._parse_batch(rd, specs, BM25Params())
     with pytest.raises(pa.ArrowInvalid):
-        query._driver_small_search(rd, sorted(df_map), ranked, BM25Params())
+        query.rank_on_driver(rd, ranked, BM25Params())
     with pytest.raises(pa.ArrowInvalid):
         batch_search(rd, specs)
     with pytest.raises(pa.ArrowInvalid):

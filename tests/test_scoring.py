@@ -170,6 +170,48 @@ def test_one_query_time_decode_and_impact_site():
     assert sites == {name: expected for name in sites}, sites
 
 
+def test_one_weigher_and_one_driver_rank_call():
+    """Query weighting and driver-side ranking are written once for every
+    driver query: walking the package source, ``bm25_idf`` has one call
+    site, the weigher (query.weigh), and ``rank_chunk_rows`` two — the
+    driver-side rank call (query.rank_on_driver), which the serving engine
+    and the batch tier's driver path share, and the distributed plan's
+    range groups (query._range_rank_udf). A second weigher or rank path
+    would add a call site here."""
+    import ast
+    import pathlib
+
+    import nextsearch_api_spark
+
+    pkg = pathlib.Path(nextsearch_api_spark.__file__).parent
+    sites: dict[str, list[tuple[str, str]]] = {
+        "bm25_idf": [], "rank_chunk_rows": []}
+
+    def walk(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name in sites:
+                    sites[name].append((rel, scope))
+            walk(child, rel, inner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        walk(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(),
+             "")
+    assert sites == {
+        "bm25_idf": [("operators/query.py", "weigh")],
+        "rank_chunk_rows": [("operators/query.py", "rank_on_driver"),
+                            ("operators/query.py",
+                             "_range_rank_udf.rank_range")],
+    }, sites
+
+
 def test_doc_len_reaches_bm25_impact_only_from_the_doc_store():
     """Walking the package source, every ``bm25_impact`` call takes its
     doc-length argument from ``DocStore.doc_lens`` — a ``.doc_lens(...)``

@@ -346,6 +346,43 @@ def test_update_without_tokens_supersedes_base_version(spark, tmp_path):
     assert old_id not in {r["doc_id"] for r in hits}
 
 
+def test_failed_compaction_leaves_no_cached_frame(spark, tmp_path,
+                                                 monkeypatch):
+    """compact_deltas caches the affected-terms frame; when the postings
+    write raises, the frame is released all the same: the session holds as
+    many persistent RDDs after the failed call as before it, and the
+    generation pointer has not moved."""
+    from nextsearch_api_spark.config import IndexPaths
+    from nextsearch_api_spark.operators import compact
+    from nextsearch_api_spark.sources.corpus import CORPUS_SCHEMA, read_corpus
+    from nextsearch_api_spark.streaming.ingest import (
+        compact_deltas, stream_corpus_to_forward,
+    )
+
+    base_dir = str(tmp_path / "base")
+    write_corpus(generate_corpus(spark, 40, seed=42), base_dir,
+                 partition_by=None)
+    root = str(tmp_path / "idx")
+    build_index(spark, read_corpus(spark, base_dir), root)
+    src = str(tmp_path / "new_src")
+    spark.createDataFrame([("r/new", "a.py", "c1", "py", "zzleak hotterm")],
+                          CORPUS_SCHEMA).write.parquet(src)
+    deltas = str(tmp_path / "new")
+    stream_corpus_to_forward(spark, src, deltas, str(tmp_path / "new_ck"),
+                             trigger_once=True).awaitTermination(120)
+
+    def failing_write(*args, **kwargs):
+        raise OSError("postings write failed")
+
+    monkeypatch.setattr(compact, "write_postings_sorted", failing_write)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs  # noqa: SLF001
+    before = persistent().size()
+    with pytest.raises(OSError, match="postings write failed"):
+        compact_deltas(spark, root, deltas)
+    assert persistent().size() == before
+    assert IndexPaths(root).gen == 0
+
+
 def test_ingest_flip_then_reload_hydrates_new_generation(spark, tmp_path):
     """An ingest flip writes the build's serving layouts (doc-id-sorted
     docs with their doc store, prefix-sorted suggest), and Engine.reload

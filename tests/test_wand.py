@@ -165,8 +165,8 @@ def test_wand_load_reads_no_postings(tiny_index, tmp_path):
             fh.seek(0)
             fh.write(data)
     eng = WandEngine(clone)
-    assert eng._postings.counters() == {"row_groups_read": 0,
-                                        "rows_scanned": 0}
+    assert eng._by_term(eng.paths.postings).counters() == {
+        "row_groups_read": 0, "rows_scanned": 0}
     assert eng.N > 0 and eng._df
 
 
