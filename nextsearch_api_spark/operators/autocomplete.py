@@ -9,7 +9,7 @@ completed; the preceding text is echoed as a prefix (:160-169).
 
 Spark-first: instead of a trie we explode every term into its prefixes and
 keep the top-10 per prefix with a window — one shuffle, O(total prefix count),
-servable as a broadcast dict or by Parquet prefix lookup.
+served by Parquet prefix lookup (LazySuggester).
 """
 
 from __future__ import annotations
@@ -98,32 +98,12 @@ class _SuggestServing:
         return [base + c for c in cands[:k]]
 
 
-class Suggester(_SuggestServing):
-    """Driver-side serving over the precomputed table, collected once into a
-    dict — exact reference parity (the reference holds the whole trie in RAM,
-    api_autocomplete.cpp:89-139). O(table) driver memory: right for small and
-    medium indexes; at web-scale vocabularies use :class:`LazySuggester`."""
-
-    def __init__(self, suggest_df: DataFrame,
-                 df_lookup: "dict[str, int] | None" = None,
-                 max_prefix_len: int = SUGGEST_MAX_PREFIX_LEN):
-        rows = suggest_df.select("prefix", "term", "rnk").collect()
-        table: dict[str, list[tuple[int, str]]] = {}
-        for r in rows:
-            table.setdefault(r["prefix"], []).append((r["rnk"], r["term"]))
-        self.table = {p: [t for _, t in sorted(v)] for p, v in table.items()}
-        self.df_lookup = df_lookup
-        self.max_prefix_len = max_prefix_len
-
-    def _candidates(self, tok: str) -> list[str]:
-        return self.table.get(tok, [])
-
-
 class LazySuggester(_SuggestServing):
     """Scale-out suggest serving: answer lookups straight from the suggest
     Parquet through a footer index instead of collecting the table into
-    driver RAM (VERDICT r5 next #1 — at a 100 TB-corpus vocabulary the
-    collected dict is the one serving structure that grows with corpus size).
+    driver RAM (VERDICT r5 next #1 — at a 100 TB-corpus vocabulary a
+    collected dict would be the one serving structure that grows with
+    corpus size).
 
     Works on any suggest layout, but is O(1)-ish bytes per lookup when the
     table is written prefix-range-partitioned + sorted (the build's serving

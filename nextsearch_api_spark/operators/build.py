@@ -67,7 +67,7 @@ from pyspark.sql.types import (
 )
 
 from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
-from nextsearch_api_spark.functions.docstore import uid_column, write_doc_store
+from nextsearch_api_spark.functions.docstore import write_doc_store
 from nextsearch_api_spark.functions.scoring import bm25_impact
 from nextsearch_api_spark.functions.text import arrow_kept_tokens
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
@@ -97,8 +97,14 @@ _KEY_SEP = "\x01"
 # logic to rebuild indexes created by older code. 7: the docs component
 # also carries the doc store (functions/docstore.py) that hydration reads;
 # 8: postings blobs hold doc-id gaps and tf only (functions/codec.py), and
-# doc lengths are read from the doc store
-FORMAT_VERSION = 8
+# doc lengths are read from the doc store; 9: the doc store's twins are
+# addressed by row offset, and docs store no uid (derived by uid_column)
+FORMAT_VERSION = 9
+
+# the docs component's Parquet columns, as the build and compact_deltas
+# write them
+DOCS_COLUMNS = ("doc_id", "repo", "path", "commit", "lang", "doc_len",
+                "content_sha256")
 
 
 def _parquet_rows(path: str) -> int:
@@ -768,8 +774,9 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # the postings stage's recorded N/total_len. 4 = no doclen table:
         # docs is written from the postings tokenize and records
         # N/total_len for the postings and stats stages. 5 = doc lengths
-        # are a column of the doc store's Arrow twins.
-        "build_layout": 5,
+        # are a column of the doc store's Arrow twins. 6 = no uid in ids or
+        # docs.
+        "build_layout": 6,
         "chunk_size": cfg.chunk_size,
         "k1": cfg.bm25.k1, "b": cfg.bm25.b,
         "corpus": _corpus_fingerprint(corpus),
@@ -790,9 +797,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
         # tokenize here to learn avgdl early measured 11 s of the 17 s
         # 8-core ids stage at 400k docs, DRAM-bandwidth-bound).
         ids = assign_doc_ids(corpus).select(
-            "doc_id",
-            uid_column().alias("uid"),
-            "repo", "path", "commit", "lang",
+            "doc_id", "repo", "path", "commit", "lang",
             F.sha2(F.col("content"), 256).alias("content_sha256"),
             "content", "seg",
         )
@@ -832,11 +837,10 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
                 .select("doc_id", F.col("tf").alias("doc_len")))
         docs = (
             spark.read.parquet(ids_path)
-            .select("doc_id", "uid", "repo", "path", "commit", "lang",
+            .select("doc_id", "repo", "path", "commit", "lang",
                     "content_sha256")
             .join(lens, "doc_id")
-            .select("doc_id", "uid", "repo", "path", "commit", "lang",
-                    "doc_len", "content_sha256")
+            .select(*DOCS_COLUMNS)
         )
         N, total_len = write_docs_sorted(docs, paths.docs)
         return {"rows": N, "total_len": total_len}

@@ -613,7 +613,16 @@ def batch_search(
     single-term queries scans just the chunks that can hold a top-k doc —
     exact results either way (rank- and found-identical by construction;
     set False to force exhaustive decode, e.g. for parity testing; it also
-    turns off the driver path)."""
+    turns off the driver path).
+
+    ``reader`` must hold a Spark session: a reader without one (the
+    serving engine, operators/wand.py:WandEngine) raises TypeError before
+    any work."""
+    if reader.spark is None:
+        raise TypeError(
+            f"batch_search needs an IndexReader with a Spark session; this "
+            f"{type(reader).__name__} has none (serve single queries with "
+            "WandEngine.search)")
     params = params or BM25Params()
     df_map, ranked = _parse_batch(reader, queries, params)
 
@@ -642,10 +651,10 @@ def _hydrate_topk(reader: IndexReader, table: pa.Table) -> DataFrame:
     """Attach doc metadata to a ≤Σk-row result table, on the driver.
 
     The hits come from the docs component's doc store
-    (functions/docstore.py) — the same memory-mapped take the serving tier
-    hydrates with — and join as five string columns of the Arrow table, so
-    the answer stays a job-free LocalRelation. Left-join semantics: a hit
-    without a docs row keeps null metadata."""
+    (functions/docstore.py) — the same memory-mapped row read the serving
+    tier hydrates with — and join as five string columns of the Arrow
+    table, so the answer stays a job-free LocalRelation. Left-join
+    semantics: a hit without a docs row keeps null metadata."""
     meta = reader.store.hits(table.column("doc_id").to_numpy())
     for f in HIT_FIELDS:
         table = table.append_column(f, pa.array(meta[f], type=pa.string()))

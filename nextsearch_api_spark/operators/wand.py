@@ -83,9 +83,10 @@ class WandEngine(IndexReader):
 
     def hydrate(self, results: list[dict]) -> None:
         """Fill each hit's doc metadata (uid, repo, path, commit, lang) in
-        place from the doc store (functions/docstore.py): per store file one
-        ``searchsorted`` and one ``take`` over memory-mapped Arrow columns,
-        O(k · log N) and no Parquet read — the reference's ``docs[docId]``
+        place from the doc store (functions/docstore.py): ``DocStore.rows``
+        resolves each id to its twin row by offset, and the hit's fields
+        are read from that row's memory-mapped buffers — O(k), no Arrow
+        kernel call and no Parquet read, the reference's ``docs[docId]``
         (api_engine.cpp:508-532). Left-join semantics: a hit without a docs
         row keeps only its rank/score fields."""
         if not results:

@@ -357,8 +357,10 @@ def compact_deltas(spark: SparkSession, index_root: str,
     corpus: like a Lucene segment merge, it re-chunks from the postings.
 
     1. docs ∪ delta docs, deduped by doc_id and collision-checked against
-       uid. A delta uid already in docs is an update: the base version's
-       doc_id is superseded.
+       uid (the delta docs store it; the base docs derive it with
+       uid_column, and the merged docs are written without it). A delta
+       uid already in docs is an update: the base version's doc_id is
+       superseded.
     2. The affected terms are the delta's terms plus every term holding a
        superseded id, found exactly: a scan of the chunk columns
        (term, doc_lo, doc_hi) keeps the chunks whose range can hold a
@@ -388,7 +390,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
 
     from nextsearch_api_spark.config import BuildConfig, IndexPaths
     from nextsearch_api_spark.operators.build import (
-        write_docs_sorted, write_suggest_sorted,
+        DOCS_COLUMNS, write_docs_sorted, write_suggest_sorted,
     )
     from nextsearch_api_spark.operators.compact import (
         chunks_holding, decode_postings_to_tokens, merge_postings,
@@ -414,7 +416,8 @@ def compact_deltas(spark: SparkSession, index_root: str,
     ddocs_all = (spark.read.parquet(delta_docs_dir(delta_forward_dir))
                  .dropDuplicates(["doc_id"]))      # at-least-once replays
     ddocs = ddocs_all.where(F.col("doc_len") > 0)
-    base_docs = spark.read.parquet(paths.docs)
+    base_docs = spark.read.parquet(paths.docs).withColumn("uid",
+                                                          uid_column())
     delta_uids = ddocs_all.select("uid")
     superseded = (base_docs.join(F.broadcast(delta_uids), "uid", "left_semi")
                   .select("doc_id"))
@@ -433,7 +436,7 @@ def compact_deltas(spark: SparkSession, index_root: str,
     # the build's serving layouts: doc-id-sorted docs and prefix-sorted
     # suggest keep a flipped generation's point reads as bounded as a build's
     docs_new = gen_path(index_root, "docs", gen)
-    N, total_len = write_docs_sorted(union, docs_new)
+    N, total_len = write_docs_sorted(union.select(*DOCS_COLUMNS), docs_new)
     avgdl = float(total_len) / N if N else 0.0
     stats.update(N=N, avgdl=avgdl, total_len=total_len)
 

@@ -155,20 +155,21 @@ def test_chunk_compression_beats_raw():
     assert len(blob) == 2 * len(ids)
 
 
-@pytest.mark.parametrize("fmt", [4, 5, 6, 7])
+@pytest.mark.parametrize("fmt", [4, 5, 6, 7, 8])
 def test_check_index_format_refuses_old_formats(tmp_path, fmt):
-    """An engine reads format 8 only, and refuses older indexes with
+    """An engine reads format 9 only, and refuses older indexes with
     "rebuild the index": v5 chunk rows carry sum_tf/max_tf/min_dl and a
     lexicon cf and max_impact, and a v5 index built by compact_deltas can
     hold max_impact values from an older avgdl; a v6 index has no doc store
     beside its Parquet docs; a v7 index carries a doc_len stream in every
-    blob and a ``dl_off`` column."""
+    blob and a ``dl_off`` column; a v8 index stores ``uid`` in its docs
+    and keys every row of its doc store's twins by a ``doc_id`` column."""
     from nextsearch_api_spark.operators.build import FORMAT_VERSION
     from nextsearch_api_spark.operators.query import check_index_format
 
-    assert FORMAT_VERSION == 8
+    assert FORMAT_VERSION == 9
     path = tmp_path / "stats.json"
     path.write_text(json.dumps({"format": fmt, "N": 1, "avgdl": 1.0}))
     with pytest.raises(ValueError, match=f"format {fmt}.*rebuild the index"):
         check_index_format(json.loads(path.read_text()), str(path))
-    check_index_format({"format": 8}, str(path))
+    check_index_format({"format": 9}, str(path))

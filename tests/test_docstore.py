@@ -18,7 +18,7 @@ from hypothesis import strategies as st
 
 from nextsearch_api_spark.config import IndexPaths
 from nextsearch_api_spark.functions.docstore import (
-    HIT_FIELDS, DocStore, uid_column, uid_of, write_doc_store,
+    FIRST_ID_KEY, HIT_FIELDS, DocStore, uid_column, uid_of, write_doc_store,
 )
 from nextsearch_api_spark.operators.build import build_index
 from nextsearch_api_spark.sources.corpus import generate_corpus, write_corpus
@@ -30,7 +30,7 @@ META = HIT_FIELDS  # uid, repo, path, commit, lang
 def compacted_index(spark, tmp_path_factory):
     """A 100-doc build plus a streamed delta of new docs, compacted into
     generation 1 → (root, (stats N, Spark rows, pyarrow.dataset rows) of
-    the docs right after the build)."""
+    the docs right after the build, the delta directory)."""
     from nextsearch_api_spark.streaming.ingest import (
         compact_deltas, stream_corpus_to_forward,
     )
@@ -54,7 +54,7 @@ def compacted_index(spark, tmp_path_factory):
     stream_corpus_to_forward(spark, stream_src, deltas, str(tmp / "ckpt"),
                              trigger_once=True).awaitTermination(120)
     compact_deltas(spark, root, deltas)
-    return root, built
+    return root, built, deltas
 
 
 def _stats_n(root: str) -> int:
@@ -64,7 +64,11 @@ def _stats_n(root: str) -> int:
 
 
 def _full_join(docs_path: str) -> dict:
-    t = ds.dataset(docs_path).to_table(columns=["doc_id", *META]).to_pydict()
+    """doc_id → hit fields from the Parquet docs, the uid derived from
+    (repo, path, commit) as the index defines it (no uid is stored)."""
+    t = ds.dataset(docs_path).to_table(
+        columns=["doc_id", *META[1:]]).to_pydict()
+    t["uid"] = [uid_of(*r) for r in zip(t["repo"], t["path"], t["commit"])]
     return {d: {f: t[f][i] for f in META} for i, d in enumerate(t["doc_id"])}
 
 
@@ -87,24 +91,47 @@ def test_uid_twin_equals_spark_expression(spark, rows):
 
 
 @pytest.mark.parametrize("which", ["built", "compacted"])
-def test_uid_twin_equals_stored_uid(tiny_index, compacted_index, which):
-    """Every docs row's stored uid — written by the build, and by the
-    streaming sink for streamed docs — equals the twin hydration uses."""
+def test_uid_twin_equals_stored_uid(spark, tiny_index, compacted_index,
+                                    which):
+    """The docs store no uid: every docs row's uid is uid_column() over
+    its (repo, path, commit), and equals the twin hydration uses. After
+    compact_deltas, every streamed doc's uid — stored by the streaming
+    sink in its delta docs — is among them."""
     root = tiny_index[0] if which == "built" else compacted_index[0]
-    t = ds.dataset(IndexPaths(root).docs).to_table(
-        columns=["uid", "repo", "path", "commit"]).to_pydict()
-    assert t["uid"]
-    assert t["uid"] == [uid_of(*r) for r in
-                        zip(t["repo"], t["path"], t["commit"])]
+    docs = spark.read.parquet(IndexPaths(root).docs)
+    assert "uid" not in docs.columns
+    rows = docs.select(uid_column().alias("uid"), "repo", "path",
+                       "commit").collect()
+    assert rows
+    assert [r["uid"] for r in rows] == [uid_of(r["repo"], r["path"],
+                                               r["commit"]) for r in rows]
+    if which == "compacted":
+        from nextsearch_api_spark.streaming.ingest import delta_docs_dir
+        streamed = {r[0] for r in spark.read.parquet(
+            delta_docs_dir(compacted_index[2])).where("doc_len > 0")
+            .select("uid").collect()}
+        assert streamed and streamed <= {r["uid"] for r in rows}
+
+
+def _twin_ids(path: str) -> list:
+    """The doc ids of one twin's docs: its ``doc_id`` column, or, in a
+    dense twin, the first id plus the offset of each row with a doc."""
+    import pyarrow as pa
+    from pyarrow import ipc
+
+    with pa.memory_map(path) as mm:
+        t = ipc.open_file(mm).read_all()
+    if "doc_id" in t.column_names:
+        return t.column("doc_id").to_pylist()
+    first = int(t.schema.metadata[FIRST_ID_KEY])
+    lens = t.column("doc_len").to_pylist()
+    return [first + i for i, n in enumerate(lens) if n]
 
 
 def test_built_doc_store_files_are_disjoint_and_ascending(tiny_index):
     """One Arrow file per non-empty docs part; in doc-id order their
     [first, last] ranges are disjoint and ascending, and within every file
     the ids ascend. Together they hold exactly the Parquet docs' ids."""
-    import pyarrow as pa
-    from pyarrow import ipc
-
     root, _ = tiny_index
     docs = IndexPaths(root).docs
     spans = DocStore(docs).ranges()
@@ -115,9 +142,7 @@ def test_built_doc_store_files_are_disjoint_and_ascending(tiny_index):
         assert lo <= hi < lo2
     ids = []
     for lo, hi, path in spans:
-        with pa.memory_map(path) as mm:
-            t = ipc.open_file(mm).read_all()
-        col = t.column("doc_id").to_pylist()
+        col = _twin_ids(path)
         assert col == sorted(col) and (col[0], col[-1]) == (lo, hi)
         ids += col
     parquet_ids = ds.dataset(docs).to_table(
@@ -224,7 +249,7 @@ def test_docs_read_as_n_parquet_rows(spark, compacted_index):
     """The doc store's directory is hidden from Parquet reads: after
     build_index and after compact_deltas, Spark and pyarrow.dataset both
     read the docs component as exactly stats N rows."""
-    root, (n_built, spark_built, ds_built) = compacted_index
+    root, (n_built, spark_built, ds_built), _ = compacted_index
     assert spark_built == ds_built == n_built > 0
     p = IndexPaths(root)
     assert p.docs.endswith("_g1")
@@ -245,7 +270,7 @@ def test_backup_restore_serves_identical_hydrated_answers(
     )
     from nextsearch_api_spark.plans.backup import backup_index, restore_index
 
-    root, _ = compacted_index
+    root = compacted_index[0]
     backup_index(root, str(tmp_path / "bak"))
     restored = str(tmp_path / "restored")
     restore_index(str(tmp_path / "bak"), restored)
@@ -380,3 +405,162 @@ def test_doc_lens_equal_parquet_doc_len(tiny_index, compacted_index, which):
     assert got.tolist() == t.column("doc_len").to_pylist()
     assert any(d >= STREAM for d in t.column("doc_id").to_pylist()) \
         == (which == "compacted")
+
+
+# ------------------------------------------------------- offset addressing --
+
+def test_holes_and_edges_of_every_file_have_no_doc(len_store):
+    """A dense part with holes is one row per id of its span, without a
+    doc_id column: a hole id, and the ids just before the first and just
+    past the last id of every file, give all-None hits and a doc_lens
+    KeyError, while the ids of the part's docs resolve to their rows."""
+    import numpy as np
+
+    store = DocStore(len_store)
+    spans = store.ranges()
+    holes = [d for d in range(100, 200) if d % 3 == 0]
+    lo, hi, path = next(r for r in spans if r[0] == 100)
+    assert (lo, hi) == (100, 199) and _twin_ids(path) == [
+        d for d, _ in LEN_PARTS["holes"]]
+    import pyarrow as pa
+    from pyarrow import ipc
+    with pa.memory_map(path) as mm:
+        t = ipc.open_file(mm).read_all()
+    assert "doc_id" not in t.column_names and t.num_rows == 100
+    file, row = store.rows([100, 101, 102, 199])
+    assert file.tolist() == [spans.index((lo, hi, path))] * 4
+    assert row.tolist() == [0, 1, 2, 99]
+
+    edges = {e for lo, hi, _ in spans for e in (lo - 1, hi + 1)}
+    absent = sorted((set(holes) | edges) - set(ALL_LENS))
+    assert len(absent) >= len(holes) + 2 * len(spans) - 1
+    got = store.hits(absent + [101])
+    for j in range(len(absent)):
+        assert {f: got[f][j] for f in META} == dict.fromkeys(META), \
+            absent[j]
+    assert got["path"][-1] == "p101" and got["uid"][-1] == uid_of(
+        "r", "p101", "c")
+    for d in absent:
+        with pytest.raises(KeyError, match=str(d)):
+            store.doc_lens(np.array([101, d], dtype=np.int64))
+    assert store.doc_lens(absent[:0]).tolist() == []
+
+
+@pytest.mark.parametrize("size,width", [
+    (127, 8), (128, 8), (129, 16),
+    (32767, 16), (32768, 16), (32769, 32),
+])
+def test_dictionary_indices_take_the_narrowest_width(spark, tmp_path, size,
+                                                     width):
+    """``repo`` and ``lang`` keep dictionary indices of the narrowest signed
+    width whose range holds the dictionary's last index — across the int8
+    and int16 limits — and hydrate the right value from any index."""
+    import pyarrow as pa
+    from pyarrow import ipc
+
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    n = max(size, 200)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(n), pa.int64()),
+        "repo": [f"repo{i % size}" for i in range(n)],
+        "path": [f"p{i}" for i in range(n)], "commit": ["c"] * n,
+        "lang": ["py"] * n,
+        "doc_len": pa.array([1] * n, pa.int32()),
+    }), docs / "part-00000.parquet")
+    write_doc_store(spark, str(docs))
+    (_, _, path), = DocStore(str(docs)).ranges()
+    with pa.memory_map(path) as mm:
+        schema = ipc.open_file(mm).schema
+    assert schema.field("repo").type.index_type == getattr(pa, f"int{width}")()
+    assert schema.field("lang").type.index_type == pa.int8()
+    probe = [0, 1, size - 2, size - 1, n - 1]
+    got = DocStore(str(docs)).hits(probe)
+    assert got["repo"] == [f"repo{i % size}" for i in probe]
+    assert got["lang"] == ["py"] * len(probe)
+
+
+def _store_of(spark, root, rows: int, parts: int = 4) -> str:
+    """A docs component of ``rows`` dense docs (every 7th id a hole) in
+    ``parts`` Parquet parts, with its doc store."""
+    import pyarrow as pa
+
+    docs = root / "docs"
+    docs.mkdir(parents=True)
+    ids = [d for d in range(rows * 7 // 6 + 1) if d % 7 != 3][:rows]
+    step = -(-rows // parts)
+    for i in range(parts):
+        part = ids[i * step:(i + 1) * step]
+        m = len(part)
+        pq.write_table(pa.table({
+            "doc_id": pa.array(part, pa.int64()),
+            "repo": [f"r{d % 5}" for d in part],
+            "path": [f"p{d}" for d in part], "commit": ["c"] * m,
+            "lang": ["py"] * m,
+            "doc_len": pa.array([1 + d % 9 for d in part], pa.int32()),
+        }), docs / f"part-{i:05d}.parquet")
+    write_doc_store(spark, str(docs))
+    return str(docs)
+
+
+def test_open_allocates_nothing_per_doc(spark, tmp_path):
+    """Opening a store maps its files and checks their ranges: the
+    tracemalloc peak of the open is the same for stores of the same
+    files that differ 8x in rows (a dense doc_len spread, ids copy or
+    per-doc object would grow it by at least 4 bytes per doc)."""
+    import gc
+    import tracemalloc
+
+    small = _store_of(spark, tmp_path / "s", 20_000)
+    big = _store_of(spark, tmp_path / "b", 160_000)
+
+    def peak(docs: str) -> int:
+        DocStore(docs)  # warm imports and caches
+        gc.collect()
+        tracemalloc.start()
+        try:
+            store = DocStore(docs)
+            _, top = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert store.doc_lens([1]).tolist() == [2]
+        return top
+
+    p_small, p_big = min(peak(small) for _ in range(3)), min(
+        peak(big) for _ in range(3))
+    assert p_big <= p_small + 16_384, (p_small, p_big)
+
+
+def test_rows_is_the_one_id_to_row_resolver():
+    """In functions/docstore.py, DocStore.rows is the only code that
+    reads the twins' id addressing (the files' first and last ids and
+    their doc_id columns), and both hits and doc_lens call it."""
+    import nextsearch_api_spark.functions.docstore as mod
+
+    tree = ast.parse(pathlib.Path(mod.__file__).read_text())
+    store = next(n for n in tree.body
+                 if isinstance(n, ast.ClassDef) and n.name == "DocStore")
+    addressing = {"_firsts", "_lasts", "ids", "first", "last"}
+    readers = set()
+    calls_rows = set()
+    for fn in store.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Attribute) and node.attr in addressing
+                    and isinstance(node.ctx, ast.Load)):
+                readers.add(fn.name)
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "rows"
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "self"):
+                calls_rows.add(fn.name)
+    # __init__ checks the ranges and ranges() reports them
+    assert readers == {"__init__", "ranges", "rows"}, readers
+    assert calls_rows == {"hits", "doc_lens"}, calls_rows
+    # no other function of the module resolves ids
+    others = [n.name for n in tree.body if isinstance(n, ast.FunctionDef)
+              and any(isinstance(c, ast.Attribute) and c.attr == "searchsorted"
+                      for c in ast.walk(n))]
+    assert others == [], others

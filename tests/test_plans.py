@@ -110,6 +110,29 @@ def test_distributed_batch_runs_two_jobs(spark, plan_env):
     assert rows and 1 <= jobs <= 2, jobs
 
 
+def test_batch_search_refuses_a_reader_without_a_session(tiny_index,
+                                                        monkeypatch):
+    """The serving WandEngine is an IndexReader without a Spark session:
+    batch_search refuses it with a TypeError before any work (no parse,
+    no lexicon read, no rank), for the driver path and the distributed
+    plan alike."""
+    from nextsearch_api_spark.operators import query as query_mod
+    from nextsearch_api_spark.operators.wand import WandEngine
+
+    eng = WandEngine(tiny_index[0])
+
+    def no_work(*a, **kw):
+        raise AssertionError("batch_search started work")
+
+    for name in ("_parse_batch", "rank_on_driver", "_range_stage"):
+        monkeypatch.setattr(query_mod, name, no_work)
+    monkeypatch.setattr(eng, "term_dfs", no_work)
+    for budget in (None, 0):
+        with pytest.raises(TypeError, match="Spark session"):
+            batch_search(eng, [QuerySpec(0, "hotterm buffer", 5)],
+                         hydrate=True, small_query_max_postings=budget)
+
+
 def test_docs_scan_prunes_columns(spark, tiny_index):
     root, _ = tiny_index
     df = spark.read.parquet(IndexPaths(root).docs).select("doc_id", "doc_len")

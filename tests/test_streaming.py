@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nextsearch_api_spark.functions.docstore import uid_column
 from nextsearch_api_spark.operators.build import build_index
 from nextsearch_api_spark.sources.corpus import generate_corpus, write_corpus
 
@@ -90,10 +91,12 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     assert p.postings.endswith("_g1") and p.docs.endswith("_g1")
     assert p.stats.endswith("_g1.json")
 
-    # merged docs table now hydrates streamed docs too
+    # merged docs table now hydrates streamed docs too; docs store no uid,
+    # so it is derived with the index's uid_column()
     streamed_uid = ddocs.select("uid").first()[0]
     docs = spark.read.parquet(p.docs)
-    assert docs.where(F.col("uid") == streamed_uid).count() == 1
+    assert "uid" not in docs.columns
+    assert docs.where(uid_column() == streamed_uid).count() == 1
     assert docs.count() == stats["N"]
 
     # merged index serves queries over both old and new docs
@@ -160,7 +163,8 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     assert "mode" not in res  # internal field stripped from the JSON shape
     assert (MultiSegmentEngine([root]).search("hotterm buffer", 3)["found"]
             == eng.search("hotterm buffer", 3)["found"])
-    docs2 = spark.read.parquet(IndexPaths(root).docs)
+    docs2 = spark.read.parquet(IndexPaths(root).docs).withColumn(
+        "uid", uid_column())
     assert docs2.count() == stats2["N"]
     # each uid appears exactly once (no duplicate versions)
     assert docs2.groupBy("uid").count().where(F.col("count") > 1).count() == 0
@@ -248,7 +252,7 @@ def test_compaction_rows_match_token_oracle(spark, tmp_path):
         d_uids = {r[0] for r in spark.read.parquet(delta_docs_dir(deltas))
                   .select("uid").collect()}
         sup = {d for d, uid in spark.read.parquet(paths.docs)
-               .select("doc_id", "uid").collect() if uid in d_uids}
+               .select("doc_id", uid_column()).collect() if uid in d_uids}
         rows = {(d, t): (tf, dl) for d, t, tf, dl in
                 spark.read.parquet(deltas)
                 .select("doc_id", "term", "tf", "doc_len").collect()}
@@ -389,8 +393,6 @@ def test_ingest_flip_then_reload_hydrates_new_generation(spark, tmp_path):
     drops the old generation's handles: hydration then reads the new
     generation's doc store — streamed docs come back with their
     metadata."""
-    import pyarrow.dataset as pds
-
     from nextsearch_api_spark.api import Engine
     from nextsearch_api_spark.config import IndexPaths
     from nextsearch_api_spark.functions.docstore import DocStore
@@ -433,11 +435,11 @@ def test_ingest_flip_then_reload_hydrates_new_generation(spark, tmp_path):
 
     eng.reload()
     assert eng.wand is not old  # the old generation's indexes are dropped
-    t = pds.dataset(p.docs).to_table(
-        columns=["doc_id", "uid", "repo", "path", "commit", "lang"]
-    ).to_pydict()
-    meta = {d: {f: t[f][i] for f in ("uid", "repo", "path", "commit", "lang")}
-            for i, d in enumerate(t["doc_id"])}
+    meta = {r["doc_id"]: r.asDict() for r in spark.read.parquet(p.docs).select(
+        "doc_id", uid_column().alias("uid"), "repo", "path", "commit",
+        "lang").collect()}
+    for m in meta.values():
+        del m["doc_id"]
     out = eng.search(q, 100)
     res = out["results"]
     assert len(res) == min(100, out["found"]) and out["found"] > 0

@@ -1,16 +1,19 @@
 """Autocomplete parity vs the pandas oracle (reference trie ranking:
 (Σdf desc, term asc), top-10/prefix, len≥2 — api_autocomplete.cpp:33-55,
-105-119) and randomized serving-vs-pruned-plan equivalence (SURVEY.md §5
-items 2, 7)."""
+105-119), serving vs a brute-force ranking over the suggest table's rows,
+and randomized serving-vs-pruned-plan equivalence (SURVEY.md §5 items 2,
+7)."""
 
 import random
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from nextsearch_api_spark.config import IndexPaths
-from nextsearch_api_spark.operators.autocomplete import Suggester
+from nextsearch_api_spark.config import (
+    IndexPaths, SUGGEST_K_MAX, SUGGEST_K_MIN, SUGGEST_MAX_PREFIX_LEN,
+)
+from nextsearch_api_spark.operators.autocomplete import (
+    LazySuggester, split_suggest_input,
+)
 from nextsearch_api_spark.operators.wand import WandEngine
 from nextsearch_api_spark.oracle import suggest_oracle
 
@@ -22,9 +25,32 @@ def lex_pdf(spark, tiny_index):
         "term", "df").toPandas()
 
 
+def brute_suggest(rows, q: str, k: int = 5, df_lookup=None) -> list[str]:
+    """The suggest rules by brute force over a suggest table's
+    (prefix, term, score) rows: the last token's rows ranked by
+    (score desc, term asc), the preceding input echoed; a token longer
+    than the table's prefix bound completes from ``df_lookup`` when given."""
+    k = max(SUGGEST_K_MIN, min(int(k), SUGGEST_K_MAX))
+    base, tok = split_suggest_input(q)
+    if not tok:
+        return []
+    if len(tok) > SUGGEST_MAX_PREFIX_LEN and df_lookup is not None:
+        ranked = sorted((-df, t) for t, df in df_lookup.items()
+                        if t.startswith(tok))
+    else:
+        ranked = sorted((-score, term) for prefix, term, score in rows
+                        if prefix == tok)
+    return [base + t for _, t in ranked[:k]]
+
+
+def _rows(spark, path: str) -> list[tuple]:
+    return [tuple(r) for r in spark.read.parquet(path)
+            .select("prefix", "term", "score").collect()]
+
+
 def test_suggester_matches_oracle(spark, tiny_index, lex_pdf):
     root, _ = tiny_index
-    sug = Suggester(spark.read.parquet(IndexPaths(root).suggest))
+    sug = LazySuggester(IndexPaths(root).suggest)
     prefixes = ["b", "bu", "buf", "c", "ca", "lo", "ho", "sc", "zz", "x"]
     for p in prefixes:
         got = sug.suggest(p, 10)
@@ -34,8 +60,9 @@ def test_suggester_matches_oracle(spark, tiny_index, lex_pdf):
 
 def test_suggest_multiword_echo(spark, tiny_index):
     root, _ = tiny_index
-    sug = Suggester(spark.read.parquet(IndexPaths(root).suggest))
+    sug = LazySuggester(IndexPaths(root).suggest)
     out = sug.suggest("find the Buf", 3)
+    assert out
     assert all(s.startswith("find the ") for s in out)
     # only the last token is completed; completion is case-normalized
     assert all(s.split()[-1].startswith("buf") for s in out)
@@ -61,53 +88,70 @@ def test_wand_random_queries_match_taat(spark, tiny_index, lex_pdf):
             exp["doc_id"]), q
 
 
-def test_long_prefix_falls_back_to_lexicon_scan(spark):
+def test_long_prefix_falls_back_to_lexicon_scan(spark, tmp_path):
     """Prefixes beyond the table's 12-char explosion bound must still
-    complete (the reference trie is unbounded) when a df lookup is given."""
+    complete (the reference trie is unbounded) when a df lookup is given,
+    in LazySuggester and in the multi-segment _MergedSuggester."""
     from nextsearch_api_spark.operators.autocomplete import build_suggest
+    from nextsearch_api_spark.operators.multisegment import _MergedSuggester
 
     lex = spark.createDataFrame(
         [("supercalifragilistic", 50), ("supercalifornia", 80),
          ("supper", 10), ("buffer", 99)],
         "term string, df long",
     )
-    sug_df = build_suggest(lex)
+    path = str(tmp_path / "suggest")
+    build_suggest(lex).write.parquet(path)
+    rows = _rows(spark, path)
     dfmap = {r["term"]: r["df"] for r in lex.collect()}
-    s = Suggester(sug_df, df_lookup=dfmap)
+    s = LazySuggester(path, df_lookup=dfmap)
+    merged = _MergedSuggester(dfmap)
     # 13-char prefix: not in the table, served by the exact scan
-    assert s.suggest("supercalif", 5) == ["supercalifornia", "supercalifragilistic"]
-    assert s.suggest("supercalifrag", 5) == ["supercalifragilistic"]
-    assert s.suggest("supercalifragilistic", 5) == ["supercalifragilistic"]
-    assert s.suggest("supercalifragilisticz", 5) == []
+    cases = {"supercalif": ["supercalifornia", "supercalifragilistic"],
+             "supercalifrag": ["supercalifragilistic"],
+             "supercalifragilistic": ["supercalifragilistic"],
+             "supercalifragilisticz": [],
+             # short prefixes still use the precomputed table
+             "sup": ["supercalifornia", "supercalifragilistic", "supper"]}
+    for q, want in cases.items():
+        assert s.suggest(q, 5) == merged.suggest(q, 5) == want, q
+        assert brute_suggest(rows, q, 5, dfmap) == want, q
     # without the lookup the old behavior (empty) remains
-    s2 = Suggester(sug_df)
+    s2 = LazySuggester(path)
     assert s2.suggest("supercalifrag", 5) == []
-    # short prefixes still use the precomputed table
-    assert s.suggest("sup", 5) == ["supercalifornia", "supercalifragilistic", "supper"]
+    assert brute_suggest(rows, "supercalifrag", 5) == []
 
 
 def test_lazy_suggester_matches_collected(spark, tiny_index, lex_pdf):
-    """LazySuggester (pyarrow row-group-pruned lookups) must answer exactly
-    like the collected-dict Suggester on every prefix present in the table,
-    on misses, on multiword echo, and on the long-prefix lexicon fallback."""
-    from nextsearch_api_spark.operators.autocomplete import LazySuggester
+    """LazySuggester (pyarrow row-group-pruned lookups) and the
+    multi-segment _MergedSuggester (over the same df map) must answer
+    exactly like a brute-force ranking over the collected suggest table's
+    rows on every prefix present in the table, on misses, on multiword
+    echo, and on the long-prefix lexicon fallback."""
+    from nextsearch_api_spark.operators.multisegment import _MergedSuggester
 
     root, _ = tiny_index
     path = IndexPaths(root).suggest
     dfmap = dict(zip(lex_pdf["term"], lex_pdf["df"].astype(int)))
-    eager = Suggester(spark.read.parquet(path), df_lookup=dfmap)
+    rows = _rows(spark, path)
     lazy = LazySuggester(path, df_lookup=dfmap)
+    merged = _MergedSuggester(dfmap)
 
-    prefixes = set(
-        r["prefix"]
-        for r in spark.read.parquet(path).select("prefix").distinct().collect()
-    )
+    prefixes = {p for p, _, _ in rows}
+    assert prefixes
     for p in sorted(prefixes) + ["zz", "x", "qqqqq"]:
-        assert lazy.suggest(p, 10) == eager.suggest(p, 10), p
-    assert lazy.suggest("find the Buf", 3) == eager.suggest("find the Buf", 3)
+        want = brute_suggest(rows, p, 10, dfmap)
+        assert lazy.suggest(p, 10) == want, p
+        assert merged.suggest(p, 10) == want, p
+    want = brute_suggest(rows, "find the Buf", 3, dfmap)
+    assert want
+    assert lazy.suggest("find the Buf", 3) == want
+    assert merged.suggest("find the Buf", 3) == want
     long_tok = max(dfmap, key=len)
     if len(long_tok) > lazy.max_prefix_len:
-        assert lazy.suggest(long_tok, 5) == eager.suggest(long_tok, 5)
+        want = brute_suggest(rows, long_tok, 5, dfmap)
+        assert lazy.suggest(long_tok, 5) == merged.suggest(long_tok, 5) \
+            == want
 
 
 def test_lazy_suggester_reads_bounded_bytes(spark, tmp_path):
