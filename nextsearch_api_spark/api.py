@@ -196,64 +196,59 @@ class Engine:
         search is synchronous in-process, so one call both checks and fills.
         A ``status`` key (popped by the HTTP layer) carries non-200 codes."""
         kk = clamp_k(k)
-        key = f"{q}|{kk}"  # make_cache_key parity (api_engine.cpp:190-192)
-        with self._lock:
-            cached = self.ai_overview_cache.get(key)
-        if cached is not None:
-            out = dict(cached)
-            out["cached"] = True  # api_ai_overview.cpp:154-156
-            return out
-        hook = self.hooks.get("ai_overview")
-        if hook is None:
-            return {"error": "endpoint not configured "
-                             "(external AI service hook)", "status": 501}
-        sr = self.search(q, kk)
-        if not sr.get("results"):
-            return {"error": "No search results found for the query",
-                    "query": q, "status": 404}  # api_server.cpp:272-279
-        ai = hook({"q": q, "k": kk, "results": sr["results"]})
-        resp: dict = {"query": q}
-        if isinstance(ai, dict) and ai.get("success"):
-            resp["overview"] = ai.get("overview")
-            resp["model"] = ai.get("model")
-            if "usage" in ai:
-                resp["usage"] = ai["usage"]
-            resp["cached"] = False
-            with self._lock:
-                self.ai_overview_cache.put(key, resp)
-            return dict(resp)
-        resp["error"] = (ai or {}).get("error", "Unknown error") \
-            if isinstance(ai, dict) else "Unknown error"
-        if isinstance(ai, dict) and "details" in ai:
-            resp["details"] = ai["details"]
-        resp["status"] = 500
-        return resp
+
+        def payload() -> "dict | None":
+            sr = self.search(q, kk)
+            if not sr.get("results"):
+                return None  # api_server.cpp:272-279
+            return {"q": q, "k": kk, "results": sr["results"]}
+
+        # make_cache_key parity (api_engine.cpp:190-192)
+        return self._ai_call("overview", self.ai_overview_cache,
+                             f"{q}|{kk}", {"query": q}, payload)
 
     def ai_summary(self, cord_uid: str) -> dict:
         """AI-summary endpoint logic with LRU caching — reference flow
         (src/api_server.cpp:305-345 + src/api_ai_summary.cpp:96-226): cache
         key "summary|<uid>"; only successful responses cached."""
-        key = f"summary|{cord_uid}"
+        return self._ai_call("summary", self.ai_summary_cache,
+                             f"summary|{cord_uid}", {"cord_uid": cord_uid},
+                             lambda: {"cord_uid": cord_uid})
+
+    def _ai_call(self, field: str, cache: LruCache, key: str, resp: dict,
+                 payload: Callable[[], "dict | None"]) -> dict:
+        """The flow both AI endpoints share. A cache hit under ``key`` is
+        returned as a copy with ``cached`` True
+        (api_ai_overview.cpp:154-156). Without an ``ai_<field>`` hook the
+        answer is 501. Otherwise ``payload()`` builds the hook's request;
+        None means the query found nothing to ask about (404). A hook
+        result with ``success`` adds its ``field``, ``model`` and
+        ``usage`` to ``resp`` with ``cached`` False and is cached; any
+        other result adds its ``error`` and ``details`` with status 500
+        and is not cached."""
         with self._lock:
-            cached = self.ai_summary_cache.get(key)
+            cached = cache.get(key)
         if cached is not None:
             out = dict(cached)
             out["cached"] = True
             return out
-        hook = self.hooks.get("ai_summary")
+        hook = self.hooks.get(f"ai_{field}")
         if hook is None:
             return {"error": "endpoint not configured "
                              "(external AI service hook)", "status": 501}
-        ai = hook({"cord_uid": cord_uid})
-        resp: dict = {"cord_uid": cord_uid}
+        req = payload()
+        if req is None:
+            return {"error": "No search results found for the query",
+                    **resp, "status": 404}
+        ai = hook(req)
         if isinstance(ai, dict) and ai.get("success"):
-            resp["summary"] = ai.get("summary")
+            resp[field] = ai.get(field)
             resp["model"] = ai.get("model")
             if "usage" in ai:
                 resp["usage"] = ai["usage"]
             resp["cached"] = False
             with self._lock:
-                self.ai_summary_cache.put(key, resp)
+                cache.put(key, resp)
             return dict(resp)
         resp["error"] = (ai or {}).get("error", "Unknown error") \
             if isinstance(ai, dict) else "Unknown error"

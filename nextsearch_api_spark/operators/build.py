@@ -21,11 +21,14 @@ Spark-first re-design (NOT a port):
     chunks. Token rows never leave the Python worker and are never
     shuffled; chunks break on id-bucket boundaries, so per-term chunk doc
     ranges are disjoint across partitions.
-  * serving layout — the chunk rows (compressed postings, a fraction of
-    corpus bytes) are range-partitioned + sorted by (term, doc_lo) in
-    bounded row groups; docs by doc_id, as zstd Parquet plus the doc
-    store's memory-mapped Arrow twins (functions/docstore.py); lexicon and
-    suggest by key.
+  * serving layout — one writer, _write_range_sorted, writes every keyed
+    serving table as zstd Parquet, range-partitioned into
+    _serving_partitions files and sorted by its key: the chunk rows
+    (compressed postings, a fraction of corpus bytes) by (term, doc_lo)
+    in bounded row groups, docs by doc_id (plus the doc store's
+    memory-mapped Arrow twins, functions/docstore.py), the lexicon by term
+    and suggest by (prefix, rnk). The writer persists nothing and runs no
+    count job.
   * postings format v8 — per chunk: a blob of doc-id gaps from doc_lo and
     tf (functions/codec.py owns the layout) and the float32 block-max
     impact (functions/scoring.py:bm25_impact), the per-chunk bound the
@@ -70,6 +73,7 @@ from nextsearch_api_spark.config import BM25Params, BuildConfig, IndexPaths
 from nextsearch_api_spark.functions.docstore import write_doc_store
 from nextsearch_api_spark.functions.scoring import bm25_impact
 from nextsearch_api_spark.functions.text import arrow_kept_tokens
+from nextsearch_api_spark.operators.autocomplete import build_suggest
 from nextsearch_api_spark.plans.checkpoint import BuildManifest, StageRunner
 
 # token rows, one per (doc, term), as the compactions decode and re-chunk
@@ -398,25 +402,36 @@ def _chunk_partition(terms: list, ids: list, tfs: list, parts: list,
 # the same bytes holds twice the chunk rows.
 POSTINGS_ROW_GROUP_BYTES = 128 << 10
 SUGGEST_ROW_GROUP_BYTES = 1 << 20
-SUGGEST_ROWS_PER_FILE = 2_000_000
-
-
-def _write_range_sorted(df: DataFrame, out_path: str, keys: list[str],
-                        row_group_bytes: int, partitions: int,
-                        then: tuple[str, ...] = ()) -> None:
-    """Range-partition by ``keys``, sort by ``keys`` + ``then`` and write
-    with bounded row groups: files cover disjoint key ranges and every row
-    group's footer min/max of the leading key is a tight range, so a keyed
-    read selects only the row groups holding its keys."""
-    (df.repartitionByRange(partitions, *keys)
-        .sortWithinPartitions(*keys, *then)
-        .write.mode("overwrite")
-        .option("parquet.block.size", row_group_bytes)
-        .parquet(out_path))
 
 
 def _serving_partitions(spark: SparkSession) -> int:
     return min(64, max(8, int(spark.conf.get("spark.sql.shuffle.partitions"))))
+
+
+def _write_range_sorted(df: DataFrame, out_path: str, keys: list[str],
+                        then: tuple[str, ...] = (),
+                        row_group_bytes: "int | None" = None,
+                        columns: "list | None" = None) -> None:
+    """The one writer of the keyed serving tables (postings, docs, lexicon,
+    suggest): range-partition ``df`` by ``keys`` into _serving_partitions
+    files, sort each by ``keys`` + ``then``, project ``columns`` (default:
+    all) after the sort and write zstd Parquet, in row groups of
+    ``row_group_bytes`` when given. Files cover disjoint key ranges and
+    every row group's footer min/max of the leading key is a tight range,
+    so a keyed read selects only the row groups holding its keys.
+
+    Nothing is persisted: the range sample executes ``df`` once more, but
+    only from its last shuffle, whose output Spark reuses. A caller whose
+    input has no shuffle and is costly to recompute persists it
+    (operators/compact.py:merge_postings)."""
+    out = (df.repartitionByRange(_serving_partitions(df.sparkSession), *keys)
+           .sortWithinPartitions(*keys, *then))
+    if columns is not None:
+        out = out.select(*columns)
+    w = out.write.mode("overwrite").option("compression", "zstd")
+    if row_group_bytes is not None:
+        w = w.option("parquet.block.size", row_group_bytes)
+    w.parquet(out_path)
 
 
 def _block_max_impact(avgdl: float, params: BM25Params, docs_path: str):
@@ -460,10 +475,10 @@ def _block_max_impact(avgdl: float, params: BM25Params, docs_path: str):
 
 def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
                           params: BM25Params, docs_path: str) -> None:
-    """Publish chunk rows as the postings table: zstd Parquet,
-    range-partitioned + sorted by (term, doc_lo) in bounded row groups
-    (tight per-row-group term min/max stats → a term fetch reads only the
-    few row groups actually holding the term), each row with its block-max
+    """Publish chunk rows as the postings table through _write_range_sorted,
+    keyed by (term, doc_lo) in POSTINGS_ROW_GROUP_BYTES row groups (tight
+    per-row-group term min/max stats → a term fetch reads only the few row
+    groups actually holding the term), each row with its block-max
     ``max_impact`` at the index's ``avgdl`` and ``params``' k1/b.
     ``docs_path`` is the docs component of the generation being written,
     already on disk: its doc store gives the doc lengths, and it must hold
@@ -472,11 +487,9 @@ def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
     Every postings writer (build_index, compact_postings, compact_deltas)
     goes through here, so this is the one place ``max_impact`` is computed,
     for every row written — copied-through chunk rows of a compaction
-    included, whose old value was computed at an older avgdl. It runs after
-    the sort, so the range-sampling pass and the shuffle read only the
-    chunk columns and each blob is decoded once. Callers persist
-    ``chunks`` when it is expensive to recompute: repartitionByRange
-    samples its input with an extra execution.
+    included, whose old value was computed at an older avgdl. The column
+    is projected after the sort, so the range-sampling pass and the
+    shuffle read only the chunk columns and each blob is decoded once.
 
     This is also where the chunk invariant is checked: per term, chunk doc
     ranges are disjoint, hence one term's decoded doc ids are unique, which
@@ -487,23 +500,16 @@ def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
     generation."""
     from pyspark.sql import Window
 
-    spark = chunks.sparkSession
-    (chunks.select(*CHUNKS_SCHEMA.fieldNames())
-        .repartitionByRange(_serving_partitions(spark), "term", "doc_lo")
-        .sortWithinPartitions("term", "doc_lo")
-        .select("term", "doc_lo", "doc_hi", "count",
-                _block_max_impact(avgdl, params, docs_path)
-                .alias("max_impact"),
-                "tf_off", "blob")
-        .write.mode("overwrite")
-        .option("parquet.block.size", POSTINGS_ROW_GROUP_BYTES)
-        # zstd stores the varbyte streams in ~2/3 of snappy's bytes, at the
-        # same serving, batch and build CPU (CHANGES.md)
-        .option("compression", "zstd")
-        .parquet(out_path))
+    _write_range_sorted(
+        chunks.select(*CHUNKS_SCHEMA.fieldNames()), out_path,
+        ["term", "doc_lo"], row_group_bytes=POSTINGS_ROW_GROUP_BYTES,
+        columns=["term", "doc_lo", "doc_hi", "count",
+                 _block_max_impact(avgdl, params, docs_path)
+                 .alias("max_impact"),
+                 "tf_off", "blob"])
     prev_hi = F.lag("doc_hi").over(
         Window.partitionBy("term").orderBy("doc_lo"))
-    nbad = (spark.read.parquet(out_path)
+    nbad = (chunks.sparkSession.read.parquet(out_path)
             .select("doc_lo", prev_hi.alias("prev_hi"))
             .where(F.col("doc_lo") <= F.col("prev_hi"))
             .count())
@@ -514,58 +520,46 @@ def write_postings_sorted(chunks: DataFrame, out_path: str, avgdl: float,
 
 
 def write_docs_sorted(docs: DataFrame, out_path: str) -> tuple[int, int]:
-    """Write the docs component: doc rows range-partitioned + sorted by
-    doc_id as zstd Parquet, then the doc store's Arrow twin of every part
+    """Write the docs component: doc rows through _write_range_sorted keyed
+    by doc_id, then the doc store's Arrow twin of every part
     (functions/docstore.py:write_doc_store, one more Spark job), which
     serving and batch hydration read — the reference's O(1)
     ``docs[docId]`` (api_engine.cpp:508-532). No keyed Parquet read of docs
     remains, so the Parquet files keep Spark's default row groups.
     → (N, total_len) of the written docs, counted by the twins' job."""
-    (docs.repartitionByRange(_serving_partitions(docs.sparkSession), "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(out_path))
+    _write_range_sorted(docs, out_path, ["doc_id"])
     return write_doc_store(docs.sparkSession, out_path)
 
 
-def write_lexicon(postings: DataFrame, out_path: str) -> None:
-    """Aggregate chunk rows into the lexicon — per term df (posting count)
-    and n_chunks — written range-partitioned into _serving_partitions
-    ranges, like postings and docs, + sorted by term, so footer
-    min/max stats confine a term lookup to its row group (the reference's
-    barrel/offset seek analog). persist(): repartitionByRange samples its
-    input with an extra execution, which would otherwise run the aggregate
-    twice."""
-    lex = postings.groupBy("term").agg(
-        F.sum("count").cast("long").alias("df"),
-        F.count("*").cast("int").alias("n_chunks"),
-    ).persist()
-    try:
-        (lex.repartitionByRange(_serving_partitions(postings.sparkSession),
-                                "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite").parquet(out_path))
-    finally:
-        lex.unpersist()
+def write_lexicon(spark: SparkSession, postings_path: str,
+                  out_path: str) -> None:
+    """Aggregate the written postings at ``postings_path`` into the lexicon
+    — per term df (posting count) and n_chunks — through
+    _write_range_sorted keyed by term, so footer min/max stats confine a
+    term lookup to its row group (the reference's barrel/offset seek
+    analog). The aggregate reads the postings' four small columns,
+    column-pruned: blobs are never read, and the range sample re-runs only
+    the aggregate's final step."""
+    _write_range_sorted(
+        spark.read.parquet(postings_path).groupBy("term").agg(
+            F.sum("count").cast("long").alias("df"),
+            F.count("*").cast("int").alias("n_chunks")),
+        out_path, ["term"])
 
 
-def write_suggest_sorted(sug: DataFrame, out_path: str) -> None:
-    """Serving layout for LazySuggester: prefix-RANGE partitioning (a
-    prefix's ≤10 rows land in exactly one file, file ranges near-disjoint)
-    + sort within partitions + ~1 MiB row groups → every footer row-group
-    stat is a tight [lo, hi] prefix range, so one lookup reads ~1 row group
-    instead of collecting the whole table (VERDICT r5 next #1). persist():
-    repartitionByRange range-samples its input, which would otherwise
-    re-run the explode+window twice."""
-    sug = sug.persist()
-    try:
-        n = sug.count()
-        parts = max(1, -(-n // SUGGEST_ROWS_PER_FILE))
-        _write_range_sorted(sug, out_path, ["prefix"],
-                            SUGGEST_ROW_GROUP_BYTES, parts, then=("rnk",))
-    finally:
-        sug.unpersist()
+def write_suggest_sorted(spark: SparkSession, lexicon_path: str,
+                         out_path: str) -> None:
+    """The suggest table of the lexicon at ``lexicon_path``
+    (operators/autocomplete.py:build_suggest) in LazySuggester's serving
+    layout: _write_range_sorted keyed by prefix, then rnk, in
+    SUGGEST_ROW_GROUP_BYTES row groups. A prefix's ≤10 rows land in
+    exactly one file and every footer row-group stat is a tight [lo, hi]
+    prefix range, so one lookup reads ~1 row group instead of collecting
+    the whole table (VERDICT r5 next #1). The range sample re-runs only
+    the top-10 window over its exchange."""
+    _write_range_sorted(build_suggest(spark.read.parquet(lexicon_path)),
+                        out_path, ["prefix"], then=("rnk",),
+                        row_group_bytes=SUGGEST_ROW_GROUP_BYTES)
 
 
 def _chunk_bounds(codes: np.ndarray, parts: np.ndarray,
@@ -884,17 +878,13 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_root: str,
     runner.run("stats", stage_stats, output=paths.stats)
 
     def stage_lexicon() -> dict:
-        # the written postings serve the aggregate's 4 small columns
-        # column-pruned — blobs are never read
-        write_lexicon(spark.read.parquet(paths.postings), paths.lexicon)
+        write_lexicon(spark, paths.postings, paths.lexicon)
         return {"rows": _parquet_rows(paths.lexicon)}
 
     runner.run("lexicon", stage_lexicon, output=paths.lexicon)
 
     def stage_suggest() -> dict:
-        from nextsearch_api_spark.operators.autocomplete import build_suggest
-        write_suggest_sorted(build_suggest(spark.read.parquet(paths.lexicon)),
-                             paths.suggest)
+        write_suggest_sorted(spark, paths.lexicon, paths.suggest)
         return {"rows": _parquet_rows(paths.suggest)}
 
     runner.run("suggest", stage_suggest, output=paths.suggest)

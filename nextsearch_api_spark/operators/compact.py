@@ -94,10 +94,10 @@ def merge_postings(spark: SparkSession, paths: IndexPaths, gen: int,
         live = live.join(F.broadcast(superseded), "doc_id", "left_anti")
     if delta is not None:
         live = live.unionByName(delta)
-    # persist before the range-partitioned write: repartitionByRange samples
-    # its input with an extra execution, which would re-run the whole
-    # decode + re-chunk subtree (same single-materialization fix as the
-    # build's serving-layout rewrite)
+    # persisted, unlike every other input of the shared writer
+    # (build.py:_write_range_sorted): its range sample executes the input
+    # once more, which here would re-run a full postings scan (the
+    # copied-through chunks) and the Python re-chunk after its shuffle
     from pyspark import StorageLevel
     merged = untouched.unionByName(build_posting_chunks(live, cfg)).persist(
         StorageLevel.MEMORY_AND_DISK)
@@ -109,7 +109,7 @@ def merge_postings(spark: SparkSession, paths: IndexPaths, gen: int,
     finally:
         merged.unpersist()
     lex_new = gen_path(paths.root, "lexicon", gen)
-    write_lexicon(spark.read.parquet(post_new), lex_new)
+    write_lexicon(spark, post_new, lex_new)
     return post_new, lex_new
 
 

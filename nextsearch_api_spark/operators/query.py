@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -67,6 +68,14 @@ def parse_query(q: str) -> list[str]:
     duplicates (api_engine.cpp:388-397)."""
     return [t for t in tokenize_py(q)
             if len(t) >= MIN_TOKEN_LEN and t not in STOPWORD_SET]
+
+
+def occurrence_weights(terms: Sequence[str]) -> "list[tuple[str, int]]":
+    """Raw-mode query weights: each distinct term with its occurrence
+    count, in first-occurrence order, so a repeated term accumulates
+    repeatedly like the reference's per-occurrence loop
+    (api_engine.cpp:449)."""
+    return list(Counter(terms).items())
 
 
 def clamp_k(k: int) -> int:
@@ -445,37 +454,28 @@ def weigh(reader: IndexReader, queries: "Sequence[tuple]",
 def _parse_batch(reader: IndexReader, queries: Sequence[QuerySpec],
                  params: BM25Params) -> "tuple[TermDfs, list[tuple]]":
     """Driver-side parsing of a batch → weigh's (df map, weighted queries)
-    in qid order. Weight = occurrence count, so repeated terms accumulate
-    repeatedly like the reference's per-occurrence loop
-    (api_engine.cpp:449); a qid given by several specs takes the terms of
-    all of them and the first spec's k."""
+    in qid order, with occurrence_weights; a qid given by several specs
+    takes the terms of all of them and the first spec's k."""
     k_of: dict[int, int] = {}
     terms_of: dict[int, list[tuple[str, int]]] = {}
     for qs in queries:
         k_of.setdefault(qs.qid, clamp_k(qs.k))
-        occ: dict[str, int] = {}
-        for t in parse_query(qs.q):
-            occ[t] = occ.get(t, 0) + 1
-        terms_of.setdefault(qs.qid, []).extend(occ.items())
+        terms_of.setdefault(qs.qid, []).extend(
+            occurrence_weights(parse_query(qs.q)))
     return weigh(reader, [(qid, k_of[qid], tws)
                           for qid, tws in sorted(terms_of.items())], params)
 
 
 def _range_stage(reader: IndexReader, df_map: TermDfs, ranked: "list[tuple]",
-                 params: BM25Params, prune_chunks: bool,
-                 ) -> "tuple[DataFrame, dict[int, int]]":
+                 params: BM25Params) -> "tuple[DataFrame, dict[int, int]]":
     """Steps 1-4 of batch_search → (the per-range Arrow stage's frame,
     found_overrides of the chunk prune)."""
     present = sorted(df_map)
     # chunk-level top-k prefilter (driver-side plan over chunk metadata)
-    whitelist: dict[str, list[int]] = {}
-    thresholds: dict[str, float] = {}
-    found_overrides: dict[int, int] = {}
-    if prune_chunks:
-        whitelist, thresholds, found_overrides = _plan_chunk_prune(
-            reader, {qid: list(dict.fromkeys(t for t, _ in tws))
-                     for qid, _k, tws in ranked},
-            {qid: k for qid, k, _ in ranked}, df_map, params)
+    whitelist, thresholds, found_overrides = _plan_chunk_prune(
+        reader, {qid: list(dict.fromkeys(t for t, _ in tws))
+                 for qid, _k, tws in ranked},
+        {qid: k for qid, k, _ in ranked}, df_map, params)
 
     # postings scan pruned to query terms (pushed filter → row-group pruning);
     # a pruned term keeps the chunks whose max_impact reaches its threshold
@@ -571,7 +571,6 @@ def batch_search(
     queries: Sequence[QuerySpec],
     params: BM25Params | None = None,
     hydrate: bool = False,
-    prune_chunks: bool = True,
     small_query_max_postings: "int | None" = None,
 ) -> DataFrame:
     """Rank a batch of queries; the Spark work runs when this is called.
@@ -587,7 +586,10 @@ def batch_search(
     the driver by rank_on_driver. Otherwise the plan is:
 
     1. scan the postings chunk rows of the present terms (pushed
-       ``term IN`` filter), pruned by the chunk prefilter below;
+       ``term IN`` filter), pruned by the driver-side chunk prefilter
+       (_plan_chunk_prune): on a drift-free index, a term queried only by
+       single-term queries scans just the chunks that can hold a top-k
+       doc, with rank- and found-identical results;
     2. tag each chunk row with every doc-id range (_doc_range_cuts) its
        [doc_lo, doc_hi] overlaps — ``explode(sequence(first, last))``;
     3. exchange the still-compressed chunk rows by range;
@@ -608,13 +610,6 @@ def batch_search(
     set. The plan has one Python stage, and the exchange carries
     compressed chunk rows, never decoded postings.
 
-    ``prune_chunks`` enables the driver-side chunk prefilter
-    (_plan_chunk_prune): on a drift-free index, a term queried only by
-    single-term queries scans just the chunks that can hold a top-k doc —
-    exact results either way (rank- and found-identical by construction;
-    set False to force exhaustive decode, e.g. for parity testing; it also
-    turns off the driver path).
-
     ``reader`` must hold a Spark session: a reader without one (the
     serving engine, operators/wand.py:WandEngine) raises TypeError before
     any work."""
@@ -629,17 +624,15 @@ def batch_search(
     # volume-bounded driver fast path (r7): Σ df across the batch's present
     # terms is known exactly before any data is read; under the budget the
     # whole batch is answered by one footer-indexed postings read + the same
-    # scoring helper — identical rows, no Spark job. prune_chunks=False
-    # forces the distributed plan (the parity-testing escape hatch).
+    # scoring helper — identical rows, no Spark job.
     budget = (SMALL_QUERY_MAX_POSTINGS if small_query_max_postings is None
               else small_query_max_postings)
     if not ranked:
         top = []
-    elif prune_chunks and budget > 0 and sum(df_map.values()) <= budget:
+    elif budget > 0 and sum(df_map.values()) <= budget:
         top = rank_on_driver(reader, ranked, params)
     else:
-        stage, found_overrides = _range_stage(reader, df_map, ranked,
-                                              params, prune_chunks)
+        stage, found_overrides = _range_stage(reader, df_map, ranked, params)
         top = _merge_ranges(stage.toArrow(), ranked, found_overrides)
     table = _result_table(top)
     if hydrate:

@@ -30,7 +30,8 @@ import pyarrow as pa
 from nextsearch_api_spark.config import BM25Params
 from nextsearch_api_spark.functions.docstore import HIT_FIELDS
 from nextsearch_api_spark.operators.query import (
-    IndexReader, TermDfs, clamp_k, parse_query, rank_on_driver, weigh,
+    IndexReader, TermDfs, clamp_k, occurrence_weights, parse_query,
+    rank_on_driver, weigh,
 )
 
 
@@ -152,12 +153,8 @@ class WandEngine(IndexReader):
             # expansion mode: weighted, deduped terms (originals at 1.0)
             qterms = self.expander.expand(terms)
         else:
-            # raw mode: repeated terms accumulate repeatedly (the reference
-            # loop at api_engine.cpp:449 — weight = occurrence count)
-            occ: dict[str, float] = {}
-            for t in terms:
-                occ[t] = occ.get(t, 0.0) + 1.0
-            qterms = list(occ.items())
+            # raw mode: weight = occurrence count
+            qterms = occurrence_weights(terms)
 
         found, ids, scores = 0, [], []
         _, weighted = weigh(self, [(0, k, qterms)], self.params)

@@ -470,9 +470,8 @@ def compact_deltas(spark: SparkSession, index_root: str,
 
     # suggest rankings are df-ordered — refresh them from the merged lexicon
     # so autocomplete doesn't serve stale frequencies after the flip
-    from nextsearch_api_spark.operators.autocomplete import build_suggest
     sug_new = gen_path(index_root, "suggest", gen)
-    write_suggest_sorted(build_suggest(spark.read.parquet(lex_new)), sug_new)
+    write_suggest_sorted(spark, lex_new, sug_new)
 
     flip_generation(index_root, {
         "postings": os.path.basename(post_new),

@@ -192,3 +192,94 @@ def test_assign_doc_ids_self_union_over_budget(spark, tmp_path, monkeypatch):
     assert sampled  # the distributed path's sample job ran
     assert len(rows) == 200
     assert [d for _, d in sorted(rows)] == list(range(1, 201))
+
+
+def test_one_writer_for_the_keyed_serving_tables():
+    """Walking the package source: ``repartitionByRange`` and
+    ``sortWithinPartitions`` are called only in build._write_range_sorted,
+    which the four serving-table writers (postings, docs, lexicon,
+    suggest) each call once, and write_lexicon and write_suggest_sorted
+    call no ``persist``, ``cache`` or ``count`` (each would add a Spark job
+    or a cached copy around the one write)."""
+    import ast
+    import pathlib
+
+    import nextsearch_api_spark
+
+    pkg = pathlib.Path(nextsearch_api_spark.__file__).parent
+    sites: dict[str, list[tuple[str, str]]] = {
+        "repartitionByRange": [], "sortWithinPartitions": [],
+        "_write_range_sorted": []}
+    extra: list[tuple[str, str]] = []
+
+    def walk(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name in sites:
+                    sites[name].append((rel, scope))
+                # DataFrame.count() takes no argument (F.count does)
+                if (scope in ("write_lexicon", "write_suggest_sorted")
+                        and (name in ("persist", "cache")
+                             or name == "count" and not child.args)):
+                    extra.append((scope, name))
+            walk(child, rel, inner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        walk(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(),
+             "")
+    writer = [("operators/build.py", "_write_range_sorted")]
+    assert sites["repartitionByRange"] == writer, sites
+    assert sites["sortWithinPartitions"] == writer, sites
+    assert sorted(sites["_write_range_sorted"]) == [
+        ("operators/build.py", "write_docs_sorted"),
+        ("operators/build.py", "write_lexicon"),
+        ("operators/build.py", "write_postings_sorted"),
+        ("operators/build.py", "write_suggest_sorted"),
+    ], sites
+    assert extra == [], extra
+
+
+def test_serving_tables_are_zstd_key_sorted_and_range_disjoint(tiny_index):
+    """Every Parquet file of the built postings, docs, lexicon and suggest
+    is zstd in every column chunk and sorted by its table's key, and the
+    files' key ranges are disjoint: sorted by first key, each non-empty
+    file's last key is below the next file's first."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    root, _ = tiny_index
+    paths = IndexPaths(root)
+    keys = {"postings": ("term", "doc_lo"), "docs": ("doc_id",),
+            "lexicon": ("term",), "suggest": ("prefix", "rnk")}
+    range_keys = {"postings": ("term", "doc_lo"), "docs": ("doc_id",),
+                  "lexicon": ("term",), "suggest": ("prefix",)}
+    for table, key in keys.items():
+        d = getattr(paths, table)
+        files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        assert files, table
+        spans = []
+        for f in files:
+            pf = pq.ParquetFile(os.path.join(d, f))
+            md = pf.metadata
+            codecs = {md.row_group(i).column(j).compression
+                      for i in range(md.num_row_groups)
+                      for j in range(md.num_columns)}
+            assert codecs <= {"ZSTD"}, (table, f, codecs)
+            t = pf.read(columns=list(key))
+            rows = list(zip(*(t.column(c).to_pylist() for c in key)))
+            assert rows == sorted(rows), (table, f)
+            if rows:
+                n = len(range_keys[table])
+                spans.append((rows[0][:n], rows[-1][:n], f))
+        spans.sort()
+        assert len(spans) > 1, table
+        for (_, hi, f), (lo, _, g) in zip(spans, spans[1:]):
+            assert hi < lo, (table, f, hi, g, lo)

@@ -68,14 +68,16 @@ def test_generation_gc_deferred_one_flip(spark, tmp_path):
     assert m1["gc_pending"]  # superseded dirs recorded, NOT deleted
     for d in m1["gc_pending"]:
         assert os.path.exists(os.path.join(root, d)), d
-    # prune-on/off parity survives compaction (the writer stored every
-    # chunk's max_impact at the index's avgdl)
+    # the distributed plan (its chunk prune planned from the max_impact
+    # the writer stored at the index's avgdl) == the exhaustive driver
+    # path after compaction
     from nextsearch_api_spark.operators.query import (
         IndexReader, QuerySpec, batch_search,
     )
     rd = IndexReader(spark, root)
-    pa_ = batch_search(rd, [QuerySpec(0, "hotterm", 5)], prune_chunks=True)
-    pb_ = batch_search(rd, [QuerySpec(0, "hotterm", 5)], prune_chunks=False)
+    pa_ = batch_search(rd, [QuerySpec(0, "hotterm", 5)],
+                       small_query_max_postings=0)
+    pb_ = batch_search(rd, [QuerySpec(0, "hotterm", 5)])
     assert ([(r["doc_id"], round(r["score"], 9), r["found"])
              for r in pa_.orderBy("rank").collect()]
             == [(r["doc_id"], round(r["score"], 9), r["found"])

@@ -219,6 +219,18 @@ def test_ai_summary_cache_flow(server):
         _post(server, "/api/reload")
         st, c = _get(server, "/api/ai_summary?cord_uid=u42")
         assert c["cached"] is True and calls == ["u42"]
+
+        # hook failure → 500 with its error and details, NOT cached
+        eng.hooks["ai_summary"] = lambda p: {
+            "success": False, "error": "upstream down",
+            "details": "timeout after 30 s"}
+        code, body = _err(_get, server, "/api/ai_summary?cord_uid=u7")
+        assert code == 500 and body["error"] == "upstream down"
+        assert body["details"] == "timeout after 30 s"
+        eng.hooks["ai_summary"] = hook
+        st, d = _get(server, "/api/ai_summary?cord_uid=u7")
+        assert st == 200 and d["cached"] is False and d["summary"] == "sum:u7"
+        assert calls == ["u42", "u7"]
     finally:
         eng.hooks.pop("ai_summary", None)
 

@@ -49,7 +49,7 @@ def _range_stage_of(rd, specs):
 
     params = BM25Params()
     df_map, ranked = query._parse_batch(rd, specs, params)
-    return query._range_stage(rd, df_map, ranked, params, True)[0]
+    return query._range_stage(rd, df_map, ranked, params)[0]
 
 
 def test_batch_search_qterms_need_no_exchange(spark, plan_env):
@@ -226,22 +226,26 @@ def test_chunk_prefilter_prunes_and_stays_exact(spark, plan_env, tiny_index):
         assert _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 2},
                                  {"hotterm": 100}, other) == ({}, {}, {})
 
-    # end-to-end identity: pruned vs exhaustive plans agree on every column
+    # end-to-end identity: the pruned distributed plan agrees with the
+    # exhaustive driver path on every column, on a batch whose hotterm
+    # query prunes and on one where a multi-term query blocks the prune
     specs = [QuerySpec(0, "hotterm", 2), QuerySpec(1, "buffer", 3),
              QuerySpec(2, "hotterm buffer", 4),
              QuerySpec(3, "zzznotaterm hotterm", 2)]
-    a = batch_search(plan_env, specs, prune_chunks=True)
-    b = batch_search(plan_env, specs, prune_chunks=False)
-    ra = [(r["qid"], r["rank"], r["doc_id"], round(r["score"], 9), r["found"])
-          for r in a.orderBy("qid", "rank").collect()]
-    rb = [(r["qid"], r["rank"], r["doc_id"], round(r["score"], 9), r["found"])
-          for r in b.orderBy("qid", "rank").collect()]
-    assert ra == rb and ra
+    for batch in (specs[:2], specs):
+        a = batch_search(plan_env, batch, small_query_max_postings=0)
+        b = batch_search(plan_env, batch)
+        ra = [(r["qid"], r["rank"], r["doc_id"], round(r["score"], 9),
+               r["found"]) for r in a.orderBy("qid", "rank").collect()]
+        rb = [(r["qid"], r["rank"], r["doc_id"], round(r["score"], 9),
+               r["found"]) for r in b.orderBy("qid", "rank").collect()]
+        assert ra == rb and ra
 
 
 def test_chunk_prefilter_randomized_parity(spark, plan_env):
     """Randomized single/multi-term queries at several k values: the pruned
-    plan must be rank-, score- and found-identical to exhaustive decode."""
+    distributed plan must be rank-, score- and found-identical to the
+    exhaustive driver path."""
     import random
 
     from pyspark.sql import functions as F
@@ -255,8 +259,8 @@ def test_chunk_prefilter_randomized_parity(spark, plan_env):
         n_terms = rng.choice([1, 1, 1, 2, 3])  # bias to the pruned shape
         q = " ".join(rng.sample(vocab, n_terms))
         specs.append(QuerySpec(qid, q, rng.choice([1, 2, 5, 37, 100])))
-    a = batch_search(plan_env, specs, prune_chunks=True)
-    b = batch_search(plan_env, specs, prune_chunks=False)
+    a = batch_search(plan_env, specs, small_query_max_postings=0)
+    b = batch_search(plan_env, specs)
     key = lambda r: (r["qid"], r["rank"], r["doc_id"],
                      round(r["score"], 9), r["found"])
     ra = sorted(key(r) for r in a.collect())
@@ -313,8 +317,9 @@ def test_multi_term_chunk_prefilter(spark, skewed_index):
     """Terms of multi-term queries keep every chunk — including a term a
     single-term query shares — because a multi-term query's ``found``
     counts the distinct docs of all its terms. On the heavy-tailed index,
-    where ``needle``'s low chunks cannot reach the top-k, the pruned plan
-    still equals exhaustive decode on every column, found included."""
+    where ``needle``'s low chunks cannot reach the top-k, the pruned
+    distributed plan still equals the exhaustive driver path on every
+    column, found included."""
     from nextsearch_api_spark.config import BM25Params
     from nextsearch_api_spark.operators.query import (
         IndexReader, _plan_chunk_prune,
@@ -330,14 +335,15 @@ def test_multi_term_chunk_prefilter(spark, skewed_index):
                                     params)
     assert "needle" in wl and ov == {8: df_map["needle"]}
 
-    # end-to-end: pruned == exhaustive on every column (incl. exact found),
+    # end-to-end: pruned distributed plan == exhaustive driver path on
+    # every column (incl. exact found),
     # across single, multi, shared-term and oov-mixed shapes
     specs = [QuerySpec(0, "needle common", 2),
              QuerySpec(1, "needle common", 10),
              QuerySpec(2, "needle", 2),           # shares a multi-term's term
              QuerySpec(3, "common zzznotaterm", 3)]
-    a = batch_search(rd, specs, prune_chunks=True)
-    b = batch_search(rd, specs, prune_chunks=False)
+    a = batch_search(rd, specs, small_query_max_postings=0)
+    b = batch_search(rd, specs)
     key = lambda r: (r["qid"], r["rank"], r["doc_id"],
                      round(r["score"], 9), r["found"])
     ra = sorted(key(r) for r in a.collect())
@@ -468,9 +474,11 @@ def test_many_whitelisted_terms_plan_at_constant_depth(spark, tmp_path):
 
 
 def test_multi_term_prefilter_randomized_parity(spark, skewed_index):
-    """Randomized multi-term queries over the heavy-tailed index (where the
-    multi-term prune ACTIVATES, unlike the uniform tiny corpus): pruned ==
-    exhaustive on rank/score/found at every k."""
+    """Randomized multi-term queries over the heavy-tailed index (where a
+    prune of ``needle``'s low chunks would change ``found``, unlike on the
+    uniform tiny corpus): the distributed plan, whose planner must keep
+    every chunk of a multi-term query's terms, == the exhaustive driver
+    path on rank/score/found at every k."""
     import random
 
     from nextsearch_api_spark.operators.query import IndexReader
@@ -483,8 +491,8 @@ def test_multi_term_prefilter_randomized_parity(spark, skewed_index):
         n_terms = rng.choice([2, 2, 3, 4])
         q = " ".join(rng.sample(vocab, n_terms))
         specs.append(QuerySpec(qid, q, rng.choice([1, 2, 3, 5, 10])))
-    a = batch_search(rd, specs, prune_chunks=True)
-    b = batch_search(rd, specs, prune_chunks=False)
+    a = batch_search(rd, specs, small_query_max_postings=0)
+    b = batch_search(rd, specs)
     key = lambda r: (r["qid"], r["rank"], r["doc_id"],
                      round(r["score"], 9), r["found"])
     ra = sorted(key(r) for r in a.collect())

@@ -177,8 +177,8 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
 
     # the chunk prefilter stays on after compact_deltas: every generation's
     # chunk maxes are attained impacts at its own avgdl, so the plan prunes
-    # the most-chunked untouched term and pruned and exhaustive plans agree
-    # on single-term queries
+    # the most-chunked untouched term, and the pruned distributed plan
+    # agrees with the exhaustive driver path on single-term queries
     from nextsearch_api_spark.config import BM25Params
     from nextsearch_api_spark.operators.query import (
         IndexReader, QuerySpec, batch_search, _plan_chunk_prune,
@@ -197,9 +197,8 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
                 for r in df.orderBy("qid", "rank").collect()]
     for k in (1, 2, 5):
         specs = [QuerySpec(0, "hotterm", k), QuerySpec(1, many, k)]
-        assert (rows(batch_search(rd, specs, prune_chunks=True,
-                                  small_query_max_postings=0))
-                == rows(batch_search(rd, specs, prune_chunks=False))), k
+        assert (rows(batch_search(rd, specs, small_query_max_postings=0))
+                == rows(batch_search(rd, specs))), k
 
 
 def test_compaction_rows_match_token_oracle(spark, tmp_path):

@@ -25,9 +25,9 @@ def spark_jobs(spark, fn):
 
 def assert_tiers_identical(spark, root, eng, specs):
     """Every ranking tier returns the same rows, scores compared with ==:
-    the distributed plan with the chunk prune on
-    (``small_query_max_postings=0``) and off (``prune_chunks=False``), the
-    driver small-query path, and ``eng.search`` (same BM25 params), on
+    the distributed plan with its chunk prune
+    (``small_query_max_postings=0``), the exhaustive driver small-query
+    path, and ``eng.search`` (same BM25 params), on
     (doc_id, score, found) per query. A qid given by several specs is
     compared with ``eng.search`` of their joined text and the first spec's
     k — the same ranking when the specs share no term."""
@@ -46,11 +46,9 @@ def assert_tiers_identical(spark, root, eng, specs):
 
     pruned = ranked(batch_search(rd, specs, eng.params,
                                  small_query_max_postings=0))
-    full = ranked(batch_search(rd, specs, eng.params, prune_chunks=False))
     driver, jobs = spark_jobs(spark, lambda: ranked(batch_search(
         rd, specs, eng.params, small_query_max_postings=1 << 62)))
     assert jobs == 0  # answered on the driver
-    assert pruned == full, root
     assert pruned == driver, root
     texts: dict = {}
     ks: dict = {}
