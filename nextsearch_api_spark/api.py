@@ -7,6 +7,14 @@ README.md:72-116. The AI endpoints (/api/ai_overview, /api/ai_summary) call
 an external LLM service in the reference (src/api_ai_overview.cpp) — out of
 scope here; ``Engine.hooks`` exposes the integration point.
 
+One ``Engine`` serves one index root or several, each a segment built by
+``build_index`` (api_engine.cpp:441-495 loads and dispatches N segments):
+every segment is scored with its own N and avgdl (api_segment.cpp:105-136),
+the per-segment top-k lists merge by (score desc, segment asc, doc_id asc),
+``found`` is their sum, and each hit is hydrated from its own segment's doc
+store. With several segments each result row carries its ``segment``,
+because doc ids are segment-local.
+
 LRU result caching reproduces the reference's search cache semantics
 (include/api_engine.hpp:38-60): capacity 2600, key = raw query string + "|" +
 clamped k (api_engine.cpp:190-192,380-385 — note the RAW query: "Covid" and
@@ -21,10 +29,13 @@ import os
 import threading
 import time
 from collections import OrderedDict
-from typing import Any, Callable
+from typing import Any, Callable, Sequence
 
 from nextsearch_api_spark.config import BM25Params
 from nextsearch_api_spark.feedback import FeedbackManager, validate_feedback
+from nextsearch_api_spark.operators.autocomplete import (
+    LazySuggester, _MergedSuggester,
+)
 from nextsearch_api_spark.operators.query import clamp_k
 from nextsearch_api_spark.operators.wand import WandEngine
 
@@ -80,15 +91,22 @@ def _copy_response(out: dict) -> dict:
 
 
 class Engine:
-    """Single-node serving engine over a built index (the reference
-    Engine analog, api_engine.cpp:50-162 reload semantics): it serves the
-    generation that was live when it loaded until ``reload`` swaps in the
-    current one."""
+    """Single-node serving engine over one built index or several segments
+    (the reference Engine analog, api_engine.cpp:50-162 reload semantics):
+    it serves the generations that were live when it loaded until
+    ``reload`` swaps in the current ones. ``segments`` holds one WandEngine
+    per root and ``wand`` is the first of them."""
 
-    def __init__(self, index_root: str, params: BM25Params | None = None,
+    def __init__(self, index_root: "str | Sequence[str]",
+                 params: BM25Params | None = None,
                  cache_dir: str | None = None,
                  embeddings_path: str | None = None):
-        self.index_root = index_root
+        self.roots = ([index_root] if isinstance(index_root, (str, os.PathLike))
+                      else list(index_root))
+        if not self.roots:
+            raise ValueError("at least one segment root required")
+        if embeddings_path and len(self.roots) > 1:
+            raise ValueError("query expansion serves one segment only")
         self.params = params or BM25Params()
         self.cache_dir = cache_dir
         self.embeddings_path = embeddings_path
@@ -107,10 +125,21 @@ class Engine:
 
     def _load(self) -> None:
         t0 = time.time()
-        self.wand = WandEngine(self.index_root, self.params)
+        self.segments = [WandEngine(r, self.params) for r in self.roots]
+        self.wand = self.segments[0]
         if self.embeddings_path:
             self.wand.load_embeddings(self.embeddings_path)
-        self._suggester = None  # lazy
+        # the suggester opens with its segments' generation. One segment is
+        # served from its suggest table, with the lexicon df map already in
+        # RAM for exact long-prefix completion; several from their summed
+        # dfs, which no segment's own table ranks by
+        if len(self.segments) == 1:
+            self._suggester = LazySuggester(self.wand.paths.suggest,
+                                            df_lookup=self.wand._df)
+        else:
+            self._suggester = _MergedSuggester(
+                [seg._df for seg in self.segments])
+
         def _persist(name: str) -> str | None:
             if not self.cache_dir:
                 return None
@@ -132,11 +161,14 @@ class Engine:
     # ----------------------------------------------------------- endpoints --
 
     def health(self) -> dict:
+        segs = self.segments
+        docs = sum(seg.N for seg in segs)
+        total_len = sum(int(seg.stats["total_len"]) for seg in segs)
         return {
             "status": "ok",
-            "segments": 1,
-            "docs": self.wand.N,
-            "avgdl": self.wand.avgdl,
+            "segments": len(segs),
+            "docs": docs,
+            "avgdl": float(total_len) / docs if docs else 0.0,
         }
 
     def search(self, q: str, k: int = 10) -> dict:
@@ -159,11 +191,26 @@ class Engine:
             out["total_time_ms"] = round((time.time() - t0) * 1000, 2)
             return out
         t1 = time.time()
-        out = self.wand.search(q, kk)
-        del out["mode"]  # not part of the reference JSON shape
+        segs = self.segments
+        found, cands = 0, []  # (-score, segment, doc_id)
+        for si, seg in enumerate(segs):
+            r = seg.search(q, kk)
+            found += r["found"]
+            cands += [(-row["score"], si, row["doc_id"])
+                      for row in r["results"]]
+        cands.sort()
+        multi = len(segs) > 1
+        results = [
+            {"rank": i + 1, "doc_id": d, **({"segment": si} if multi else {}),
+             "score": -ns}
+            for i, (ns, si, d) in enumerate(cands[:kk])
+        ]
         search_ms = (time.time() - t1) * 1000
-        self.wand.hydrate(out["results"])
-        out["search_time_ms"] = round(search_ms, 2)
+        for si, seg in enumerate(segs):
+            seg.hydrate([row for row, c in zip(results, cands) if c[1] == si])
+        out = {"query": q, "k": kk, "segments": len(segs), "found": found,
+               "results": results,
+               "search_time_ms": round(search_ms, 2)}
         with self._lock:
             self.search_cache.put(key, out)
         # deep-enough copy: the cached entry keeps its own row dicts, so a
@@ -177,7 +224,7 @@ class Engine:
     def suggest(self, q: str, k: int = 5) -> dict:
         with self._lock:
             self._counters["suggests"] += 1
-        sugg = self._get_suggester().suggest(q, k)
+        sugg = self._suggester.suggest(q, k)
         return {"query": q, "suggestions": sugg}
 
     def reload(self) -> dict:
@@ -287,32 +334,8 @@ class Engine:
             "search_cache_hit_rate": (hits / total) if total else 0.0,
             "last_10_feedback": self.feedback_store.last(10),
             "total_feedback_count": self.feedback_store.count(),
-            "docs": self.wand.N,
+            "docs": sum(seg.N for seg in self.segments),
         }
-
-    # ------------------------------------------------------------ internal --
-
-    def _get_suggester(self):
-        # double-checked under the engine lock: two HTTP threads racing the
-        # first /api/suggest would otherwise both build the table (benign
-        # but a duplicated multi-second scan on a big suggest table)
-        if self._suggester is None:
-            with self._lock:
-                if self._suggester is None:
-                    self._suggester = self._build_suggester()
-        return self._suggester
-
-    def _build_suggester(self):
-        from nextsearch_api_spark.operators.autocomplete import LazySuggester
-
-        # Lazy serving (VERDICT r5 next #1): footers scanned once, lookups
-        # answered by footer-indexed row-group reads + an LRU of hot prefix
-        # buckets — O(#row-groups) driver RAM instead of O(vocab·prefixes).
-        # The lexicon df map already in RAM (WandEngine) gives exact
-        # long-prefix completion beyond the table's explosion bound. The
-        # table comes from the WandEngine's generation, however late the
-        # first suggest arrives.
-        return LazySuggester(self.wand.paths.suggest, df_lookup=self.wand._df)
 
 
 def main() -> None:

@@ -4,8 +4,8 @@ One copy of the reference's scoring math (src/api_engine.cpp:45-47, 444-495)
 for every NumPy caller. Query time has one entry point,
 :func:`rank_chunk_rows`: compressed chunk rows in, ranked top-k out. Two
 callers in operators/query.py: the one driver-side rank call
-(rank_on_driver — the serving tier, per segment under
-operators/multisegment.py, and the batch tier's driver path) and every
+(rank_on_driver — the serving tier, once per segment of an api.Engine,
+and the batch tier's driver path) and every
 doc-id range group of the batch tier's distributed plan. The
 build and compaction use ``bm25_impact`` for block-max impacts
 (operators/build.py). Both read doc lengths from the doc store

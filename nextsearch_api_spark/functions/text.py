@@ -53,7 +53,7 @@ def tokens_expr(col: Column | str) -> Column:
     return F.filter(toks, lambda x: x != F.lit(""))
 
 
-def kept_tokens_expr(col: Column | str, min_len: int = 2) -> Column:
+def kept_tokens_expr(col: Column | str, min_len: int = MIN_TOKEN_LEN) -> Column:
     """Tokens surviving the reference's len>=2 + stopword filter
     (ForwardIndex.cpp:147, api_engine.cpp:391-397)."""
     sw = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -69,7 +69,7 @@ def tokenize_py(text: str) -> List[str]:
     return _TOKEN_RE.findall(text.lower())
 
 
-def kept_tokens_py(text: str, min_len: int = 2) -> List[str]:
+def kept_tokens_py(text: str, min_len: int = MIN_TOKEN_LEN) -> List[str]:
     return [
         t for t in tokenize_py(text)
         if len(t) >= min_len and t not in STOPWORD_SET

@@ -3,7 +3,7 @@
 Route/param/shape parity with src/api_server.cpp (stdlib http.server, no new
 dependencies):
 
-    GET  /api/health        → {"ok": true, "segments": N}           (:109-115)
+    GET  /api/health        → {"ok": true, "segments": N, "docs": D} (:109-115)
     GET  /api/search?q=&k=  → engine.search JSON + timing fields    (:117-178)
     GET  /api/suggest?q=&k= → {"query", "suggestions"}              (:180-195)
     POST /api/reload        → {"reloaded": bool, "segments": N}     (:203-210)
@@ -86,8 +86,9 @@ def _make_handler(engine: Engine):
             p = self._params()
             try:
                 if route == "/api/health":
-                    self._json({"ok": True, "segments": 1,
-                                "docs": engine.wand.N})
+                    h = engine.health()
+                    self._json({"ok": True, "segments": h["segments"],
+                                "docs": h["docs"]})
                 elif route == "/api/search":
                     if "q" not in p:
                         self._json({"error": "missing q param"}, 400)
@@ -136,7 +137,7 @@ def _make_handler(engine: Engine):
                 if route == "/api/reload":
                     out = engine.reload()
                     self._json({"reloaded": out["status"] == "reloaded",
-                                "segments": 1})
+                                "segments": len(engine.segments)})
                 elif route == "/api/feedback":
                     body, perr = self._body_json()
                     if perr is not None:

@@ -8,15 +8,21 @@ normalized (lowercase alnum, :23-30), len≥2 (:105-110), ranked by
 completed; the preceding text is echoed as a prefix (:160-169).
 
 Spark-first: instead of a trie we explode every term into its prefixes and
-keep the top-10 per prefix with a window — one shuffle, O(total prefix count),
-served by Parquet prefix lookup (LazySuggester).
+keep the top-10 per prefix with a window — one shuffle, O(total prefix count).
+``api.Engine`` opens its suggester when it loads: over one segment,
+LazySuggester serves that table by Parquet prefix lookup; over several,
+_MergedSuggester computes the same table in RAM from the summed dfs. Both
+answer through ``serve_suggest``.
 """
 
 from __future__ import annotations
 
+import heapq
 import re
 import threading
+from bisect import bisect_left
 from collections import OrderedDict
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -67,38 +73,69 @@ def split_suggest_input(q: str) -> tuple[str, str]:
     return q[: m.start(1)], re.sub(r"[^a-z0-9]", "", m.group(1))
 
 
-class _SuggestServing:
-    """Shared suggest() semantics over a prefix→ranked-terms source.
+def serve_suggest(sug, q: str, k: int) -> list[str]:
+    """The suggest rules both suggesters serve by: k clamped to
+    [SUGGEST_K_MIN, SUGGEST_K_MAX], only the last token of ``q`` completed
+    and the text before it echoed (api_autocomplete.cpp:160-169).
 
-    Prefixes longer than ``max_prefix_len`` (the table's explosion bound)
-    fall back to an exact lexicon scan when ``df_lookup`` (term → df) is
-    provided — the reference trie completes prefixes of any length
-    (api_autocomplete.cpp:33-55), so without the fallback a >12-char prefix
-    would return [] where the reference still completes (VERDICT r1
-    missing #5). The scan is O(vocab) but only on this rare path."""
+    A token up to ``sug.max_prefix_len`` (the table's explosion bound) is
+    completed by ``sug._candidates``. A longer one is completed exactly from
+    ``sug.df_lookup`` (term → df) when the suggester has one, as the
+    reference trie completes prefixes of any length
+    (api_autocomplete.cpp:33-55): the token's matches are one bisected
+    range of ``sug._terms``, the lookup's terms sorted once when the
+    suggester opened, so a request costs O(log vocabulary + matches)."""
+    k = max(SUGGEST_K_MIN, min(int(k), SUGGEST_K_MAX))
+    base, tok = split_suggest_input(q)
+    if not tok:
+        return []
+    if len(tok) <= sug.max_prefix_len:
+        cands = sug._candidates(tok)
+    elif sug.df_lookup is None:
+        cands = []
+    else:
+        terms, df = sug._terms, sug.df_lookup
+        # tok is [a-z0-9]+, so every term it prefixes sorts below its
+        # successor string
+        hi = tok[:-1] + chr(ord(tok[-1]) + 1)
+        cands = heapq.nsmallest(
+            k, terms[bisect_left(terms, tok):bisect_left(terms, hi)],
+            key=lambda t: (-df[t], t))
+    return [base + c for c in cands[:k]]
 
-    df_lookup: "dict[str, int] | None"
-    max_prefix_len: int
+
+class _MergedSuggester:
+    """The suggest table of several segments, built in RAM when the engine
+    opens: each segment's term → df map summed (the reference's
+    cross-segment df aggregation, api_engine.cpp:93-108), then what
+    build_suggest writes for one index (each prefix up to
+    SUGGEST_MAX_PREFIX_LEN keeps its top SUGGEST_TOP_PER_PREFIX terms by
+    (df desc, term asc)). No segment's own top-10 table holds the summed
+    ranking, so the table is computed here."""
+
+    def __init__(self, dfs: "Sequence[dict[str, int]]"):
+        df: dict[str, int] = {}
+        for seg_df in dfs:
+            for term, c in seg_df.items():
+                df[term] = df.get(term, 0) + int(c)
+        by_prefix: dict[str, list[tuple[int, str]]] = {}
+        for term, c in df.items():
+            for i in range(1, min(len(term), SUGGEST_MAX_PREFIX_LEN) + 1):
+                by_prefix.setdefault(term[:i], []).append((-c, term))
+        self.table = {p: [t for _, t in sorted(v)[:SUGGEST_TOP_PER_PREFIX]]
+                      for p, v in by_prefix.items()}
+        self.df_lookup = df
+        self._terms = sorted(df)
+        self.max_prefix_len = SUGGEST_MAX_PREFIX_LEN
 
     def _candidates(self, tok: str) -> list[str]:
-        raise NotImplementedError
+        return self.table.get(tok, [])
 
     def suggest(self, q: str, k: int = 5) -> list[str]:
-        k = max(SUGGEST_K_MIN, min(int(k), SUGGEST_K_MAX))
-        base, tok = split_suggest_input(q)
-        if not tok:
-            return []
-        if len(tok) > self.max_prefix_len and self.df_lookup is not None:
-            cands = sorted(
-                (t for t in self.df_lookup if t.startswith(tok)),
-                key=lambda t: (-self.df_lookup[t], t),
-            )
-        else:
-            cands = self._candidates(tok)
-        return [base + c for c in cands[:k]]
+        return serve_suggest(self, q, k)
 
 
-class LazySuggester(_SuggestServing):
+class LazySuggester:
     """Scale-out suggest serving: answer lookups straight from the suggest
     Parquet through a footer index instead of collecting the table into
     driver RAM (VERDICT r5 next #1 — at a 100 TB-corpus vocabulary a
@@ -124,6 +161,9 @@ class LazySuggester(_SuggestServing):
         from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
 
         self.df_lookup = df_lookup
+        # in term order already when it is a WandEngine lexicon, so sorted()
+        # runs in about linear time
+        self._terms = sorted(df_lookup) if df_lookup is not None else []
         self.max_prefix_len = max_prefix_len
         self._max_cached = max(1, int(max_cached_prefixes))
         self.index = RowGroupIndex(suggest_path, "prefix")
@@ -135,6 +175,9 @@ class LazySuggester(_SuggestServing):
         self._cache: "OrderedDict[str, list[str]]" = OrderedDict()
         self._lock = threading.Lock()
         self._lookups = 0
+
+    def suggest(self, q: str, k: int = 5) -> list[str]:
+        return serve_suggest(self, q, k)
 
     def io_counters(self) -> dict:
         with self._lock:

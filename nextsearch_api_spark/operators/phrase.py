@@ -155,13 +155,14 @@ def phrase_search(reader, corpus: DataFrame, phrase: str, k: int = 10,
     least one kept token, which any such doc would have. Phrases made
     ENTIRELY of stopwords/1-char tokens skip stage 1 and scan the full
     corpus (still exact, no index help — the honest fallback)."""
+    from nextsearch_api_spark.config import MIN_TOKEN_LEN
     from nextsearch_api_spark.functions.text import STOPWORD_SET
 
     if k <= 0:
         raise ValueError("k must be positive")
     toks = phrase_tokens(phrase)
     idx_terms = sorted({t for t in set(toks)
-                        if len(t) >= 2 and t not in STOPWORD_SET})
+                        if len(t) >= MIN_TOKEN_LEN and t not in STOPWORD_SET})
 
     meta = reader.docs().select("doc_id", "repo", "path", "commit")
     if idx_terms:

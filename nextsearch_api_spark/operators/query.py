@@ -50,14 +50,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextsearch_api_spark.config import (
-    BM25Params, IndexPaths, MIN_TOKEN_LEN, SEARCH_K_MAX, SEARCH_K_MIN,
+    BM25Params, IndexPaths, SEARCH_K_MAX, SEARCH_K_MIN,
 )
 from nextsearch_api_spark.functions.docstore import HIT_FIELDS, DocStore
 from nextsearch_api_spark.functions.rowgroups import RowGroupIndex
 from nextsearch_api_spark.functions.scoring import (
     bm25_idf, rank_chunk_rows, topk_tiebroken,
 )
-from nextsearch_api_spark.functions.text import STOPWORD_SET, tokenize_py
+from nextsearch_api_spark.functions.text import kept_tokens_py
 
 _RESULT_SCHEMA = [("qid", "long"), ("rank", "int"), ("doc_id", "long"),
                   ("score", "double"), ("found", "long")]
@@ -66,8 +66,7 @@ _RESULT_SCHEMA = [("qid", "long"), ("rank", "int"), ("doc_id", "long"),
 def parse_query(q: str) -> list[str]:
     """Reference query parsing: tokenize, keep len≥2 non-stopwords, keep
     duplicates (api_engine.cpp:388-397)."""
-    return [t for t in tokenize_py(q)
-            if len(t) >= MIN_TOKEN_LEN and t not in STOPWORD_SET]
+    return kept_tokens_py(q)
 
 
 def occurrence_weights(terms: Sequence[str]) -> "list[tuple[str, int]]":

@@ -57,12 +57,15 @@ def test_generation_gc_deferred_one_flip(spark, tmp_path):
     write_corpus(generate_corpus(spark, 300, seed=42), p, partition_by=None)
     corpus = read_corpus(spark, p)
     root = str(tmp_path / "idx")
-    build_index(spark, corpus, root)
+    # small chunks: frequent terms keep several chunks through the
+    # compaction, so the chunk prune has something to drop below
+    cfg = BuildConfig(chunk_size=8)
+    build_index(spark, corpus, root, cfg=cfg)
 
     old = WandEngine(root)  # long-lived reader (e.g. the HTTP server)
     before = old.search("hotterm buffer", 10)
 
-    out1 = compact_postings(spark, root)
+    out1 = compact_postings(spark, root, cfg)
     assert out1["swapped"]
     m1 = current_mapping(root)
     assert m1["gc_pending"]  # superseded dirs recorded, NOT deleted
@@ -71,10 +74,17 @@ def test_generation_gc_deferred_one_flip(spark, tmp_path):
     # the distributed plan (its chunk prune planned from the max_impact
     # the writer stored at the index's avgdl) == the exhaustive driver
     # path after compaction
+    from nextsearch_api_spark.config import BM25Params
     from nextsearch_api_spark.operators.query import (
-        IndexReader, QuerySpec, batch_search,
+        IndexReader, QuerySpec, _plan_chunk_prune, batch_search,
     )
     rd = IndexReader(spark, root)
+    # the plan drops chunks of hotterm: the distributed run is a pruned scan
+    dfs = rd.term_dfs(["hotterm"])
+    kept, _, found = _plan_chunk_prune(rd, {0: ["hotterm"]}, {0: 5}, dfs,
+                                       BM25Params())
+    assert 0 < len(kept["hotterm"]) < dfs.n_chunks["hotterm"]
+    assert found == {0: dfs["hotterm"]}
     pa_ = batch_search(rd, [QuerySpec(0, "hotterm", 5)],
                        small_query_max_postings=0)
     pb_ = batch_search(rd, [QuerySpec(0, "hotterm", 5)])

@@ -260,3 +260,49 @@ def test_search_cache_immune_to_caller_mutation(server):
     assert out2["results"][0]["score"] != -1.0
     assert "clobbered" not in out2["results"][0]
     assert len(out2["results"]) == 4
+
+
+def test_http_two_segment_engine(tiny_index, tmp_path):
+    """The HTTP routes over an ``Engine`` of two segments (the tiny index
+    served twice, so every doc id occurs in both): health reports both
+    segments and Σ docs, rows carry their segment, a repeated search is a
+    cache hit, and a reload keeps the segments and their docs."""
+    from nextsearch_api_spark.api import Engine
+    from nextsearch_api_spark.http_server import ApiServer
+    from nextsearch_api_spark.operators.wand import WandEngine
+
+    root, _ = tiny_index
+    n = WandEngine(root).N
+    srv = ApiServer(Engine([root, root], cache_dir=str(tmp_path)), port=0)
+    srv.start()
+    try:
+        st, h = _get(srv, "/api/health")
+        assert st == 200 and h == {"ok": True, "segments": 2, "docs": 2 * n}
+
+        st, s = _get(srv, "/api/search?q=hotterm%20buffer&k=4")
+        assert st == 200 and s["cached"] is False and s["segments"] == 2
+        rows = s["results"]
+        one = Engine(root).search("hotterm buffer", 4)
+        assert s["found"] == 2 * one["found"]
+        # each doc scores the same in both copies, and the merge orders by
+        # (score desc, segment asc, doc_id asc)
+        want = sorted((-r["score"], seg, r["doc_id"])
+                      for seg in (0, 1) for r in one["results"])[:4]
+        assert [(-r["score"], r["segment"], r["doc_id"])
+                for r in rows] == want
+        uids = {r["doc_id"]: r["uid"] for r in one["results"]}
+        assert all(r["uid"] == uids[r["doc_id"]] for r in rows)
+
+        st, s2 = _get(srv, "/api/search?q=hotterm%20buffer&k=4")
+        assert s2["cached"] is True
+        assert s2["results"] == rows and s2["found"] == s["found"]
+
+        st, stats = _get(srv, "/api/stats")
+        assert stats["docs"] == 2 * n and stats["search_cache_hits"] == 1
+
+        st, r = _post(srv, "/api/reload")
+        assert st == 200 and r == {"reloaded": True, "segments": 2}
+        st, h = _get(srv, "/api/health")
+        assert h == {"ok": True, "segments": 2, "docs": 2 * n}
+    finally:
+        srv.stop()

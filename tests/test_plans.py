@@ -473,23 +473,49 @@ def test_many_whitelisted_terms_plan_at_constant_depth(spark, tmp_path):
     assert all(r[4] == df_map[terms[r[0]]] for r in dist)
 
 
-def test_multi_term_prefilter_randomized_parity(spark, skewed_index):
-    """Randomized multi-term queries over the heavy-tailed index (where a
-    prune of ``needle``'s low chunks would change ``found``, unlike on the
-    uniform tiny corpus): the distributed plan, whose planner must keep
-    every chunk of a multi-term query's terms, == the exhaustive driver
-    path on rank/score/found at every k."""
+@pytest.fixture(scope="module")
+def overlap_index(spark, tmp_path_factory):
+    """Heavy-tailed terms over OVERLAPPING doc sets, in chunks of 8: no
+    term's docs contain another's, so a multi-term query's ``found`` (the
+    size of the union) differs from each of its terms' df, and every term
+    has chunks a single-term prune would drop (tf spikes in two docs)."""
+    from nextsearch_api_spark.config import BuildConfig
+    from nextsearch_api_spark.operators.build import build_index
+
+    steps = {"alpha": 2, "beta": 3, "gamma": 5, "delta": 7}
+    rows = []
+    for i in range(240):
+        words = [f"pad{i % 13}"] * (1 + i % 4)
+        for n, (term, step) in enumerate(steps.items()):
+            if i % step == 0:
+                spike = i in (step * 5, 240 - step * (n + 3))
+                words += [term] * (20 if spike else 1)
+        rows.append(("r", f"{i:04d}", "c", "py", " ".join(words)))
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ).repartition(4)
+    root = str(tmp_path_factory.mktemp("overlapidx"))
+    build_index(spark, corpus, root, cfg=BuildConfig(chunk_size=8))
+    return root
+
+
+def test_multi_term_prefilter_randomized_parity(spark, overlap_index):
+    """Randomized multi-term queries over terms whose df differs from every
+    query's ``found``: the distributed plan, whose planner must keep every
+    chunk of a multi-term query's terms and override no found, == the
+    exhaustive driver path on rank/score/found at every k."""
     import random
 
     from nextsearch_api_spark.operators.query import IndexReader
 
-    rd = IndexReader(spark, skewed_index)
+    rd = IndexReader(spark, overlap_index)
+    vocab = ["alpha", "beta", "gamma", "delta"]
+    dfs = rd.term_dfs(vocab)
+    assert min(dfs.n_chunks.values()) > 10  # every term can prune alone
     rng = random.Random(77)
-    vocab = ["needle", "common", "fill10w3", "fill190w7", "fill55w0"]
     specs = []
-    for qid in range(10):
-        n_terms = rng.choice([2, 2, 3, 4])
-        q = " ".join(rng.sample(vocab, n_terms))
+    for qid in range(12):
+        q = " ".join(rng.sample(vocab, rng.choice([2, 2, 3, 4])))
         specs.append(QuerySpec(qid, q, rng.choice([1, 2, 3, 5, 10])))
     a = batch_search(rd, specs, small_query_max_postings=0)
     b = batch_search(rd, specs)
@@ -498,6 +524,10 @@ def test_multi_term_prefilter_randomized_parity(spark, skewed_index):
     ra = sorted(key(r) for r in a.collect())
     rb = sorted(key(r) for r in b.collect())
     assert ra == rb and ra
+    found = {r[0]: r[4] for r in rb}
+    assert len(found) == len(specs)
+    for spec in specs:
+        assert all(found[spec.qid] != dfs[t] for t in spec.q.split())
 
 
 def test_multi_prune_planner_soundness_randomized():

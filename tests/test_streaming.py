@@ -151,18 +151,20 @@ def test_stream_ingest_and_compact(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
 
     # `found` is EXACT over streamed 2^62-range ids: single-term found
-    # equals the lexicon df, and a multi-segment engine over the same
-    # root reports Engine's count
+    # equals the lexicon df, and an engine given the root as a one-segment
+    # list reports the same count
     from nextsearch_api_spark.api import Engine
-    from nextsearch_api_spark.operators.multisegment import MultiSegmentEngine
     eng = Engine(root)
     res = eng.search("hotterm", 3)
     df_hot = (spark.read.parquet(IndexPaths(root).lexicon)
               .where(F.col("term") == "hotterm").collect()[0]["df"])
     assert res["found"] == df_hot
     assert "mode" not in res  # internal field stripped from the JSON shape
-    assert (MultiSegmentEngine([root]).search("hotterm buffer", 3)["found"]
-            == eng.search("hotterm buffer", 3)["found"])
+    one, listed = (e.search("hotterm buffer", 3)
+                   for e in (eng, Engine([root])))
+    assert one.keys() == listed.keys()
+    assert ({f: v for f, v in one.items() if not f.endswith("_ms")}
+            == {f: v for f, v in listed.items() if not f.endswith("_ms")})
     docs2 = spark.read.parquet(IndexPaths(root).docs).withColumn(
         "uid", uid_column())
     assert docs2.count() == stats2["N"]

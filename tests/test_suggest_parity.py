@@ -93,7 +93,7 @@ def test_long_prefix_falls_back_to_lexicon_scan(spark, tmp_path):
     complete (the reference trie is unbounded) when a df lookup is given,
     in LazySuggester and in the multi-segment _MergedSuggester."""
     from nextsearch_api_spark.operators.autocomplete import build_suggest
-    from nextsearch_api_spark.operators.multisegment import _MergedSuggester
+    from nextsearch_api_spark.operators.autocomplete import _MergedSuggester
 
     lex = spark.createDataFrame(
         [("supercalifragilistic", 50), ("supercalifornia", 80),
@@ -105,7 +105,7 @@ def test_long_prefix_falls_back_to_lexicon_scan(spark, tmp_path):
     rows = _rows(spark, path)
     dfmap = {r["term"]: r["df"] for r in lex.collect()}
     s = LazySuggester(path, df_lookup=dfmap)
-    merged = _MergedSuggester(dfmap)
+    merged = _MergedSuggester([dfmap])
     # 13-char prefix: not in the table, served by the exact scan
     cases = {"supercalif": ["supercalifornia", "supercalifragilistic"],
              "supercalifrag": ["supercalifragilistic"],
@@ -122,20 +122,70 @@ def test_long_prefix_falls_back_to_lexicon_scan(spark, tmp_path):
     assert brute_suggest(rows, "supercalifrag", 5) == []
 
 
+class _NoScanDf(dict):
+    """A term → df map that answers lookups but refuses to be scanned."""
+
+    def _scan(self, *_):
+        raise AssertionError("the df map was scanned by a request")
+
+    __iter__ = keys = values = items = _scan
+
+
+def test_long_prefix_completion_reads_no_whole_lexicon(spark, tiny_index,
+                                                       lex_pdf):
+    """A token longer than the table's prefix bound is completed from a
+    term list sorted when the suggester opens: after the open, both
+    suggesters answer long prefixes exactly with a df map that raises on
+    iteration, so no request scans the vocabulary."""
+    from nextsearch_api_spark.operators.autocomplete import _MergedSuggester
+
+    root, _ = tiny_index
+    path = IndexPaths(root).suggest
+    rows = _rows(spark, path)
+    dfmap = dict(zip(lex_pdf["term"], lex_pdf["df"].astype(int)))
+    # long terms beside the index's own, with prefixes that end in 'z' and
+    # '9' (the last letter and digit) and ties on df
+    dfmap.update({"supercalifragilistic": 50, "supercalifornia": 80,
+                  "supercalifornication": 80, "supercalifraz": 7,
+                  "supercalifrazz": 9, "supercalifra9": 4,
+                  "supercalifra90": 4, "zzzzzzzzzzzzzz": 2,
+                  "zzzzzzzzzzzzzzz": 3, "aaaaaaaaaaaaa9": 1})
+    longs = [t for t in dfmap if len(t) > SUGGEST_MAX_PREFIX_LEN]
+    probes = {"supercaliforn", "supercalifra9",
+              "supercalifraz", "zzzzzzzzzzzzz", "aaaaaaaaaaaaa",
+              "aaaaaaaaaaaaa9z", "supercalifragilisticz"}
+    for t in longs:
+        probes.update({t, t[:SUGGEST_MAX_PREFIX_LEN + 1], t + "0"})
+    suggesters = [LazySuggester(path, df_lookup=dict(dfmap)),
+                  _MergedSuggester([dfmap])]
+    for sug in suggesters:
+        sug.df_lookup = _NoScanDf(sug.df_lookup)
+    answered = 0
+    for p in sorted(probes):
+        assert len(p) > SUGGEST_MAX_PREFIX_LEN
+        for q in (p, "find the " + p.upper()):
+            for k in (1, 3, 10, 25):
+                want = brute_suggest(rows, q, k, dfmap)
+                answered += bool(want)
+                for sug in suggesters:
+                    assert sug.suggest(q, k) == want, (type(sug), q, k)
+    assert answered
+
+
 def test_lazy_suggester_matches_collected(spark, tiny_index, lex_pdf):
     """LazySuggester (pyarrow row-group-pruned lookups) and the
     multi-segment _MergedSuggester (over the same df map) must answer
     exactly like a brute-force ranking over the collected suggest table's
     rows on every prefix present in the table, on misses, on multiword
     echo, and on the long-prefix lexicon fallback."""
-    from nextsearch_api_spark.operators.multisegment import _MergedSuggester
+    from nextsearch_api_spark.operators.autocomplete import _MergedSuggester
 
     root, _ = tiny_index
     path = IndexPaths(root).suggest
     dfmap = dict(zip(lex_pdf["term"], lex_pdf["df"].astype(int)))
     rows = _rows(spark, path)
     lazy = LazySuggester(path, df_lookup=dfmap)
-    merged = _MergedSuggester(dfmap)
+    merged = _MergedSuggester([dfmap])
 
     prefixes = {p for p, _, _ in rows}
     assert prefixes
